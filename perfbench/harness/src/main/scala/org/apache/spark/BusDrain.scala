@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Blocks until every event posted so far has reached the listeners, so a
+  * span's counters are complete when the harness reads them. The listener
+  * bus is private to Spark, hence this package. */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
