@@ -26,33 +26,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesce floor, env-overridable for A/B (r12). Default stays
-      // Spark's 1m: a suite-wide 64kb floor was tried (AQE sizes
-      // post-shuffle partitions by BYTES, so CPU-dense stages land on
-      // 1–5 cores at bench scale) and REJECTED — q52's KMeans fit is
-      // partitioning-sensitive (recall 0.4 → 0.28, below its 0.3 spec
-      // bound: a behavior change, not a speedup), and the iterative
-      // graph queries got slower (more tasks per tiny round). The
-      // CPU-dense dedup stages are spread by a targeted conditional
-      // repartition at the collapse boundary instead (DedupOps).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        // InferFiltersFromGenerate re-evaluates EXPENSIVE generator
-        // children (fused winnow/gram expressions) twice in synthesized
-        // pre-filters that inner Generate makes redundant — measured
-        // q145 4.9 -> 3.2 s at sf0.1, neutral elsewhere (SCALING.md)
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

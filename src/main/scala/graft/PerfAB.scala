@@ -15,65 +15,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PerfAB {
 
-  /** Variant registry: A/B pairs live here so the attribution that
-    * cleared (or convicted) a mover is re-runnable verbatim. */
+  /** Variant registry: only rows that time production code a declared
+    * query does not already reach by name — the two window canaries and
+    * the adaptive dispatchers forced to either arm on synthetic
+    * fixtures. Settled A/B pairs are retired once their verdict is in
+    * (SCALING.md "retired A/B variants"). */
   val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // r9: attribute q52's +27% r8 move (1.62 -> 2.06 s) — the round's
-    // only co-located change was the full-probe-set certified mean
-    "q52_full_probe_mean" ->
-      ((s, d) => operators.SimilarityOps.q52KnnIvfImpl(s, d, fullProbeMean = true)),
-    "q52_r7_found_mean" ->
-      ((s, d) => operators.SimilarityOps.q52KnnIvfImpl(s, d, fullProbeMean = false)),
-    // r10: price the collapse's 1x overhead (q35/q37 regressed x1.58 /
-    // x1.39 in r9 on the nothing-to-collapse bench corpus) and the
-    // internal fingerprint choice — the declared form rides the
-    // two-seed xxhash64 pair since r10; md5 is the A/B baseline
-    "q35_collapse_md5" -> ((s, d) => operators.DedupOps.q35Md5(s, d)),
-    "q35_collapse_xxh" -> ((s, d) => operators.DedupOps.q35NgramJaccard(s, d)),
-    "q35_identity_nocollapse" -> ((s, d) => operators.DedupOps.q35Identity(s, d)),
-    "q37_collapse_md5" -> ((s, d) => operators.DedupOps.q37Md5(s, d)),
-    "q37_collapse_xxh" -> ((s, d) => operators.DedupOps.q37Simhash(s, d)),
-    "q37_identity_nocollapse" -> ((s, d) => operators.DedupOps.q37Identity(s, d)),
-    // r10: the q52 declared reshape (exact side + certified boolean)
-    // adds a q39 pass on top of the unchanged IVF pipeline
-    "q52_declared_r10" -> ((s, d) => operators.SimilarityOps.q52KnnIvf(s, d)),
-    // r10: triangle orientation — the adaptive declared form (probes
-    // max single-key wedge output, picks id- or degree-ordering), the
-    // forced degree branch, and the r1-r10 unconditional id form, on
-    // the real q36 graph and on synthetic hubs (star + ring with the
-    // hub id in the middle: id-ordering parks (n/2)² wedges on the
-    // hub's single join key). sfDir is ignored by the hub pairs.
-    "q83_adaptive" -> ((s, d) => operators.DedupOps.q83Triangles(s, d)),
-    // r12: the pre-blow-up-dispatch declared shape (no rep-pair
-    // checkpoint, no blow-up-mass probe) — prices the dispatch's 1×
-    // insurance premium on a normal corpus
-    "q83_enum_r11" -> ((s, d) =>
-      operators.DedupOps.triangles(operators.DedupOps.q36MinhashLsh(s, d))),
-    // r12 CC restructure A/B: the r11 declared q64 shape (star + rep
-    // edges inside the iterative loop) vs the rep-graph loop with
-    // post-loop star attachment (the declared form since r12). Both
-    // run the same fused-init CC, so the pair isolates the edge-set
-    // restructure itself.
-    "q64_cc_star_r11" -> ((s, d) => operators.DedupOps.connectedComponents(
-      operators.DedupOps.ccEdgesMinhash(operators.DedupOps.collapsedDocs(s, d)))),
-    "q64_cc_rep_r12" -> ((s, d) => operators.DedupOps.q64DedupClusters(s, d)),
-    // r12: price the collapse candidate-input CPU-width spread
-    "q35_no_spread" -> ((s, d) => operators.DedupOps.q35NoSpread(s, d)),
-    "q35_spread" -> ((s, d) => operators.DedupOps.q35NgramJaccard(s, d)),
-    "q37_no_spread" -> ((s, d) => operators.DedupOps.q37NoSpread(s, d)),
-    "q37_spread" -> ((s, d) => operators.DedupOps.q37Simhash(s, d)),
-    // r12: price the q52 fit-input determinism pin
-    "q52_fit_nopin" -> ((s, d) =>
-      operators.SimilarityOps.q52KnnIvfImpl(s, d, fullProbeMean = true,
-        pinFit = false)),
-    "q52_fit_pin" -> ((s, d) =>
-      operators.SimilarityOps.q52KnnIvfImpl(s, d, fullProbeMean = true)),
+    // triangle orientation on the q36 graph: the degree branch forced,
+    // and the unconditional id-ordered form the adaptive dispatch
+    // replaced
     "q83_deg_forced" -> ((s, d) => operators.DedupOps.trianglesAdaptive(
       operators.DedupOps.q36MinhashLsh(s, d), 1L)),
     "q83_id_oriented" -> ((s, d) =>
       operators.DedupOps.trianglesIdOriented(operators.DedupOps.q36MinhashLsh(s, d))),
-    // r10: q70 contamination joined the collapsed family — raw gram
-    // join (the r1-r10 form) vs collapse + role-aware expansion
+    // q70 contamination's two arms: raw gram join vs collapse +
+    // role-aware expansion (the declared form picks one by an HLL
+    // dup-mass probe)
     "q70_raw" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val isBench = pmod(graft.functions.TextFns.hash60(concat(lit("bench:"),
@@ -91,8 +48,6 @@ object PerfAB {
             graft.functions.TextFns.normText(col("text")).as("norm")),
         isBench)
     }),
-    // the declared form: one HLL dup-mass probe picks raw or collapsed
-    "q70_auto" -> ((s, d) => operators.CurationOps.q70Contamination(s, d)),
     "tri_hub_deg" -> ((s, _) => operators.DedupOps.triangles(hubGraph(s))),
     "tri_hub_id" -> ((s, _) => operators.DedupOps.trianglesIdOriented(hubGraph(s))),
     // the regime the adaptive dispatch exists for: a 40001-node hub
@@ -128,116 +83,17 @@ object PerfAB {
       viralDocs(s), 3, Long.MaxValue)),
     // r11 q152 window-join salt: run against the bot-user zipf fixture
     // dir (ScaleRegression zipf events, e.g. /tmp/graft_scale/x20000-zipf)
-    // — auto dispatches the salt there, plain forces the r10 single-key
-    // plan
-    "q152_auto" -> ((s, d) =>
-      operators.EventOps.q152DecayAttribution(s, d)),
+    // next to the declared q152_decay_attribution, which dispatches the
+    // salt there; this row forces the r10 single-key plan
     "q152_plain_forced" -> ((s, d) => operators.EventOps.decayAttribution(
       Tables.events(s, d), Long.MaxValue)),
-    // r12 mover-attribution rows (VERDICT task 1): the r11 final-window
-    // movers q86/q192/q222/q202 run code UNTOUCHED in r11 (static diff:
-    // StatsOps unchanged; the EventOps/SimilarityOps hunks are q152/q112
-    // regions only) and q83's path is plan-identical on the bench corpus
-    // (the r11 shuffle_hash hint lands only in the anyBig salt branch,
-    // which the sf0.1 probe leaves cold) — so the A/B here is the
-    // DECLARED form against the in-window CANARY, adjudicating "suite
-    // noise vs environment" rather than "old code vs new code".
+    // COMPUTE canary (r12): a fixed range aggregate with no I/O. Run
+    // next to suspect queries (by declared name) in the same window, it
+    // tells "the window is slow" from "the code got slower".
     "canary_range_sum" -> ((s, _) => {
       import org.apache.spark.sql.functions._
       s.range(0, 4000000L, 1, 8).agg(sum(col("id") % 7).as("s"))
     }),
-    // r13 (VERDICT tasks 1/2): widen on/off pairs for the above-band
-    // movers (q222 ×1.81 normalized, q34 ×1.57, q48 ×1.42 — all in the
-    // widened small-frame family whose 32-core scaling ratios were
-    // 0.41–0.63) and for the embedding-family input spread r12 shipped
-    // by construction but never proved at bench scale. Controls: q11 /
-    // q127 (untouched code) run by declared name in the same window.
-    // r13 (VERDICT task 6): the MATERIALIZED shared tokenizer for the
-    // multi-consumer text queries — the r12 loader-widen loss inverted
-    // by checkpointing the tokenized frame once (conditional on a
-    // narrow scan; lazy at cluster width)
-    "q103_toks_lazy" -> ((s, d) =>
-      operators.TextOps.q103PmiBigramsImpl(s, d, materialize = false)),
-    "q103_toks_chk" -> ((s, d) =>
-      operators.TextOps.q103PmiBigramsImpl(s, d, materialize = true)),
-    "q104_toks_lazy" -> ((s, d) =>
-      operators.TextOps.q104Bm25Impl(s, d, materialize = false)),
-    "q104_toks_chk" -> ((s, d) =>
-      operators.TextOps.q104Bm25Impl(s, d, materialize = true)),
-    "q111_toks_lazy" -> ((s, d) =>
-      operators.SimilarityOps.q111RrfHybridImpl(s, d, materialize = false)),
-    "q111_toks_chk" -> ((s, d) =>
-      operators.SimilarityOps.q111RrfHybridImpl(s, d, materialize = true)),
-    "q122_toks_lazy" -> ((s, d) =>
-      operators.TextOps.q122KneserNeyImpl(s, d, materialize = false)),
-    "q122_toks_chk" -> ((s, d) =>
-      operators.TextOps.q122KneserNeyImpl(s, d, materialize = true)),
-    "q148_toks_lazy" -> ((s, d) =>
-      operators.TextOps.q148SkipGramImpl(s, d, materialize = false)),
-    "q148_toks_chk" -> ((s, d) =>
-      operators.TextOps.q148SkipGramImpl(s, d, materialize = true)),
-    // r13: price the q226 candidate-generator spread
-    "q226_cand_nospread" -> ((s, d) =>
-      operators.Relational.q226NegativeSamplesImpl(s, d, spreadCand = false)),
-    "q226_cand_spread" -> ((s, d) =>
-      operators.Relational.q226NegativeSamplesImpl(s, d, spreadCand = true)),
-    // r13: price the one-pass trade-edge builder (explode) against the
-    // r12 two-branch union that re-evaluated the pair subtree per
-    // direction
-    "q101_edges_union_r12" -> ((s, d) =>
-      operators.GraphOps.q101UnionEdgesR12(s, d)),
-    "q101_edges_explode" -> ((s, d) =>
-      SparkEntry.queries("q101_pagerank")(s, d)),
-    // r13: price the verification-stage spread (mid-plan
-    // REPARTITION_BY_NUM before array_intersect) in isolation
-    "q35_verify_nospread" -> ((s, d) =>
-      operators.DedupOps.q35NoVerifySpread(s, d)),
-    "q35_verify_spread" -> ((s, d) =>
-      operators.DedupOps.q35NgramJaccard(s, d)),
-    "q222_widen" -> ((s, d) =>
-      operators.SimilarityOps.q222BucketPurityImpl(s, d, widen = true)),
-    "q222_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q222BucketPurityImpl(s, d, widen = false)),
-    "q34_widen" -> ((s, d) =>
-      operators.DedupOps.q34DedupExactImpl(s, d, widen = true)),
-    "q34_nowiden" -> ((s, d) =>
-      operators.DedupOps.q34DedupExactImpl(s, d, widen = false)),
-    "q48_widen" -> ((s, d) =>
-      operators.SimilarityOps.q48DimStatsImpl(s, d, widen = true)),
-    "q48_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q48DimStatsImpl(s, d, widen = false)),
-    "q39_widen" -> ((s, d) =>
-      operators.SimilarityOps.q39KnnBruteImpl(s, d, widen = true)),
-    "q39_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q39KnnBruteImpl(s, d, widen = false)),
-    "q40_widen" -> ((s, d) =>
-      operators.SimilarityOps.q40KnnLshImpl(s, d, widen = true)),
-    "q40_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q40KnnLshImpl(s, d, widen = false)),
-    "q112_widen" -> ((s, d) =>
-      operators.SimilarityOps.q112SemanticDecontamImpl(s, d, widen = true)),
-    "q112_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q112SemanticDecontamImpl(s, d, widen = false)),
-    "q38_widen" -> ((s, d) =>
-      operators.DedupOps.q38EmbeddingNearDupImpl(s, d, widen = true)),
-    "q38_nowiden" -> ((s, d) =>
-      operators.DedupOps.q38EmbeddingNearDupImpl(s, d, widen = false)),
-    "q49_widen" -> ((s, d) =>
-      operators.DedupOps.q49EmbeddingLshDedupImpl(s, d, widen = true)),
-    "q49_nowiden" -> ((s, d) =>
-      operators.DedupOps.q49EmbeddingLshDedupImpl(s, d, widen = false)),
-    "q93_widen" -> ((s, d) =>
-      operators.SimilarityOps.q93KnnInt8Impl(s, d, widen = true)),
-    "q93_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q93KnnInt8Impl(s, d, widen = false)),
-    "q132_widen" -> ((s, d) =>
-      operators.SimilarityOps.q132EmbedCovarianceImpl(s, d, widen = true)),
-    "q132_nowiden" -> ((s, d) =>
-      operators.SimilarityOps.q132EmbedCovarianceImpl(s, d, widen = false)),
-    "q86_declared" -> ((s, d) => operators.StatsOps.q86Profile(s, d)),
-    "q192_declared" -> ((s, d) => operators.EventOps.q192AudienceOverlap(s, d)),
-    "q222_declared" -> ((s, d) => operators.SimilarityOps.q222BucketPurity(s, d)),
-    "q202_declared" -> ((s, d) => operators.Relational.q202RfmSegments(s, d)),
     // JOB-LATENCY canary (r12): 20 eager one-aggregate jobs of 32 tiny
     // tasks run at CONSTRUCTION time — times 20 driver/scheduler job
     // round-trips with negligible compute, the component a KMeans-style
@@ -303,17 +159,7 @@ object PerfAB {
     def variantFor(n: String): (SparkSession, String) => DataFrame =
       variants.getOrElse(n, SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown variant/query: $n")))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // per-variant Spark-job counter (r12): a variant's wall divides into
     // compute and #jobs × round-trip latency; the count makes the
     // job-latency-sensitivity of a query (KMeans iterations, multi-scan

@@ -314,20 +314,7 @@ object PipelineDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("curate").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        // InferFiltersFromGenerate re-evaluates EXPENSIVE generator
-        // children (fused winnow/gram expressions) twice in synthesized
-        // pre-filters that inner Generate makes redundant — measured
-        // q145 4.9 -> 3.2 s at sf0.1, neutral elsewhere (SCALING.md)
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     curate(spark, sfDir, outDir).foreach { case (k, n) =>
       println(s"[pipeline] $k: $n docs")
     }

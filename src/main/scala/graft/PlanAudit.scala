@@ -12,24 +12,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else QueryDef.all.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        // InferFiltersFromGenerate re-evaluates EXPENSIVE generator
-        // children (fused winnow/gram expressions) twice in synthesized
-        // pre-filters that inner Generate makes redundant — measured
-        // q145 4.9 -> 3.2 s at sf0.1, neutral elsewhere (SCALING.md)
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // declared queries first; fall back to the PerfAB variant registry so
-    // a before/after plan pair (e.g. q222_widen vs the declared q222) can
-    // be dumped from ONE code state (r13)
+    // a dispatcher's forced arm (e.g. q83_id_oriented vs the declared
+    // q83) can be dumped from ONE code state
     def queries(name: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =
       SparkEntry.queries.getOrElse(name, PerfAB.variants.getOrElse(name,
         sys.error(s"unknown query/variant: $name")))

@@ -296,17 +296,7 @@ object ScaleRegression {
       selected.forall(q => docQueries(q) || embQueries(q) || eventQueries(q)),
       "zipf mode scales documents/embeddings/events; selection must be " +
         "doc, embedding, or event queries")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val listener = new PeakListener
     spark.sparkContext.addSparkListener(listener)
 

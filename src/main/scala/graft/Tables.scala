@@ -110,8 +110,6 @@ object Tables {
     // coalescing — so the width this function promises is the width the
     // stage actually runs at.
     if (plannedWidth(df, target) * 2 >= target) df
-    else if (sys.env.get("SPARK_GRAFT_WIDEN_BARE").contains("1"))
-      df.repartition(key)
     else df.repartition(target, key)
   }
 

@@ -6,20 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        // InferFiltersFromGenerate re-evaluates EXPENSIVE generator
-        // children (fused winnow/gram expressions) twice in synthesized
-        // pre-filters that inner Generate makes redundant — measured
-        // q145 4.9 -> 3.2 s at sf0.1, neutral elsewhere (SCALING.md)
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (comma-separated name list); the driver never
     // sets it, so its runs always dump the full suite.
@@ -47,7 +34,7 @@ object Verify {
     // DECLARED q42/q52 outputs carry only deterministic columns (they
     // are oracle-checked like every other query), so the values are
     // re-derived here from the INTERNAL full frames (q42Full /
-    // q52KnnIvfImpl) — the same plans whose in-query raise_error the
+    // q52KnnIvfFull) — the same plans whose in-query raise_error the
     // declared queries aggregate, so a dumped declared row and a bound
     // entry certify the same assertion. An empty/NULL aggregate is
     // exactly the case where the per-row raise never evaluated, so it
@@ -125,7 +112,7 @@ object Verify {
       "q52_knn_ivf" ->
         ("mean recall_at_10 over the probe set",
           (s: SparkSession, d: String) => operators.SimilarityOps
-            .q52KnnIvfImpl(s, d, fullProbeMean = true)
+            .q52KnnIvfFull(s, d)
             .agg(min(col("mean_recall_at_10")).cast("double")),
           0.3, ">="))
   }

@@ -82,6 +82,21 @@ object DedupOps {
   private[graft] case class Collapsed(reps: DataFrame, map: DataFrame,
       groups: DataFrame, narrow: Boolean = false)
 
+  /** The internal 128-bit collapse fingerprint: two INDEPENDENT-seed
+    * xxhash64 passes over the norm. The leading literal matters — it is
+    * hashed FIRST, so the second component hashes the norm under a
+    * different seed; chained the other way (`xxhash64(norm, lit(1))`)
+    * the literal mixes into the norm's own hash and the second
+    * component becomes a pure function of the first, silently dropping
+    * the pair to 64 effective bits (≈27k expected group collisions at
+    * 10¹² docs — vs ~n²/2¹²⁹ ≈ 0 for the true pair, the same class as
+    * md5's 128 bits). Switched from md5 in r10: integer hashing beats
+    * the hex-string digest by 5–18% at 1× (SCALING.md r10). The
+    * key never leaves any plan — q34 separately DECLARES md5 as its
+    * own fingerprint contract and computes it itself. */
+  private val xxhashPairFp: Column =
+    struct(xxhash64(col("norm")), xxhash64(lit(1), col("norm")))
+
   /** Collapse a `(doc_id, norm)` frame by exact normalized content. One
     * fingerprint-keyed aggregate (map-side combine — a hot boilerplate
     * group is a partial-agg cell, never a buffer) plus one fp-keyed join
@@ -96,32 +111,9 @@ object DedupOps {
     * the checkpoint trades two corpus scans total for O(consumers) of
     * them; the map is two longs per doc, the groups frame is the
     * DEDUPED corpus, both spill-capable MEMORY_AND_DISK blocks). */
-  private[graft] def collapseExact(normed: DataFrame): Collapsed =
-    collapseExactFp(normed, xxhashPairFp)
-
-  /** The internal 128-bit collapse fingerprint: two INDEPENDENT-seed
-    * xxhash64 passes over the norm. The leading literal matters — it is
-    * hashed FIRST, so the second component hashes the norm under a
-    * different seed; chained the other way (`xxhash64(norm, lit(1))`)
-    * the literal mixes into the norm's own hash and the second
-    * component becomes a pure function of the first, silently dropping
-    * the pair to 64 effective bits (≈27k expected group collisions at
-    * 10¹² docs — vs ~n²/2¹²⁹ ≈ 0 for the true pair, the same class as
-    * md5's 128 bits). Switched from md5 in r10: integer hashing beats
-    * the hex-string digest by 5–18% at 1× ([[graft.PerfAB]]
-    * `q35/q37_collapse_md5` vs `_collapse_xxh`, SCALING.md r10). The
-    * key never leaves any plan — q34 separately DECLARES md5 as its
-    * own fingerprint contract and computes it itself. */
-  private[graft] val xxhashPairFp: Column =
-    struct(xxhash64(col("norm")), xxhash64(lit(1), col("norm")))
-
-  /** [[collapseExact]] with the fingerprint expression swappable —
-    * [[graft.PerfAB]] registers the md5 form against the declared
-    * xxhash64-pair to keep the r10 switch re-measurable. */
-  private[graft] def collapseExactFp(normed: DataFrame,
-      fp: Column, spread: Boolean = true): Collapsed = {
+  private[graft] def collapseExact(normed: DataFrame): Collapsed = {
     val fped = normed.filter(col("norm").isNotNull)
-      .select(col("doc_id"), col("norm"), fp.as("fp"))
+      .select(col("doc_id"), col("norm"), xxhashPairFp.as("fp"))
     val groups = fped.groupBy(col("fp"))
       .agg(min(col("doc_id")).as("rep_id"),
         // every value in the group is identical by construction, so
@@ -149,7 +141,7 @@ object DedupOps {
     val reps0 = groups.select(col("rep_id").as("doc_id"), col("norm"))
     val isNarrow = groups.rdd.getNumPartitions * 2 < par
     Collapsed(
-      reps = if (spread && isNarrow)
+      reps = if (isNarrow)
         reps0.repartition(par, col("doc_id")) else reps0,
       map = fped.select(col("doc_id"), col("fp"))
         .join(groups.select(col("fp"), col("rep_id")), Seq("fp"))
@@ -469,13 +461,8 @@ object DedupOps {
 
   /** Exact dedup: group by content fingerprint, keep the smallest id. */
   def q34DedupExact(s: SparkSession, dir: String): DataFrame =
-    q34DedupExactImpl(s, dir, widen = false)
-
-  private[graft] def q34DedupExactImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame =
-    (if (widen) docsNorm(s, dir)
-     else Tables.documents(s, dir)
-       .select(col("doc_id"), normText(col("text")).as("norm")))
+    Tables.documents(s, dir)
+      .select(col("doc_id"), normText(col("text")).as("norm"))
       .groupBy(md5(col("norm")).as("fp"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
@@ -543,68 +530,6 @@ object DedupOps {
     if (c.narrow)
       Some(c.reps.sparkSession.sparkContext.defaultParallelism)
     else None
-
-  // ------------------------------------------------------------------
-  // PerfAB-only variants (r10, VERDICT task 4) — price the collapse's
-  // 1× overhead and its internal fingerprint choice. Never declared.
-  // ------------------------------------------------------------------
-
-  /** An identity "collapse": every doc its own representative, one
-    * checkpoint of the normalized corpus (so the A/B prices the
-    * fingerprint aggregate + member-map join, not the materialization
-    * both forms share). The pre-r9 computation shape. */
-  private def identityCollapsed(s: SparkSession, dir: String): Collapsed = {
-    val nn = docsNorm(s, dir).filter(col("norm").isNotNull)
-      .localCheckpoint(true)
-    Collapsed(
-      reps = nn,
-      map = nn.select(col("doc_id"), col("doc_id").as("rep_id")),
-      groups = nn.select(col("doc_id").as("rep_id"), lit(1L).as("mult"),
-        size(split(col("norm"), " ")).cast("long").as("n_toks")),
-      narrow = nn.rdd.getNumPartitions * 2 <
-        s.sparkContext.defaultParallelism)
-  }
-
-  /** The pre-r10 md5 internal collapse key — kept as the A/B baseline
-    * for the fingerprint switch. */
-  private def md5Collapsed(s: SparkSession, dir: String): Collapsed =
-    collapseExactFp(docsNorm(s, dir), md5(col("norm")))
-
-  private[graft] def q35Identity(s: SparkSession, dir: String): DataFrame =
-    jaccardCollapsed(identityCollapsed(s, dir))
-  private[graft] def q35Md5(s: SparkSession, dir: String): DataFrame =
-    jaccardCollapsed(md5Collapsed(s, dir))
-  /** r12 A/B baseline: the declared pipeline with the candidate-input
-    * CPU-width spread disabled — prices the conditional
-    * `reps.repartition(parallelism)` in [[collapseExactFp]]. */
-  private[graft] def q35NoSpread(s: SparkSession, dir: String): DataFrame =
-    jaccardCollapsed(collapseExactFp(docsNorm(s, dir), xxhashPairFp,
-      spread = false))
-  /** r13 A/B baseline: the declared q35 with the VERIFICATION-stage
-    * spread disabled — prices the conditional REPARTITION_BY_NUM before
-    * the exact set-intersection ([[verifySpread]]) in isolation. */
-  private[graft] def q35NoVerifySpread(s: SparkSession, dir: String): DataFrame = {
-    val c = collapsedDocs(s, dir)
-    expandRepPairs(
-      verifiedCore(docSetsCore(repToks(c.reps)), positional = true,
-        spreadTo = None),
-      c, Seq(lit(1.0).as("jaccard")), col("n_toks") >= 3L)
-  }
-
-  /** Same A/B for the corpus-dense q37 pipeline. */
-  private[graft] def q37NoSpread(s: SparkSession, dir: String): DataFrame = {
-    val c = collapseExactFp(docsNorm(s, dir), xxhashPairFp, spread = false)
-    expandRepPairs(repPairsSimhash(c), c,
-      Seq(lit(0L).as("hamming")), lit(true))
-  }
-  private[graft] def q37Identity(s: SparkSession, dir: String): DataFrame = {
-    val c = identityCollapsed(s, dir)
-    expandRepPairs(repPairsSimhash(c), c, Seq(lit(0L).as("hamming")), lit(true))
-  }
-  private[graft] def q37Md5(s: SparkSession, dir: String): DataFrame = {
-    val c = md5Collapsed(s, dir)
-    expandRepPairs(repPairsSimhash(c), c, Seq(lit(0L).as("hamming")), lit(true))
-  }
 
   /** The q35 pipeline over an arbitrary `(doc_id, text)` frame — the
     * seam the ingest chunking contract ([[CurationOps.chunkDocs]]) plugs
@@ -955,13 +880,8 @@ object DedupOps {
     * cluster-label blocks. All arithmetic up to the final sqrt/division is
     * exact integer math, so the cosine double is bit-identical to DuckDB
     * and the 0.4 threshold is safe. */
-  def q38EmbeddingNearDup(s: SparkSession, dir: String): DataFrame =
-    q38EmbeddingNearDupImpl(s, dir, widen = false)
-
-  private[graft] def q38EmbeddingNearDupImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
-    val e = (if (widen) Tables.widen(Tables.embeddings(s, dir), col("vec_id"))
-             else Tables.embeddings(s, dir))
+  def q38EmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("q"))
       .withColumn("n2", graft.functions.VectorExprs.quantized_norm2(col("q")))
       // zero-norm contract (SimilarityOps.quantized): no direction, no
@@ -1122,14 +1042,9 @@ object DedupOps {
         col("cos"))
   }
 
-  def q49EmbeddingLshDedup(s: SparkSession, dir: String): DataFrame =
-    q49EmbeddingLshDedupImpl(s, dir, widen = false)
-
-  private[graft] def q49EmbeddingLshDedupImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
+  def q49EmbeddingLshDedup(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorExprs.quantized_norm2
-    val e = (if (widen) Tables.widen(Tables.embeddings(s, dir), col("vec_id"))
-             else Tables.embeddings(s, dir))
+    val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").as("q"))
       .withColumn("n2", quantized_norm2(col("q")))
       .filter(col("n2") > 0) // zero-norm contract (SimilarityOps.quantized)

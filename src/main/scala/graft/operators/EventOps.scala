@@ -607,9 +607,11 @@ object EventOps {
     * prices TWO stream checkpoints (the narrow purchase/touch
     * projections, materialized so the hot split doesn't re-scan the
     * event table four times), so its measured crossover sits at
-    * ~2–4·10⁸ on the sf0.1 stream (PerfAB `q152_auto` vs
-    * `q152_plain_forced` on the 4·10⁴-bot fixture, post the r11
-    * duplicate-subtree fix: 7.8 vs 6.8 s at 4·10⁸ = 1.5× this bar —
+    * ~2–4·10⁸ on the sf0.1 stream (PerfAB `q152_auto` — a row since
+    * retired, re-runnable from commit dfb188e, see SCALING.md "Retired
+    * A/B variants" — vs `q152_plain_forced` on the 4·10⁴-bot fixture,
+    * post the r11 duplicate-subtree fix: 7.8 vs 6.8 s at 4·10⁸ = 1.5×
+    * this bar —
     * flat, the crossover contract; the plain form's single task is
     * ~5 s there and grows quadratically while the salted max-task
     * stays bucket-bounded). 2²⁸ ≈ 2.7·10⁸. NOTE the bot fixture

@@ -130,11 +130,6 @@ object GraphOps {
   def q101PageRank(s: SparkSession, dir: String): DataFrame =
     q101PageRankWithUnit(s, dir, RankUnit)
 
-  /** The declared q101 pins 10¹² so the oracle lattice is independent of
-    * graph size (valid to ~5×10⁴ nodes — the r7 guard enforces it); an
-    * at-scale caller passes `rankUnit = 0` for the graph-sized unit
-    * (ScaleRegression runs that form at 10× data, where the pin
-    * correctly refuses). */
   /** Distinct customer–supplier trade pairs, BOTH directions, in one
     * pass (r13, §2.4): the old two-branch union re-ran the
     * orders⋈lineitem + distinct subtree once per direction — the two
@@ -155,24 +150,11 @@ object GraphOps {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
 
-  /** r13 A/B baseline: the r12 two-branch union edge builder (each
-    * direction re-evaluates the pair subtree) feeding the declared
-    * PageRank — prices [[tradeEdges]]'s explode rewrite in isolation. */
-  private[graft] def q101UnionEdgesR12(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-    val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-      .union(pairs.select(col("s").as("src"), col("c").as("dst")))
-    pageRankInt(edges, iters = 3, rankUnit = RankUnit)
-      .select(col("node"),
-        when(col("node") % 2 === 0, "customer").otherwise("supplier")
-          .as("node_type"),
-        col("r").as("rank_i"))
-  }
-
+  /** The declared q101 pins 10¹² so the oracle lattice is independent of
+    * graph size (valid to ~5×10⁴ nodes — the r7 guard enforces it); an
+    * at-scale caller passes `rankUnit = 0` for the graph-sized unit
+    * (ScaleRegression runs that form at 10× data, where the pin
+    * correctly refuses). */
   private[graft] def q101PageRankWithUnit(s: SparkSession, dir: String,
       rankUnit: Long): DataFrame = {
     val edges = tradeEdges(s, dir)

@@ -526,16 +526,7 @@ object Relational {
     * customer selection is a salted-hash rank (reproducible across
     * runs/retries, independent of ingest order) over each customer's
     * ≤100 candidates — a bounded-frame window per key. */
-  def q226NegativeSamples(s: SparkSession, dir: String): DataFrame =
-    // spreadCand measured at PARITY-to-slight-loss in a healthy matched
-    // window (PerfAB q226_cand_* — the 366 ms single-task candidate
-    // stage overlaps other stages, and the extra exchange eats the
-    // width gain), so the declared path keeps the r12 shape; the A/B
-    // pair stays registered
-    q226NegativeSamplesImpl(s, dir, spreadCand = false)
-
-  private[graft] def q226NegativeSamplesImpl(s: SparkSession, dir: String,
-      spreadCand: Boolean): DataFrame = {
+  def q226NegativeSamples(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TextFns.hash60
     // r12: the top-5 window filter below compiles to the bounded-heap
@@ -562,18 +553,11 @@ object Relational {
       .orderBy(col("n_buyers").desc, col("partkey").asc)
       .limit(100)
       .select(col("partkey"))
-    // conditional spread of the candidate generator (r13): the customer
-    // scan is one partition at bench scale, so the ×100 crossJoin,
-    // hash60, anti-join probe and TopK map pass all ran on ONE task
-    // (StageProfile: 366 ms single-task stage). Hash on custkey —
-    // deterministic, and every downstream op is keyed per customer.
-    // narrowScan is false at cluster width (wide scan → no-op).
+    // the candidate generator is NOT spread: a repartition of the
+    // customer scan before the ×100 crossJoin measured at parity to a
+    // slight loss (r13; SCALING.md "retired A/B variants")
     val cust = Tables.customer(s, dir).select(col("c_custkey").as("custkey"))
-    val custSpread =
-      if (spreadCand && Tables.narrowScan(cust))
-        cust.repartition(s.sparkContext.defaultParallelism, col("custkey"))
-      else cust
-    val cand = custSpread.crossJoin(broadcast(pop))
+    val cand = cust.crossJoin(broadcast(pop))
     val neg = cand.join(bought, Seq("custkey", "partkey"), "left_anti")
       .withColumn("hk", hash60(concat(lit("neg:"), col("custkey").cast("string"),
         lit(":"), col("partkey").cast("string"))))

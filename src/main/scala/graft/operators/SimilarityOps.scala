@@ -59,26 +59,17 @@ object SimilarityOps {
     * mirrors with `WHERE n2 > 0`. Queries that profile rather than
     * retrieve (q48 dim stats, q196 norm outliers — where a zero norm
     * is exactly what you're looking for) read the raw table and keep
-    * them. */
-  /** `widen` default is FALSE since r13 (measured, [[graft.PerfAB]]
-    * `q*_widen` vs `q*_nowiden`, one matched window): the r12
-    * family-wide embeddings input spread was a sticky 32-task shuffle
-    * of the full vector payload whose downstream per-row work (norms,
-    * a handful of 64-dim dots against ≤ 5 broadcast queries) never
-    * amounts to the exchange it pays — removal measured ×0.34–0.82
-    * across q39/q40/q48/q93/q112/q132/q222 (and the family scaling
-    * ratios at 8-vs-32 cores were 0.41–0.63, i.e. the width actively
-    * hurt). At cluster scale `Tables.widen` was a no-op here anyway
-    * (wide scans skip it), so removal only changes the bench-scale
-    * plan. The retrieval-heavy stages run post-join at shuffle width,
-    * not at scan width. q52's KMeans fit keeps its own
-    * `repartition(8, vec_id)` determinism pin downstream; its recall
-    * bound is re-certified at sf0.001/0.01/0.1 × cpus {4,8,32} with
-    * the new upstream layout (OPTIMIZATION_r13.md). */
-  private[graft] def quantized(s: SparkSession, dir: String,
-      widen: Boolean = false): DataFrame =
-    (if (widen) Tables.widen(Tables.embeddings(s, dir), col("vec_id"))
-     else Tables.embeddings(s, dir))
+    * them.
+    *
+    * Not widened (r13, measured): an input spread of the embeddings
+    * scan is a shuffle of the full vector payload whose per-row work
+    * (norms, a few 64-dim dots against ≤ 5 broadcast queries) never
+    * repays the exchange — removing it measured ×0.34–0.82 across
+    * q39/q40/q48/q93/q112/q132/q222 (SCALING.md "retired A/B
+    * variants"). q52's KMeans fit keeps its own `repartition(8, vec_id)`
+    * determinism pin downstream. */
+  private[graft] def quantized(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("q"))
       .withColumn("n2", quantized_norm2(col("q")))
       .filter(col("n2") > 0)
@@ -89,12 +80,8 @@ object SimilarityOps {
 
   /** Exact top-10 cosine neighbors for query vectors vec_id < 5: broadcast
     * the queries, single scan over the corpus, per-query top-k window. */
-  def q39KnnBrute(s: SparkSession, dir: String): DataFrame =
-    q39KnnBruteImpl(s, dir, widen = false)
-
-  private[graft] def q39KnnBruteImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
-    val e = quantized(s, dir, widen)
+  def q39KnnBrute(s: SparkSession, dir: String): DataFrame = {
+    val e = quantized(s, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
     val w = Window.partitionBy(col("q_id"))
@@ -126,12 +113,8 @@ object SimilarityOps {
   /** LSH-bucketed ANN: 8-bit random-hyperplane signature buckets the
     * corpus; each query only scores its own bucket, top-3 by cosine.
     * (Recall vs q39 is validated in ScalaTest, not by the oracle.) */
-  def q40KnnLsh(s: SparkSession, dir: String): DataFrame =
-    q40KnnLshImpl(s, dir, widen = false)
-
-  private[graft] def q40KnnLshImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
-    val e = quantized(s, dir, widen)
+  def q40KnnLsh(s: SparkSession, dir: String): DataFrame = {
+    val e = quantized(s, dir)
     // quantized_dot against a ±1.0 plane = 1000 × Σ coef·q_i, so the sign
     // test is identical to the oracle's integer form
     val bucket = (0 until 8).map { p =>
@@ -197,12 +180,7 @@ object SimilarityOps {
     * and min/max per embedding position (the "column profile" pass a
     * vector pipeline runs before choosing an index). */
   def q48DimStats(s: SparkSession, dir: String): DataFrame =
-    q48DimStatsImpl(s, dir, widen = false)
-
-  private[graft] def q48DimStatsImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame =
-    (if (widen) Tables.widen(Tables.embeddings(s, dir), col("vec_id"))
-     else Tables.embeddings(s, dir))
+    Tables.embeddings(s, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("pos").cast("long").as("pos"),
         floor(col("x").cast("double") * 1000 + 0.5).cast("long").as("q"))
@@ -239,10 +217,10 @@ object SimilarityOps {
     * every IVF row, each of which evaluates the raise_error guard, so
     * a sub-bound mean recall still fails the query loudly instead of
     * dumping. The approximate rows + measured mean stay on
-    * [[q52KnnIvfImpl]], which Verify exports to bounds.json and the
+    * [[q52KnnIvfFull]], which Verify exports to bounds.json and the
     * sketch battery re-checks under hostile corpora. */
   def q52KnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val full = q52KnnIvfImpl(s, dir, fullProbeMean = true)
+    val full = q52KnnIvfFull(s, dir)
     // one row, true-or-raise; min() forces recall_ok on every IVF row.
     // An empty IVF side (nothing retrievable / single-vector corpus) is
     // vacuously certified — in exactly those corpora the exact side
@@ -256,13 +234,10 @@ object SimilarityOps {
     s"""SELECT q_id, neighbor_id, cos, rn, TRUE AS recall_ok
        |FROM ($q39Sql)""".stripMargin
 
-  /** [[q52KnnIvf]] with the certified-mean denominator switchable:
-    * `fullProbeMean = false` is the r7 form (mean over queries that HAVE
-    * a recall row — the bug the r8 fix closed), kept ONLY as the perf
-    * A/B baseline for attributing the r8 fix's cost ([[graft.PerfAB]]);
-    * never declared. */
-  private[graft] def q52KnnIvfImpl(s: SparkSession, dir: String,
-      fullProbeMean: Boolean, pinFit: Boolean = true): DataFrame = {
+  /** The full IVF frame behind [[q52KnnIvf]]: the approximate rows,
+    * each with its recall@10, the certified mean over the full probe
+    * set, and the in-query `recall_ok` assertion. */
+  private[graft] def q52KnnIvfFull(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val e = quantized(s, dir)
@@ -324,7 +299,7 @@ object SimilarityOps {
         val model = new KMeans().setK(math.min(16L, nDistinct).toInt)
           .setSeed(42).setMaxIter(10)
           .setFeaturesCol("features")
-          .fit(if (pinFit) e.repartition(8, col("vec_id")) else e)
+          .fit(e.repartition(8, col("vec_id")))
         (model.transform(e)
           .select(col("vec_id"), col("q"), col("n2"), col("prediction").as("cell")),
           model.clusterCenters.zipWithIndex.map { case (c, i) =>
@@ -377,14 +352,12 @@ object SimilarityOps {
     // zero overlap, or with no IVF candidates at all, has no row in
     // `recall` and must still drag the certified mean down (r8 fix:
     // 4 queries at 0.35 + 1 at 0.0 is mean 0.28, a FAIL, not 0.35).
-    val overall = if (fullProbeMean) {
-      // distinct: a duplicated probe id must weigh once in the certified
-      // mean (r9 sketch fuzz; no-op on unique-id corpora)
-      val probeIds = assigned.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id")).distinct()
-      probeIds.join(recall, Seq("q_id"), "left")
-        .agg(avg(coalesce(col("recall_at_10"), lit(0.0))).as("_overall"))
-    } else recall.agg(avg(col("recall_at_10")).as("_overall"))
+    // distinct: a duplicated probe id must weigh once in the certified
+    // mean (r9 sketch fuzz; no-op on unique-id corpora)
+    val probeIds = assigned.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id")).distinct()
+    val overall = probeIds.join(recall, Seq("q_id"), "left")
+      .agg(avg(coalesce(col("recall_at_10"), lit(0.0))).as("_overall"))
     ivf.join(broadcast(recall), Seq("q_id"), "left")
       .crossJoin(broadcast(overall))
       .withColumn("recall_at_10", coalesce(col("recall_at_10"), lit(0.0)))
@@ -410,16 +383,11 @@ object SimilarityOps {
     * unchanged. The quantization is deterministic, so unlike most ANN
     * variants this one is fully ORACLE-CHECKED; fidelity vs the float
     * ranking (q39) is spec-asserted as recall@10. */
-  def q93KnnInt8(s: SparkSession, dir: String): DataFrame =
-    q93KnnInt8Impl(s, dir, widen = false)
-
-  private[graft] def q93KnnInt8Impl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
+  def q93KnnInt8(s: SparkSession, dir: String): DataFrame = {
     // fused codegen quantization (maxabs + ⌊x/scale·127+0.5⌋ in one
     // pass) — the interpreted aggregate+transform chain was q93's actual
     // bottleneck, not the pairwise dot
-    val e = (if (widen) Tables.widen(Tables.embeddings(s, dir), col("vec_id"))
-             else Tables.embeddings(s, dir))
+    val e = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         graft.functions.VectorExprs.int8_codes(col("embedding")).as("q8"))
       .withColumn("n2", graft.functions.VectorExprs.long_dot(col("q8"), col("q8")))
@@ -536,14 +504,10 @@ object SimilarityOps {
     * matter the corpus size. The ranks-within-k windows run on k-row
     * frames (single task by construction — bounded by the retrieval k,
     * not the corpus). */
-  def q111RrfHybrid(s: SparkSession, dir: String): DataFrame =
-    q111RrfHybridImpl(s, dir, materialize = true)
-
-  private[graft] def q111RrfHybridImpl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  def q111RrfHybrid(s: SparkSession, dir: String): DataFrame = {
     val wLex = Window.orderBy(col("score").desc, col("doc_id").asc)
     val lex = TextOps.bm25(
-      TextOps.sharedToks(s, dir, materialize),
+      TextOps.sharedToks(s, dir),
       Seq("query", "merge", "fast"), k = 20)
       .select(col("doc_id"), row_number().over(wLex).cast("long").as("r_lex"))
     val e = quantized(s, dir)
@@ -662,12 +626,8 @@ object SimilarityOps {
     * rep aggregates to members. The q214 lesson applied to
     * decontamination: a per-entity aggregate consumer never needs the
     * pair expansion at all. Parity + branch witness straddle-spec'd. */
-  def q112SemanticDecontam(s: SparkSession, dir: String): DataFrame =
-    q112SemanticDecontamImpl(s, dir, widen = false)
-
-  private[graft] def q112SemanticDecontamImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
-    val e = quantized(s, dir, widen).select(col("vec_id"), col("q"), col("n2"))
+  def q112SemanticDecontam(s: SparkSession, dir: String): DataFrame = {
+    val e = quantized(s, dir).select(col("vec_id"), col("q"), col("n2"))
     val isEval =
       pmod(graft.functions.TextFns.hash60(
         concat(lit("eval:"), col("vec_id").cast("string"))), lit(100)) < 5
@@ -805,16 +765,11 @@ object SimilarityOps {
     * doc). The anti-pattern this avoids is collecting vectors to the
     * driver or a gramian via a single-task reduce: the matrix is a plain
     * distributed hash aggregate. */
-  def q132EmbedCovariance(s: SparkSession, dir: String): DataFrame =
-    q132EmbedCovarianceImpl(s, dir, widen = false)
-
-  private[graft] def q132EmbedCovarianceImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
+  def q132EmbedCovariance(s: SparkSession, dir: String): DataFrame = {
     val d38 = "decimal(38,0)"
     val m = 64
     val nPairs = m * (m + 1) / 2
-    val agg = (if (widen) Tables.widen(Tables.embeddings(s, dir), col("vec_id"))
-               else Tables.embeddings(s, dir))
+    val agg = Tables.embeddings(s, dir)
       .select(posexplode(
         graft.functions.VectorExprs.cov_pair_products(col("embedding")))
         .as(Seq("pos", "v")))
@@ -1500,12 +1455,8 @@ object SimilarityOps {
     * Scale: one pass computes each vector's bucket (8 codegen dots);
     * per-(bucket, label) counts are ≤ 256·k cells; the majority window
     * partitions BY BUCKET over that bounded cell table. */
-  def q222BucketPurity(s: SparkSession, dir: String): DataFrame =
-    q222BucketPurityImpl(s, dir, widen = false)
-
-  private[graft] def q222BucketPurityImpl(s: SparkSession, dir: String,
-      widen: Boolean): DataFrame = {
-    val e = quantized(s, dir, widen)
+  def q222BucketPurity(s: SparkSession, dir: String): DataFrame = {
+    val e = quantized(s, dir)
     val key = (0 until 8).map { p =>
       val plane = array(planes(p).toIndexedSeq.map(c => lit(c.toFloat)): _*)
       when(quantized_dot(col("q"), plane) > 0, 1L << p).otherwise(0L)

@@ -368,6 +368,25 @@ object TextOps {
       |FROM toks t LEFT JOIN vocab v USING (term)
       |GROUP BY t.doc_id""".stripMargin
 
+  /** The shared `(doc_id, toks)` tokenizer of the multi-consumer text
+    * queries (q103/q104/q111/q122/q148), MATERIALIZED when the scan is
+    * narrow (r13, VERDICT task 6): each of these queries consumes the
+    * tokenized frame from ≥ 2 independent plan branches, and a lazy
+    * frame re-runs scan + regexp tokenize per branch (the r12
+    * loader-widen A/B lost precisely because the repartition was not
+    * materialized). One localCheckpoint pays tokenize once at bench
+    * scale; at cluster width (wide scan) the frame stays LAZY —
+    * re-computing a cheap-per-byte tokenize beats materializing a
+    * corpus-sized token table, and the bench-scale checkpoint of a
+    * narrow scan is small by construction. */
+  private[graft] def sharedToks(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(s, dir)
+      .select(col("doc_id"), filter(tokens(col("text")), t => t =!= "").as("toks"))
+    if (Tables.narrowScan(Tables.documents(s, dir)))
+      d.localCheckpoint(true)
+    else d
+  }
+
   /** Top-k collocations by pointwise mutual information: bigrams whose
     * joint count beats what their unigram frequencies predict. The score
     * is the PMI *odds ratio* `c_ab·N / (c_a·c_b)` rather than its log —
@@ -384,32 +403,8 @@ object TextOps {
     * top-50 via `TakeOrderedAndProject` (per-partition partial top-k, not
     * a single-task global sort). Bigrams are formed per-row with an
     * index-aware `transform` — no self-join of the corpus on position. */
-  /** The shared `(doc_id, toks)` tokenizer of the multi-consumer text
-    * queries (q103/q104/q111/q122/q148), MATERIALIZED when the scan is
-    * narrow (r13, VERDICT task 6): each of these queries consumes the
-    * tokenized frame from ≥ 2 independent plan branches, and a lazy
-    * frame re-runs scan + regexp tokenize per branch (the r12
-    * loader-widen A/B lost precisely because the repartition was not
-    * materialized). One localCheckpoint pays tokenize once at bench
-    * scale; at cluster width (wide scan) the frame stays LAZY —
-    * re-computing a cheap-per-byte tokenize beats materializing a
-    * corpus-sized token table, and the bench-scale checkpoint of a
-    * narrow scan is small by construction. */
-  private[graft] def sharedToks(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), filter(tokens(col("text")), t => t =!= "").as("toks"))
-    if (materialize && Tables.narrowScan(Tables.documents(s, dir)))
-      d.localCheckpoint(true)
-    else d
-  }
-
-  def q103PmiBigrams(s: SparkSession, dir: String): DataFrame =
-    q103PmiBigramsImpl(s, dir, materialize = true)
-
-  private[graft] def q103PmiBigramsImpl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    val docs = sharedToks(s, dir, materialize)
+  def q103PmiBigrams(s: SparkSession, dir: String): DataFrame = {
+    val docs = sharedToks(s, dir)
     // checkpointed (r12, lint class #10): uni feeds the two bigram-leg
     // joins (shuffle) AND the broadcast total — the broadcast consumer
     // plans a DIFFERENT exchange type, so runtime stage reuse cannot
@@ -502,12 +497,8 @@ object TextOps {
     * and NO shuffle anywhere except the final top-20
     * `TakeOrderedAndProject` (per-partition partial top-k). Two linear
     * corpus scans total (stats, score). */
-  def q104Bm25(s: SparkSession, dir: String): DataFrame =
-    q104Bm25Impl(s, dir, materialize = true)
-
-  private[graft] def q104Bm25Impl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    val docs = sharedToks(s, dir, materialize)
+  def q104Bm25(s: SparkSession, dir: String): DataFrame = {
+    val docs = sharedToks(s, dir)
     bm25(docs, Seq("query", "merge", "fast"), k = 20)
       .select(col("doc_id"), col("dl"),
         col("tf_0").as("tf_query"), col("tf_1").as("tf_merge"),
@@ -740,12 +731,8 @@ object TextOps {
     * join — the AQE-splittable shape, not a posting-list buffer. Final
     * cut is `TakeOrderedAndProject` (per-partition partial top-k, no
     * global single-task sort). */
-  def q122KneserNey(s: SparkSession, dir: String): DataFrame =
-    q122KneserNeyImpl(s, dir, materialize = true)
-
-  private[graft] def q122KneserNeyImpl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    val docs = sharedToks(s, dir, materialize)
+  def q122KneserNey(s: SparkSession, dir: String): DataFrame = {
+    val docs = sharedToks(s, dir)
       .select(col("toks"))
       .filter(size(col("toks")) >= 2)
     val cab = docs
@@ -1553,12 +1540,8 @@ object TextOps {
     * the repeated subtree shares its shuffle via exchange reuse). Final
     * cut = `TakeOrderedAndProject`. Hot function words skew the pair
     * JOIN keys — AQE-splittable, never an aggregation buffer. */
-  def q148SkipGram(s: SparkSession, dir: String): DataFrame =
-    q148SkipGramImpl(s, dir, materialize = true)
-
-  private[graft] def q148SkipGramImpl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
-    val docs = sharedToks(s, dir, materialize)
+  def q148SkipGram(s: SparkSession, dir: String): DataFrame = {
+    val docs = sharedToks(s, dir)
       .select(col("toks"))
       .filter(size(col("toks")) >= 2)
     val pairs = docs

@@ -83,14 +83,7 @@ object EtlMain {
   def main(args: Array[String]): Unit = {
     val confPath = args.headOption.getOrElse("conf.cfg")
     val conf = parseConf(Files.readAllLines(Paths.get(confPath)).asScala.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val counts = run(spark, conf)
     counts.foreach { case (t, n) => println(s"[etl] $t: $n rows") }
     spark.stop()

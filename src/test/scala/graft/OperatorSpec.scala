@@ -311,7 +311,7 @@ class OperatorSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // the IVF pipeline itself (internal since r10 — the declared q52
     // dumps the exact side + the certified boolean)
-    val rows = SimilarityOps.q52KnnIvfImpl(spark, sfDir, fullProbeMean = true)
+    val rows = SimilarityOps.q52KnnIvfFull(spark, sfDir)
       .collect()
     val ivf = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truth.count(ivf).toDouble / truth.size

@@ -543,12 +543,22 @@ class OracleFuzzSpec extends SparkTestBase {
         Verify.oracleJson(
           SparkEntry.oracleSql.view.filterKeys(queries.contains).toMap))
       val out = new StringBuilder
+      // an oracle that dies (OOM kill, traceback) prints no FAIL line:
+      // its exit code and stderr tail are the only record of the cause
+      val errTail = scala.collection.mutable.Queue[String]()
       val code = Process(Seq("python3", "tools/check.py", dir, outDir),
         new java.io.File("/root/repo"))
-        .!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+        .!(ProcessLogger(l => out.append(l).append('\n'),
+          l => errTail.synchronized {
+            errTail.enqueue(l)
+            if (errTail.size > 20) errTail.dequeue()
+          }))
+      // exit 128+N: killed by signal N (137 = SIGKILL, the OOM killer)
+      val killed = if (code > 128) s", killed by signal ${code - 128}" else ""
       if (code != 0)
-        failures += s"$label$seed oracle diff:\n" +
-          out.toString.linesIterator.filter(_.startsWith("FAIL")).mkString("\n")
+        failures += s"$label$seed oracle diff (check.py exit $code$killed):\n" +
+          out.toString.linesIterator.filter(_.startsWith("FAIL")).mkString("\n") +
+          "\ncheck.py stderr, last 20 lines:\n" + errTail.mkString("\n")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
@@ -1091,7 +1101,7 @@ class OracleFuzzSpec extends SparkTestBase {
       // side + boolean) must run under the same corpus and certify.
       try {
         val rows = operators.SimilarityOps
-          .q52KnnIvfImpl(spark, dir, fullProbeMean = true).collect()
+          .q52KnnIvfFull(spark, dir).collect()
         if (rows.isEmpty) {
           if (seed % 4 != 0)
             failures += s"sketch$seed q52: EMPTY result with retrievable vectors present"

@@ -206,6 +206,32 @@ class PropertySpec extends SparkTestBase {
     assert(Tables.widen(wide, col("doc_id")) eq wide)
   }
 
+  test("GraftSession is one idempotent session carrying the engine config") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    val a = GraftSession(4)
+    assert(a eq GraftSession(4))
+    assert(a eq spark)
+    assert(a.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(a.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(a.conf.get("spark.sql.optimizer.excludedRules")
+      .contains("InferFiltersFromGenerate"))
+    // a filtered explode of a nullable array: InferFiltersFromGenerate
+    // would synthesize an isnotnull/size > 0 filter under the Generate
+    def preFilters = spark.range(0, 20)
+      .select(when(col("id") % 2 === 0, array(col("id"), col("id") + 1)).as("xs"))
+      .select(explode(col("xs")).as("x")).filter(col("x") > 3)
+      .queryExecution.optimizedPlan
+      .collect { case g: Generate => g.child.collect { case f: Filter => f } }
+      .flatten
+    assert(preFilters.isEmpty)
+    // control: the same plan with the rule back in does get one, so the
+    // check above can fail
+    val excluded = a.conf.get("spark.sql.optimizer.excludedRules")
+    a.conf.set("spark.sql.optimizer.excludedRules", "")
+    try assert(preFilters.nonEmpty)
+    finally a.conf.set("spark.sql.optimizer.excludedRules", excluded)
+  }
+
   test("salted join equals plain join") {
     val e = Tables.events(spark, sfDir).select("event_id", "user_id", "value")
     val dim = Tables.events(spark, sfDir).groupBy("user_id")

@@ -5,17 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite, small shuffle count. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // match the production mains: see the Bench/Verify builders
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 
   val sfDir = "/root/testdata/sf0.001"
 }
