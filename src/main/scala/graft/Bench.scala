@@ -26,11 +26,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    val passes = 3
     val spark = GraftSession()
-
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import QueryTrace.{force, median}
 
     // Local-iteration filter (comma-separated names, Verify's contract);
     // the driver never sets it, so driver benches always cover the suite.
@@ -104,36 +102,22 @@ object Bench {
     // counts are code-determined and pass-stable; the count marks which
     // queries sit in the LATENCY class (many driver round-trips) vs the
     // compute class, the split the two canaries adjudicate between
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); ()
-        }
-      })
-    val queryJobs = scala.collection.mutable.Map.empty[String, Long]
+    val queryJobs = scala.collection.mutable.Map.empty[String, Int]
     val samples: Seq[Seq[(String, Option[Double])]] =
       (1 to passes).map { pass =>
         ordered.map { case (name, fn) =>
-          val j0 = jobCount.get()
-          val t0 = System.nanoTime()
           val elapsed =
-            try { force(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable =>
+            try {
+              val w = QueryTrace.during(spark)(force(fn(spark, sfDir)))
+              if (pass == 1) queryJobs(name) = w.jobs
+              Some(w.sec)
+            } catch { case e: Throwable =>
               System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
               None
             }
-          // listener is async: counts can lag a beat; magnitude is what
-          // the adjudication uses (1 vs dozens), not exactness
-          if (pass == 1) queryJobs(name) = jobCount.get() - j0
           name -> elapsed
         }
       }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     // a query is failed if ANY pass failed (flaky ≠ healthy)
     val allResults: Seq[(String, Option[Double], Option[Double])] =
       ordered.map { case (name, _) =>
@@ -246,7 +230,7 @@ object Bench {
       f""""$k":{"n_per_pass":${n.toDouble / passes}%.1f,"sec_per_pass":${s / passes}%.4f}"""
     }.mkString("{", ",", "}")
     val queriesJobs = results.map(r =>
-        "\"" + r._1 + "\":" + queryJobs.getOrElse(r._1, -1L))
+        "\"" + r._1 + "\":" + queryJobs.getOrElse(r._1, -1))
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"canary":$canary,"job_canary":$jobCanary,"queries_jobs":$queriesJobs,"passes":$passes,"failed":$failed,$movers,"probe_cost_est":${f"$probeCostEst%.4f"},"probe_cost":$probeBreakdown,"sf":"$sfDir"}"""
     println(line)

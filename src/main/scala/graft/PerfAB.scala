@@ -8,10 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * adjudicated by an ISOLATED interleaved A/B of the two variants, not
   * by bisecting suite runs. Runs each registered variant once to warm
   * (codegen/JIT), then `passes` interleaved measured passes, and prints
-  * median + min per variant (min ≈ the noise floor on a co-tenant box).
+  * median + min per variant (min ≈ the noise floor on a co-tenant box),
+  * then the last pass's jobs, longest task, peak task memory, spill and
+  * stage/task table: each stage's wall, task count and longest task,
+  * and the top tasks with the records they read. The table is what
+  * separates a genuine single fat task (the skew the adaptive
+  * dispatches exist for) from a uniformly busy stage, and shows plan
+  * pathologies a wall time hides (r11 fan-out forensics, SCALING.md).
   *
-  * Usage: runMain graft.PerfAB [sfDir] [passes] [variantCsv]
+  * Usage: runMain graft.PerfAB [sfDir] [passes] [nameCsv]
   * (defaults /root/testdata/sf0.1, 5, all registered variants).
+  * A name is a declared query or a variant key ([[QueryTrace.lookup]]).
   */
 object PerfAB {
 
@@ -134,7 +141,7 @@ object PerfAB {
     * node) plus a ring for graph body — the id-ordered wedge stage's
     * worst case: the hub key receives (N/2)² wedge rows from KBs of
     * input, below every AQE skew threshold. */
-  private[graft] def hubGraph(s: SparkSession, n: Long = 8001L): DataFrame = {
+  private def hubGraph(s: SparkSession, n: Long = 8001L): DataFrame = {
     import org.apache.spark.sql.functions._
     val hub = n / 2
     val ids = s.range(0, n).select(col("id"))
@@ -151,52 +158,44 @@ object PerfAB {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 5
-    val names =
-      if (args.length > 2) args(2).split(",").toSeq else variants.keys.toSeq.sorted
     // any DECLARED query is measurable by its SparkEntry name without
     // hand-registering a variant (r12: mover attribution needs CONTROL
     // queries from untouched files in the same window as the suspects)
-    def variantFor(n: String): (SparkSession, String) => DataFrame =
-      variants.getOrElse(n, SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown variant/query: $n")))
+    val names =
+      if (args.length > 2) args(2).split(",").toSeq else variants.keys.toSeq.sorted
     val spark = GraftSession()
-    // per-variant Spark-job counter (r12): a variant's wall divides into
-    // compute and #jobs × round-trip latency; the count makes the
-    // job-latency-sensitivity of a query (KMeans iterations, multi-scan
-    // unions) a printed fact instead of a guess
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); ()
-        }
-      })
-    val jobsPerVariant = scala.collection.mutable.Map.empty[String, Long]
+    // a variant's wall divides into compute and #jobs × round-trip
+    // latency (r12); its last pass also keeps the stage/task table that
+    // tells one fat task (skew) from a uniformly busy stage
+    val last = scala.collection.mutable.Map.empty[String, QueryTrace.Window[Unit]]
     def run(name: String): Double = {
-      val j0 = jobCount.get()
-      val t0 = System.nanoTime()
-      variantFor(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // listener events are async; tolerate slight undercount — the
-      // magnitude (1 vs dozens) is what matters for attribution
-      jobsPerVariant(name) = jobCount.get() - j0
-      dt
+      val w = QueryTrace.during(spark)(
+        QueryTrace.force(QueryTrace.lookup(name)(spark, sfDir)))
+      last(name) = w
+      w.sec
     }
-    names.foreach(run) // warm
+    names.foreach(run) // warm: codegen, file index, checkpoint builds
     val samples: Map[String, Seq[Double]] = (1 to passes)
       .flatMap(_ => names.map(n => n -> run(n)))
       .groupMap(_._1)(_._2)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     println(f"\n[perfab] $passes%d interleaved passes at $sfDir%s")
     names.foreach { n =>
       val xs = samples(n)
-      println(f"[perfab] $n%-24s median ${median(xs)}%6.3fs  min ${xs.min}%6.3fs  " +
-        f"jobs ${jobsPerVariant.getOrElse(n, -1L)}%3d  " +
+      val w = last(n)
+      println(f"[perfab] $n%-24s median ${QueryTrace.median(xs)}%6.3fs  min ${xs.min}%6.3fs  " +
+        f"jobs ${w.jobs}%3d  max-task ${w.maxTaskMs}%6d ms  " +
+        f"peak ${w.peakBytes / 1048576.0}%7.1f MB  spill ${w.spillBytes / 1048576.0}%7.1f MB  " +
         xs.map(x => f"$x%.3f").mkString("[", ", ", "]"))
+      val byStage = w.tasks.groupBy(_.stage)
+      w.stages.sortBy(-_.wallMs).take(8).foreach { st =>
+        val top = byStage.getOrElse(st.id, Seq.empty).maxByOption(_.ms)
+          .fold("")(t => f"  top idx=${t.index}%d recsIn=${t.recordsIn}%d")
+        println(f"[perfab]   stage ${st.id}%5d wall ${st.wallMs}%7d ms  tasks ${st.tasks}%4d  " +
+          f"max-task ${st.maxTaskMs}%7d ms$top")
+      }
+      w.tasks.sortBy(-_.ms).take(6).foreach { t =>
+        println(f"[perfab]   task stage=${t.stage}%d idx=${t.index}%d  ${t.ms}%7d ms  recsIn=${t.recordsIn}%d")
+      }
     }
     spark.stop()
   }

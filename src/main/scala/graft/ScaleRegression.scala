@@ -70,6 +70,14 @@ object ScaleRegression {
     // r9: the last unmeasured bench heavies
     "q145_containment", "q221_part_affinity", "q226_negative_samples")
 
+  /** zipf mode's default selection: the standing mega-group regression
+    * chain (r11: +q70's contamination dispatch, +q142's boundary salt —
+    * the two adaptive branches previously measured only by ad-hoc
+    * PerfAB). */
+  val zipfChain: Seq[String] = Seq("q35_ngram_jaccard", "q36_minhash_lsh",
+    "q37_simhash", "q214_lsh_eval", "q70_contamination",
+    "q142_head_tail_overlap")
+
   /** Which scaled tables each chain query needs (everything else is
     * read from the base fixtures unscaled). */
   private val docQueries = Set("q35_ngram_jaccard", "q36_minhash_lsh",
@@ -252,110 +260,26 @@ object ScaleRegression {
     }
   }
 
-  /** Max single-task peak execution memory + total spill since reset —
-    * the two numbers that decide OOM risk at scale. */
-  private class PeakListener extends org.apache.spark.scheduler.SparkListener {
-    val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spill = new java.util.concurrent.atomic.AtomicLong(0L)
-    // longest single task (ms) — the skew witness: a query whose wall
-    // time ≈ its max task time is single-task-bound no matter how many
-    // cores sit idle (the zipf mega-group probe reads this column)
-    val maxTask = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        peak.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-      if (t.taskInfo != null)
-        maxTask.getAndUpdate(p => math.max(p, t.taskInfo.duration))
-    }
-    def reset(): Unit = { peak.set(0L); spill.set(0L); maxTask.set(0L) }
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
     val workDir = if (args.length > 2) args(2) else "/tmp/graft_scale"
     val mode = if (args.length > 3) args(3) else "tagged"
-    require(mode == "tagged" || mode == "shared-vocab" || mode == "zipf"
-        || mode == "hub",
-      s"mode must be tagged|shared-vocab|zipf|hub, got $mode")
+    require(mode == "tagged" || mode == "shared-vocab" || mode == "zipf",
+      s"mode must be tagged|shared-vocab|zipf, got $mode")
     val selected =
       if (args.length > 4) args(4).split(",").toSeq
-      else if (mode == "zipf")
-        // the standing mega-group regression chain (r11: +q70's
-        // contamination dispatch, +q142's boundary salt — the two
-        // adaptive branches previously measured only by ad-hoc PerfAB)
-        Seq("q35_ngram_jaccard", "q36_minhash_lsh", "q37_simhash",
-          "q214_lsh_eval", "q70_contamination", "q142_head_tail_overlap")
-      else if (mode == "hub") Seq("q83_hub_adaptive", "q83_hub_id")
+      else if (mode == "zipf") zipfChain
       else chain
     require(mode != "zipf" ||
       selected.forall(q => docQueries(q) || embQueries(q) || eventQueries(q)),
       "zipf mode scales documents/embeddings/events; selection must be " +
         "doc, embedding, or event queries")
     val spark = GraftSession()
-    val listener = new PeakListener
-    spark.sparkContext.addSparkListener(listener)
-
-    if (mode == "hub") {
-      // the r10 PerfAB hub pairs, folded into the standing harness
-      // (r11, VERDICT task 5): triangles over a synthetic star hub —
-      // base n=8001 (16M wedges on the hub key, measured at parity)
-      // vs n=`factor` (40001 → 4·10⁸ wedges, the minutes-vs-seconds
-      // regime). q83_hub_id is the unconditional id-ordered BASELINE;
-      // q83_hub_adaptive must keep max-task ≪ wall via the
-      // degree-ordered dispatch. 3-pass medians, max-task column.
-      require(factor > 2, s"hub mode: factor is the hub NODE COUNT")
-      val fns: Map[String, Long => DataFrame] = Map(
-        "q83_hub_adaptive" ->
-          (n => operators.DedupOps.triangles(PerfAB.hubGraph(spark, n))),
-        "q83_hub_id" ->
-          (n => operators.DedupOps.trianglesIdOriented(PerfAB.hubGraph(spark, n))))
-      val names = selected.filter(fns.contains)
-      def runHub(name: String, n: Long): (Double, Double, Double, Double) = {
-        listener.reset()
-        val t0 = System.nanoTime()
-        fns(name)(n).write.format("noop").mode("overwrite").save()
-        org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
-        ((System.nanoTime() - t0) / 1e9, listener.peak.get() / 1048576.0,
-          listener.spill.get() / 1048576.0, listener.maxTask.get() / 1e3)
-      }
-      names.foreach(runHub(_, 8001L)) // warm
-      val hubSamples = (1 to 3).map { _ =>
-        names.flatMap { nm =>
-          Seq((nm, "base") -> runHub(nm, 8001L),
-            (nm, "scaled") -> runHub(nm, factor.toLong))
-        }.toMap
-      }
-      def med(xs: Seq[Double]): Double = {
-        val s0 = xs.sorted
-        if (s0.size % 2 == 1) s0(s0.size / 2)
-        else (s0(s0.size / 2 - 1) + s0(s0.size / 2)) / 2
-      }
-      println(s"\n[scale] mode=hub base-n=8001 scaled-n=$factor")
-      println("\n| variant | 8001 sec | 8001 max-task sec | " +
-        s"$factor sec | $factor max-task sec | $factor spill MB |")
-      println("|---|---|---|---|---|---|")
-      names.foreach { nm =>
-        val b = hubSamples.map(_((nm, "base")))
-        val sc = hubSamples.map(_((nm, "scaled")))
-        println(f"| $nm | ${med(b.map(_._1))}%.2f | ${b.map(_._4).max}%.2f | " +
-          f"${med(sc.map(_._1))}%.2f | ${sc.map(_._4).max}%.2f | " +
-          f"${sc.map(_._3).max}%.0f |")
-      }
-      spark.stop()
-      return
-    }
 
     val scaledDir = s"$workDir/x$factor-$mode"
     println(s"[scale] generating ${factor}x $mode fixtures at $scaledDir ...")
     generate(spark, baseDir, factor, scaledDir, mode, selected)
-
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     case class M(sec: Double, peakMb: Double, spillMb: Double,
       maxTaskSec: Double)
@@ -364,19 +288,17 @@ object ScaleRegression {
     // 10x — 159,990 graph nodes — the r7 pinned-unit guard correctly
     // REFUSES that pin: first scale run of this harness proved the guard
     // fires outside the pin's 54,255-node domain.)
-    val fns: Map[String, (SparkSession, String) => DataFrame] =
-      SparkEntry.queries + ("q101_pagerank" ->
-        ((s: SparkSession, d: String) =>
-          operators.GraphOps.q101PageRankWithUnit(s, d, 0L)))
+    def fn(name: String): (SparkSession, String) => DataFrame =
+      if (name == "q101_pagerank")
+        (s, d) => operators.GraphOps.q101PageRankWithUnit(s, d, 0L)
+      else QueryTrace.lookup(name)
+    // longest single task — the skew witness: a query whose wall time ≈
+    // its max task time is single-task-bound no matter how many cores
+    // sit idle (the zipf mega-group probe reads this column)
     def run(name: String, dir: String): M = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      force(fns(name)(spark, dir))
-      // listener events are posted asynchronously; drain before reading
-      org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
-      M((System.nanoTime() - t0) / 1e9,
-        listener.peak.get() / 1048576.0, listener.spill.get() / 1048576.0,
-        listener.maxTask.get() / 1e3)
+      val w = QueryTrace.during(spark)(QueryTrace.force(fn(name)(spark, dir)))
+      M(w.sec, w.peakBytes / 1048576.0, w.spillBytes / 1048576.0,
+        w.maxTaskMs / 1e3)
     }
 
     // warm pass at 1x (codegen/JIT), then THREE measured passes of each
@@ -392,11 +314,7 @@ object ScaleRegression {
         Seq((n, "base") -> run(n, baseDir), (n, "scaled") -> run(n, scaledDir))
       }.toMap
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
+    import QueryTrace.median
     def agg(n: String, which: String): M = {
       val ms = samples.map(_((n, which)))
       // max-task reports the MEDIAN across passes of each pass's longest

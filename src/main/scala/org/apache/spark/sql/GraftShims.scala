@@ -83,8 +83,8 @@ object GraftShims {
     }.foreach(_.unpersist(blocking = false))
 
   /** Drain the async listener bus so a metrics listener has seen every
-    * completed task before its counters are read (the ScaleRegression
-    * peak-memory harness). `listenerBus` is private[spark]; this package
+    * completed task before its counters are read (`graft.QueryTrace`'s
+    * measurement window). `listenerBus` is private[spark]; this package
     * sits inside org.apache.spark, hence the shim. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

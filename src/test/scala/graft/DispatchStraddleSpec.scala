@@ -352,47 +352,35 @@ class DispatchStraddleSpec extends SparkTestBase {
 
   test("triangle orientation dispatch: identical counts across the bar, branch witnessed by job shape (10 seeds)") {
     import spark.implicits._
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
+    def jobs[A](body: => A): (A, Int) = {
+      val w = QueryTrace.during(spark)(body)
+      (w.value, w.jobs)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def jobs[A](body: => A): (A, Int) = {
-        org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
-        val before = counter.get()
-        val a = body
-        org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
-        (a, counter.get() - before)
+    for (seed <- seeds) {
+      val rnd = new scala.util.Random(seed + 300)
+      val hub = 4 + rnd.nextInt(8)
+      // a hub star (wedges concentrate on the hub) + random tail edges
+      val star = (1 to hub).map(i => (0L, i.toLong))
+      val tail = (0 until 10).map(_ =>
+        (20L + rnd.nextInt(8), 30L + rnd.nextInt(8))).distinct
+      val edges = (star ++ tail).filter(e => e._1 != e._2)
+        .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
+        .toDF("doc_a", "doc_b")
+      // the dispatcher's probe metric, recomputed verbatim
+      val mw = edges.groupBy(col("doc_b").as("v")).agg(count(lit(1)).as("i"))
+        .join(edges.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("o")), Seq("v"))
+        .agg(max(col("i").cast("double") * col("o"))).head()
+      val maxWedge = if (mw.isNullAt(0)) 0L else mw.getDouble(0).toLong
+      if (maxWedge > 1) {
+        val (idB, idJobs) = jobs(DedupOps.trianglesAdaptive(edges, maxWedge))
+        val (degB, degJobs) = jobs(DedupOps.trianglesAdaptive(edges, maxWedge - 1))
+        // witness: the degree branch materializes the oriented frame
+        // (an extra checkpoint) — strictly more jobs than the id branch
+        assert(degJobs > idJobs,
+          s"seed $seed: degree branch ($degJobs jobs) not heavier than id branch ($idJobs)")
+        assert(rows(idB) == rows(degB),
+          s"seed $seed: rooted counts differ across the orientation bar")
       }
-      for (seed <- seeds) {
-        val rnd = new scala.util.Random(seed + 300)
-        val hub = 4 + rnd.nextInt(8)
-        // a hub star (wedges concentrate on the hub) + random tail edges
-        val star = (1 to hub).map(i => (0L, i.toLong))
-        val tail = (0 until 10).map(_ =>
-          (20L + rnd.nextInt(8), 30L + rnd.nextInt(8))).distinct
-        val edges = (star ++ tail).filter(e => e._1 != e._2)
-          .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-          .toDF("doc_a", "doc_b")
-        // the dispatcher's probe metric, recomputed verbatim
-        val mw = edges.groupBy(col("doc_b").as("v")).agg(count(lit(1)).as("i"))
-          .join(edges.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("o")), Seq("v"))
-          .agg(max(col("i").cast("double") * col("o"))).head()
-        val maxWedge = if (mw.isNullAt(0)) 0L else mw.getDouble(0).toLong
-        if (maxWedge > 1) {
-          val (idB, idJobs) = jobs(DedupOps.trianglesAdaptive(edges, maxWedge))
-          val (degB, degJobs) = jobs(DedupOps.trianglesAdaptive(edges, maxWedge - 1))
-          // witness: the degree branch materializes the oriented frame
-          // (an extra checkpoint) — strictly more jobs than the id branch
-          assert(degJobs > idJobs,
-            s"seed $seed: degree branch ($degJobs jobs) not heavier than id branch ($idJobs)")
-          assert(rows(idB) == rows(degB),
-            s"seed $seed: rooted counts differ across the orientation bar")
-        }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

@@ -268,4 +268,22 @@ class PropertySpec extends SparkTestBase {
       .agg(count(lit(1)).as("n_events"))
     assert(finalCounts.exceptAll(want).isEmpty && want.exceptAll(finalCounts).isEmpty)
   }
+
+  test("QueryTrace windows count exactly; every tool name resolves through one lookup") {
+    val n = 3
+    val collects = QueryTrace.during(spark)(
+      (1 to n).foreach(_ => spark.range(0, 10).collect()))
+    assert(collects.jobs == n)
+    val k = 5
+    val w = QueryTrace.during(spark)(QueryTrace.force(spark.range(0, 1000, 1, k).toDF()))
+    assert(w.jobs == 1 && w.tasks.size == k && w.stages.map(_.tasks).sum == k)
+    assert(w.peakBytes >= 0 && w.spillBytes >= 0)
+    val names = PerfAB.variants.keys ++ ScaleRegression.chain ++ ScaleRegression.zipfChain
+    val unresolved = names.filter(nm => scala.util.Try(QueryTrace.lookup(nm)).isFailure)
+    assert(unresolved.isEmpty, s"unresolved tool names: $unresolved")
+    // lookup takes declared queries first: a variant under a declared
+    // name would be silently unreachable
+    val shadowed = PerfAB.variants.keySet intersect SparkEntry.queries.keySet
+    assert(shadowed.isEmpty, s"PerfAB keys shadow declared queries: $shadowed")
+  }
 }

@@ -526,26 +526,10 @@ class ScaleLintSpec extends SparkTestBase {
       case x => x
     }.flatMap(_.collect { case x => x })
 
-  /** Spark jobs started while `body` runs — the class #8 probe. The
-    * listener bus is drained before and after so asynchronous job-start
-    * events from earlier work never leak into the window. */
-  private val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private lazy val jobListener = {
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
+  /** Spark jobs started while `body` runs — the class #8 probe. */
   private def jobsDuring[A](body: => A): (A, Int) = {
-    jobListener
-    org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
-    val before = jobCounter.get()
-    val a = body
-    org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
-    (a, jobCounter.get() - before)
+    val w = QueryTrace.during(spark)(body)
+    (w.value, w.jobs)
   }
 
   test("lint class inventory matches the exported Evidence count") {
