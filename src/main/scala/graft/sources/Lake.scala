@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
 /** Generic data-lake ingestion/egress surface (SURVEY §2.1 generalized).
@@ -107,6 +112,35 @@ object Lake {
 
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "snappy").orc(path)
+
+  /** Runs independent actions as concurrent Spark jobs, one thread per
+    * action, and returns their results in argument order. Each thread
+    * carries the caller's active session and local properties (job group,
+    * scheduler pool, listener labels) through
+    * `SQLExecution.withThreadLocalCaptured`, minus the caller's SQL
+    * execution ids (which that method would copy too), so every action's
+    * queries are top-level SQL executions. Every action is waited for
+    * before the first failure (in argument order) is rethrown as the
+    * action threw it: a failed phase never leaves a write running behind
+    * the caller. */
+  def concurrently[T](spark: SparkSession)(actions: (() => T)*): Seq[T] = {
+    val sc = spark.sparkContext
+    val pool = Executors.newFixedThreadPool(actions.size)
+    try {
+      val futures = actions.map { action =>
+        SQLExecution.withThreadLocalCaptured(
+            spark.asInstanceOf[classic.SparkSession], pool) {
+          sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
+          sc.setLocalProperty(SQLExecution.EXECUTION_ROOT_ID_KEY, null)
+          action()
+        }
+      }
+      futures.map(f => Try(f.get())).map {
+        case Failure(e: ExecutionException) => throw e.getCause
+        case outcome => outcome.get
+      }
+    } finally pool.shutdown()
+  }
 
   def writePlain(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)

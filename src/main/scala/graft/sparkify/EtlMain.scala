@@ -2,7 +2,8 @@ package graft.sparkify
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.sources.Lake
+import org.apache.spark.sql.{GraftShims, SparkSession}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,13 +54,19 @@ object EtlMain {
     aliases.collectFirst { case a if conf.get(a).exists(_.nonEmpty) => conf(a) }
 
   /** Read-back check over the five lake tables — `datalake_read_test`
-    * (`etl.py:253-260`) with counts instead of show(10) so callers can
-    * assert on it. */
+    * (`etl.py:253-260`): prints each table's show(10) preview and returns
+    * its row count so callers can assert on it. The five read-backs run
+    * as concurrent Spark jobs (`Lake.concurrently`); their previews print
+    * in table order once all five are done. */
   def readBackTest(spark: SparkSession, outDir: String): Seq[(String, Long)] =
-    Seq("songs", "artists", "users", "songplays", "time").map { t =>
-      val df = spark.read.parquet(s"$outDir/$t")
-      df.show(10)
-      t -> df.count()
+    Lake.concurrently(spark)(
+      Seq("songs", "artists", "users", "songplays", "time").map { t => () =>
+        val df = spark.read.parquet(s"$outDir/$t")
+        (t, GraftShims.showString(df, 10), df.count())
+      }: _*
+    ).map { case (t, preview, n) =>
+      println(preview)
+      t -> n
     }
 
   def run(spark: SparkSession, conf: Map[String, String]): Seq[(String, Long)] = {

@@ -1,5 +1,6 @@
 package graft.sparkify
 
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,10 +28,10 @@ object Pipelines {
     * `etl.py:83-86` / `etl.py:93-95`. Delegates to the generic lake IO
     * surface (`graft.sources.Lake`). */
   def readLogData(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Lake.readJson(spark, path, Schemas.logData)
+    Lake.readJson(spark, path, Schemas.logData)
 
   def readSongData(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Lake.readJson(spark, path, Schemas.songData)
+    Lake.readJson(spark, path, Schemas.songData)
 
   /** songs: select 5 → distinct (`etl.py:98-111`). */
   def songsTable(songData: DataFrame): DataFrame =
@@ -131,33 +132,40 @@ object Pipelines {
   /** Partitioned snappy-parquet sink (`etl.py:106-110` etc.): songs by
     * (year, artist_id); songplays and time by (year, month). */
   def writePartitioned(df: DataFrame, path: String, cols: Seq[String]): Unit =
-    graft.sources.Lake.writePartitioned(df, path, cols)
+    Lake.writePartitioned(df, path, cols)
 
   /** Unpartitioned snappy-parquet sink (`etl.py:225-237`). */
   def writePlain(df: DataFrame, path: String): Unit =
-    graft.sources.Lake.writePlain(df, path)
+    Lake.writePlain(df, path)
 
   /** Full ETL: stage JSON → build all five tables → data-lake layout.
     * Stages communicate through the filesystem, like the reference
     * (`etl.py:263-279`), but S3 sync is a direct Spark write, not a
-    * shell-out. */
+    * shell-out. Independent sinks run as concurrent Spark jobs
+    * (`Lake.concurrently`), in two barriered phases: the two staging
+    * writes, each followed by the parquet re-read of what it wrote, then
+    * the five table writes, which read only the staged data and never
+    * each other's output. */
   def runAll(spark: SparkSession, logPath: String, songPath: String,
       outDir: String): Unit = {
-    val logs = readLogData(spark, logPath)
-    val songData = readSongData(spark, songPath)
-    writePlain(logs, s"$outDir/staging/log_data")
-    writePlain(songData, s"$outDir/staging/song_data")
+    def stage(read: => DataFrame, dir: String): () => DataFrame = () => {
+      writePlain(read, dir)
+      spark.read.parquet(dir)
+    }
+    val Seq(stagedLogs, stagedSongs) = Lake.concurrently(spark)(
+      stage(readLogData(spark, logPath), s"$outDir/staging/log_data"),
+      stage(readSongData(spark, songPath), s"$outDir/staging/song_data"))
 
-    val stagedLogs = spark.read.parquet(s"$outDir/staging/log_data")
-    val stagedSongs = spark.read.parquet(s"$outDir/staging/song_data")
-    writePartitioned(songsTable(stagedSongs), s"$outDir/songs",
-      Seq("year", "artist_id"))
-    writePlain(artistsTable(stagedSongs), s"$outDir/artists")
-    writePlain(usersTable(stagedLogs), s"$outDir/users")
-    // the reference joins songplays against the *staged* song data, not the
-    // deduplicated songs table (`etl.py:159-161`)
-    writePartitioned(songplaysTable(stagedLogs, stagedSongs),
-      s"$outDir/songplays", Seq("year", "month"))
-    writePartitioned(timeTable(stagedLogs), s"$outDir/time", Seq("year", "month"))
+    Lake.concurrently(spark)(
+      () => writePartitioned(songsTable(stagedSongs), s"$outDir/songs",
+        Seq("year", "artist_id")),
+      () => writePlain(artistsTable(stagedSongs), s"$outDir/artists"),
+      () => writePlain(usersTable(stagedLogs), s"$outDir/users"),
+      // the reference joins songplays against the *staged* song data, not
+      // the deduplicated songs table (`etl.py:159-161`)
+      () => writePartitioned(songplaysTable(stagedLogs, stagedSongs),
+        s"$outDir/songplays", Seq("year", "month")),
+      () => writePartitioned(timeTable(stagedLogs), s"$outDir/time",
+        Seq("year", "month")))
   }
 }

@@ -89,4 +89,9 @@ object GraftShims {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** What `df.show(numRows)` prints, as a string (`showString` is
+    * private[sql]), so a preview rendered on a worker thread prints later. */
+  def showString(df: DataFrame, numRows: Int): String =
+    df.asInstanceOf[classic.Dataset[_]].showString(numRows, 20, false)
+
 }

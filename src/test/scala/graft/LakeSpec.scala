@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import graft.sources.Lake
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -294,5 +297,47 @@ class LakeSpec extends SparkTestBase {
       .filter(col("l_partkey").between(bLo, bHi))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     assert(got.count() > 0 && got.count() == want.count())
+  }
+
+  test("concurrently overlaps actions, keeps argument order and waits out failures") {
+    // all three actions are in flight at once: each waits for the others
+    val started = new CountDownLatch(3)
+    val ordered = Lake.concurrently(spark)((1 to 3).map { i => () =>
+      started.countDown()
+      assert(started.await(60, TimeUnit.SECONDS))
+      Thread.sleep(100L * (3 - i)) // the first action finishes last
+      spark.range(i * 10).count()
+    }: _*)
+    assert(ordered == Seq(10L, 20L, 30L))
+
+    // a failure surfaces as thrown, only after the slower sibling is done
+    val siblingDone = new AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      Lake.concurrently(spark)(
+        () => throw new IllegalStateException("staging failed"),
+        () => { Thread.sleep(500); siblingDone.set(true) })
+    }
+    assert(err.getMessage == "staging failed")
+    assert(siblingDone.get)
+
+    // the caller's local properties and session travel; its SQL execution
+    // id does not, so each action's queries are top-level executions
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.test.label", "phase-2")
+    sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, "4242")
+    sc.setLocalProperty(SQLExecution.EXECUTION_ROOT_ID_KEY, "4242")
+    try {
+      val Seq((label, execId, rootId, active)) = Lake.concurrently(spark)(() =>
+        (sc.getLocalProperty("graft.test.label"),
+          sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+          sc.getLocalProperty(SQLExecution.EXECUTION_ROOT_ID_KEY),
+          org.apache.spark.sql.SparkSession.active))
+      assert(label == "phase-2")
+      assert(execId == null && rootId == null)
+      assert(active eq spark)
+    } finally {
+      Seq("graft.test.label", SQLExecution.EXECUTION_ID_KEY,
+        SQLExecution.EXECUTION_ROOT_ID_KEY).foreach(sc.setLocalProperty(_, null))
+    }
   }
 }

@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 
-import graft.sparkify.{Pipelines, Schemas}
+import graft.sparkify.{EtlMain, Pipelines, Schemas}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 
 /** Parity tests for the five Sparkify table builders against the
   * reference's documented semantics (SURVEY.md §2.8, §5): J1 tie-keeping,
@@ -111,5 +113,57 @@ class SparkifySpec extends SparkTestBase {
     assert(back.count() == 2)
     // hive-style partition directories exist
     assert(new java.io.File(s"$dir/time/year=2018/month=11").exists())
+  }
+
+  test("EtlMain.run turns JSON fixtures into the five lake tables and reads them back") {
+    val dir = Files.createTempDirectory("sparkify-etl").toFile.getAbsolutePath
+    def write(path: String, lines: Seq[String]): Unit = {
+      Files.createDirectories(Paths.get(path).getParent)
+      Files.write(Paths.get(path), lines.mkString("\n").getBytes("UTF-8"))
+    }
+    // the reference's input layout: daily JSON-lines log files, and one
+    // JSON object per song file under nested song_data/X/Y/Z/ directories
+    logs.select(
+        date_format(timestamp_seconds(col("ts") / 1000), "yyyy-MM-dd"),
+        to_json(struct(logs.columns.map(col).toSeq: _*)))
+      .collect().groupBy(_.getString(0)).foreach { case (day, rows) =>
+        write(s"$dir/log_data/$day-events.json", rows.map(_.getString(1)).toSeq)
+      }
+    songData.select(col("song_id"), to_json(struct(songData.columns.map(col).toSeq: _*)))
+      .collect().zipWithIndex.foreach { case (r, i) =>
+        write(s"$dir/song_data/A/${('A' + i).toChar}/B/${r.getString(0)}.json",
+          Seq(r.getString(1)))
+      }
+
+    val out = s"$dir/lake"
+    val counts = EtlMain.run(spark, Map("io.log_data" -> s"$dir/log_data",
+      "io.song_data" -> s"$dir/song_data", "io.output" -> out))
+    val tables = Seq("songs", "artists", "users", "songplays", "time")
+    assert(counts.map(_._1) == tables)
+
+    val stagedLogs = spark.read.parquet(s"$out/staging/log_data")
+    val stagedSongs = spark.read.parquet(s"$out/staging/song_data")
+    assert(stagedLogs.exceptAll(logs).isEmpty && logs.exceptAll(stagedLogs).isEmpty)
+    assert(stagedSongs.exceptAll(songData).isEmpty && songData.exceptAll(stagedSongs).isEmpty)
+    val built = Map(
+      "songs" -> Pipelines.songsTable(stagedSongs),
+      "artists" -> Pipelines.artistsTable(stagedSongs),
+      "users" -> Pipelines.usersTable(stagedLogs),
+      "songplays" -> Pipelines.songplaysTable(stagedLogs, stagedSongs),
+      "time" -> Pipelines.timeTable(stagedLogs))
+    val expectedRows = Map("songs" -> 3L, "artists" -> 3L, "users" -> 5L,
+      "songplays" -> 6L, "time" -> 2L)
+    counts.foreach { case (t, n) =>
+      val want = built(t)
+      // partition columns read back last and with inferred types
+      val got = spark.read.parquet(s"$out/$t")
+        .select(want.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, t)
+      assert(got.count() == expectedRows(t) && want.count() == expectedRows(t), t)
+      assert(n == expectedRows(t), t)
+    }
+    assert(new File(s"$out/songs/year=2018/artist_id=A1").isDirectory)
+    assert(new File(s"$out/songplays/year=2018/month=11").isDirectory)
+    assert(new File(s"$out/time/year=2018/month=11").isDirectory)
   }
 }
