@@ -1,22 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftShims, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.types.IntegerType
 
-/** Session-extensions entry point: everything the library adds to a Spark
-  * session — the bounded-heap top-k strategy, the `row_number() <= k`
-  * optimizer rewrite, and the custom codegen functions — in one place,
-  * activated cluster-wide with
-  * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (the sanctioned plugin mechanism; no code changes in user jobs).
-  * Programmatic sessions can equivalently call [[plans.TopKPerKey.enable]]
-  * and the per-module `registerSql` helpers.
+/** Session-extensions entry point: the one list of everything the library
+  * adds to a Spark session — the top-k and global-rank planner
+  * strategies, their optimizer rules, and the custom SQL functions.
+  * [[GraftSession]] sets `spark.sql.extensions=graft.GraftExtensions`;
+  * another deployment does the same with
+  * `--conf spark.sql.extensions=graft.GraftExtensions` (Spark's plugin
+  * mechanism; no code changes in user jobs). Extensions apply only when a
+  * session is built; nothing installs them on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
+
+  /** The `k` argument of the gram-hash functions: an INT literal. */
+  private def intLiteral(fn: String, e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn's k must be an INT literal, got $other")
+  }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => plans.TopKPerKey.TopKStrategy)
@@ -58,27 +67,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("gramk_hash64"),
       info("gramk_hash64",
         "chained-XXH64 word-k-gram hashes of a token array; k an int literal"),
-      (es: Seq[Expression]) => {
-        val k = es(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-            org.apache.spark.sql.types.IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"gramk_hash64's k must be an INT literal, got $other")
-        }
-        functions.HashExprs.GramKHash64(es.head, k)
-      }))
+      (es: Seq[Expression]) =>
+        functions.HashExprs.GramKHash64(es.head, intLiteral("gramk_hash64", es(1)))))
     ext.injectFunction((FunctionIdentifier("gramk_hash128"),
       info("gramk_hash128",
         "two independently-seeded chained-XXH64 word-k-gram hash structs; k an int literal"),
-      (es: Seq[Expression]) => {
-        val k = es(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-            org.apache.spark.sql.types.IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"gramk_hash128's k must be an INT literal, got $other")
-        }
-        functions.HashExprs.GramKHash128(es.head, k)
-      }))
+      (es: Seq[Expression]) =>
+        functions.HashExprs.GramKHash128(es.head, intLiteral("gramk_hash128", es(1)))))
     ext.injectFunction((FunctionIdentifier("cov_pair_products"),
       info("cov_pair_products",
         "upper-triangle pairwise products of a quantized vector (covariance rollup input)"),
@@ -97,4 +92,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "[n_chars, distinct_chars, sum(count^2), max(count)] char moments"),
       (es: Seq[Expression]) => functions.TextExprs.CharStats(es.head)))
   }
+}
+
+object GraftExtensions {
+
+  /** Fail early, naming the fix, when `spark` was built without the
+    * extensions: a custom logical node would otherwise reach Spark's
+    * "No plan for ..." assertion at execution. */
+  private[graft] def requireInstalled(spark: SparkSession,
+      strategy: SparkStrategy, caller: String): Unit =
+    if (!GraftShims.plannerStrategies(spark).contains(strategy))
+      throw new IllegalStateException(
+        s"$caller needs the engine's planner strategies, which this session " +
+          "lacks: build it with graft.GraftSession, or set " +
+          "spark.sql.extensions=graft.GraftExtensions before it is created")
 }

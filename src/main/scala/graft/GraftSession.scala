@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The engine's Spark session: the one place that sets its config.
+/** The engine's Spark session: the one place that sets its config and
+  * the only code that adds anything to a session. `GraftExtensions`
+  * installs the engine's planner strategies, optimizer rules and SQL
+  * functions when the session is built; no query builder changes a live
+  * session, so a query's plan does not depend on what ran before it.
   * Every main and the test base call it, so a setting cannot drift
   * between the benchmark, the correctness dump and the specs.
   * Idempotent — `getOrCreate` hands back the running session with the
@@ -32,6 +36,11 @@ object GraftSession {
         // pre-filters that inner Generate makes redundant — measured
         // q145 4.9 -> 3.2 s at sf0.1, neutral elsewhere (SCALING.md)
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // static: applies when the session is first built
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      // TIMESTAMP(NANOS) parquet columns read as LONG epoch-nanos
+      // instead of failing the read (Tables.events normalizes them)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -45,17 +45,10 @@ object Tables {
     * isAdjustedToUTC=false (inferred TIMESTAMP_NTZ — cast to the session
     * type; the session TZ is pinned UTC, so the instant is unchanged and
     * equals DuckDB's naive read). Either way downstream sees µs-precision
-    * `TimestampType` with identical values on both engines.
-    *
-    * The legacy conf is deliberately left set on the session: parquet has
-    * no per-read `nanosAsLong` option (it's SQLConf-only), and the conf is
-    * consulted again at physical-planning time of every later action on
-    * the returned LAZY frame — a restore-after here would make those
-    * executions fail. Setting it is also monotone-safe: it only changes
-    * how NANOS columns (which Spark would otherwise refuse outright) are
-    * read. */
+    * `TimestampType` with identical values on both engines. The NANOS
+    * read relies on `spark.sql.legacy.parquet.nanosAsLong`, which
+    * [[GraftSession]] sets (parquet has no per-read option for it). */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(t(s, d, "events"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
@@ -98,9 +91,7 @@ object Tables {
     * `spark.graft.widen.target` for dynamic-allocation clusters where the
     * submit-time executor count undercounts the eventual width. */
   def widen(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.conf.getOption("spark.graft.widen.target").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val target = widthTarget(df.sparkSession)
     // EXPLICIT COUNT (r12): a bare `repartition(key)` is fair game for
     // AQE partition coalescing, which sizes by COMPRESSED shuffle bytes
     // — the widened corpus re-coalesced to 1–5 partitions and the
@@ -118,11 +109,14 @@ object Tables {
     * materializations key off (plan metadata only, no job). At cluster
     * width this is false and every conditional keyed on it no-ops. */
   def narrowScan(df: DataFrame): Boolean = {
-    val spark = df.sparkSession
-    val target = spark.conf.getOption("spark.graft.widen.target").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val target = widthTarget(df.sparkSession)
     plannedWidth(df, target) * 2 < target
   }
+
+  /** `spark.graft.widen.target`, else the driver-time `defaultParallelism`. */
+  private def widthTarget(spark: SparkSession): Int =
+    spark.conf.getOption("spark.graft.widen.target").map(_.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
 
   private def plannedWidth(df: DataFrame, target: Int): Int = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, RangeExec}

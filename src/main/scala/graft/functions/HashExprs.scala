@@ -330,7 +330,7 @@ object HashExprs {
       copy(child = newChild)
   }
 
-  import org.apache.spark.sql.GraftShims.{registerFunction, toColumn, toExpression}
+  import org.apache.spark.sql.GraftShims.{toColumn, toExpression}
 
   def md5long60(c: Column, prefix: String = ""): Column =
     toColumn(Md5Long60(toExpression(c), prefix))
@@ -349,33 +349,4 @@ object HashExprs {
 
   def gramk_hash128(c: Column, k: Int): Column =
     toColumn(GramKHash128(toExpression(c), k))
-
-  /** SQL-text registration (`SELECT md5long60(x) ...`; the seeded form is
-    * expressed in SQL as `md5long60(concat(seed, x))`, identical value).
-    * [[graft.GraftExtensions]] registers the same set cluster-wide. */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    registerFunction(spark, "md5long60", es => Md5Long60(es.head))
-    registerFunction(spark, "md5_signmask16", es => Md5SignMask16(es.head))
-    registerFunction(spark, "gram3_hash64", es => Gram3Hash64(es.head))
-    registerFunction(spark, "gramk_hash64", es => {
-      val k = es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-          org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"gramk_hash64's k must be an INT literal, got $other")
-      }
-      GramKHash64(es.head, k)
-    })
-    registerFunction(spark, "gramk_hash128", es => {
-      val k = es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-          org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"gramk_hash128's k must be an INT literal, got $other")
-      }
-      GramKHash128(es.head, k)
-    })
-    registerFunction(spark, "winnow_fingerprints",
-      es => WinnowFingerprints(es.head, 8, 16))
-  }
 }

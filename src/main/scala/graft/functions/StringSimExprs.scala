@@ -109,12 +109,8 @@ object StringSimExprs {
       copy(left = newLeft, right = newRight)
   }
 
-  import org.apache.spark.sql.GraftShims.{registerFunction, toColumn, toExpression}
+  import org.apache.spark.sql.GraftShims.{toColumn, toExpression}
 
   def jaro_winkler(a: Column, b: Column): Column =
     toColumn(JaroWinkler(toExpression(a), toExpression(b)))
-
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    registerFunction(spark, "jaro_winkler",
-      es => JaroWinkler(es(0), es(1)))
 }

@@ -89,10 +89,7 @@ object TextExprs {
       copy(child = newChild)
   }
 
-  import org.apache.spark.sql.GraftShims.{registerFunction, toColumn, toExpression}
+  import org.apache.spark.sql.GraftShims.{toColumn, toExpression}
 
   def char_stats(c: Column): Column = toColumn(CharStats(toExpression(c)))
-
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    registerFunction(spark, "char_stats", es => CharStats(es.head))
 }

@@ -416,7 +416,7 @@ object VectorExprs {
       copy(child = newChild)
   }
 
-  import org.apache.spark.sql.GraftShims.{registerFunction, toColumn, toExpression}
+  import org.apache.spark.sql.GraftShims.{toColumn, toExpression}
 
   def quantized_dot(a: Column, b: Column): Column =
     toColumn(QuantizedDot(toExpression(a), toExpression(b)))
@@ -438,16 +438,4 @@ object VectorExprs {
 
   def map_sum_lookup(a: Column, b: Column): Column =
     toColumn(MapSumLookup(toExpression(a), toExpression(b)))
-
-  /** Make the expressions callable from SQL text
-    * (`SELECT quantized_dot(a, b) ...`). */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    registerFunction(spark, "quantized_dot", es => QuantizedDot(es(0), es(1)))
-    registerFunction(spark, "quantized_norm2", es => QuantizedNorm2(es.head))
-    registerFunction(spark, "long_dot", es => LongDot(es(0), es(1)))
-    registerFunction(spark, "int8_codes", es => Int8Codes(es.head))
-    registerFunction(spark, "count_in_array", es => CountInArray(es(0), es(1)))
-    registerFunction(spark, "cov_pair_products", es => CovPairProducts(es.head))
-    registerFunction(spark, "map_sum_lookup", es => MapSumLookup(es(0), es(1)))
-  }
 }

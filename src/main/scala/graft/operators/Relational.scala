@@ -529,15 +529,6 @@ object Relational {
   def q226NegativeSamples(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TextFns.hash60
-    // r12: the top-5 window filter below compiles to the bounded-heap
-    // TopKPerKey when the rewrite is registered — in a bench session
-    // q10's enable() had already registered it session-wide, so the
-    // suite measured the heap plan while any isolated run (StageProfile,
-    // a fresh session) silently fell back to the full sort. Enabling
-    // HERE makes the plan session-order-independent: the map-side pass
-    // caps each customer at 5 rows per task BEFORE the shuffle
-    // (customers×100 candidate rows never all cross the exchange).
-    graft.plans.TopKPerKey.enable(s)
     // consumed twice (popularity cut + anti-join): materialize the
     // fact-derived interaction set once instead of re-running the
     // orders⋈lineitem distinct per consumer (~25% at sf0.1); the pin is
@@ -561,6 +552,9 @@ object Relational {
     val neg = cand.join(bought, Seq("custkey", "partkey"), "left_anti")
       .withColumn("hk", hash60(concat(lit("neg:"), col("custkey").cast("string"),
         lit(":"), col("partkey").cast("string"))))
+    // the top-5 filter compiles to the bounded-heap TopKPerKey: its
+    // map-side pass caps each customer at 5 rows per task before the
+    // shuffle (customers×100 candidate rows never all cross it)
     val w = Window.partitionBy(col("custkey"))
       .orderBy(col("hk"), col("partkey"))
     neg.withColumn("rk", row_number().over(w).cast("long"))

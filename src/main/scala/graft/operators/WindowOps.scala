@@ -19,11 +19,10 @@ object WindowOps {
 
   /** row_number ranking: top-3 orders per customer by price. Written as
     * the plain window-filter form; [[graft.plans.TopKPerKey.TopKRewrite]]
-    * (enabled on the session) swaps Spark's sort-based WindowGroupLimit
+    * (installed by [[graft.GraftSession]]) swaps Spark's sort-based WindowGroupLimit
     * pruning for the bounded-heap operator — same rows, same rn values
     * (unique tiebreak), two full sorts fewer. */
   def q10WindowTopN(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TopKPerKey.enable(s)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     Tables.orders(s, dir)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BoundReference, Descending, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -40,6 +40,11 @@ import org.apache.spark.sql.GraftShims
   * (groups are sorted as the ordering prefix, so each group is one
   * contiguous run across the partition range). With `sumCol` set, a
   * second column carries the running INCLUSIVE sum of that long column.
+  *
+  * [[graft.GraftExtensions]] (set by [[graft.GraftSession]]) installs the
+  * strategy and both rules; [[GlobalRankPruning]] and
+  * [[GlobalWindowRewrite]] run in the operator-optimization batch, so the
+  * Project the pruning inserts folds into the scan.
   */
 object GlobalRank {
 
@@ -245,7 +250,13 @@ object GlobalRank {
     * byte-identical. The user writes the naive single-task funnel;
     * the session plans the range-exchange two-pass operator.
     *
-    * Two deliberate non-rewrites:
+    * Three deliberate non-rewrites:
+    *  - windows over an input with a row bound (`maxRows`, e.g. a
+    *    top-1000 cut): one task ranks such a cut without the operator's
+    *    range exchange and extra jobs (q111's 20-row and q168's
+    *    1000-row cuts at sf0.1: 4 and 2 jobs fewer, about half the
+    *    time). The cut size at which the operator would win back is
+    *    unmeasured;
     *  - windows directly under a rank-BOUNDING Filter
     *    (`row_number() <= k`): those belong to the top-k machinery
     *    (Spark's InferWindowGroupLimit; TopKRewrite for the grouped
@@ -273,9 +284,13 @@ object GlobalRank {
       if (as.nonEmpty && as.length == exprs.length) Some(as) else None
     }
 
-    /** Windows sitting directly under a Filter that bounds their
-      * row_number by an integer literal — the top-k shape, left alone. */
-    private def boundedWindows(plan: LogicalPlan): Set[LogicalPlan] =
+    /** The row_number aliases of windows sitting directly under a Filter
+      * that bounds them by an integer literal — the top-k shape, left
+      * alone. Kept by exprId, not by node: rewriting a global window
+      * further down changes this window's subtree, so the node itself
+      * would no longer compare equal. */
+    private def boundedWindows(plan: LogicalPlan)
+        : Set[org.apache.spark.sql.catalyst.expressions.ExprId] =
       plan.collect {
         case Filter(cond, w: Window)
             if rowNumAliases(w.windowExpressions).exists { as =>
@@ -289,14 +304,15 @@ object GlobalRank {
                 case EqualTo(IntegerLiteral(_), e) => attrs.exists(e.semanticEquals)
                 case _ => false
               }
-            } => w
-      }.toSet
+            } => w.windowExpressions.map(_.exprId)
+      }.flatten.toSet
 
     override def apply(plan: LogicalPlan): LogicalPlan = {
       val skip = boundedWindows(plan)
       plan.transformUp {
         case w @ Window(exprs, Seq(), order, child, _)
-            if order.nonEmpty && !skip.contains(w) &&
+            if order.nonEmpty && child.maxRows.isEmpty &&
+              !exprs.exists(e => skip.contains(e.exprId)) &&
               order.flatMap(_.references).forall(child.outputSet.contains) =>
           rowNumAliases(exprs) match {
             case Some(aliases) =>
@@ -314,37 +330,18 @@ object GlobalRank {
     }
   }
 
-  /** Register the strategy + pruning/rewrite rules on a session
-    * (idempotent). Note: via this programmatic path the rules run in the
-    * LAST optimizer batch, where an inserted Project no longer folds into
-    * the scan — activate through
-    * `spark.sql.extensions=graft.GraftExtensions` to have them iterate
-    * with Spark's own ColumnPruning (spec-locked). */
-  def enable(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(GlobalRankStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GlobalRankStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(GlobalRankPruning)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GlobalRankPruning
-    }
-    if (!spark.experimental.extraOptimizations.contains(GlobalWindowRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GlobalWindowRewrite
-    }
-  }
-
   /** User-facing entry point: append a 0-based `pos` column (global rank
     * in `order`, resetting per `group` when given) and, when `sumCol` is
     * set, an inclusive running-sum `cum` column of that LONG column, in
     * the same order. Include a unique tiebreak in `order` for
-    * determinism. */
+    * determinism. Fails with an `IllegalStateException` on a session
+    * built without [[graft.GraftExtensions]]. */
   def withPosition(df: DataFrame, order: Seq[(String, Boolean)],
       group: Seq[String] = Nil, sumCol: Option[String] = None,
       posName: String = "pos", cumName: String = "cum"): DataFrame = {
     val spark = df.sparkSession
-    enable(spark)
+    graft.GraftExtensions.requireInstalled(spark, GlobalRankStrategy,
+      "GlobalRank.withPosition")
     val child = GraftShims.logicalPlan(df)
     def attr(n: String): Attribute = child.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

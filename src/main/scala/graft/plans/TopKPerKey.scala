@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, DenseRank, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IntegerLiteral, LessThan, LessThanOrEqual, PredicateHelper, Rank, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.SparkStrategy
 import scala.collection.mutable
 
 /** Per-key top-k as a first-class operator (logical node + strategy +
-  * physical exec + optimizer rewrite), registered through
-  * `spark.experimental` (see [[enable]]).
+  * physical exec + optimizer rewrite), installed on a session by
+  * [[graft.GraftExtensions]] (which [[graft.GraftSession]] sets).
   *
   * Why custom: Spark expresses "top k rows per key" as
   * `row_number().over(Window.partitionBy(key).orderBy(...)) <= k` and since
@@ -30,13 +30,11 @@ import scala.collection.mutable
   * replaces two O(n log n) sorts of the fact table with one O(n log k)
   * streaming pass, and the shuffle carries only ~k·|keys| rows.
   *
-  * [[TopKRewrite]] makes SQL/DataFrame users get this for free: it rides
-  * on Spark's own rank-filter analysis by matching the `WindowGroupLimit`
-  * logical node the built-in optimizer inserts, swapping it for
-  * [[TopKPerKeyPlan]] when the rank function is `row_number` (rank/
-  * dense_rank keep ties, which a strict k-heap must not cut) and every
-  * key/order expression resolves against the child — otherwise it falls
-  * back to the built-in operator untouched.
+  * [[TopKRewrite]] makes SQL/DataFrame users get this for free: it
+  * matches the `Filter(rank <= k, Window(...))` shape of a rank-bounded
+  * window and slides [[TopKPerKeyPlan]] under the Window when every
+  * key/order expression resolves against the child — otherwise the plan
+  * is left to Spark's built-in `WindowGroupLimit` untouched.
   */
 object TopKPerKey {
 
@@ -194,6 +192,15 @@ object TopKPerKey {
 
   object TopKStrategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      // Spark's InferWindowGroupLimit, which runs after TopKRewrite, puts
+      // a WindowGroupLimit on top of our node. When it bounds the same
+      // keys, order and rank mode by at least k it keeps every row the
+      // heap pass emits (and the Filter and Window above re-apply the
+      // bound anyway), so it plans as the child alone: no extra sort.
+      case WindowGroupLimit(part, order, rankFn, limit, t: TopKPerKeyPlan)
+          if limit >= t.k && modeOf(rankFn).contains(t.mode) &&
+            sameExprs(part, t.keys) && sameExprs(order, t.order) =>
+        planLater(t) :: Nil
       case TopKPerKeyPlan(keys, order, k, child, mode) =>
         // defensive: every key/order expression must evaluate against the
         // child's row — a violation here means a buggy construction path
@@ -208,30 +215,24 @@ object TopKPerKey {
           mode) :: Nil
       case _ => Nil
     }
+
+    private def sameExprs(a: Seq[Expression], b: Seq[Expression]): Boolean =
+      a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
   }
 
-  /** Optimizer rewrite to [[TopKPerKeyPlan]], matching BOTH plan shapes a
-    * `row_number() <= k` window filter passes through the optimizer as —
-    * because the two activation paths see the plan at different stages:
+  /** Optimizer rewrite to [[TopKPerKeyPlan]]. [[graft.GraftExtensions]]
+    * injects it into the operator-optimization batch, which runs BEFORE
+    * Spark's `InferWindowGroupLimit` has created any `WindowGroupLimit`,
+    * so the pattern is the raw `Filter(rn <= k, Window(row_number))`
+    * (same conjunct extraction as Spark's own rule). Spark's later batch
+    * then puts a `WindowGroupLimit` above our node, which [[TopKStrategy]]
+    * plans away.
     *
-    *  - `spark.experimental.extraOptimizations` ([[enable]]) runs as the
-    *    LAST optimizer batch, after Spark's "Infer window group limit"
-    *    batch — there the pattern is the `WindowGroupLimit` node itself.
-    *  - `spark.sql.extensions` / [[graft.GraftExtensions]] injects into
-    *    the operator-optimization batch, which runs BEFORE
-    *    `InferWindowGroupLimit` has created any `WindowGroupLimit` — there
-    *    the pattern is still the raw `Filter(rn <= k, Window(row_number))`
-    *    (same conjunct extraction as Spark's own rule). Spark's later
-    *    batch then inserts a `WindowGroupLimit` above our node; it
-    *    operates on the already-pruned ~k·|keys| rows and shares the
-    *    Window's required sort, so it costs one streaming pass of pruned
-    *    rows, not a sort of the fact table.
-    *
-    * In both shapes the surrounding Window/Filter stay and recompute the
-    * rank over the pruned rows, so output columns and values are
-    * unchanged; the two full sorts of the fact table disappear. `rank()`
-    * and `dense_rank()` filters compile to the tie-keeping modes; other
-    * rank-like functions fall back to the built-in operator. */
+    * The surrounding Window/Filter stay and recompute the rank over the
+    * pruned rows, so output columns and values are unchanged; the two
+    * full sorts of the fact table disappear. `rank()` and `dense_rank()`
+    * filters compile to the tie-keeping modes; other rank-like functions
+    * fall back to the built-in operator. */
   object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
     /** Strongest supported (mode, bound) pair in `cond`'s conjuncts
@@ -284,12 +285,6 @@ object TopKPerKey {
     }
 
     override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-      case WindowGroupLimit(part, order, rankFn, limit, child)
-          if part.nonEmpty && order.nonEmpty && limit > 0 &&
-            modeOf(rankFn).isDefined &&
-            (part ++ order).flatMap(_.references)
-              .forall(child.outputSet.contains) =>
-        TopKPerKeyPlan(part, order, limit, child, modeOf(rankFn).get)
       case f @ Filter(cond, w @ Window(windowExprs, part, order, child, _))
           if part.nonEmpty && order.nonEmpty &&
             windowExprs.forall(prefixSafe) &&
@@ -305,33 +300,17 @@ object TopKPerKey {
     }
   }
 
-  /** Register the strategy + rewrite on a session (idempotent). After
-    * this, plain SQL/DataFrame `row_number() <= k` window filters compile
-    * to the heap operator with no API change. */
-  def enable(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-    }
-  }
-
   /** User-facing entry point: top `k` rows per `keys` under `order`
     * ((name, descending?) pairs; include a unique tiebreak column for
     * determinism — except in the tie-keeping modes, where order-key ties
     * are the point). Columns are resolved here against the input's
     * analyzed output — Spark 4's lazy Column bridge doesn't resolve
-    * inside custom logical nodes. */
+    * inside custom logical nodes. Fails with an `IllegalStateException`
+    * on a session built without [[graft.GraftExtensions]]. */
   def perKey(df: DataFrame, keys: Seq[String], order: Seq[(String, Boolean)],
       k: Int, mode: RankMode = RowNum): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+    graft.GraftExtensions.requireInstalled(spark, TopKStrategy, "TopKPerKey.perKey")
     val child = GraftShims.logicalPlan(df)
     def attr(n: String): Attribute = child.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

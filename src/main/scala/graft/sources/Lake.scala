@@ -142,9 +142,11 @@ object Lake {
     } finally pool.shutdown()
   }
 
+  /** Unpartitioned snappy-parquet sink (reference `etl.py:225-237`). */
   def writePlain(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
 
+  /** Partitioned snappy-parquet sink (reference `etl.py:106-110` etc.). */
   def writePartitioned(df: DataFrame, path: String, cols: Seq[String]): Unit =
     df.write.partitionBy(cols: _*).mode("overwrite")
       .option("compression", "snappy").parquet(path)

@@ -129,15 +129,6 @@ object Pipelines {
         |FROM logs""".stripMargin)
   }
 
-  /** Partitioned snappy-parquet sink (`etl.py:106-110` etc.): songs by
-    * (year, artist_id); songplays and time by (year, month). */
-  def writePartitioned(df: DataFrame, path: String, cols: Seq[String]): Unit =
-    Lake.writePartitioned(df, path, cols)
-
-  /** Unpartitioned snappy-parquet sink (`etl.py:225-237`). */
-  def writePlain(df: DataFrame, path: String): Unit =
-    Lake.writePlain(df, path)
-
   /** Full ETL: stage JSON → build all five tables → data-lake layout.
     * Stages communicate through the filesystem, like the reference
     * (`etl.py:263-279`), but S3 sync is a direct Spark write, not a
@@ -149,7 +140,7 @@ object Pipelines {
   def runAll(spark: SparkSession, logPath: String, songPath: String,
       outDir: String): Unit = {
     def stage(read: => DataFrame, dir: String): () => DataFrame = () => {
-      writePlain(read, dir)
+      Lake.writePlain(read, dir)
       spark.read.parquet(dir)
     }
     val Seq(stagedLogs, stagedSongs) = Lake.concurrently(spark)(
@@ -157,15 +148,15 @@ object Pipelines {
       stage(readSongData(spark, songPath), s"$outDir/staging/song_data"))
 
     Lake.concurrently(spark)(
-      () => writePartitioned(songsTable(stagedSongs), s"$outDir/songs",
+      () => Lake.writePartitioned(songsTable(stagedSongs), s"$outDir/songs",
         Seq("year", "artist_id")),
-      () => writePlain(artistsTable(stagedSongs), s"$outDir/artists"),
-      () => writePlain(usersTable(stagedLogs), s"$outDir/users"),
+      () => Lake.writePlain(artistsTable(stagedSongs), s"$outDir/artists"),
+      () => Lake.writePlain(usersTable(stagedLogs), s"$outDir/users"),
       // the reference joins songplays against the *staged* song data, not
       // the deduplicated songs table (`etl.py:159-161`)
-      () => writePartitioned(songplaysTable(stagedLogs, stagedSongs),
+      () => Lake.writePartitioned(songplaysTable(stagedLogs, stagedSongs),
         s"$outDir/songplays", Seq("year", "month")),
-      () => writePartitioned(timeTable(stagedLogs), s"$outDir/time",
+      () => Lake.writePartitioned(timeTable(stagedLogs), s"$outDir/time",
         Seq("year", "month")))
   }
 }

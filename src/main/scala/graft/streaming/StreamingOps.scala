@@ -17,7 +17,6 @@ object StreamingOps {
   /** Parquet-directory stream of the events table (schema pinned from a
     * batch read — streaming sources require an explicit schema). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // FileStreamSource wants a directory; select just the events file
     graft.Tables.normalizeTs(

@@ -13,45 +13,30 @@ object GraftShims {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Register a builder in the session's FunctionRegistry so custom
-    * expressions are callable from SQL text (`spark.sessionState` is
-    * `private[sql]` in Spark 4). */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
-
   /** Wrap a custom LogicalPlan as a DataFrame (classic `Dataset.ofRows`). */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Apply a SparkSessionExtensions installer to a live session: register
-    * its functions into the session's registry and return the strategies
-    * and optimizer rules it injects (the builder/register methods are
-    * private[sql]; extensions normally apply only at session
-    * construction — this lets tests verify an installer against the
-    * shared test session). */
-  def applyExtensions(installer: SparkSessionExtensions => Unit,
-      spark: SparkSession): (Seq[org.apache.spark.sql.execution.SparkStrategy],
-      Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]) = {
-    val e = new SparkSessionExtensions
-    installer(e)
-    e.registerFunctions(spark.sessionState.functionRegistry)
-    (e.buildPlannerStrategies(spark), e.buildOptimizerRules(spark))
-  }
+  /** The planner strategies a session plans with (`sessionState` is
+    * `private[sql]`), extension-injected ones included. */
+  def plannerStrategies(spark: SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.planner.strategies
 
-  /** A sibling session over the same SparkContext/SharedState whose
-    * SessionState is built WITH the given extensions installer — i.e. the
-    * real `spark.sql.extensions` activation path, where injected optimizer
-    * rules land in their advertised batches. Tests use this to verify the
-    * extension wiring end-to-end without stopping the shared session (the
-    * public builder ignores `withExtensions` once a session exists). */
-  def sessionWithExtensions(spark: SparkSession,
-      installer: SparkSessionExtensions => Unit): SparkSession = {
-    val e = new SparkSessionExtensions
-    installer(e)
+  /** Every rule of the session's optimizer batches, extension-injected
+    * ones included. */
+  def optimizerRules(spark: SparkSession)
+      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.optimizer
+      .batches.flatMap(_.rules)
+
+  /** A sibling session over the same SparkContext/SharedState built
+    * without any session extensions: the unrewritten reference plan, and
+    * a session that lacks the engine's strategies, for tests. The public
+    * builder would hand back the existing session instead. */
+  def plainSession(spark: SparkSession): SparkSession = {
     // the 6-arg constructor is Scala-`private` (bytecode-public); this is
     // exactly what Builder.getOrCreate invokes when no session exists yet
     val ctor = classOf[classic.SparkSession].getConstructor(
@@ -60,7 +45,8 @@ object GraftShims {
       classOf[scala.collection.immutable.Map[_, _]],
       classOf[scala.collection.immutable.Map[_, _]])
     ctor.newInstance(spark.sparkContext,
-      Some(spark.asInstanceOf[classic.SparkSession].sharedState), None, e,
+      Some(spark.asInstanceOf[classic.SparkSession].sharedState), None,
+      new SparkSessionExtensions,
       Map.empty[String, String], Map.empty[String, String])
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** The GlobalRank physical operator: distributed global rank / running
@@ -15,13 +16,19 @@ class GlobalRankSpec extends SparkTestBase {
 
   private val rnd = new Random(7)
 
+  /** A sibling session built without the extensions: the built-in,
+    * unrewritten reference for the window cases. */
+  private lazy val plain =
+    org.apache.spark.sql.GraftShims.plainSession(spark)
+
   test("pos equals the single-partition row_number reference on random data") {
     val df = Seq.fill(500)((rnd.nextInt(1000).toLong, rnd.nextLong()))
       .toDF("k", "v").repartition(7)
     val got = plans.GlobalRank.withPosition(df, Seq("k" -> false, "v" -> false))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val w = Window.orderBy(col("k"), col("v"))
-    val want = df.withColumn("pos", row_number().over(w).cast("long") - 1)
+    val want = plain.createDataFrame(df.collect().toSeq.asJava, df.schema)
+      .withColumn("pos", row_number().over(w).cast("long") - 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == want)
   }
@@ -82,9 +89,7 @@ class GlobalRankSpec extends SparkTestBase {
   }
 
   test("extensions session: column pruning reaches the scan under the exec") {
-    val s2 = org.apache.spark.sql.GraftShims
-      .sessionWithExtensions(spark, new GraftExtensions())
-    val df = s2.read.parquet(s"$sfDir/documents.parquet")
+    val df = spark.read.parquet(s"$sfDir/documents.parquet")
     val ranked = plans.GlobalRank.withPosition(df,
       Seq("doc_id" -> false)).select("doc_id", "pos")
     val scans = ranked.queryExecution.executedPlan.collect {
@@ -101,27 +106,23 @@ class GlobalRankSpec extends SparkTestBase {
   }
 
   test("extensions session compiles a naive global row_number to the exec") {
-    val s2 = org.apache.spark.sql.GraftShims
-      .sessionWithExtensions(spark, new GraftExtensions())
     def frame(s: org.apache.spark.sql.SparkSession) =
       s.read.parquet(s"$sfDir/documents.parquet")
         .withColumn("rn", row_number().over(
           Window.orderBy(col("n_chars").desc, col("doc_id"))))
         .select(col("doc_id"), col("rn"))
-    val rewritten = frame(s2)
+    val rewritten = frame(spark)
     val plan = rewritten.queryExecution.executedPlan.toString
     assert(plan.contains("GlobalRank"), plan)
     assert(!plan.contains("Window"), plan) // no single-task funnel left
     // values identical to the built-in path, schema included (int rn)
     val got = rewritten.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val want = frame(spark).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    val want = frame(plain).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got == want && got.nonEmpty)
   }
 
   test("rank-bounded global windows are NOT rewritten (top-k path wins)") {
-    val s2 = org.apache.spark.sql.GraftShims
-      .sessionWithExtensions(spark, new GraftExtensions())
-    val df = s2.read.parquet(s"$sfDir/documents.parquet")
+    val df = spark.read.parquet(s"$sfDir/documents.parquet")
       .withColumn("rn", row_number().over(
         Window.orderBy(col("n_chars").desc, col("doc_id"))))
       .filter(col("rn") <= 5)
@@ -130,11 +131,35 @@ class GlobalRankSpec extends SparkTestBase {
     assert(df.collect().length == 5)
   }
 
+  test("a rank-bounded global window over a rewritten one is still left alone") {
+    // the q111 shape: the inner naive rank is rewritten first, which
+    // changes the bounded window's subtree; the bound must still hold it
+    // back, so Spark's own top-k limit applies instead of a full rank
+    val inner = spark.read.parquet(s"$sfDir/documents.parquet")
+      .withColumn("r1", row_number().over(
+        Window.orderBy(col("n_chars").desc, col("doc_id"))).cast("long"))
+    val df = inner
+      .withColumn("rn", row_number().over(
+        Window.orderBy(col("r1").desc, col("doc_id"))).cast("long"))
+      .filter(col("rn") <= 5)
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.collect { case g: plans.GlobalRank.GlobalRankPlan => g }.size == 1, plan)
+    assert(df.collect().map(_.getAs[Long]("rn")).sorted.toSeq == (1L to 5L))
+  }
+
+  test("a global window over a limit-bounded input stays on the built-in path") {
+    val top = spark.read.parquet(s"$sfDir/documents.parquet")
+      .orderBy(col("n_chars").desc, col("doc_id")).limit(50)
+    val df = top.withColumn("rn", row_number().over(
+      Window.orderBy(col("n_chars").desc, col("doc_id"))))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("GlobalRank"), plan)
+    assert(df.collect().map(_.getInt(df.columns.indexOf("rn"))).sorted.toSeq == (1 to 50))
+  }
+
   test("mixed global window functions stay on the built-in path") {
-    val s2 = org.apache.spark.sql.GraftShims
-      .sessionWithExtensions(spark, new GraftExtensions())
     val w = Window.orderBy(col("n_chars").desc, col("doc_id"))
-    val df = s2.read.parquet(s"$sfDir/documents.parquet")
+    val df = spark.read.parquet(s"$sfDir/documents.parquet")
       .withColumn("rn", row_number().over(w))
       .withColumn("pr", percent_rank().over(w))
     val plan = df.queryExecution.executedPlan.toString

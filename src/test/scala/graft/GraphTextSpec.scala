@@ -179,7 +179,6 @@ class GraphTextSpec extends SparkTestBase {
       .as[Long].collect()
     assert(got.toSeq == Seq(15L, 0L))
     // null array element contributes 0 (SQL-reachable input shape)
-    functions.VectorExprs.registerSql(spark)
     assert(spark.sql(
       "SELECT map_sum_lookup(array('a', CAST(NULL AS STRING)), map('a', CAST(7 AS BIGINT)))")
       .first().getLong(0) == 7L)

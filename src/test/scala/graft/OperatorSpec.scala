@@ -429,7 +429,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("TopKRewrite turns the SQL row_number<=k pattern into the heap operator") {
     import org.apache.spark.sql.functions._
-    plans.TopKPerKey.enable(spark)
     // q10 is written as the plain window-filter form — the optimizer rule
     // must swap the sort-based WindowGroupLimit for two TopKPerKey phases
     val df = operators.WindowOps.q10WindowTopN(spark, sfDir)
@@ -726,7 +725,6 @@ class OperatorSpec extends SparkTestBase {
   }
 
   test("custom expressions are callable from SQL after registration") {
-    graft.functions.VectorExprs.registerSql(spark)
     Tables.embeddings(spark, sfDir).limit(10).createOrReplaceTempView("emb_sql")
     val rows = spark.sql(
       """SELECT vec_id, quantized_norm2(embedding) AS n2,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Executable plan-discipline checks: the properties ARCHITECTURE.md §4
@@ -9,12 +8,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * not as a silent 100 TB bottleneck.
   */
 class PlanShapeSpec extends SparkTestBase {
-
-  private def initialPlan(df: DataFrame): String =
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.initialPlan.toString
-      case p => p.toString
-    }
 
   private def count(hay: String, needle: String): Int =
     needle.r.findAllMatchIn(hay).size
@@ -177,7 +170,6 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("q10/q54: heap top-k, no sort-based WindowGroupLimit, no extra exchange") {
-    plans.TopKPerKey.enable(spark)
     val p10 = initialPlan(operators.WindowOps.q10WindowTopN(spark, sfDir))
     assert(count(p10, "TopKPerKey") == 2, p10)
     assert(!p10.contains("WindowGroupLimit"), p10)
@@ -206,11 +198,9 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects strategy, rewrite rule, and SQL functions") {
-    // extensions apply at session construction and a JVM holds one Spark
-    // context, so apply the extensions object directly and assert on what
-    // it injects (functions go into the live session's registry)
-    val (strategies, rules) = org.apache.spark.sql.GraftShims
-      .applyExtensions(new GraftExtensions(), spark)
+    // GraftSession built `spark` with the extensions: no registration call
+    val strategies = org.apache.spark.sql.GraftShims.plannerStrategies(spark)
+    val rules = org.apache.spark.sql.GraftShims.optimizerRules(spark)
     assert(strategies.contains(plans.TopKPerKey.TopKStrategy))
     assert(rules.contains(plans.TopKPerKey.TopKRewrite))
     val r = spark.sql(
@@ -314,13 +304,13 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("extensions-built session compiles row_number()<=k to the heap operator") {
-    // the real spark.sql.extensions path: a session whose SessionState is
-    // constructed WITH GraftExtensions. The injected rewrite runs in the
-    // operator-optimization batch — BEFORE Spark's own InferWindowGroupLimit
-    // batch — so it must match the raw Filter-over-Window shape there.
+    // GraftSession builds `spark` with spark.sql.extensions=GraftExtensions.
+    // The injected rewrite runs in the operator-optimization batch — BEFORE
+    // Spark's own InferWindowGroupLimit batch — so it must match the raw
+    // Filter-over-Window shape there; the reference rows come from a plain
+    // sibling session built without the extensions.
     import org.apache.spark.sql.functions.{col, row_number}
-    val ext = org.apache.spark.sql.GraftShims
-      .sessionWithExtensions(spark, new GraftExtensions())
+    val plain = org.apache.spark.sql.GraftShims.plainSession(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("l_returnflag")
       .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
@@ -328,20 +318,20 @@ class PlanShapeSpec extends SparkTestBase {
       s.read.parquet(s"$sfDir/lineitem.parquet")
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select("l_returnflag", "l_orderkey", "l_linenumber", "rn")
-    val plan = initialPlan(topn(ext))
+    val plan = initialPlan(topn(spark))
     assert(count(plan, "TopKPerKey") == 2, plan)
     assert(count(plan, "Exchange") == 1, plan)
     // injected SQL functions resolve in the extensions session too
-    assert(ext.sql("SELECT md5long60('xyz') AS h").head().getLong(0) > 0)
+    assert(spark.sql("SELECT md5long60('xyz') AS h").head().getLong(0) > 0)
     // and the pruned plan returns exactly the unrewritten session's rows
-    val want = topn(spark).collect().toSet
-    assert(topn(ext).collect().toSet == want && want.nonEmpty)
+    assert(count(initialPlan(topn(plain)), "TopKPerKey") == 0)
+    val want = topn(plain).collect().toSet
+    assert(topn(spark).collect().toSet == want && want.nonEmpty)
   }
 
   test("rank()/dense_rank() filters compile to the tie-keeping heap operator") {
     import org.apache.spark.sql.functions.{col, dense_rank, rank}
-    val ext = org.apache.spark.sql.GraftShims
-      .sessionWithExtensions(spark, new GraftExtensions())
+    val plain = org.apache.spark.sql.GraftShims.plainSession(spark)
     // l_quantity is a small-int column → huge boundary ties: rank()<=3
     // keeps ONLY the top tie tier (its size >> 3), which a strict k-heap
     // would cut — the exact case the tie-keeping modes exist for
@@ -353,10 +343,10 @@ class PlanShapeSpec extends SparkTestBase {
         .withColumn("r", fn).filter(col("r") <= k)
         .select("l_returnflag", "l_orderkey", "l_linenumber", "l_quantity", "r")
     for ((fn, k) <- Seq((rank().over(w), 3), (dense_rank().over(w), 2))) {
-      val plan = initialPlan(run(ext, fn, k))
+      val plan = initialPlan(run(spark, fn, k))
       assert(count(plan, "TopKPerKey") == 2, plan)
-      val want = run(spark, fn, k).collect().toSet
-      val got = run(ext, fn, k).collect().toSet
+      val want = run(plain, fn, k).collect().toSet
+      val got = run(spark, fn, k).collect().toSet
       assert(got == want, s"rows diverge: ${got.size} vs ${want.size}")
       // ties genuinely exceeded k — the strict cut would have lost rows
       assert(want.size > k * 3, s"fixture has no boundary ties (${want.size})")
@@ -781,9 +771,9 @@ class PlanShapeSpec extends SparkTestBase {
   test("q168 zipf: vocab cut is a partial top-k; rank rides the cut") {
     val plan = initialPlan(operators.TextOps.q168ZipfSlope(spark, sfDir))
     // the global row_number must sit ABOVE TakeOrderedAndProject (<=1000
-    // rows), never over the vocabulary-sized frequency table. In the
-    // extensions session GlobalWindowRewrite compiles the global window
-    // to the GlobalRank exec; either operator must ride the cut.
+    // rows), never over the vocabulary-sized frequency table.
+    // GlobalWindowRewrite leaves a window over the cut on the built-in
+    // path; either operator must ride the cut.
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"), plan)
     val rankAt = Seq(plan.indexOf("GlobalRank"), plan.indexOf("Window"))

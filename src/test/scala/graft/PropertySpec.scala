@@ -114,7 +114,7 @@ class PropertySpec extends SparkTestBase {
       (i.toLong, 2018 + rnd.nextInt(3), 1 + rnd.nextInt(12), rnd.nextDouble()))
       .toDF("id", "year", "month", "v")
     val dir = Files.createTempDirectory("pw").toFile.getAbsolutePath
-    Pipelines.writePartitioned(df, s"$dir/t", Seq("year", "month"))
+    graft.sources.Lake.writePartitioned(df, s"$dir/t", Seq("year", "month"))
     val back = spark.read.parquet(s"$dir/t")
       .select("id", "year", "month", "v")
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
@@ -230,6 +230,54 @@ class PropertySpec extends SparkTestBase {
     a.conf.set("spark.sql.optimizer.excludedRules", "")
     try assert(preFilters.nonEmpty)
     finally a.conf.set("spark.sql.optimizer.excludedRules", excluded)
+
+    // GraftExtensions is installed at build time: all 15 SQL functions
+    // resolve from SQL text with no registration call
+    val f = "array(CAST(1.5 AS FLOAT), CAST(-2.0 AS FLOAT))"
+    val sqlFns = a.sql(
+      s"""SELECT quantized_dot($f, $f), quantized_norm2($f),
+         |  long_dot(array(1L, 2L), array(3L, 4L)), int8_codes($f),
+         |  count_in_array(array('a', 'b'), array('b')),
+         |  jaro_winkler('martha', 'marhta'), md5long60('abc'),
+         |  md5_signmask16('abc'), gram3_hash64(array('a', 'b', 'c')),
+         |  gramk_hash64(array('a', 'b', 'c'), 2),
+         |  gramk_hash128(array('a', 'b', 'c'), 2), cov_pair_products($f),
+         |  map_sum_lookup(array('x'), map('x', 5L)),
+         |  winnow_fingerprints('abcdefghijklmnopqrstuvwxyz'),
+         |  char_stats('hello')""".stripMargin)
+    assert(sqlFns.columns.length == 15)
+    assert(sqlFns.collect().length == 1)
+    // a q10-shaped rank filter compiles to the two-phase heap top-k, and
+    // Spark's WindowGroupLimit over it plans away
+    val byKey = org.apache.spark.sql.expressions.Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
+    val topK = initialPlan(Tables.orders(a, sfDir)
+      .withColumn("rn", row_number().over(byKey)).filter(col("rn") <= 3))
+    assert("TopKPerKey".r.findAllIn(topK).size == 2, topK)
+    assert(!topK.contains("WindowGroupLimit"), topK)
+    // a naive global row_number() compiles to the range-exchange operator
+    val global = initialPlan(Tables.orders(a, sfDir).withColumn("rn",
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("o_totalprice").desc, col("o_orderkey")))))
+    assert(global.contains("GlobalRank"), global)
+  }
+
+  test("perKey and withPosition name the fix on a session without the extensions") {
+    val plain = org.apache.spark.sql.GraftShims.plainSession(spark)
+    val df = plain.range(10).toDF("id")
+    val errs = Seq(
+      intercept[IllegalStateException](
+        plans.TopKPerKey.perKey(df, Seq("id"), Seq("id" -> false), 1)),
+      intercept[IllegalStateException](
+        plans.GlobalRank.withPosition(df, Seq("id" -> false))))
+    errs.foreach { e =>
+      assert(e.getMessage.contains("graft.GraftSession"), e.getMessage)
+      assert(e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"),
+        e.getMessage)
+    }
+    // the same calls plan on the engine's session
+    assert(plans.TopKPerKey.perKey(spark.range(10).toDF("id"), Seq("id"),
+      Seq("id" -> false), 1).count() == 10L)
   }
 
   test("salted join equals plain join") {

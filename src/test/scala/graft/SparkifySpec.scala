@@ -107,7 +107,7 @@ class SparkifySpec extends SparkTestBase {
     assert(staged.count() == 1)
     assert(staged.head().getAs[Float]("length") == 246.30812f)
 
-    Pipelines.writePartitioned(Pipelines.timeTable(logs), s"$dir/time",
+    graft.sources.Lake.writePartitioned(Pipelines.timeTable(logs), s"$dir/time",
       Seq("year", "month"))
     val back = spark.read.parquet(s"$dir/time")
     assert(back.count() == 2)

@@ -63,7 +63,6 @@ class StringSimSpec extends SparkTestBase {
   }
 
   test("jaro_winkler is SQL-callable once registered") {
-    StringSimExprs.registerSql(spark)
     val r = spark.sql(
       "SELECT jaro_winkler('martha', 'marhta') AS j").head().getDouble(0)
     assert(r == 0.9611111111111111)
