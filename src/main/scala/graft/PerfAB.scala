@@ -29,12 +29,12 @@ object PerfAB {
     * (SCALING.md "retired A/B variants"). */
   val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
     // triangle orientation on the q36 graph: the degree branch forced,
-    // and the unconditional id-ordered form the adaptive dispatch
-    // replaced
+    // and the id branch forced (the unconditional r1–r10 form the
+    // adaptive dispatch replaced)
     "q83_deg_forced" -> ((s, d) => operators.DedupOps.trianglesAdaptive(
       operators.DedupOps.q36MinhashLsh(s, d), 1L)),
-    "q83_id_oriented" -> ((s, d) =>
-      operators.DedupOps.trianglesIdOriented(operators.DedupOps.q36MinhashLsh(s, d))),
+    "q83_id_oriented" -> ((s, d) => operators.DedupOps.trianglesAdaptive(
+      operators.DedupOps.q36MinhashLsh(s, d), Long.MaxValue)),
     // q70 contamination's two arms: raw gram join vs collapse +
     // role-aware expansion (the declared form picks one by an HLL
     // dup-mass probe)
@@ -56,31 +56,32 @@ object PerfAB {
         isBench)
     }),
     "tri_hub_deg" -> ((s, _) => operators.DedupOps.triangles(hubGraph(s))),
-    "tri_hub_id" -> ((s, _) => operators.DedupOps.trianglesIdOriented(hubGraph(s))),
+    "tri_hub_id" -> ((s, _) =>
+      operators.DedupOps.trianglesAdaptive(hubGraph(s), Long.MaxValue)),
     // the regime the adaptive dispatch exists for: a 40001-node hub
     // parks 4x10^8 wedges on ONE id-ordered join key
     "tri_hub40k_deg" -> ((s, _) => operators.DedupOps.triangles(hubGraph(s, 40001L))),
     "tri_hub40k_id" -> ((s, _) =>
-      operators.DedupOps.trianglesIdOriented(hubGraph(s, 40001L))),
+      operators.DedupOps.trianglesAdaptive(hubGraph(s, 40001L), Long.MaxValue)),
     // r11 THRESHOLD-SENSITIVITY rows (VERDICT task 3): the hub-8001
-    // graph sits just under IdWedgeThreshold (16M of 16.7M wedges);
+    // graph sits just under Skew.SingleTaskRows (16M of 16.7M wedges);
     // halving the threshold flips it to the degree branch, doubling
     // keeps the id branch — the pair measures the crossover's flatness
     // (≈ parity expected; the constant's placement is uncritical ±2×)
     "tri_hub_thr_half" -> ((s, _) => operators.DedupOps.trianglesAdaptive(
-      hubGraph(s), operators.DedupOps.IdWedgeThreshold / 2)),
+      hubGraph(s), operators.Skew.SingleTaskRows / 2)),
     "tri_hub_thr_double" -> ((s, _) => operators.DedupOps.trianglesAdaptive(
-      hubGraph(s), operators.DedupOps.IdWedgeThreshold * 2)),
-    // same for BoundaryFanThreshold: a synthetic viral boundary of
+      hubGraph(s), operators.Skew.SingleTaskRows * 2)),
+    // same for the boundary bar: a synthetic viral boundary of
     // m=5000 head==tail docs probes maxFan = 2.5e7, 1.5x the 2^24 bar —
     // half the threshold salts it, double runs it plain; the 1.5M-doc
     // filler keeps the join naturally in the SMJ regime (the bar's own
     // regime — a broadcastable index with a spread stream has no fat
-    // task, see the BoundaryFanThreshold calibration record)
+    // task, see the Skew.SingleTaskRows calibration record)
     "ht_viral_thr_half" -> ((s, _) => operators.DedupOps.headTailPairs(
-      viralDocs(s), 3, operators.DedupOps.BoundaryFanThreshold / 2)),
+      viralDocs(s), 3, operators.Skew.SingleTaskRows / 2)),
     "ht_viral_thr_double" -> ((s, _) => operators.DedupOps.headTailPairs(
-      viralDocs(s), 3, operators.DedupOps.BoundaryFanThreshold * 2)),
+      viralDocs(s), 3, operators.Skew.SingleTaskRows * 2)),
     // the before/after pair for the r11 boundary salt itself: default
     // threshold salts the m=5000 viral key (2.5e7 pairs spread 64
     // ways); MaxValue forces the r10 single-key plan
@@ -124,7 +125,7 @@ object PerfAB {
     * as the SMJ the threshold is calibrated for — with a broadcastable
     * index this fixture's stream side is SPREAD (range-generated), the
     * BHJ parallelizes the fan map-side, and the salt can only lose
-    * (the r11 calibration detour, see BoundaryFanThreshold). */
+    * (the r11 calibration detour, see Skew.SingleTaskRows). */
   private def viralDocs(s: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
     val viral = s.range(0, 5000L)

@@ -403,31 +403,31 @@ object CurationOps {
       .select(col("rep_a"), col("rep_b"), col("n_shared"))
     // fan-out parallelism pin + mega-group salt: the expandRepPairs
     // probes, off the already-materialized groups frame
-    val dupMembers: Long = Option(c.groups.filter(col("mult") >= 2L)
-      .agg(sum(col("mult"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val (dupMembers, maxMult) = DedupOps.expansionProbe(c)
     val toExpand =
       if (dupMembers > DedupOps.FanoutPinThreshold)
         toExpand0.repartition(
           normed.sparkSession.sparkContext.defaultParallelism, col("rep_a"))
       else toExpand0
+    val anyBig = maxMult > DedupOps.WithinSaltThreshold
     val bigIds = c.groups
       .filter(col("mult") > DedupOps.WithinSaltThreshold)
       .select(col("rep_id"))
-    // max(mult) probe (r12): same one-scan class as the r10 limit(1)
-    // existence check, and the value sizes the salt (see
-    // DedupOps.adaptiveBuckets — B = 64 at or below the 32x bar)
-    val maxMult: Long = graft.ProbeCost.timed("contamination_max_mult") {
-      Option(c.groups.agg(max(col("mult"))).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val B = Skew.adaptiveBuckets(maxMult.toDouble * maxMult.toDouble)
+    // inner-join `stream` to a total member roster on `key`, emitting
+    // the member as `out`; mega groups take the hot-key salt (rosters
+    // here are total, so no left-coalesce fallback is needed)
+    def fan(stream: DataFrame, key: String, members: DataFrame,
+        out: String): DataFrame = {
+      val m = members.select(col("rep_id").as(key), col("doc_id").as(out))
+      if (!anyBig) stream.join(m, Seq(key))
+      else Skew.hotKeyJoin(stream, m, xxhash64(col(out)), Seq(key),
+        bigIds.select(col("rep_id").as(key)), B, "inner")
     }
-    val anyBig = maxMult > DedupOps.WithinSaltThreshold
-    val B = DedupOps.adaptiveBuckets(maxMult.toDouble * maxMult.toDouble)
     val members = c.map.select(col("rep_id"), col("doc_id"))
-    val expanded = fanJoin(fanJoin(toExpand,
-        "rep_a", members, "doc_id", bigIds, anyBig, B),
-        "rep_b", benchM.withColumnRenamed("bench_id", "doc_id"),
-        "bench_id", bigIds, anyBig, B)
+    val benchMembers = benchM.withColumnRenamed("bench_id", "doc_id")
+    val expanded = fan(fan(toExpand, "rep_a", members, "doc_id"),
+        "rep_b", benchMembers, "bench_id")
       .select(col("doc_id"), col("bench_id"), col("n_shared"))
     // ----- within-group pairs: identical contents share every gram, so
     // n_shared = the group's distinct-gram count, eligible at ≥ minShared;
@@ -438,47 +438,11 @@ object CurationOps {
           Seq("doc_id"), "left_semi"), "rep_id")
       .groupBy(col("rep_id")).agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val within = fanJoin(members.join(ngDup, Seq("rep_id")),
-        "rep_id", benchM.withColumnRenamed("bench_id", "doc_id"),
-        "bench_id", bigIds, anyBig, B)
+    val within = fan(members.join(ngDup, Seq("rep_id")),
+        "rep_id", benchMembers, "bench_id")
       .filter(col("doc_id") =!= col("bench_id"))
       .select(col("doc_id"), col("bench_id"), col("n_shared"))
     direct.unionByName(expanded).unionByName(within)
-  }
-
-  /** Inner-join `stream` to a total member roster `(rep_id or `key`,
-    * doc_id)` on `key`, emitting the member as `out` — groups in
-    * `bigIds` bucket their members B ways (B sized from the probed max
-    * group, [[DedupOps.adaptiveBuckets]]) and the stream row explodes
-    * to every bucket, so a mega-group's fan-out spreads across B join
-    * keys instead of one ([[DedupOps.expandRepPairs]]' mega-group salt
-    * with INNER semantics: rosters here are total, so no left-coalesce
-    * fallback is needed; each member lives in exactly one bucket, so
-    * the union over a row's B exploded copies hits every member
-    * exactly once). */
-  private def fanJoin(stream: DataFrame, key: String, members: DataFrame,
-      out: String, bigIds: DataFrame, anyBig: Boolean, B: Long): DataFrame = {
-    val m = members.select(col("rep_id").as(key), col("doc_id").as(out))
-    if (!anyBig) stream.join(m, Seq(key))
-    else {
-      val keys = bigIds.select(col("rep_id").as(key))
-      val mSmall = m.join(keys, Seq(key), "left_anti")
-      val mBig = m.join(keys, Seq(key), "left_semi")
-        .withColumn("_fb", pmod(xxhash64(col(out)), lit(B)))
-      val small = stream.join(keys, Seq(key), "left_anti").join(mSmall, Seq(key))
-      val big = stream.join(keys, Seq(key), "left_semi")
-        // pre-explode width spread (r12): the hot slice is an
-        // AQE-coalesced semi-join output, so the ×B explode would
-        // multiply map-side on few cores (DedupOps.expandRepPairs'
-        // measured single-core fan, same shape)
-        .repartition(stream.sparkSession.sparkContext.defaultParallelism)
-        .withColumn("_fb", explode(sequence(lit(0L), lit(B - 1))))
-        // shuffle_hash on the bucketed side: a broadcast of either side
-        // would void the bucket spread, an SMJ would row-copy the M:N
-        // inner loop (DedupOps.expandSide's r11 note)
-        .join(mBig.hint("shuffle_hash"), Seq(key, "_fb")).drop("_fb")
-      small.unionByName(big)
-    }
   }
 
   val q70Sql: String =

@@ -236,14 +236,29 @@ object DedupOps {
     * within noise of each other near the bar. */
   private[graft] val FanoutPinThreshold = 10000L
 
+  /** The member-expansion dispatch probes, shared by [[expandRepPairs]]
+    * and `CurationOps.contaminationCollapsed`: ONE aggregate over the
+    * already-materialized groups frame returns (dup members = Σ mult
+    * over groups with mult ≥ 2, the fan-out pin's trigger; max(mult),
+    * the mega-group salt's trigger and its bucket-count input). */
+  private[graft] def expansionProbe(c: Collapsed): (Long, Long) = {
+    val r = graft.ProbeCost.timed("expansion_probe") {
+      c.groups.agg(sum(when(col("mult") >= 2L, col("mult"))),
+        max(col("mult"))).head()
+    }
+    (if (r.isNullAt(0)) 0L else r.getLong(0),
+      if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
   private[graft] def expandRepPairs(repPairs: DataFrame, c: Collapsed,
       withinCols: Seq[Column], withinEligible: Column,
       // threshold parameters exist for the straddle fuzz ONLY (a battery
       // swings each one around a fixed corpus's probed value and asserts
       // hash-identical output + the intended branch); every production
       // caller takes the defaults. forceBuckets = 0 derives B from the
-      // probed max group size (adaptiveBuckets); the fuzz pins it to
-      // prove output parity across bucket counts.
+      // probed max group size (Skew.adaptiveBuckets); the fuzz pins it
+      // to prove the within-group self-join's parity across bucket
+      // counts.
       saltThreshold: Long = WithinSaltThreshold,
       pinThreshold: Long = FanoutPinThreshold,
       forceBuckets: Long = 0L): DataFrame = {
@@ -286,89 +301,36 @@ object DedupOps {
     // nothing, and the pin's forced shuffle of the pair stream is pure
     // cost (measured q37 +80% at 1× on the near-dup-only bench corpus,
     // 16 dup members) — see [[FanoutPinThreshold]].
-    val dupMembers: Long =
-      if (!hasMults) 0L
-      else graft.ProbeCost.timed("expansion_dup_members") {
-        Option(c.groups.filter(col("mult") >= 2L)
-          .agg(sum(col("mult"))).head.get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-      }
+    val (dupMembers, maxMult) = expansionProbe(c)
     val toJoin = if (hasMults && dupMembers > pinThreshold)
       toJoin0.repartition(
         repPairs.sparkSession.sparkContext.defaultParallelism, col("doc_a"))
     else toJoin0
-    // ADAPTIVE SALT BRANCH (r10): whether ANY group exceeds the salt
-    // threshold is decided at build time with one limit(1) probe of the
-    // already-materialized groups frame (class-#8-allowlisted alongside
-    // the collapse checkpoints it reads). On a normal corpus the probe
-    // is false and the plan below is EXACTLY the unsalted r9 shape —
-    // planning the salted form unconditionally cost +8–49% across the
-    // expansion-consuming dedup family at 1× (six dead joins against
-    // empty broadcasts, re-planned in every CC round; bench_full_r10
-    // first run). A 100 TB job pays one in-memory scan of the deduped
-    // group table to buy the skew-proof plan only when it's needed.
-    // r12: the probe is max(mult) rather than the r10 limit(1)
-    // existence check — same one-scan cost class over the checkpointed
-    // groups frame (map-side-combined max), and the VALUE sizes the
-    // salt: B grows with the worst group so the largest bucket-pair
-    // key stays a bounded single-task emit at ANY multiplicity
-    // (adaptiveBuckets; B = 64 for every corpus at or below the 32×
-    // bar, so the r11 plan is unchanged there).
-    val maxMult: Long = graft.ProbeCost.timed("expansion_max_mult") {
-      Option(c.groups.agg(max(col("mult"))).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    }
+    // ADAPTIVE SALT BRANCH (r10): on a normal corpus no group exceeds
+    // the salt threshold and the plan below is EXACTLY the unsalted r9
+    // shape — planning the salted form unconditionally cost +8–49%
+    // across the expansion-consuming dedup family at 1× (six dead joins
+    // against empty broadcasts, re-planned in every CC round;
+    // bench_full_r10 first run). The probed max(mult) also sizes the
+    // salt (r12, Skew.adaptiveBuckets; B = 64 for every corpus at or
+    // below the 32× bar, so the r11 plan is unchanged there).
     val anyBig = maxMult > saltThreshold
     val bigIds = c.groups.filter(col("mult") > saltThreshold)
       .select(col("rep_id"))
     val B = if (forceBuckets > 0) forceBuckets
-      else adaptiveBuckets(maxMult.toDouble * maxMult.toDouble)
+      else Skew.adaptiveBuckets(maxMult.toDouble * maxMult.toDouble)
     // One expansion join per pair side. LEFT + coalesce on the normal
     // path: a pair whose side is a singleton misses the dup-member map
     // and falls back to its own rep id. A side in a MEGA group (r10)
     // would replicate every member under ONE join key (#pairs(rep) ×
     // mult rows in one task — measured 134 s at zipf 3·10⁴, q37); such
-    // pairs instead explode to the B member buckets and join on
-    // (rep, bucket), spreading the fan-out B ways. The inner join is
-    // exact: each member lives in exactly one bucket, so the union over
-    // the pair's B exploded rows hits every member once (an empty
-    // bucket just contributes no rows).
-    def expandSide(stream: DataFrame, rep: String, out: String): DataFrame =
-      if (!anyBig)
-        stream.join(dm.select(col("rep_id").as(rep), col("doc_id").as(out)),
-          Seq(rep), "left")
-      else {
-        val dmSmallG = dm.join(bigIds, Seq("rep_id"), "left_anti")
-        val dmBig = dm.join(bigIds, Seq("rep_id"), "left_semi")
-          .withColumn("mbkt", pmod(xxhash64(col("doc_id")), lit(B)))
-        val keys = bigIds.select(col("rep_id").as(rep))
-        val normal = stream.join(keys, Seq(rep), "left_anti")
-          .join(dmSmallG.select(col("rep_id").as(rep), col("doc_id").as(out)),
-            Seq(rep), "left")
-        val big = stream.join(keys, Seq(rep), "left_semi")
-          // pre-explode width spread (r12): the hot-pair slice is an
-          // AQE-coalesced join output (tiny bytes), so the ×B explode
-          // would multiply rows map-side on few cores — see the within
-          // branch's measured note
-          .repartition(stream.sparkSession.sparkContext.defaultParallelism)
-          .withColumn("_sb", explode(sequence(lit(0L), lit(B - 1))))
-          // SHUFFLE_HASH hint on the bucketed side (r11): without it
-          // AQE may BROADCAST one side of the bucket join — the width
-          // defense then collapses, because the exploded side's
-          // partitioning ends up under a BroadcastExchange and the
-          // whole fan-out streams on the other side's unpinned few
-          // partitions (caught by the q142 StageProfile/plan decomposition;
-          // the trap was latent in every salted join) — and a
-          // sort-merge join's M:N inner loop copies buffered rows per
-          // candidate (measured ~15% slower than the hash build on the
-          // q152 stage). The build side is safe by construction: the
-          // salt caps every (key, bucket) build group at ~1/B of the
-          // hot key's members
-          .join(dmBig.select(col("rep_id").as(rep), col("mbkt").as("_sb"),
-            col("doc_id").as(out)).hint("shuffle_hash"), Seq(rep, "_sb"))
-          .drop("_sb")
-        normal.unionByName(big)
-      }
+    // groups take the hot-key salt on (rep, member bucket) instead.
+    def expandSide(stream: DataFrame, rep: String, out: String): DataFrame = {
+      val members = dm.select(col("rep_id").as(rep), col("doc_id").as(out))
+      if (!anyBig) stream.join(members, Seq(rep), "left")
+      else Skew.hotKeyJoin(stream, members, xxhash64(col(out)), Seq(rep),
+        bigIds.select(col("rep_id").as(rep)), B, "left")
+    }
     val cross = expandSide(expandSide(
         toJoin.withColumnRenamed("doc_a", "rep_a")
           .withColumnRenamed("doc_b", "rep_b"),
@@ -433,7 +395,7 @@ object DedupOps {
         // parallelism so the mega group's output streams at full width
         .repartition(emBig.sparkSession.sparkContext.defaultParallelism,
           col("rep_id"), col("tb"))
-        // shuffle_hash on the bucketed side: see expandSide — a
+        // shuffle_hash on the bucketed side: see Skew.hotKeyJoin — a
         // broadcast here would void the pin, a sort-merge join would
         // row-copy the M:N inner loop
         .as("x").join(embk.hint("shuffle_hash").as("y"),
@@ -1433,10 +1395,10 @@ object DedupOps {
     * min-id rooting of the output) is identical in both — what changes
     * is WHERE the wedge volume lands.
     *
-    * Why not id-ordering always (the r1–r10 form, kept as
-    * [[trianglesIdOriented]]): a degree-d hub with ids on both sides
-    * emits in(hub)·out(hub) ≈ d²/4 wedge rows under ONE join key, and
-    * AQE cannot split it — skew handling sizes partitions by INPUT
+    * Why not id-ordering always (the r1–r10 form, still reachable as
+    * `trianglesAdaptive(e, Long.MaxValue)`): a degree-d hub with ids on
+    * both sides emits in(hub)·out(hub) ≈ d²/4 wedge rows under ONE join
+    * key, and AQE cannot split it — skew handling sizes partitions by INPUT
     * bytes (a hub's d edge rows are KBs) and is blind to join fan-out,
     * the exact q37-expansion blindness SCALING.md r10 measured. One
     * task then generates the whole wedge stream while the rest of the
@@ -1452,7 +1414,7 @@ object DedupOps {
     * that don't need it. So the dispatch is ADAPTIVE, the repo's
     * standing idiom: one probe aggregate over the already-checkpointed
     * edge list computes the id-ordered plan's worst single-key wedge
-    * output max_b in(b)·out(b); below [[IdWedgeThreshold]] the probe
+    * output max_b in(b)·out(b); below [[Skew.SingleTaskRows]] the probe
     * says no task can stall and the cheap id-ordered form runs, above
     * it the degree-ordered form spreads the hub. Both enumerate the
     * SAME rooted counts (spec-asserted on star and K4 graphs, corpus-
@@ -1465,85 +1427,69 @@ object DedupOps {
     * in the TRIANGLE OUTPUT itself — the Jaccard-VERIFIED q36 graph is
     * the right input, as for q64. */
   def triangles(edges: DataFrame): DataFrame =
-    trianglesAdaptive(edges, IdWedgeThreshold)
+    trianglesAdaptive(edges, Skew.SingleTaskRows)
 
-  /** Largest single-key wedge output the id-ordered plan is allowed
-    * before [[triangles]] switches to degree-ordering. 2²⁴ ≈ 16.7M:
-    * the hub-8001 PerfAB pair (16M wedges on the hub key) measured NO
-    * wall separation at local[32] — one task emitting 16M narrow rows
-    * is ~1 s of work — while the hub-40001 pair (4×10⁸ on one key) is
-    * the minutes-vs-seconds regime the switch exists for.
-    *
-    * SCALE PORTABILITY (r11): denominated in single-task OUTPUT ROWS ≈
-    * one core-second of row generation — a per-CORE quantity, so the
-    * constant carries unchanged to any cluster width (the
-    * [[WithinSaltThreshold]] contract; per-core throughput, not
-    * cluster share, is the only thing that could move it). The
-    * crossover is flat by measurement: at the bar the hub-8001 pair
-    * runs the two orientations at parity (±2× threshold flips the
-    * branch with no wall change — the PerfAB `tri_hub_thr_half` /
-    * `tri_hub_thr_double` sensitivity rows), and the win only appears
-    * an order of magnitude past it. */
-  private[graft] val IdWedgeThreshold = 1L << 24
-
+  /** Rooted triangle counts `(doc_id, n_triangles)` with the orientation
+    * bar injectable: `Long.MaxValue` forces the id-ordered arm (the
+    * r1–r10 unconditional form, the PerfAB baseline), `1` the
+    * degree-ordered arm. */
   private[graft] def trianglesAdaptive(edges: DataFrame,
-      threshold: Long): DataFrame = {
+      threshold: Long): DataFrame =
+    enumerateTriangles(edges, threshold, "wedge_product")(
+      _.groupBy(col("a").as("doc_id")).agg(count(lit(1)).as("n_triangles")),
+      _.groupBy(least(col("u"), col("x"), col("y")).as("doc_id"))
+        .agg(count(lit(1)).as("n_triangles")))
+
+  /** The one triangle enumeration behind [[trianglesAdaptive]] and
+    * [[triangleTriples]]. Checkpoints the canonical edge list, probes the
+    * id-ordered plan's worst single-key wedge output max_b in(b)·out(b)
+    * (under the ProbeCost name `probe`), and hands the closed wedges of
+    * the chosen orientation to that arm's consumer: `idArm` sees
+    * id-ordered triples `(a < b < c)`, `degArm` sees degree-ordered
+    * wedges `(u, x, y)` (u the lowest-(degree, id) corner). Returns the
+    * consumer's output checkpointed; the degree arm checkpoints its
+    * oriented frame too (consumed twice by the wedge self-join) and
+    * releases it, so it runs one job more than the id arm. */
+  private def enumerateTriangles(edges: DataFrame, threshold: Long,
+      probe: String)(idArm: DataFrame => DataFrame,
+      degArm: DataFrame => DataFrame): DataFrame = {
     val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    // probe: the id-ordered wedge stage joins in-edges (doc_b = b) to
-    // out-edges (doc_a = b), so its largest single-key output is
-    // max_b in(b)·out(b). Two node-count-sized aggregates over the
+    // the id-ordered wedge stage joins in-edges (doc_b = b) to
+    // out-edges (doc_a = b). Two node-count-sized aggregates over the
     // checkpointed edges; double math so a pathological hub can't wrap
     // the comparison negative.
-    val mw = graft.ProbeCost.timed("wedge_product") {
+    val mw = graft.ProbeCost.timed(probe) {
       e.groupBy(col("doc_b").as("v")).agg(count(lit(1)).as("i"))
         .join(e.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("o")), Seq("v"))
         .agg(max(col("i").cast("double") * col("o")).as("mw")).head()
     }
     val maxWedge = if (mw.isNullAt(0)) 0.0 else mw.getDouble(0)
-    // the degree branch materializes its own counts (it must, to release
-    // the oriented frame); checkpointing it AGAIN here would double-
-    // materialize and leak the inner pin
     val out =
-      if (maxWedge <= threshold.toDouble) idOrientedCounts(e).localCheckpoint(true)
-      else degreeOrientedCounts(e)
+      if (maxWedge <= threshold.toDouble) {
+        val e1 = e.select(col("doc_a").as("a"), col("doc_b").as("b"))
+        val e2 = e.select(col("doc_a").as("b2"), col("doc_b").as("c"))
+        val e3 = e.select(col("doc_a").as("a3"), col("doc_b").as("c3"))
+        idArm(e1.join(e2, col("b") === col("b2"))
+          .join(e3, col("a") === col("a3") && col("c") === col("c3")))
+          .localCheckpoint(true)
+      } else {
+        val oriented = degreeOriented(e).localCheckpoint(true)
+        // wedges = ordered out-neighbor pairs of u; (deg, id) is a strict
+        // total order (ids are unique), so each unordered pair appears once
+        val wedges = oriented.select(col("u"), col("w").as("x"), col("dw").as("dx"))
+          .join(oriented.select(col("u"), col("w").as("y"), col("dw").as("dy")),
+            Seq("u"))
+          .filter(col("dx") < col("dy") ||
+            (col("dx") === col("dy") && col("x") < col("y")))
+        val out0 = degArm(wedges.join(e,
+            least(col("x"), col("y")) === col("doc_a") &&
+              greatest(col("x"), col("y")) === col("doc_b")))
+          .localCheckpoint(true)
+        org.apache.spark.sql.GraftShims.unpersistCheckpoint(oriented)
+        out0
+      }
     org.apache.spark.sql.GraftShims.unpersistCheckpoint(e)
     out
-  }
-
-  /** Degree-ordered enumeration over an already-checkpointed canonical
-    * edge list — the hub-safe branch of [[triangles]]. */
-  private[graft] def degreeOrientedCounts(e: DataFrame): DataFrame = {
-    // Checkpointed: the self-join below consumes the oriented frame
-    // twice, and the two degree joins should run once, not per side.
-    val oriented = degreeOriented(e).localCheckpoint(true)
-    // wedges = ordered out-neighbor pairs of u; (deg, id) is a strict
-    // total order (ids are unique), so each unordered pair appears once
-    val wedges = oriented.select(col("u"), col("w").as("x"), col("dw").as("dx"))
-      .join(oriented.select(col("u"), col("w").as("y"), col("dw").as("dy")),
-        Seq("u"))
-      .filter(col("dx") < col("dy") ||
-        (col("dx") === col("dy") && col("x") < col("y")))
-    val out = wedges.join(e,
-        least(col("x"), col("y")) === col("doc_a") &&
-          greatest(col("x"), col("y")) === col("doc_b"))
-      .groupBy(least(col("u"), col("x"), col("y")).as("doc_id"))
-      .agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(oriented)
-    out
-  }
-
-  /** Id-ordered enumeration over an already-checkpointed canonical edge
-    * list — the cheap branch of [[triangles]]: no degree pass, wedges
-    * rooted directly at each triangle's min id. */
-  private def idOrientedCounts(e: DataFrame): DataFrame = {
-    val e1 = e.select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val e2 = e.select(col("doc_a").as("b2"), col("doc_b").as("c"))
-    val e3 = e.select(col("doc_a").as("a3"), col("doc_b").as("c3"))
-    e1.join(e2, col("b") === col("b2"))
-      .join(e3, col("a") === col("a3") && col("c") === col("c3"))
-      .groupBy(col("a").as("doc_id"))
-      .agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Re-orient an id-ordered edge list `(doc_a, doc_b)` from the
@@ -1565,20 +1511,6 @@ object DedupOps {
         when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("u"),
         when(aFirst, col("doc_b")).otherwise(col("doc_a")).as("w"),
         when(aFirst, col("db")).otherwise(col("da")).as("dw"))
-  }
-
-  /** The r1–r10 unconditional id-ordered form — kept ONLY as the
-    * PerfAB baseline and the hub-skew witness for [[triangles]]'
-    * scaladoc (a min-id-rooted wedge stage parks a hub's d²/4 pairs on
-    * one join key, no probe, no escape). Never declared. */
-  private[graft] def trianglesIdOriented(edges: DataFrame): DataFrame = {
-    // materialize-then-release, mirroring trianglesAdaptive: repeated
-    // PerfAB baseline invocations must not accumulate edge-sized
-    // storage blocks across a bench run (r11, ADVICE)
-    val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    val out = idOrientedCounts(e).localCheckpoint(true)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(e)
-    out
   }
 
   /** q83: triangle counts over the q36 near-dup graph, with a BLOW-UP
@@ -1606,32 +1538,26 @@ object DedupOps {
     * — Σ_g C(m_g,3) (clique interiors) + Σ_(g,h) [C(m_g,2)·m_h +
     * C(m_h,2)·m_g] (two-in-one-group triangles) — from the collapsed
     * groups frame and the rep pair list, never expanding anything.
-    * Below [[BlowupTriThreshold]] the enumerated path runs unchanged
+    * Below [[Skew.SingleTaskRows]] the enumerated path runs unchanged
     * (same `trianglesAdaptive` orientation dispatch as r10/r11); above
     * it the closed form takes over. Both count the SAME rooted
     * triangles (spec'd: worked K5 blow-up example, corpus parity, and
     * a straddle battery one unit around the probed mass). */
   def q83Triangles(s: SparkSession, dir: String): DataFrame =
-    q83Core(collapsedDocs(s, dir), BlowupTriThreshold)
-
-  /** Threshold on the probed blow-up triangle mass (enumerated-only
-    * wedge rows) above which [[q83Triangles]] switches to the closed
-    * form. 2²⁴ ≈ 1.7·10⁷, the family's ~1-core-second row-generation
-    * unit ([[IdWedgeThreshold]] contract — single-task OUTPUT ROWS, a
-    * per-core quantity that carries to any cluster width; a clique's
-    * wedge volume lands on O(B²) salt keys at best, so the mass IS
-    * task-concentrated in the enumerated plan). Measured brackets, zipf
-    * documents fixture (SCALING.md r12): 500 copies ≈ C(500,3) = 2.1·10⁷
-    * sits just above the bar — enumerated measured 7.6 s there (fine,
-    * the flat-crossover regime) — while 1000 copies (1.7·10⁸) measured
-    * 39 s and 2000 copies (1.3·10⁹) 345 s with 29 GB of spill: the
-    * switch exists for the cubic regime, and ±2× around the bar both
-    * branches run in single-digit seconds. */
-  private[graft] val BlowupTriThreshold = 1L << 24
+    q83Core(collapsedDocs(s, dir), Skew.SingleTaskRows)
 
   /** [[q83Triangles]] with the dispatch threshold injectable — the
     * straddle fuzz swings it one unit around the probed mass and
-    * asserts hash-identical output plus the intended branch. */
+    * asserts hash-identical output plus the intended branch.
+    *
+    * The production bar is [[Skew.SingleTaskRows]]: a clique's wedge
+    * volume lands on O(B²) salt keys at best, so the blow-up mass IS
+    * task-concentrated in the enumerated plan. Measured brackets, zipf
+    * documents fixture (SCALING.md r12): 500 copies ≈ C(500,3) = 2.1·10⁷
+    * sits just above the bar — enumerated measured 7.6 s there (the
+    * flat-crossover regime) — while 1000 copies (1.7·10⁸) measured 39 s
+    * and 2000 copies (1.3·10⁹) 345 s with 29 GB of spill: the switch
+    * exists for the cubic regime. */
   private[graft] def q83Core(c: Collapsed, blowupThreshold: Long): DataFrame = {
     // the rep pair list feeds the probe and BOTH branches (the
     // enumerated branch's expansion consumes it on two join sides) —
@@ -1662,7 +1588,7 @@ object DedupOps {
       if (mass <= blowupThreshold.toDouble)
         trianglesAdaptive(
           expandRepPairs(rp, c, Seq.empty, col("n_toks") >= 3L),
-          IdWedgeThreshold)
+          Skew.SingleTaskRows)
       else trianglesBlowup(c, rp)
     // both branches return a localCheckpoint'd frame, so rp is dead
     org.apache.spark.sql.GraftShims.unpersistCheckpoint(rp)
@@ -1784,45 +1710,15 @@ object DedupOps {
     * orientation dispatch, same exactly-once guarantees; returns a
     * localCheckpoint'd frame the caller releases. */
   private[graft] def triangleTriples(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
     // distinct ProbeCost name: this probe only fires on the blow-up
     // branch's REP graph, so the registry itself witnesses the branch
     // (DispatchStraddleSpec keys on it)
-    val mw = graft.ProbeCost.timed("rep_wedge_product") {
-      e.groupBy(col("doc_b").as("v")).agg(count(lit(1)).as("i"))
-        .join(e.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("o")), Seq("v"))
-        .agg(max(col("i").cast("double") * col("o")).as("mw")).head()
-    }
-    val maxWedge = if (mw.isNullAt(0)) 0.0 else mw.getDouble(0)
-    val out =
-      if (maxWedge <= IdWedgeThreshold.toDouble) {
-        val e1 = e.select(col("doc_a").as("a"), col("doc_b").as("b"))
-        val e2 = e.select(col("doc_a").as("b2"), col("doc_b").as("c"))
-        val e3 = e.select(col("doc_a").as("a3"), col("doc_b").as("c3"))
-        // id-ordered: a < b (e1), b < c (e2), so the triple is sorted
-        e1.join(e2, col("b") === col("b2"))
-          .join(e3, col("a") === col("a3") && col("c") === col("c3"))
-          .select(col("a").as("ta"), col("b").as("tb"), col("c").as("tc"))
-          .localCheckpoint(true)
-      } else {
-        val oriented = degreeOriented(e).localCheckpoint(true)
-        val wedges = oriented.select(col("u"), col("w").as("x"), col("dw").as("dx"))
-          .join(oriented.select(col("u"), col("w").as("y"), col("dw").as("dy")),
-            Seq("u"))
-          .filter(col("dx") < col("dy") ||
-            (col("dx") === col("dy") && col("x") < col("y")))
-        val sorted = array_sort(array(col("u"), col("x"), col("y")))
-        val out0 = wedges.join(e,
-            least(col("x"), col("y")) === col("doc_a") &&
-              greatest(col("x"), col("y")) === col("doc_b"))
-          .select(sorted.getItem(0).as("ta"), sorted.getItem(1).as("tb"),
-            sorted.getItem(2).as("tc"))
-          .localCheckpoint(true)
-        org.apache.spark.sql.GraftShims.unpersistCheckpoint(oriented)
-        out0
-      }
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(e)
-    out
+    val sorted = array_sort(array(col("u"), col("x"), col("y")))
+    enumerateTriangles(edges, Skew.SingleTaskRows, "rep_wedge_product")(
+      // id-ordered: a < b (e1), b < c (e2), so the triple is sorted
+      _.select(col("a").as("ta"), col("b").as("tb"), col("c").as("tc")),
+      _.select(sorted.getItem(0).as("ta"), sorted.getItem(1).as("tb"),
+        sorted.getItem(2).as("tc")))
   }
 
   val q83Sql: String =
@@ -1995,23 +1891,15 @@ object DedupOps {
     * the standing adaptive idiom: one probe aggregate over the
     * already-checkpointed index computes the worst single-key pair
     * output max_h m_tail(h)·m_head(h); at or below
-    * [[BoundaryFanThreshold]] the plain join runs (identical to r10's
+    * [[Skew.SingleTaskRows]] the plain join runs (identical to r10's
     * shape, minus the double tokenize), above it the HOT KEYS ONLY take
-    * a bucket salt — tails hash into [[SaltBuckets]] buckets, heads
-    * explode to every bucket, the join keys on (h, bucket) with an
-    * explicit width pin (REPARTITION_BY_NUM — AQE would re-coalesce the
-    * small exploded input right back into one task, the r10
-    * within-salt lesson). Cold keys keep the plain join; the union is
-    * exactly the unsalted pair set (each hot pair meets in precisely
-    * the tail's bucket). Parity + branch-witness spec'd across the
-    * threshold (GraphTextSpec); measured on zipf head==tail copies in
-    * SCALING.md r11. */
+    * [[Skew.hotKeyJoin]]'s bucket salt (tails bucketed by doc, heads
+    * replicated to every bucket); cold keys keep the plain join.
+    * Parity + branch-witness spec'd across the threshold
+    * (GraphTextSpec); measured on zipf head==tail copies in SCALING.md
+    * r11. */
   def headTailPairs(docs: DataFrame, k: Int,
-      fanThreshold: Long = BoundaryFanThreshold,
-      // fuzz-only (see expandRepPairs): 0 derives B from the probed
-      // worst key — per (h, bucket) output is m_tail·m_head/B, so B =
-      // adaptiveBuckets(maxFan) bounds it at any virality
-      forceBuckets: Long = 0L): DataFrame = {
+      fanThreshold: Long = Skew.SingleTaskRows): DataFrame = {
     import graft.functions.HashExprs.gramk_hash64
     val base = docs
       .select(col("doc_id"), filter(tokens(col("text")), t => t =!= "").as("toks"))
@@ -2038,97 +1926,19 @@ object DedupOps {
         tails.join(heads, Seq("h"))
       else {
         // materialized once: the hot-key roster feeds FOUR anti/semi
-        // broadcasts below, and a lazy `hot` re-runs the keyCounts
+        // broadcasts, and a lazy `hot` re-runs the keyCounts
         // aggregation inside every broadcast build (measured: the
         // re-aggregations, not the salted join itself, were most of the
-        // salted plan's overhead — StageProfile stage decomposition, r11)
+        // salted plan's overhead — stage decomposition, r11)
         val hot = keyCounts
           .filter(col("mt").cast("double") * col("mh") > fanThreshold.toDouble)
           .select(col("h")).localCheckpoint(true)
-        val plain = tails.join(hot, Seq("h"), "left_anti")
-          .join(heads.join(hot, Seq("h"), "left_anti"), Seq("h"))
-        val B = if (forceBuckets > 0) forceBuckets
-          else adaptiveBuckets(maxFan)
-        val salted = heads.join(hot, Seq("h"), "left_semi")
-          // pre-explode width spread (r12): the hot-head slice is an
-          // AQE-coalesced semi-join output, so the ×B explode would
-          // multiply map-side on few cores (the expandRepPairs within
-          // branch's measured single-core fan, same shape)
-          .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-          .withColumn("bkt", explode(sequence(lit(0L), lit(B - 1))))
-          .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-            col("h"), col("bkt"))
-          // shuffle_hash on the bucketed side: AQE otherwise
-          // BROADCASTS the exploded side (byte-tiny), swallowing the
-          // REPARTITION_BY_NUM pin inside a BroadcastExchange and
-          // streaming the entire fan-out on the other side's few
-          // partitions — measured 4x the single-task plain plan at
-          // 10^9 pairs before the hint (StageProfile + forced-SMJ bracket, r11); the hash
-          // build also beats the SMJ's M:N row-copy inner loop
-          .join(tails.join(hot, Seq("h"), "left_semi")
-            .withColumn("bkt", pmod(xxhash64(col("doc_a")), lit(B)))
-            .hint("shuffle_hash"),
-            Seq("h", "bkt"))
-        plain.unionByName(salted.select(plain.columns.map(col).toIndexedSeq: _*))
+        Skew.hotKeyJoin(heads, tails, xxhash64(col("doc_a")), Seq("h"), hot,
+          Skew.adaptiveBuckets(maxFan), "inner")
       }
     pairs.filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
   }
-
-  /** Largest single-boundary-key pair output [[headTailPairs]]' plain
-    * SORT-MERGE join may emit before hot keys take the bucket salt —
-    * same unit and value as [[IdWedgeThreshold]] (max OUTPUT ROWS one
-    * task may generate; 2²⁴ ≈ 1.2 s at SMJ's measured ~1.4·10⁷
-    * single-key-emit rows/s, the r11 forced-SMJ bracket).
-    *
-    * The bar was MEASURED in the adverse regime and deliberately keyed
-    * on the probe alone. The r11 calibration detour, kept on record:
-    * when the sides fit a broadcast AND the hot key's stream rows are
-    * spread across partitions, the plain BHJ fans out map-side in
-    * parallel (10⁹ pairs in 3.3 s over 64 tasks) and the salt loses
-    * ×2.5 — a first cut moved this bar to 2²⁶ from exactly that
-    * measurement, and a second cut guarded on broadcastability. Both
-    * were wrong: the q152 bot fixture showed a BROADCASTABLE side
-    * still fat-tasking (max-task ≈ wall), because a clustered hot key
-    * (a bot's time-adjacent rows, one parquet split) concentrates the
-    * stream side regardless of join strategy, and clustering is not
-    * observable at plan time. So the dispatch pays the salt whenever
-    * the OUTPUT bound crosses the bar: the spread-BHJ corpora where
-    * that wastes ~×2.5 of a small absolute are bounded overhead; the
-    * clustered/SMJ fat task it prevents is unbounded (×3.1 at 2.6·10⁸
-    * pairs, ×6.6 at 10⁹, SCALING.md r11). */
-  private[graft] val BoundaryFanThreshold = 1L << 24
-
-  /** FLOOR bucket count for every mega-key salt in this file
-    * (within-group self-join, expansion fan joins, boundary-hash salt)
-    * and in the q152 window salt. 64 × the ~1-task-second per-key
-    * output bound keeps the worst post-salt bucket under ~2% of a
-    * 32-core minute while the exploded side's input inflation (×64 on
-    * hot keys only) stays trivial. Since r12 the ACTUAL count is
-    * derived per query by [[adaptiveBuckets]] — this constant is the
-    * floor that keeps every corpus at or below the 32×-bar regime on
-    * the exact r11 plan. */
-  private[graft] val SaltBuckets = 64L
-
-  /** Derive the salt bucket count from the PROBED worst single-key
-    * output (r12, VERDICT task 3). A fixed B caps nothing: the within
-    * salt's largest target-bucket key carries ~2/(B+1) of a mega
-    * group's C(M,2) pairs ≈ M²/B rows — linear in output at fixed B,
-    * so a 10⁵-member group (5·10⁹ pairs) would put ~1.5·10⁸ rows
-    * (≈11 s) in ONE task at B = 64. Solving worst/B ≤
-    * [[IdWedgeThreshold]] (the family's ~1-task-second output unit)
-    * gives B = ⌈worst / 2²⁴⌉, floored at [[SaltBuckets]] (every corpus
-    * measured through r11 derives the floor — plans unchanged below
-    * Mmax ≈ 3.3·10⁴) and capped at 4096 (cap reached only past
-    * worst ≈ 7·10¹⁰ single-key rows ≈ a 4·10⁵-member group; beyond it
-    * the explode-side inflation — B copies of each hot row — would
-    * rival the pair output itself, and a corpus that hot needs the
-    * collapse/weighted consumers, not a bigger salt). Width-portable
-    * like every constant in the family: the derivation bounds
-    * SINGLE-TASK OUTPUT ROWS, a per-core quantity. */
-  private[graft] def adaptiveBuckets(worstKeyRows: Double): Long =
-    math.min(4096L, math.max(SaltBuckets,
-      math.ceil(worstKeyRows / IdWedgeThreshold.toDouble).toLong))
 
   def q142HeadTailOverlap(s: SparkSession, dir: String): DataFrame =
     headTailPairs(Tables.documents(s, dir), 3)

@@ -589,12 +589,10 @@ object EventOps {
     * OUTPUT, invisible to AQE's input-byte skew split). Fix is the
     * standing adaptive idiom: one single-pass probe aggregate computes
     * max_u |P_u|·|T_u|; at or below [[WindowFanThreshold]] the
-    * r10-shaped plain join runs, above it HOT USERS ONLY take the
-    * bucket salt (purchases hashed into [[DedupOps.SaltBuckets]]
-    * buckets, touches exploded to every bucket, join on (user_id,
-    * bucket) with the defaultParallelism width pin); cold users keep
-    * the plain join. The per-channel aggregate consumes the identical
-    * pair multiset — parity + branch witnesses spec'd across the
+    * r10-shaped plain join runs, above it HOT USERS ONLY take
+    * [[Skew.hotKeyJoin]]'s bucket salt (purchases bucketed, touches
+    * replicated to every bucket); cold users keep the plain join. The
+    * per-channel aggregate consumes the identical pair multiset — parity + branch witnesses spec'd across the
     * threshold (DispatchStraddleSpec); measured post-fix in the
     * standing zipf-events row (SCALING.md r11). */
   def q152DecayAttribution(s: SparkSession, dir: String): DataFrame =
@@ -602,8 +600,8 @@ object EventOps {
 
   /** Worst single-user pair ENUMERATION (|P_u|·|T_u| candidates, before
     * the window filter) q152's plain SMJ may run in one task before hot
-    * users take the bucket salt — [[DedupOps.BoundaryFanThreshold]]'s
-    * unit, but a per-operator value: q152's salted branch additionally
+    * users take the bucket salt — [[Skew.SingleTaskRows]]'s unit, but
+    * a per-operator value: q152's salted branch additionally
     * prices TWO stream checkpoints (the narrow purchase/touch
     * projections, materialized so the hot split doesn't re-scan the
     * event table four times), so its measured crossover sits at
@@ -617,17 +615,12 @@ object EventOps {
     * stays bucket-bounded). 2²⁸ ≈ 2.7·10⁸. NOTE the bot fixture
     * fat-tasked (max-task ≈ wall) with a BROADCASTABLE purchase side —
     * the clustered-stream evidence behind keying the dispatch on the
-    * output bound alone (see [[DedupOps.BoundaryFanThreshold]]'s
-    * calibration record). */
+    * output bound alone (see [[Skew.SingleTaskRows]]' calibration
+    * record). */
   private[graft] val WindowFanThreshold: Long = 1L << 28
 
   private[graft] def decayAttribution(ev: DataFrame,
-      fanThreshold: Long,
-      // fuzz-only (see DedupOps.expandRepPairs): 0 derives B from the
-      // probed worst per-user pair product — per (user, bucket) output
-      // is np·nt/B, so B = adaptiveBuckets(maxFan) bounds it for any
-      // bot size
-      forceBuckets: Long = 0L): DataFrame = {
+      fanThreshold: Long): DataFrame = {
     val d38 = "decimal(38,0)"
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), unix_micros(col("ts")).as("p_us"))
@@ -670,37 +663,11 @@ object EventOps {
             Seq("user_id"))
           .filter(col("np").cast("double") * col("nt") > fanThreshold.toDouble)
           .select(col("user_id")).localCheckpoint(true)
-        val plain = p.join(hot, Seq("user_id"), "left_anti")
-          .join(t.join(hot, Seq("user_id"), "left_anti"),
-            Seq("user_id"))
+        // per (user, bucket) output is np·nt/B, so the derived B bounds
+        // it for any bot size
+        Skew.hotKeyJoin(t, p, xxhash64(col("user_id"), col("p_us")),
+          Seq("user_id"), hot, Skew.adaptiveBuckets(maxFan), "inner")
           .filter(windowCond)
-        val B = if (forceBuckets > 0) forceBuckets
-          else DedupOps.adaptiveBuckets(maxFan)
-        val salted = t.join(hot, Seq("user_id"), "left_semi")
-          // pre-explode width spread (r12): the hot-touch slice is an
-          // AQE-coalesced semi-join output, so the ×B explode would
-          // multiply map-side on few cores (DedupOps.expandRepPairs'
-          // measured single-core fan, same shape)
-          .repartition(ev.sparkSession.sparkContext.defaultParallelism)
-          .withColumn("bkt", explode(sequence(lit(0L), lit(B - 1))))
-          .repartition(ev.sparkSession.sparkContext.defaultParallelism,
-            col("user_id"), col("bkt"))
-          // shuffle_hash hint (r11): two birds — AQE may neither
-          // BROADCAST a side (which would swallow the width pin inside
-          // a BroadcastExchange and stream the whole fan-out on the
-          // other side's few partitions) nor pick a SORT-MERGE join
-          // (whose M:N inner loop copies buffered rows per candidate —
-          // measured 1.8e6 pairs/core-s vs the hash join's ~8e7 on
-          // this exact stage). The build side is the BUCKETED one: the
-          // salt guarantees its per-(key,bucket) partition stays tiny
-          .join(p.join(hot, Seq("user_id"), "left_semi")
-            .withColumn("bkt",
-              pmod(xxhash64(col("user_id"), col("p_us")), lit(B)))
-            .hint("shuffle_hash"),
-            Seq("user_id", "bkt"))
-          .filter(windowCond)
-          .drop("bkt")
-        plain.unionByName(salted.select(plain.columns.map(col).toIndexedSeq: _*))
       }
     val weighted = paired.withColumn("w",
       lit(24L) - expr("(p_us - t_us) div 3600000000"))

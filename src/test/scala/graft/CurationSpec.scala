@@ -97,10 +97,10 @@ class CurationSpec extends SparkTestBase {
     assert(out.distinct().count() == n, "duplicate pairs from the salt")
     // plan witness: the bucketed form is actually planned — the 64-way
     // bucket explode (the literal sequence constant-folds to an array,
-    // so the witness is the explode plus its _fb bucket key)
+    // so the witness is the explode plus its _bkt bucket key)
     val plan = out.queryExecution.optimizedPlan.toString
-    assert(plan.contains("explode") && plan.contains("_fb"),
-      "salted fanJoin shape missing from the plan")
+    assert(plan.contains("explode") && plan.contains("_bkt"),
+      "salted hot-key join shape missing from the plan")
     // spot-check n_shared values: within-group = 3 grams; cross = 3
     val r = out.filter(col("doc_id") === 1L && col("bench_id") === 0L)
       .head().getLong(2)

@@ -186,7 +186,7 @@ class EdgeCaseSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = operators.DedupOps.trianglesAdaptive(e, 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val c = operators.DedupOps.trianglesIdOriented(e)
+    val c = operators.DedupOps.trianglesAdaptive(e, Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b && b == c && a.nonEmpty,
       s"parity: ${a.size} / ${b.size} / ${c.size} rooted counts")

@@ -382,7 +382,7 @@ class GraphTextSpec extends SparkTestBase {
     // pin the SMJ regime: a tiny corpus would otherwise plan broadcast
     // joins on the plain branch — the dispatch fires on the threshold
     // either way, but the bars are calibrated for the non-broadcast
-    // regime (BoundaryFanThreshold's calibration record)
+    // regime (Skew.SingleTaskRows' calibration record)
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     def run(thr: Long) =

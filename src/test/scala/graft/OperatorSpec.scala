@@ -230,7 +230,7 @@ class OperatorSpec extends SparkTestBase {
     val g = DedupOps.q36MinhashLsh(spark, sfDir)
     val dispatched = m(DedupOps.triangles(g))
     val degForced = m(DedupOps.trianglesAdaptive(g, 1L))
-    val idBaseline = m(DedupOps.trianglesIdOriented(g))
+    val idBaseline = m(DedupOps.trianglesAdaptive(g, Long.MaxValue))
     assert(dispatched == idBaseline && degForced == idBaseline
         && idBaseline.nonEmpty,
       s"sizes: ${dispatched.size} / ${degForced.size} / ${idBaseline.size}")

@@ -306,6 +306,41 @@ class PropertySpec extends SparkTestBase {
     assert(auto.exceptAll(at8).isEmpty && at8.exceptAll(auto).isEmpty)
   }
 
+  test("hot-key join equals the plain join for B in {1, 3, 7, 64}, both cold join types, empty roster, NULL keys") {
+    import spark.implicits._
+    // key 1 is hot (40 x 30 pairs); keys 2 and 4 are cold, key 3 and
+    // key 5 miss the bucketed side (left-join fallbacks), and NULL keys
+    // sit on both sides (kept by `left`, dropped by `inner`)
+    val rep = ((0 until 40).map(i => (Option(1L), s"r$i")) ++ Seq(
+      (Option(2L), "a"), (Option(3L), "b"), (Option(5L), "c"),
+      (None: Option[Long], "n"))).toDF("k", "rv")
+    val buck = ((0 until 30).map(i => (Option(1L), i.toLong)) ++ Seq(
+      (Option(2L), 100L), (Option(2L), 101L), (Option(4L), 102L),
+      (None: Option[Long], 103L))).toDF("k", "bv")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "rv", "bv").collect().map(_.toString).toSeq.sorted
+    val hot = Seq(1L).toDF("k")
+    for (jt <- Seq("inner", "left"); roster <- Seq(hot, hot.filter(lit(false)));
+         b <- Seq(1L, 3L, 7L, 64L)) {
+      val got = operators.Skew.hotKeyJoin(rep, buck, xxhash64(col("bv")),
+        Seq("k"), roster, b, jt)
+      assert(rows(got) == rows(rep.join(buck, Seq("k"), jt)),
+        s"$jt join, B = $b, ${roster.count()} hot keys")
+    }
+    // the one salt policy is planned: bucket explode, width pin sized
+    // from the cluster, shuffle_hash on the bucketed side
+    val plan = operators.Skew.hotKeyJoin(rep, buck, xxhash64(col("bv")),
+      Seq("k"), hot, 7L, "inner").queryExecution.optimizedPlan
+    assert(plan.toString.contains("Generate explode") &&
+      plan.toString.contains("shuffle_hash"), plan.toString)
+    assert(plan.exists {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.partitionExpressions.size == 2 &&
+          r.optNumPartitions.contains(spark.sparkContext.defaultParallelism)
+      case _ => false
+    }, "no (key, bucket) width pin")
+  }
+
   test("stateful streaming running counts end at the batch totals") {
     val stream = streaming.StreamingOps.eventsStream(spark, sfDir)
     val got = streaming.StreamingOps.runToMemory(spark,

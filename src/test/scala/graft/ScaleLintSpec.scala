@@ -666,6 +666,7 @@ class ScaleLintSpec extends SparkTestBase {
 
   test("skew-threshold constants hold their documented single-task-output bounds") {
     import operators.DedupOps._
+    import operators.Skew.{SingleTaskRows, SaltBuckets, adaptiveBuckets}
     // the portability contract (r11): every constant that gates an
     // adaptive skew dispatch is denominated in SINGLE-TASK OUTPUT ROWS
     // (width-independent — one task is one core at any cluster size),
@@ -684,14 +685,12 @@ class ScaleLintSpec extends SparkTestBase {
     // (a clustered hot key fat-tasks even with a broadcastable side;
     // clustering is not observable at plan time), so the spread-BHJ
     // regime pays a bounded ~2.5x salt overhead by design
-    // (BoundaryFanThreshold's calibration record)
-    assert(IdWedgeThreshold <= 2 * coreRowsPerSec,
-      "IdWedgeThreshold exceeds ~2 core-seconds of single-key output")
-    assert(BoundaryFanThreshold == IdWedgeThreshold,
-      "boundary bar drifted from the shared SMJ single-task unit")
+    // (SingleTaskRows' calibration record)
+    assert(SingleTaskRows <= 2 * coreRowsPerSec,
+      "SingleTaskRows exceeds ~2 core-seconds of single-key output")
     // q152's bar is per-operator: its salted branch prices two stream
     // checkpoints, so the measured crossover sits ~16x higher
-    assert(operators.EventOps.WindowFanThreshold >= BoundaryFanThreshold &&
+    assert(operators.EventOps.WindowFanThreshold >= SingleTaskRows &&
       operators.EventOps.WindowFanThreshold <= (1L << 30),
       "WindowFanThreshold outside its measured crossover band")
     // post-salt, the largest of the B buckets of a group carries
@@ -705,7 +704,7 @@ class ScaleLintSpec extends SparkTestBase {
       "worst post-salt bucket of a 32x-bar group exceeds ~2 core-seconds")
     // r12: past the 32x-bar regime B is DERIVED (adaptiveBuckets) —
     // the within salt's largest target-bucket key carries ≤ M²/B rows,
-    // and the derivation holds that at ≤ IdWedgeThreshold (one ~1.2 s
+    // and the derivation holds that at ≤ SingleTaskRows (one ~1.2 s
     // task) for any group size up to the 4096-bucket cap (M ≈ 2.6e5,
     // where the declared C(M,2) output itself is ~3.4e10 rows — a
     // corpus that hot belongs on the collapse/weighted consumers)
@@ -713,7 +712,7 @@ class ScaleLintSpec extends SparkTestBase {
       val b = adaptiveBuckets(mm.toDouble * mm.toDouble)
       assert(b < 4096,
         s"M=$mm already at the bucket cap — the bound below is void")
-      assert(mm * mm / b <= IdWedgeThreshold + mm,
+      assert(mm * mm / b <= SingleTaskRows + mm,
         s"M=$mm: worst post-salt key ${mm * mm / b} exceeds the unit")
     }
     assert(adaptiveBuckets(1.0) == SaltBuckets &&
