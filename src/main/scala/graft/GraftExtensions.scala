@@ -63,7 +63,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (es: Seq[Expression]) => functions.HashExprs.Md5SignMask16(es.head)))
     ext.injectFunction((FunctionIdentifier("gram3_hash64"),
       info("gram3_hash64", "chained-XXH64 word-3-gram hashes of a token array"),
-      (es: Seq[Expression]) => functions.HashExprs.Gram3Hash64(es.head)))
+      (es: Seq[Expression]) => functions.HashExprs.GramKHash64(es.head, 3)))
     ext.injectFunction((FunctionIdentifier("gramk_hash64"),
       info("gramk_hash64",
         "chained-XXH64 word-k-gram hashes of a token array; k an int literal"),

@@ -7,6 +7,16 @@ package graft
   * from a full-surface run rather than guesses. Plan-only: nothing is
   * executed beyond the eager work a query does while it is built.
   *
+  * It also prints one `[plan] <query> <fingerprint>` line per query: a
+  * hash of the initial physical plan with expression ids, plan ids,
+  * object hashes, lambda names, RDD ids and temp paths normalized. Two builds whose lines match plan every query the same
+  * way — the plan-identity check for a change that claims no plan
+  * effect. q42, q209 and q229 are order-unstable: Spark's
+  * `RewriteDistinctAggregates` orders their distinct aggregates' Expand
+  * projections by expression id, so their fingerprints move whenever an
+  * earlier query's plan allocates a different number of ids. Compare
+  * them planned alone (`LintSweep <sfDir> q229_datasheet`).
+  *
   * Usage: runMain graft.LintSweep <sfDir> [query ...]
   */
 object LintSweep {
@@ -18,10 +28,11 @@ object LintSweep {
     val audits = Seq("fanout" -> FanoutAudit.audit _, "dupsub" -> SubtreeAudit.audit _)
     val flagged = Array.fill(audits.size)(0)
     names.foreach { name =>
-      val plan = scala.util.Try(
-        QueryTrace.lookup(name)(spark, sfDir).queryExecution.optimizedPlan)
+      val df = scala.util.Try(QueryTrace.lookup(name)(spark, sfDir))
+      println(s"[plan] $name " +
+        df.map(fingerprint).fold(e => s"BUILD FAILED ${e.getMessage}", identity))
       audits.zipWithIndex.foreach { case ((tag, audit), i) =>
-        plan.map(audit).fold(
+        df.map(d => audit(d.queryExecution.optimizedPlan)).fold(
           e => println(s"[$tag] $name: BUILD FAILED ${e.getMessage}"),
           hits => if (hits.nonEmpty) {
             flagged(i) += 1
@@ -34,5 +45,27 @@ object LintSweep {
       println(s"[$tag] ${flagged(i)}/${names.size} queries flagged")
     }
     spark.stop()
+  }
+
+  private val volatile = Seq(
+    "#\\d+" -> "#",                             // expression ids
+    "plan_id=\\d+" -> "plan_id=",
+    "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda",     // lambda class names
+    "@[0-9a-f]+\\b" -> "@",                      // object hashes
+    "(\\w*RDD)\\[\\d+\\]" -> "$1[]",
+    "(lambda \\w+?)_\\d+" -> "$1_",             // lambda variables
+    "(file:)?/tmp/[^\\s,\\]\\)]*" -> "<tmp>")
+
+  /** 16 hex digits of the SHA-256 of the normalized initial physical plan. */
+  private def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case p => p
+    }
+    val text = volatile.foldLeft(plan.toString) { case (t, (re, to)) =>
+      t.replaceAll(re, to) }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
   }
 }

@@ -35,6 +35,4 @@ object ProbeCost {
     import scala.jdk.CollectionConverters._
     acc.asScala.toMap.map { case (k, c) => k -> ((c.n, c.sec)) }
   }
-
-  def totalSec(): Double = snapshot().values.map(_._2).sum
 }

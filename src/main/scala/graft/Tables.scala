@@ -74,52 +74,67 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
-  /** Repartition a compact input by `key` before a CPU-heavy fan-out
-    * (md5/explode passes) — but ONLY when the scan is actually narrow.
-    * Locally a single-row-group parquet file arrives as ONE partition and
-    * would pin the whole pass to one core (measured 7× on the dedup trio);
-    * on a cluster the same scan is already thousands of partitions wide
-    * and an unconditional repartition would be a gratuitous extra shuffle.
-    *
-    * The width comes from the compiled physical plan's leaves — file bytes
-    * over `spark.sql.files.maxPartitionBytes`, the same sizing the scan's
-    * own split planning uses — WITHOUT converting to an RDD (`df.rdd`
-    * would build and register the full RDD lineage per call). A plan that
-    * already contains a shuffle is `spark.sql.shuffle.partitions` wide no
-    * matter how small its leaves. The parallelism target defaults to the
-    * driver-time `defaultParallelism` but can be pinned with
-    * `spark.graft.widen.target` for dynamic-allocation clusters where the
-    * submit-time executor count undercounts the eventual width. */
-  def widen(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val target = widthTarget(df.sparkSession)
-    // EXPLICIT COUNT (r12): a bare `repartition(key)` is fair game for
-    // AQE partition coalescing, which sizes by COMPRESSED shuffle bytes
-    // — the widened corpus re-coalesced to 1–5 partitions and the
-    // CPU-dense pass this exists to spread ran on 1–5 cores anyway
-    // (StageProfile: q51's whole winnow pass, 1.9 s on ONE task of 32).
-    // `repartition(n, key)` is REPARTITION_BY_NUM — exempt from
-    // coalescing — so the width this function promises is the width the
-    // stage actually runs at.
-    if (plannedWidth(df, target) * 2 >= target) df
-    else df.repartition(target, key)
-  }
+  // ---- the width policy -------------------------------------------------
+  //
+  // Every explicit width decision in the engine goes through the three
+  // members below: the parallelism TARGET, the NARROW test and the
+  // explicit-count SPREAD. `spark.graft.widen.target` therefore moves
+  // every width arm at once (the bench-width and cluster-width plans of
+  // the same query differ only through these calls). Two fixed counts
+  // are not width decisions and stay literal: `SimilarityOps.q52`'s
+  // `repartition(8, …)` of the KMeans fit input (its recall bound is a
+  // function of that layout) and `Lake.compact`'s file-count target.
 
-  /** True when `df`'s planned width is under half the parallelism
-    * target — the shared bench-scale signal the conditional spreads and
-    * materializations key off (plan metadata only, no job). At cluster
-    * width this is false and every conditional keyed on it no-ops. */
+  /** The parallelism target: `spark.graft.widen.target`, else the
+    * driver-time `defaultParallelism`. Pin it for dynamic-allocation
+    * clusters, where the submit-time executor count undercounts the
+    * eventual width. */
+  private[graft] def widthTarget(spark: SparkSession): Int =
+    spark.conf.getOption("spark.graft.widen.target").map(_.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+
+  /** True when `df`'s planned width is under half the [[widthTarget]] —
+    * the bench-scale signal the conditional spreads and materializations
+    * key off (plan metadata only, no job). At cluster width this is
+    * false and every conditional keyed on it no-ops. */
   def narrowScan(df: DataFrame): Boolean = {
     val target = widthTarget(df.sparkSession)
     plannedWidth(df, target) * 2 < target
   }
 
-  /** `spark.graft.widen.target`, else the driver-time `defaultParallelism`. */
-  private def widthTarget(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.widen.target").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+  /** Repartition to [[widthTarget]] partitions: hashed on `keys`, or
+    * round-robin when none are given. EXPLICIT COUNT (r12): a bare
+    * `repartition(key)` is fair game for AQE partition coalescing, which
+    * sizes by COMPRESSED shuffle bytes — the widened corpus re-coalesced
+    * to 1–5 partitions and the CPU-dense pass it existed to spread ran
+    * on 1–5 cores anyway (q51's whole winnow pass, 1.9 s on ONE task of
+    * 32). `repartition(n, …)` is REPARTITION_BY_NUM — exempt from
+    * coalescing — so the width this promises is the width the stage
+    * actually runs at. */
+  private[graft] def spread(df: DataFrame,
+      keys: org.apache.spark.sql.Column*): DataFrame = {
+    val target = widthTarget(df.sparkSession)
+    if (keys.isEmpty) df.repartition(target) else df.repartition(target, keys: _*)
+  }
 
+  /** [[spread]] by `key` before a CPU-heavy fan-out (md5/explode
+    * passes) — but ONLY when [[narrowScan]]. Locally a single-row-group
+    * parquet file arrives as ONE partition and would pin the whole pass
+    * to one core (measured 7× on the dedup trio); on a cluster the same
+    * scan is already thousands of partitions wide and an unconditional
+    * repartition would be a gratuitous extra shuffle. */
+  def widen(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
+    if (narrowScan(df)) spread(df, key) else df
+
+  /** The width `df` will run at, from the compiled physical plan's
+    * leaves and WITHOUT converting to an RDD (`df.rdd` would build and
+    * register the full RDD lineage per call): file bytes over
+    * `spark.sql.files.maxPartitionBytes` (the scan's own split sizing),
+    * a range's slices, a checkpoint's partition count. A plan that
+    * already contains a shuffle is `spark.sql.shuffle.partitions` wide
+    * no matter how small its leaves. */
   private def plannedWidth(df: DataFrame, target: Int): Int = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, RangeExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RangeExec, RDDScanExec}
     val spark = df.sparkSession
     val plan = df.queryExecution.sparkPlan
     val hasShuffle = plan.exists {
@@ -135,6 +150,7 @@ object Tables {
         case s: FileSourceScanExec =>
           math.max(1L, s.relation.location.sizeInBytes / maxSplit)
         case r: RangeExec => r.range.numSlices.getOrElse(target).toLong
+        case r: RDDScanExec => r.rdd.getNumPartitions.toLong
       }.sum.min(Int.MaxValue).toInt
     }
   }

@@ -102,9 +102,6 @@ object Exact {
     * per-row work primitive. */
   def fsum(c: Column): Column = lsum(cents(c), 2)
 
-  /** Drop-in fast-path [[davg]]. */
-  def favg(c: Column): Column = fsum(c) / count(c)
-
   /** Drop-in fast-path [[drevenue]]: price·(1−discount) as an exact long
     * cents·(100−cents) product (scale 4), summed overflow-safe. */
   def frevenue(price: Column, discount: Column): Column =

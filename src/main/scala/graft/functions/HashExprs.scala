@@ -161,68 +161,22 @@ object HashExprs {
       copy(child = newChild)
   }
 
-  /** Word-3-gram hashes straight from a token ARRAY: one chained-XXH64
-    * long per gram, no gram STRING ever materialized — the fused
-    * replacement for `explode(shingles(toks,3))` + `xxhash64`, which
+  /** Word-k-gram hashes straight from a token ARRAY: one chained-XXH64
+    * long per window start, no gram STRING ever materialized — the fused
+    * replacement for `explode(shingles(toks,k))` + `xxhash64`, which
     * allocates and copies a concatenated string per gram before hashing
     * it. Chaining (each token hashed with the previous digest as seed)
     * makes token boundaries part of the state, so no separator byte is
     * needed ("ab","c" and "a","bc" diverge at the second seed). Used
     * where the hash value is only ever a join/group key under the usual
-    * 64-bit-injectivity argument (q35); NOT used where an oracle
-    * reproduces the hash bit-for-bit (q36's md5-based minhash).
-    * A null ELEMENT (legal: the function is SQL-registered, so user
-    * arrays arrive with containsNull=true) folds a fixed marker into the
-    * chain instead of NPE-ing — distinct from the empty string's path. */
-  case class Gram3Hash64(child: Expression)
-      extends UnaryExpression
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"gram3_hash64 expects array<string>, got ${t.catalogString}")
-    }
-    override def nullSafeEval(a: Any): Any = {
-      val arr = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val n = arr.numElements()
-      val g = n - 2
-      if (g <= 0) {
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Long])
-      }
-      val out = new Array[Long](g)
-      var i = 0
-      while (i < g) {
-        var h = 42L
-        var k = 0
-        while (k < 3) {
-          val t = arr.getUTF8String(i + k)
-          h = if (t == null) {
-            org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(-1L, h)
-          } else {
-            org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, h)
-          }
-          k += 1
-        }
-        out(i) = h
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** [[Gram3Hash64]] generalized to k-token windows: one chained-XXH64
-    * long per window start, no window string ever allocated. k is a
-    * construction-time literal (the span-dedup family sizes it per
-    * operator: 3 for contamination grams, 10 for Lee et al.-style
-    * repeated-span detection). Null elements hash as a -1 sentinel, same
-    * contract as the 3-gram form. */
+    * 64-bit-injectivity argument (q35's k = 3, [[gram3_hash64]]); NOT
+    * used where an oracle reproduces the hash bit-for-bit (q36's
+    * md5-based minhash). k is a construction-time literal (the
+    * span-dedup family sizes it per operator: 3 for contamination grams,
+    * 10 for Lee et al.-style repeated-span detection). A null ELEMENT
+    * (legal: the function is SQL-registered, so user arrays arrive with
+    * containsNull=true) folds a fixed -1 marker into the chain instead of
+    * NPE-ing — distinct from the empty string's path. */
   case class GramKHash64(child: Expression, k: Int)
       extends UnaryExpression
       with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -341,8 +295,7 @@ object HashExprs {
   def md5_signmask16(c: Column): Column =
     toColumn(Md5SignMask16(toExpression(c)))
 
-  def gram3_hash64(c: Column): Column =
-    toColumn(Gram3Hash64(toExpression(c)))
+  def gram3_hash64(c: Column): Column = gramk_hash64(c, 3)
 
   def gramk_hash64(c: Column, k: Int): Column =
     toColumn(GramKHash64(toExpression(c), k))

@@ -43,6 +43,8 @@ object TextFns {
     * with [[graft.operators.CurationOps.chunkDocs]], never a silent
     * task-memory hazard. A no-op on any corpus that respected the
     * ingest cap (the sf corpora and every oracle do). */
+  def cappedToks(toks: Column): Column = underCap(toks, toks)
+
   /** Boolean form of the same guard, for pipelines that already filter
     * on the token array: `filter(... && capGuard(toks))` raises on an
     * oversize doc and passes everything else, WITHOUT wrapping the
@@ -52,27 +54,22 @@ object TextFns {
     * conjunct in an existing Filter is ~free. NULL tokens yield NULL
     * (the surrounding size(...) ≥ k conjunct already drops them), so
     * null-text docs keep the pre-guard behavior. */
-  def capGuard(toks: Column): Column =
-    when(size(toks) > DocTokenCap,
-      raise_error(concat(
-        lit(s"doc exceeds the $DocTokenCap-token ingest cap ("),
-        size(toks).cast("string"),
-        lit(" tokens) — pre-chunk with CurationOps.chunkDocs before dedup/scrub"))))
-      .otherwise(lit(true))
+  def capGuard(toks: Column): Column = underCap(toks, lit(true))
 
-  def cappedToks(toks: Column): Column =
-    // guard on the VIOLATION branch: size(NULL) is NULL, whose
-    // comparison is never true, so a null-text doc passes through as
-    // null tokens (contributing no shingles downstream — the pre-guard
-    // behavior) instead of tripping a null-message raise_error. The
-    // documents fuzz battery caught exactly that on this guard's first
-    // suite run.
+  /** `pass` when `toks` fits [[DocTokenCap]], else the ingest-cap error —
+    * the one message both guards raise. Guarded on the VIOLATION branch:
+    * size(NULL) is NULL, whose comparison is never true, so a null-text
+    * doc passes through as null tokens (contributing no shingles
+    * downstream — the pre-guard behavior) instead of tripping a
+    * null-message raise_error. The documents fuzz battery caught exactly
+    * that on this guard's first suite run. */
+  private def underCap(toks: Column, pass: Column): Column =
     when(size(toks) > DocTokenCap,
       raise_error(concat(
         lit(s"doc exceeds the $DocTokenCap-token ingest cap ("),
         size(toks).cast("string"),
         lit(" tokens) — pre-chunk with CurationOps.chunkDocs before dedup/scrub"))))
-      .otherwise(toks)
+      .otherwise(pass)
 
   /** Deterministic 60-bit non-negative hash from the md5 hex prefix —
     * the fused [[HashExprs.Md5Long60]] expression (value identical to
@@ -91,9 +88,4 @@ object TextFns {
       transform(sequence(lit(0), size(toks) - n), i =>
         concat_ws(" ", (0 until n).map(k => element_at(toks, i + k + 1)): _*)))
       .otherwise(array())
-
-  /** Value 0-15 of the `pos`-th (1-based) hex nibble of md5(c).
-    * DuckDB: CAST('0x' || substr(md5(c), pos, 1) AS BIGINT). */
-  def md5Nibble(c: Column, pos: Int): Column =
-    conv(substring(md5(c), pos, 1), 16, 10).cast("long")
 }

@@ -237,7 +237,7 @@ object CurationOps {
     * `bench_id`). */
   def contaminationPairs(docs: DataFrame, bench: DataFrame,
       minShared: Long = 3L): DataFrame = {
-    // fused long gram hashes (Gram3Hash64: no gram string allocated,
+    // fused long gram hashes (gram3_hash64: no gram string allocated,
     // longs shuffle ~3× cheaper; counts are hash-agnostic under 64-bit
     // injectivity — the oracle's string-gram counts match)
     // ingest cap as a boolean conjunct, not an array wrapper: capGuard
@@ -406,8 +406,7 @@ object CurationOps {
     val (dupMembers, maxMult) = DedupOps.expansionProbe(c)
     val toExpand =
       if (dupMembers > DedupOps.FanoutPinThreshold)
-        toExpand0.repartition(
-          normed.sparkSession.sparkContext.defaultParallelism, col("rep_a"))
+        Tables.spread(toExpand0, col("rep_a"))
       else toExpand0
     val anyBig = maxMult > DedupOps.WithinSaltThreshold
     val bigIds = c.groups
@@ -828,10 +827,11 @@ object CurationOps {
     * independently (greedy order within the shard's own doc_id sequence),
     * so callers size `shards` to the cluster — more shards = more
     * concurrent packing groups, and a shard's output depends only on its
-    * own members (spec-asserted). Defaults to the context's parallelism;
-    * the declared q87 pins 4 so the oracle's recursive CTE stays stable. */
+    * own members (spec-asserted). Defaults to the width target
+    * (`Tables.widthTarget`); the declared q87 pins 4 so the oracle's
+    * recursive CTE stays stable. */
   def packDocuments(s: SparkSession, dir: String, shards: Long = -1L): DataFrame = {
-    val n = if (shards > 0) shards else s.sparkContext.defaultParallelism.toLong
+    val n = if (shards > 0) shards else Tables.widthTarget(s).toLong
     packSequences(
       Tables.documents(s, dir)
         .select(col("doc_id"),

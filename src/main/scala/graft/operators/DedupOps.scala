@@ -74,13 +74,8 @@ object DedupOps {
     * multiplicity weights and the within-group eligibility token count.
     * NULL-norm docs are excluded outright — they generate no tokens, no
     * shingles, and therefore no pairs in any consumer. */
-  /** `narrow` (r13): true when the collapse checkpoint materialized
-    * NARROW (the bench-scale regime where AQE's byte-sizing leaves
-    * CPU-dense downstream stages on 1–5 cores) — the one plan-time
-    * signal the verification spread keys off. At cluster width it is
-    * false and every conditional spread below no-ops. */
   private[graft] case class Collapsed(reps: DataFrame, map: DataFrame,
-      groups: DataFrame, narrow: Boolean = false)
+      groups: DataFrame)
 
   /** The internal 128-bit collapse fingerprint: two INDEPENDENT-seed
     * xxhash64 passes over the norm. The leading literal matters — it is
@@ -128,27 +123,22 @@ object DedupOps {
     // checkpoint's layout is whatever AQE left the fingerprint
     // aggregate — BYTES-sized, so at bench scale the deduped corpus
     // lands on 1–5 partitions and the signature stages run on 1–5 of
-    // 32 cores (StageProfile: q64's heaviest stage = 565 ms × 1 task
-    // over 4992 reps). The spread is CONDITIONAL on the materialized
-    // checkpoint's width (partition-count metadata, no job): a cluster
-    // whose agg output is already at least half as wide as the
-    // parallelism skips it — on big inputs AQE's own sizing wins and
-    // the extra shuffle would be a gratuitous corpus move. Hash on
-    // doc_id: deterministic under retry (guide §2.5), and signatures /
-    // pair generation are order-independent (min/count aggregates over
-    // exact integers), so declared outputs are unchanged.
-    val par = normed.sparkSession.sparkContext.defaultParallelism
-    val reps0 = groups.select(col("rep_id").as("doc_id"), col("norm"))
-    val isNarrow = groups.rdd.getNumPartitions * 2 < par
+    // 32 cores (q64's heaviest stage = 565 ms × 1 task over 4992
+    // reps). `Tables.widen` reads the checkpoint's partition count (plan
+    // metadata, no job): a cluster whose agg output is already at least
+    // half as wide as the target skips the spread — on big inputs AQE's
+    // own sizing wins and the extra shuffle would be a gratuitous corpus
+    // move. Hash on doc_id: deterministic under retry (guide §2.5), and
+    // signatures / pair generation are order-independent (min/count
+    // aggregates over exact integers), so declared outputs are unchanged.
     Collapsed(
-      reps = if (isNarrow)
-        reps0.repartition(par, col("doc_id")) else reps0,
+      reps = Tables.widen(
+        groups.select(col("rep_id").as("doc_id"), col("norm")), col("doc_id")),
       map = fped.select(col("doc_id"), col("fp"))
         .join(groups.select(col("fp"), col("rep_id")), Seq("fp"))
         .select(col("doc_id"), col("rep_id"))
         .localCheckpoint(true),
-      groups = groups.select(col("rep_id"), col("mult"), col("n_toks")),
-      narrow = isNarrow)
+      groups = groups.select(col("rep_id"), col("mult"), col("n_toks")))
   }
 
   private[graft] def collapsedDocs(s: SparkSession, dir: String): Collapsed =
@@ -222,7 +212,7 @@ object DedupOps {
     * that is a DUPLICATION DETECTOR rather than a single-task output
     * bound — so its argument has two halves, both width-independent.
     * (1) The FIX side scales with the cluster by construction: the pin
-    * repartitions to `defaultParallelism`, never to a constant. (2) The
+    * is a `Tables.spread` to the width target, never to a constant. (2) The
     * TRIGGER side compares a corpus property (dup members) whose two
     * error regimes cost width-independent amounts: firing with nothing
     * to spread prices one pair-stream shuffle — a bounded FRACTION of a
@@ -292,19 +282,18 @@ object DedupOps {
     // partitions while generating the full 335M-row output (measured:
     // the whole expansion ran in 2 tasks on 32 cores, max-task ≈ wall;
     // q37 shared-vocab ×14–16 wall in r8–r9 was mostly THIS, not
-    // intrinsic output volume — ×2.2 with the pin). An explicit
-    // repartition on the first join's key is exempt from AQE coalescing
-    // (REPARTITION_BY_NUM) and the SMJ reuses its partitioning, so
-    // output generation spreads across the cluster. Conditioned on a
-    // dup-member-count probe of the materialized groups frame: on a
-    // corpus with no real exact duplication the expansion multiplies
-    // nothing, and the pin's forced shuffle of the pair stream is pure
-    // cost (measured q37 +80% at 1× on the near-dup-only bench corpus,
-    // 16 dup members) — see [[FanoutPinThreshold]].
+    // intrinsic output volume — ×2.2 with the pin). `Tables.spread` on
+    // the first join's key fixes the width and the SMJ reuses its
+    // partitioning, so output generation spreads across the cluster.
+    // Conditioned on a dup-member-count probe of the materialized
+    // groups frame: on a corpus with no real exact duplication the
+    // expansion multiplies nothing, and the pin's forced shuffle of the
+    // pair stream is pure cost (measured q37 +80% at 1× on the
+    // near-dup-only bench corpus, 16 dup members) — see
+    // [[FanoutPinThreshold]].
     val (dupMembers, maxMult) = expansionProbe(c)
     val toJoin = if (hasMults && dupMembers > pinThreshold)
-      toJoin0.repartition(
-        repPairs.sparkSession.sparkContext.defaultParallelism, col("doc_a"))
+      Tables.spread(toJoin0, col("doc_a"))
     else toJoin0
     // ADAPTIVE SALT BRANCH (r10): on a normal corpus no group exceeds
     // the salt threshold and the plan below is EXACTLY the unsalted r9
@@ -376,25 +365,23 @@ object DedupOps {
           col("y.doc_id").as("doc_b")) ++ withinCols: _*)
       val embk = emBig.withColumn("bkt",
         pmod(xxhash64(col("doc_id")), lit(B)))
-      val withinBig = embk
-        // spread the member slice to FULL WIDTH before the ×(B−bkt)
-        // explode (r12): the slice arrives on the collapse map's
-        // partitioning — ONE partition when the mega fp's member join
-        // ran on a single key — and the explode's row multiplication
-        // plus its shuffle WRITE run map-side on that layout. Measured
-        // at zipf 10⁵: 8.2 s on one core (StageProfile: 105k recsIn →
-        // 3·10⁷ exploded rows from one task) while the pair join
-        // itself was already spread. A round-robin shuffle of the
-        // NARROW pre-explode rows is three orders of magnitude cheaper
-        // than the single-core multiplication it unblocks.
-        .repartition(emBig.sparkSession.sparkContext.defaultParallelism)
+      // spread the member slice to FULL WIDTH before the ×(B−bkt)
+      // explode (r12): the slice arrives on the collapse map's
+      // partitioning — ONE partition when the mega fp's member join
+      // ran on a single key — and the explode's row multiplication
+      // plus its shuffle WRITE run map-side on that layout. Measured
+      // at zipf 10⁵: 8.2 s on one core (105k recsIn → 3·10⁷ exploded
+      // rows from one task) while the pair join itself was already
+      // spread. A round-robin shuffle of the NARROW pre-explode rows is
+      // three orders of magnitude cheaper than the single-core
+      // multiplication it unblocks.
+      val exploded = Tables.spread(embk)
         .withColumn("tb", explode(sequence(col("bkt"), lit(B - 1))))
-        // same AQE output-blindness as the cross fan-out: the exploded
-        // member stream is tiny in bytes but each (rep, bucket) key
-        // emits ~C(m,2)·2(j+1)/(B(B+1)) pairs — pin the join's
-        // parallelism so the mega group's output streams at full width
-        .repartition(emBig.sparkSession.sparkContext.defaultParallelism,
-          col("rep_id"), col("tb"))
+      // same AQE output-blindness as the cross fan-out: the exploded
+      // member stream is tiny in bytes but each (rep, bucket) key
+      // emits ~C(m,2)·2(j+1)/(B(B+1)) pairs — pin the join's
+      // parallelism so the mega group's output streams at full width
+      val withinBig = Tables.spread(exploded, col("rep_id"), col("tb"))
         // shuffle_hash on the bucketed side: see Skew.hotKeyJoin — a
         // broadcast here would void the pin, a sort-merge join would
         // row-copy the M:N inner loop
@@ -468,30 +455,20 @@ object DedupOps {
     * shingle — exactly when the uncollapsed pipeline pairs identical
     * docs) and score J = n/n = 1.0 exactly in both engines. */
   private def jaccardCollapsed(c: Collapsed): DataFrame =
-    expandRepPairs(
-      verifiedCore(docSetsCore(repToks(c.reps), spreadTo = verifySpread(c)),
-        positional = true, spreadTo = verifySpread(c)),
+    expandRepPairs(repPairsJaccard(c),
       c, Seq(lit(1.0).as("jaccard")), col("n_toks") >= 3L)
 
   /** Rep-level (uncollapsed-id) verified pairs — q214's weighted-count
-    * input. */
-  private[graft] def repPairsJaccard(c: Collapsed): DataFrame =
-    verifiedCore(docSetsCore(repToks(c.reps), spreadTo = verifySpread(c)),
-      positional = true, spreadTo = verifySpread(c))
-
-  /** Verification-stage spread target (r13, guide §2/§1.2): the
-    * candidate⋈set join's output stage evaluates `array_intersect` over
-    * the full shingle sets, but AQE sizes the post-join partitions by
-    * compressed BYTES — at bench scale the whole exact-verification
-    * pass lands on ~4 of 32 cores (StageProfile: q214's 4-task ~0.9 s
-    * stage, r12's #1 "Not yet"). Keyed off the SAME narrow-checkpoint
-    * signal as the collapse-input spread, so a cluster-scale run (wide
-    * checkpoint, byte-sized partitions already ≥ parallelism) skips the
-    * extra exchange entirely. */
-  private def verifySpread(c: Collapsed): Option[Int] =
-    if (c.narrow)
-      Some(c.reps.sparkSession.sparkContext.defaultParallelism)
-    else None
+    * input. The docsets window and the verification stage are spread
+    * when the collapse checkpoint is narrow (`Tables.narrowScan` on the
+    * groups frame — the same test as the collapse-input spread; the
+    * reps themselves are already spread by then, so the test cannot be
+    * re-taken downstream). At cluster width neither spread fires. */
+  private[graft] def repPairsJaccard(c: Collapsed): DataFrame = {
+    val narrow = Tables.narrowScan(c.groups)
+    verifiedCore(docSetsCore(repToks(c.reps), spread = narrow),
+      positional = true, spread = narrow)
+  }
 
   /** The q35 pipeline over an arbitrary `(doc_id, text)` frame — the
     * seam the ingest chunking contract ([[CurationOps.chunkDocs]]) plugs
@@ -510,22 +487,20 @@ object DedupOps {
   private def q35DocSets(s: SparkSession, dir: String): DataFrame =
     docSetsCore(docToks(s, dir))
 
-  /** [[q35DocSets]] over a prebuilt `(doc_id, toks)` frame. `spreadTo`
+  /** [[q35DocSets]] over a prebuilt `(doc_id, toks)` frame. `spread`
     * (r13): sticky width for the shingle-df WINDOW stage — its
     * hashpartitioning(shh) exchange is AQE-coalescible by compressed
     * bytes, and at bench scale the whole df count ran 3 tasks × ~740 ms
-    * (StageProfile q214). A `repartition(n, shh)` satisfies the
-    * window's required distribution, so this REPLACES the implicit
-    * exchange rather than adding one; keyed off the same
-    * narrow-checkpoint signal as [[verifySpread]], no-op at cluster
-    * width. */
+    * (q214). A `Tables.spread` on shh satisfies the window's required
+    * distribution, so this REPLACES the implicit exchange rather than
+    * adding one. */
   private[graft] def docSetsCore(toksDf: DataFrame,
-      spreadTo: Option[Int] = None): DataFrame = {
+      spread: Boolean = false): DataFrame = {
     // Shingles are hashed to longs before anything shuffles: the value is
     // only ever a join/group key, longs shuffle ~3× cheaper than strings,
     // and a 64-bit collision across ~10^5 distinct shingles is ~2^-30 —
     // the oracle compares final pairs, which hashing leaves untouched.
-    // The fused Gram3Hash64 produces the gram hashes straight from the
+    // The fused gram3_hash64 produces the gram hashes straight from the
     // token array (chained XXH64 per gram) so no gram string is ever
     // allocated, concatenated, or copied.
     val sh = toksDf
@@ -553,7 +528,7 @@ object DedupOps {
     // enter prefixes, so the at-scale switch is df-by-join on the
     // checkpointed sh stream — paired with the checkpoint flip above,
     // not worth two extra shuffles while the lineage stays lazy.
-    spreadTo.fold(sh)(n => sh.repartition(n, col("shh")))
+    (if (spread) Tables.spread(sh, col("shh")) else sh)
       .withColumn("df", count(lit(1)).over(wsh))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("shh")))).as("entries"))
@@ -621,19 +596,21 @@ object DedupOps {
       positional: Boolean): DataFrame =
     verifiedCore(q35DocSets(s, dir), positional)
 
+  /** `spread` (r13): the candidate⋈set join's output stage evaluates
+    * `array_intersect` over the full shingle sets, but AQE sizes the
+    * post-join partitions by compressed BYTES — at bench scale the whole
+    * exact-verification pass landed on ~4 of 32 cores (q214's 4-task
+    * ~0.9 s stage). A `Tables.spread` on the pair key right before the
+    * per-pair set intersection fixes that width; deterministic key,
+    * exact math downstream. */
   private[graft] def verifiedCore(docsets: DataFrame,
-      positional: Boolean, spreadTo: Option[Int] = None): DataFrame = {
+      positional: Boolean, spread: Boolean = false): DataFrame = {
     val cands = candidatesCore(docsets, positional)
     // exact verification: set-intersection size over the candidates only
     val sa = docsets.select(col("doc_id").as("doc_a"), col("set").as("set_a"))
     val sb = docsets.select(col("doc_id").as("doc_b"), col("set").as("set_b"))
     val attached = cands.join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
-    // conditional CPU-width spread of the intersect stage (r13): an
-    // explicit-count hash exchange (REPARTITION_BY_NUM, AQE-exempt) on
-    // the pair key right before the per-pair set intersection — see
-    // [[verifySpread]]. Deterministic key, exact math downstream.
-    spreadTo.fold(attached)(n =>
-        attached.repartition(n, col("doc_a"), col("doc_b")))
+    (if (spread) Tables.spread(attached, col("doc_a"), col("doc_b")) else attached)
       .withColumn("n_inter",
         size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
       .withColumn("jaccard",
@@ -1127,12 +1104,9 @@ object DedupOps {
     // broadcast and the BHJ preserves this layout for the groupBy;
     // at scale the SMJ/SHJ reuses it outright). One narrow shuffle at
     // build time replaces an O(rounds) × |E| exchange stream.
-    val bidir = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      // explicit count: a bare repartition(col) is AQE-coalescible by
-      // compressed bytes, which would silently re-narrow the layout the
-      // loop relies on (the Tables.widen lesson, r12)
-      .repartition(edges.sparkSession.sparkContext.defaultParallelism,
+    val bidir = Tables.spread(
+        edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
         col("dst"))
       .localCheckpoint(true)
     // ROUND 1 FUSED INTO INITIALIZATION (r12): the old init

@@ -79,12 +79,8 @@ object GraphOps {
     // hash(src) shuffle at checkpoint build gives every iteration a
     // full-width, join-aligned edge frame; the rank side comes out of
     // each groupBy already hashed on the same key, so iterations add
-    // only their own aggregate exchange. Explicit count: bare
-    // repartition(col) is AQE-coalescible by compressed bytes
-    // (the Tables.widen lesson).
-    val ed = edges.join(deg, Seq("src"))
-      .repartition(edges.sparkSession.sparkContext.defaultParallelism,
-        col("src"))
+    // only their own aggregate exchange.
+    val ed = Tables.spread(edges.join(deg, Seq("src")), col("src"))
       .localCheckpoint(true)
     val nodes = ed.select(col("src").as("node")).distinct()
     // the node count is needed either way: to SIZE the unit (auto path)
@@ -236,15 +232,13 @@ object GraphOps {
     * once checkpointed). */
   private[graft] def kCoreLazy(s: SparkSession, dir: String,
       eager: Boolean = false): (DataFrame, DataFrame) = {
-    val e0 = tradeEdges(s, dir)
-      // hash(src) layout for the peel loop (r12, guide §2.4): each
-      // round's degree aggregate groups by src and each round's
-      // semi-joins key on src/dst with broadcast keep-sets, so a
-      // src-partitioned edge frame makes every round's aggregate
-      // exchange-free and the layout survives the (broadcast)
-      // semi-joins into the next round's checkpoint. Explicit count:
-      // bare repartition(col) is AQE-coalescible (Tables.widen lesson).
-      .repartition(s.sparkContext.defaultParallelism, col("src"))
+    // hash(src) layout for the peel loop (r12, guide §2.4): each round's
+    // degree aggregate groups by src and each round's semi-joins key on
+    // src/dst with broadcast keep-sets, so a src-partitioned edge frame
+    // makes every round's aggregate exchange-free and the layout
+    // survives the (broadcast) semi-joins into the next round's
+    // checkpoint.
+    val e0 = Tables.spread(tradeEdges(s, dir), col("src"))
       .localCheckpoint(true)
     val out = kCorePeel(e0, k = 3, rounds = 3, eager = eager)
       .select(col("node"),

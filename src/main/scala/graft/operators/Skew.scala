@@ -120,9 +120,9 @@ object Skew {
     *    an AQE-coalesced semi-join output, so the ×B explode would
     *    multiply rows map-side on few cores (measured at zipf 10⁵: 8.2 s
     *    on one core for a 105k → 3·10⁷-row explode);
-    *  - a width pin AFTER it (`repartition(par, keys…, bucket)`,
-    *    REPARTITION_BY_NUM): AQE would re-coalesce the byte-tiny exploded
-    *    input right back into one task (the r10 within-salt lesson);
+    *  - a width pin AFTER it (`Tables.spread` on keys… and the bucket):
+    *    AQE would re-coalesce the byte-tiny exploded input right back
+    *    into one task (the r10 within-salt lesson);
     *  - `shuffle_hash` on the bucketed side (r11): without it AQE may
     *    BROADCAST a side, swallowing the pin inside a BroadcastExchange
     *    and streaming the whole fan-out on the other side's few
@@ -138,13 +138,11 @@ object Skew {
   private[graft] def hotKeyJoin(replicate: DataFrame, bucketed: DataFrame,
       bucketOf: Column, keys: Seq[String], hot: DataFrame, buckets: Long,
       coldJoinType: String): DataFrame = {
-    val par = replicate.sparkSession.sparkContext.defaultParallelism
     val cold = replicate.join(hot, keys, "left_anti")
       .join(bucketed.join(hot, keys, "left_anti"), keys, coldJoinType)
-    val salted = replicate.join(hot, keys, "left_semi")
-      .repartition(par)
+    val exploded = graft.Tables.spread(replicate.join(hot, keys, "left_semi"))
       .withColumn("_bkt", explode(sequence(lit(0L), lit(buckets - 1))))
-      .repartition(par, (keys :+ "_bkt").map(col): _*)
+    val salted = graft.Tables.spread(exploded, (keys :+ "_bkt").map(col): _*)
       .join(bucketed.join(hot, keys, "left_semi")
         .withColumn("_bkt", pmod(bucketOf, lit(buckets)))
         .hint("shuffle_hash"), keys :+ "_bkt")

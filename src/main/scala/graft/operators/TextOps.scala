@@ -648,7 +648,7 @@ object TextOps {
     * WITHIN-document counterpart). High values flag boilerplate and
     * template families that per-doc quality scores miss.
     *
-    * Scale shape: grams travel as fused 64-bit hashes (Gram3Hash64 — no
+    * Scale shape: grams travel as fused 64-bit hashes (gram3_hash64 — no
     * gram strings allocated or shuffled; counts are hash-agnostic under
     * injectivity, the q70 contract). The df aggregate partial-combines
     * map-side and keys by gram hash; only df ≥ 2 grams survive into the
@@ -875,7 +875,7 @@ object TextOps {
     * elsewhere (mirrors, syndication); the complement of q119's
     * cross-DOCUMENT repetition, aggregated at provenance granularity.
     *
-    * Scale shape: grams travel as fused 64-bit hashes (Gram3Hash64 — no
+    * Scale shape: grams travel as fused 64-bit hashes (gram3_hash64 — no
     * gram strings shuffled; counts are hash-agnostic under injectivity,
     * the q70/q119 contract). The (source, g) dedup and the per-gram
     * source-count aggregate both partial-combine map-side, and the
@@ -1857,7 +1857,7 @@ object TextOps {
     *
     * Scale shape: the corpus collapses ONCE to the distinct
     * (source, gram) pair table ([[sourceGrams]], hashed grams — counts
-    * match the oracle's string grams by Gram3Hash64's spec'd
+    * match the oracle's string grams by gram3_hash64's spec'd
     * injectivity), localCheckpoint'ed and released after the loop; each
     * round is one anti-join + source-cardinality aggregate over that
     * bounded table, and the per-round driver collect is ONE row. */

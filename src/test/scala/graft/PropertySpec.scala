@@ -206,6 +206,43 @@ class PropertySpec extends SparkTestBase {
     assert(Tables.widen(wide, col("doc_id")) eq wide)
   }
 
+  test("spark.graft.widen.target sets every width arm; a checkpoint is as narrow as its partition count") {
+    import org.apache.spark.sql.GraftShims.unpersistCheckpoint
+    import org.apache.spark.sql.execution.RDDScanExec
+    import spark.implicits._
+    def checkpointWidths(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.sparkPlan.collect { case r: RDDScanExec => r.rdd.getNumPartitions }
+    spark.conf.set("spark.graft.widen.target", "8")
+    try {
+      // local[4] session, target 8: the edge checkpoints follow the target
+      val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
+      // maxIter = 1: the labels still read the edge checkpoint
+      val cc = operators.DedupOps.connectedComponents(edges, 1)
+      try assert(checkpointWidths(cc) == Seq(8))
+      finally unpersistCheckpoint(cc)
+      val (e0, _) = operators.GraphOps.kCoreLazy(spark, sfDir)
+      try assert(checkpointWidths(e0) == Seq(8))
+      finally unpersistCheckpoint(e0)
+      // ...and so does the hot-key salt's (keys, _bkt) pin
+      val plan = operators.Skew.hotKeyJoin(Seq((1L, "r")).toDF("k", "rv"),
+        Seq((1L, 0L)).toDF("k", "bv"), xxhash64(col("bv")), Seq("k"),
+        Seq(1L).toDF("k"), 7L, "inner").queryExecution.optimizedPlan
+      assert(plan.exists {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+          r.partitionExpressions.size == 2 && r.optNumPartitions.contains(8)
+        case _ => false
+      }, plan.toString)
+      val one = spark.range(0, 100, 1, 1).toDF().localCheckpoint(true)
+      val eight = spark.range(0, 100, 1, 8).toDF().localCheckpoint(true)
+      try {
+        assert(Tables.narrowScan(one))
+        // a checkpoint is as wide as its partitions, not width 0
+        spark.conf.set("spark.graft.widen.target", "4")
+        assert(!Tables.narrowScan(eight))
+      } finally Seq(one, eight).foreach(unpersistCheckpoint)
+    } finally spark.conf.unset("spark.graft.widen.target")
+  }
+
   test("GraftSession is one idempotent session carrying the engine config") {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
     val a = GraftSession(4)
