@@ -9,13 +9,20 @@ package graft
   *
   * It also prints one `[plan] <query> <fingerprint>` line per query: a
   * hash of the initial physical plan with expression ids, plan ids,
-  * object hashes, lambda names, RDD ids and temp paths normalized. Two builds whose lines match plan every query the same
-  * way — the plan-identity check for a change that claims no plan
-  * effect. q42, q209 and q229 are order-unstable: Spark's
-  * `RewriteDistinctAggregates` orders their distinct aggregates' Expand
-  * projections by expression id, so their fingerprints move whenever an
-  * earlier query's plan allocates a different number of ids. Compare
-  * them planned alone (`LintSweep <sfDir> q229_datasheet`).
+  * object hashes, lambda names, RDD ids and temp paths normalized,
+  * followed by two widths the plan text does not print: each
+  * checkpointed leaf's (`RDDScanExec`) partition count, and the task
+  * counts of the stages the query ran while it was built (its eager
+  * checkpoints and probes, including checkpoints it released before
+  * returning, such as q101's and q169's edge frames). Two builds whose
+  * lines match plan every query the same way, checkpoint widths
+  * included — the plan-identity check for a change that claims no plan
+  * effect. q42,
+  * q209 and q229 are order-unstable: Spark's `RewriteDistinctAggregates`
+  * orders their distinct aggregates' Expand projections by expression
+  * id, so their fingerprints move whenever an earlier query's plan
+  * allocates a different number of ids. Compare them planned alone
+  * (`LintSweep <sfDir> q229_datasheet`).
   *
   * Usage: runMain graft.LintSweep <sfDir> [query ...]
   */
@@ -28,9 +35,10 @@ object LintSweep {
     val audits = Seq("fanout" -> FanoutAudit.audit _, "dupsub" -> SubtreeAudit.audit _)
     val flagged = Array.fill(audits.size)(0)
     names.foreach { name =>
-      val df = scala.util.Try(QueryTrace.lookup(name)(spark, sfDir))
-      println(s"[plan] $name " +
-        df.map(fingerprint).fold(e => s"BUILD FAILED ${e.getMessage}", identity))
+      val built = scala.util.Try(QueryTrace.during(spark)(QueryTrace.lookup(name)(spark, sfDir)))
+      val df = built.map(_.value)
+      println(s"[plan] $name " + built.map(w => fingerprint(w.value, w.stages.map(_.tasks)))
+        .fold(e => s"BUILD FAILED ${e.getMessage}", identity))
       audits.zipWithIndex.foreach { case ((tag, audit), i) =>
         df.map(d => audit(d.queryExecution.optimizedPlan)).fold(
           e => println(s"[$tag] $name: BUILD FAILED ${e.getMessage}"),
@@ -56,15 +64,23 @@ object LintSweep {
     "(lambda \\w+?)_\\d+" -> "$1_",             // lambda variables
     "(file:)?/tmp/[^\\s,\\]\\)]*" -> "<tmp>")
 
-  /** 16 hex digits of the SHA-256 of the normalized initial physical plan. */
-  private def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
+  /** 16 hex digits of the SHA-256 of the normalized initial physical plan
+    * followed by its widths: the partition count of every `RDDScanExec`
+    * leaf, which the RDD already knows (no job runs, as in
+    * `Tables.plannedWidth`), and the task counts of the stages its build
+    * ran, sorted (concurrent stages complete in any order). */
+  private def fingerprint(df: org.apache.spark.sql.DataFrame, buildTasks: Seq[Int]): String = {
     val plan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.initialPlan
       case p => p
     }
+    val widths = plan.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.getNumPartitions
+    }
     val text = volatile.foldLeft(plan.toString) { case (t, (re, to)) =>
-      t.replaceAll(re, to) }
+      t.replaceAll(re, to) } + widths.mkString("\nRDDScanExec partitions: ", ",", "") +
+      buildTasks.sorted.mkString("\nbuild stage tasks: ", ",", "")
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
   }

@@ -61,8 +61,7 @@ object HashExprs {
       md5Long60(prefixBytes, a.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val pb = ctx.addReferenceObj("md5prefix", prefixBytes, "byte[]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.HashExprs.md5Long60($pb, $a);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.HashExprs.md5Long60($pb, $a)")
     }
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -99,8 +98,7 @@ object HashExprs {
     override def nullSafeEval(a: Any): Any =
       md5SignMask16(a.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.HashExprs.md5SignMask16($a);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.HashExprs.md5SignMask16($a)")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }

@@ -102,8 +102,7 @@ object StringSimExprs {
     override def nullSafeEval(a: Any, b: Any): Any =
       jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.StringSimExprs.jaroWinkler($a, $b);")
+      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StringSimExprs.jaroWinkler($a, $b)")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)

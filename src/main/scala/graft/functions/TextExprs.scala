@@ -83,8 +83,7 @@ object TextExprs {
     override def nullSafeEval(a: Any): Any =
       charStats(a.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.TextExprs.charStats($a);")
+      defineCodeGen(ctx, ev, a => s"graft.functions.TextExprs.charStats($a)")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }

@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the vector-similarity hot path.
   *
@@ -16,6 +16,11 @@ import org.apache.spark.sql.types._
   * is ~200 interpreted calls per pair; at ANN scale (pairs × dims) it
   * dominates. These expressions fuse quantize→multiply→accumulate into
   * one tight primitive loop with whole-stage codegen.
+  *
+  * Each algorithm is written once, as a static kernel on this object;
+  * an expression's `nullSafeEval` and its generated code both call it
+  * (the [[HashExprs]]/[[TextExprs]] shape), so interpreted and codegen'd
+  * evaluation cannot diverge.
   *
   * Numeric contract (shared with the DuckDB oracle): each float is
   * quantized to `floor(x * 1000 + 0.5)` computed in double — float→double
@@ -28,315 +33,122 @@ object VectorExprs {
 
   private val Scale = 1000.0
 
-  /** Exact int64 dot product of two quantized float vectors. */
-  case class QuantizedDot(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"quantized_dot expects two array<float> arguments, got " +
-          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+  private def quantize(x: Float): Long = math.floor(x.toDouble * Scale + 0.5).toLong
+
+  /** Exact int64 dot product of two quantized float vectors, over the
+    * shorter one's length. */
+  def quantizedDot(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += quantize(a.getFloat(i)) * quantize(b.getFloat(i))
+      i += 1
     }
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        val qx = math.floor(x.getFloat(i).toDouble * Scale + 0.5).toLong
-        val qy = math.floor(y.getFloat(i).toDouble * Scale + 0.5).toLong
-        acc += qx * qy
-        i += 1
-      }
-      acc
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  long qx = (long) Math.floor(((double) $a.getFloat($i)) * $Scale + 0.5);
-           |  long qy = (long) Math.floor(((double) $b.getFloat($i)) * $Scale + 0.5);
-           |  $acc += qx * qy;
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
+    acc
   }
 
   /** Exact int64 squared norm of a quantized float vector. */
-  case class QuantizedNorm2(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"quantized_norm2 expects array<float>, got ${t.catalogString}")
+  def quantizedNorm2(a: ArrayData): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < a.numElements()) {
+      val q = quantize(a.getFloat(i))
+      acc += q * q
+      i += 1
     }
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      var acc = 0L
-      var i = 0
-      while (i < x.numElements()) {
-        val q = math.floor(x.getFloat(i).toDouble * Scale + 0.5).toLong
-        acc += q * q
-        i += 1
-      }
-      acc
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val acc = ctx.freshName("acc")
-        s"""
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  long q = (long) Math.floor(((double) $a.getFloat($i)) * $Scale + 0.5);
-           |  $acc += q * q;
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
+    acc
   }
 
   /** Exact int64 dot product of two already-integer code vectors — the
     * int8-quantized retrieval hot path (q93): codes are stored as
     * array<long>, and the pairwise dot runs pairs × dims times, where an
     * interpreted `zip_with`+`aggregate` chain walks a boxed expression
-    * tree per element. Same loop shape as [[QuantizedDot]] minus the
+    * tree per element. Same loop as [[quantizedDot]] minus the
     * quantization. Also serves as the codes' norm (`long_dot(q, q)`). */
-  case class LongDot(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"long_dot expects two array<bigint> arguments, got " +
-          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+  def longDot(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += a.getLong(i) * b.getLong(i)
+      i += 1
     }
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        acc += x.getLong(i) * y.getLong(i)
-        i += 1
-      }
-      acc
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += $a.getLong($i) * $b.getLong($i);
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
+    acc
   }
 
   /** Fused int8 scalar quantization (q93): per-vector scale = max |x|
-    * (floored at 1e-30), codes = ⌊x/scale·127+0.5⌋ as int64 — one codegen
-    * pass replacing an interpreted `aggregate` (maxabs) plus `transform`
+    * (floored at 1e-30), codes = ⌊x/scale·127+0.5⌋ as int64 — one pass
+    * replacing an interpreted `aggregate` (maxabs) plus `transform`
     * (quantize), both CodegenFallback with per-element boxing. The
     * arithmetic is the same correctly-rounded double sequence as the
     * HOF form and the DuckDB oracle, so values are bit-identical. */
-  case class Int8Codes(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"int8_codes expects array<float>, got ${t.catalogString}")
+  def int8Codes(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    var mx = 1e-30
+    var i = 0
+    while (i < n) {
+      val v = math.abs(a.getFloat(i).toDouble)
+      if (v > mx) mx = v
+      i += 1
     }
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      var mx = 1e-30
-      var i = 0
-      while (i < n) {
-        val v = math.abs(x.getFloat(i).toDouble)
-        if (v > mx) mx = v
-        i += 1
-      }
-      val out = new Array[Long](n)
-      i = 0
-      while (i < n) {
-        out(i) = math.floor(x.getFloat(i).toDouble / mx * 127.0 + 0.5).toLong
-        i += 1
-      }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(out)
+    val out = new Array[Long](n)
+    i = 0
+    while (i < n) {
+      out(i) = math.floor(a.getFloat(i).toDouble / mx * 127.0 + 0.5).toLong
+      i += 1
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val mx = ctx.freshName("mx")
-        val tmp = ctx.freshName("tmp")
-        s"""
-           |int $n = $a.numElements();
-           |double $mx = 1e-30;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double v = Math.abs((double) $a.getFloat($i));
-           |  if (v > $mx) $mx = v;
-           |}
-           |long[] $tmp = new long[$n];
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $tmp[$i] = (long) Math.floor(((double) $a.getFloat($i)) / $mx * 127.0 + 0.5);
-           |}
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($tmp);
-         """.stripMargin
-      })
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Count of left-array elements present in the right array (q92 vocab
-    * coverage): a per-row hash-set membership count — O(|vocab|+|toks|)
-    * where `size(filter(toks, t -> array_contains(vocab, t)))` is
+  /** Count of `toks` elements present in `vocab` (q92 vocab coverage): a
+    * per-row hash-set membership count — O(|vocab|+|toks|) where
+    * `size(filter(toks, t -> array_contains(vocab, t)))` is
     * O(|vocab|·|toks|) linear scans, and both HOFs are interpreted.
     * Null elements on either side never match. */
-  case class CountInArray(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"count_in_array expects two array<string> arguments, got " +
-          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+  def countInArray(toks: ArrayData, vocab: ArrayData): Long = {
+    val set = new java.util.HashSet[UTF8String]()
+    var i = 0
+    while (i < vocab.numElements()) {
+      if (!vocab.isNullAt(i)) set.add(vocab.getUTF8String(i))
+      i += 1
     }
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val toks = a.asInstanceOf[ArrayData]
-      val vocab = b.asInstanceOf[ArrayData]
-      val set = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
-      var i = 0
-      while (i < vocab.numElements()) {
-        if (!vocab.isNullAt(i)) set.add(vocab.getUTF8String(i))
-        i += 1
-      }
-      var c = 0L
-      i = 0
-      while (i < toks.numElements()) {
-        if (!toks.isNullAt(i) && set.contains(toks.getUTF8String(i))) c += 1L
-        i += 1
-      }
-      c
+    var c = 0L
+    i = 0
+    while (i < toks.numElements()) {
+      if (!toks.isNullAt(i) && set.contains(toks.getUTF8String(i))) c += 1L
+      i += 1
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val set = ctx.freshName("set")
-        val c = ctx.freshName("c")
-        s"""
-           |java.util.HashSet $set = new java.util.HashSet();
-           |for (int $i = 0; $i < $b.numElements(); $i++) {
-           |  if (!$b.isNullAt($i)) $set.add($b.getUTF8String($i));
-           |}
-           |long $c = 0L;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  if (!$a.isNullAt($i) && $set.contains($a.getUTF8String($i))) $c++;
-           |}
-           |${ev.value} = $c;
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
+    c
   }
 
-  /** Sum of map lookups for every element of the left array (q99 unigram
-    * LM scoring): `Σ_t map.getOrElse(t, 0L)` over `array<string>` tokens
+  /** Sum of map lookups for every element of `toks` (q99 unigram LM
+    * scoring): `Σ_t m.getOrElse(t, 0L)` over `array<string>` tokens
     * against a `map<string,bigint>` vocabulary — the weighted sibling of
-    * [[CountInArray]]. One per-row hash build + one pass over the tokens,
+    * [[countInArray]]. One per-row hash build + one pass over the tokens,
     * where an `aggregate(toks, 0L, (acc,t) -> acc + element_at(m,t))` HOF
     * chain walks an interpreted tree per element AND linear-scans the map
     * per lookup (Spark's `element_at` on MapData is O(n)). Null tokens and
-    * null map values contribute 0. */
-  case class MapSumLookup(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), MapType(StringType, LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"map_sum_lookup expects (array<string>, map<string,bigint>), got " +
-          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+    * null map values contribute 0; of duplicate keys, the last non-null
+    * value counts. */
+  def mapSumLookup(toks: ArrayData, m: MapData): Long = {
+    val keys = m.keyArray(); val vals = m.valueArray()
+    val lut = new java.util.HashMap[UTF8String, java.lang.Long]()
+    var i = 0
+    while (i < keys.numElements()) {
+      if (!vals.isNullAt(i)) lut.put(keys.getUTF8String(i), vals.getLong(i))
+      i += 1
     }
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val toks = a.asInstanceOf[ArrayData]
-      val m = b.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-      val keys = m.keyArray(); val vals = m.valueArray()
-      val lut = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, java.lang.Long]()
-      var i = 0
-      while (i < keys.numElements()) {
-        if (!vals.isNullAt(i)) lut.put(keys.getUTF8String(i), vals.getLong(i))
-        i += 1
+    var acc = 0L
+    i = 0
+    while (i < toks.numElements()) {
+      if (!toks.isNullAt(i)) {
+        val v = lut.get(toks.getUTF8String(i))
+        if (v != null) acc += v.longValue()
       }
-      var acc = 0L
-      i = 0
-      while (i < toks.numElements()) {
-        if (!toks.isNullAt(i)) {
-          val v = lut.get(toks.getUTF8String(i))
-          if (v != null) acc += v.longValue()
-        }
-        i += 1
-      }
-      acc
+      i += 1
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val keys = ctx.freshName("keys")
-        val vals = ctx.freshName("vals")
-        val lut = ctx.freshName("lut")
-        val acc = ctx.freshName("acc")
-        val v = ctx.freshName("v")
-        s"""
-           |org.apache.spark.sql.catalyst.util.ArrayData $keys = $b.keyArray();
-           |org.apache.spark.sql.catalyst.util.ArrayData $vals = $b.valueArray();
-           |java.util.HashMap $lut = new java.util.HashMap();
-           |for (int $i = 0; $i < $keys.numElements(); $i++) {
-           |  if (!$vals.isNullAt($i)) {
-           |    $lut.put($keys.getUTF8String($i), Long.valueOf($vals.getLong($i)));
-           |  }
-           |}
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $a.numElements(); $i++) {
-           |  if (!$a.isNullAt($i)) {
-           |    Object $v = $lut.get($a.getUTF8String($i));
-           |    if ($v != null) $acc += ((Long) $v).longValue();
-           |  }
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
+    acc
   }
 
   /** Fused covariance-pair expansion (q132): quantize the vector to the
@@ -347,7 +159,7 @@ object VectorExprs {
     * Replaces a nested `transform(…, transform(…, struct(i, j, p)))` +
     * `flatten`: higher-order functions are CodegenFallback, which made
     * 2 144 interpreted lambda invocations + struct boxings per row; this
-    * is one codegen'd O(m²/2) primitive loop writing longs.
+    * is one O(m²/2) primitive loop writing longs.
     *
     * Flat-position contract (the consumer inverts it on the AGGREGATED
     * 2 144-row side, closed-form): products occupy positions
@@ -356,6 +168,139 @@ object VectorExprs {
     * at boundaries the discriminant is the perfect square (2m+1−2i)², so
     * IEEE sqrt is exact there and the floor is deterministic. Positions
     * ≥ m(m+1)/2 carry the raw q_i for the centering sums. */
+  def covPairProducts(a: ArrayData): ArrayData = {
+    val m = a.numElements()
+    val q = new Array[Long](m)
+    var i = 0
+    while (i < m) {
+      q(i) = quantize(a.getFloat(i))
+      i += 1
+    }
+    val out = new Array[Long](m * (m + 1) / 2 + m)
+    var k = 0
+    i = 0
+    while (i < m) {
+      var j = i
+      while (j < m) {
+        out(k) = q(i) * q(j); k += 1; j += 1
+      }
+      i += 1
+    }
+    System.arraycopy(q, 0, out, k, m)
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** See [[quantizedDot]]. */
+  case class QuantizedDot(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = LongType
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"quantized_dot expects two array<float> arguments, got " +
+          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      quantizedDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorExprs.quantizedDot($a, $b)")
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** See [[quantizedNorm2]]. */
+  case class QuantizedNorm2(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = LongType
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"quantized_norm2 expects array<float>, got ${t.catalogString}")
+    }
+    override def nullSafeEval(a: Any): Any = quantizedNorm2(a.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, a => s"graft.functions.VectorExprs.quantizedNorm2($a)")
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** See [[longDot]]. */
+  case class LongDot(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = LongType
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"long_dot expects two array<bigint> arguments, got " +
+          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      longDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorExprs.longDot($a, $b)")
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** See [[int8Codes]]. */
+  case class Int8Codes(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"int8_codes expects array<float>, got ${t.catalogString}")
+    }
+    override def nullSafeEval(a: Any): Any = int8Codes(a.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, a => s"graft.functions.VectorExprs.int8Codes($a)")
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** See [[countInArray]]. */
+  case class CountInArray(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = LongType
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"count_in_array expects two array<string> arguments, got " +
+          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      countInArray(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorExprs.countInArray($a, $b)")
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** See [[mapSumLookup]]. */
+  case class MapSumLookup(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = LongType
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(StringType, _), MapType(StringType, LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"map_sum_lookup expects (array<string>, map<string,bigint>), got " +
+          s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
+    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      mapSumLookup(a.asInstanceOf[ArrayData], b.asInstanceOf[MapData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorExprs.mapSumLookup($a, $b)")
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+  }
+
+  /** See [[covPairProducts]]. */
   case class CovPairProducts(child: Expression) extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -363,55 +308,9 @@ object VectorExprs {
       case t => TypeCheckResult.TypeCheckFailure(
         s"cov_pair_products expects array<float>, got ${t.catalogString}")
     }
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val m = x.numElements()
-      val q = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        q(i) = math.floor(x.getFloat(i).toDouble * Scale + 0.5).toLong
-        i += 1
-      }
-      val out = new Array[Long](m * (m + 1) / 2 + m)
-      var k = 0
-      i = 0
-      while (i < m) {
-        var j = i
-        while (j < m) {
-          out(k) = q(i) * q(j); k += 1; j += 1
-        }
-        i += 1
-      }
-      System.arraycopy(q, 0, out, k, m)
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(out)
-    }
+    override def nullSafeEval(a: Any): Any = covPairProducts(a.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val j = ctx.freshName("j")
-        val k = ctx.freshName("k")
-        val m = ctx.freshName("m")
-        val q = ctx.freshName("q")
-        val out = ctx.freshName("out")
-        s"""
-           |int $m = $a.numElements();
-           |long[] $q = new long[$m];
-           |for (int $i = 0; $i < $m; $i++) {
-           |  $q[$i] = (long) Math.floor(((double) $a.getFloat($i)) * $Scale + 0.5);
-           |}
-           |long[] $out = new long[$m * ($m + 1) / 2 + $m];
-           |int $k = 0;
-           |for (int $i = 0; $i < $m; $i++) {
-           |  for (int $j = $i; $j < $m; $j++) {
-           |    $out[$k++] = $q[$i] * $q[$j];
-           |  }
-           |}
-           |System.arraycopy($q, 0, $out, $k, $m);
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-           |  .fromPrimitiveArray($out);
-         """.stripMargin
-      })
+      defineCodeGen(ctx, ev, a => s"graft.functions.VectorExprs.covPairProducts($a)")
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }

@@ -94,11 +94,6 @@ object CurationOps {
        |  CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE) / len(g3) AS dup3_frac
        |FROM g""".stripMargin
 
-  /** Training-window chunking: token windows of 64 with stride 48
-    * (overlap 16) — the context-window packing step of an LLM data
-    * pipeline. One generate-series explode per doc; row count is bounded
-    * by total tokens / stride, and the whole thing is a single narrow
-    * pass (no shuffle). */
   /** Reusable chunking over any (doc_id, text) frame — see [[q69Chunk]].
     * NULL text emits NO chunks (r8, text fuzz battery): both engines'
     * greatest/least skip NULL args, so an unfiltered NULL doc planned one
@@ -121,6 +116,11 @@ object CurationOps {
         concat_ws(" ", slice(col("toks"), col("chunk_id") * S + 1, lit(W)))
           .as("chunk_text"))
 
+  /** Training-window chunking: token windows of 64 with stride 48
+    * (overlap 16) — the context-window packing step of an LLM data
+    * pipeline. One generate-series explode per doc; row count is bounded
+    * by total tokens / stride, and the whole thing is a single narrow
+    * pass (no shuffle). */
   def q69Chunk(s: SparkSession, dir: String): DataFrame =
     chunkTokens(Tables.documents(s, dir))
 
@@ -231,8 +231,9 @@ object CurationOps {
     * corpus rows × ~500 bench rows, all generated by whichever single
     * task owns the gram's partition). The DECLARED q70 therefore runs
     * [[contaminationCollapsed]]; this raw form remains the generic
-    * two-frame entry point and the collapsed form's parity baseline. */
-  /** Generic form: contamination pairs between a corpus and a benchmark
+    * two-frame entry point and the collapsed form's parity baseline.
+    *
+    * Generic form: contamination pairs between a corpus and a benchmark
     * frame (both `(doc_id, text)`; bench doc ids are reported as
     * `bench_id`). */
   def contaminationPairs(docs: DataFrame, bench: DataFrame,
@@ -779,23 +780,6 @@ object CurationOps {
       |ORDER BY skey, doc_id
       |LIMIT 50""".stripMargin
 
-  /** Sequence packing — the pre-training data-prep step that assembles
-    * documents into fixed-token-budget training sequences: docs are
-    * assigned to shards, ordered within each shard, and greedily packed —
-    * a doc opens a new bin when adding it would overflow the budget
-    * (oversize docs are capped at the budget; SPLITTING long docs is
-    * q69's chunking job, upstream of packing).
-    *
-    * The shape is the one that survives 100 TB: one shuffle on shard +
-    * a secondary sort (`repartition` + `sortWithinPartitions`), then a
-    * single STREAMING pass per partition (`mapPartitions`) carrying
-    * three longs of state — no `groupBy`+`collect_list` that would
-    * materialize a whole shard's documents in one task's memory, and no
-    * window function (the bin break is a running RESET, which prefix
-    * sums can't express). Bin ids are deterministic functions of the
-    * data alone, so the pack is reproducible run to run — which is what
-    * makes a training run resumable. Oracle: per-shard linear recursion
-    * as a recursive CTE. */
   /** Generic greedy packer over `(doc_id, shard, n_tok)` — see
     * [[q87PackSequences]] for semantics and scale rationale. Reused by
     * `PipelineDemo` to pack chunk windows into training sequences. */
@@ -840,6 +824,23 @@ object CurationOps {
       budget = 512L)
   }
 
+  /** Sequence packing — the pre-training data-prep step that assembles
+    * documents into fixed-token-budget training sequences: docs are
+    * assigned to shards, ordered within each shard, and greedily packed —
+    * a doc opens a new bin when adding it would overflow the budget
+    * (oversize docs are capped at the budget; SPLITTING long docs is
+    * q69's chunking job, upstream of packing).
+    *
+    * The shape is the one that survives 100 TB: one shuffle on shard +
+    * a secondary sort (`repartition` + `sortWithinPartitions`), then a
+    * single STREAMING pass per partition (`mapPartitions`) carrying
+    * three longs of state — no `groupBy`+`collect_list` that would
+    * materialize a whole shard's documents in one task's memory, and no
+    * window function (the bin break is a running RESET, which prefix
+    * sums can't express). Bin ids are deterministic functions of the
+    * data alone, so the pack is reproducible run to run — which is what
+    * makes a training run resumable. Oracle: per-shard linear recursion
+    * as a recursive CTE. */
   def q87PackSequences(s: SparkSession, dir: String): DataFrame =
     packDocuments(s, dir, shards = 4L)
 
@@ -970,6 +971,20 @@ object CurationOps {
       |    AS ess_frac
       |FROM m""".stripMargin
 
+  /** Generic two-pass global index over an id frame — see
+    * [[q90GlobalShuffle]] for semantics and scale rationale. Runs on the
+    * [[graft.plans.GlobalRank]] physical operator (the plan-level form of
+    * the finalized-RDD `zipWithIndex` this helper originally hand-rolled;
+    * the one-shuffle-dependency determinism guarantee now lives inside
+    * the exec, and the plan stays in Dataset land — prunable, AQE-visible,
+    * spec-proven equal to the RDD formulation in `GlobalRankSpec`). */
+  def globalShuffleIndex(items: DataFrame, salt: String): DataFrame =
+    graft.plans.GlobalRank.withPosition(
+      items.select(col("doc_id"),
+        hash60(concat(lit(salt), col("doc_id").cast("string"))).as("k")),
+      order = Seq("k" -> false, "doc_id" -> false))
+      .select(col("doc_id"), col("k"), col("pos"))
+
   /** Deterministic corpus shuffle with a contiguous GLOBAL index — the
     * "shuffle your training data once, reproducibly" step: every doc gets
     * a salted-hash sort key, and `pos` is its 0-based rank in the global
@@ -989,20 +1004,6 @@ object CurationOps {
     * could leave duplicates/gaps in `pos`. That guarantee is now enforced
     * STRUCTURALLY by the [[graft.plans.GlobalRank]] physical operator
     * (both passes inside one exec over one shuffle dependency). */
-  /** Generic two-pass global index over an id frame — see
-    * [[q90GlobalShuffle]] for semantics and scale rationale. Runs on the
-    * [[graft.plans.GlobalRank]] physical operator (the plan-level form of
-    * the finalized-RDD `zipWithIndex` this helper originally hand-rolled;
-    * the one-shuffle-dependency determinism guarantee now lives inside
-    * the exec, and the plan stays in Dataset land — prunable, AQE-visible,
-    * spec-proven equal to the RDD formulation in `GlobalRankSpec`). */
-  def globalShuffleIndex(items: DataFrame, salt: String): DataFrame =
-    graft.plans.GlobalRank.withPosition(
-      items.select(col("doc_id"),
-        hash60(concat(lit(salt), col("doc_id").cast("string"))).as("k")),
-      order = Seq("k" -> false, "doc_id" -> false))
-      .select(col("doc_id"), col("k"), col("pos"))
-
   def q90GlobalShuffle(s: SparkSession, dir: String): DataFrame =
     globalShuffleIndex(Tables.documents(s, dir).select(col("doc_id")), "shuf:")
 

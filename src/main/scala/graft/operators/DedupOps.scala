@@ -158,23 +158,6 @@ object DedupOps {
       .select(col("doc_id"), explode(shingles(col("toks"), 3)).as("sh"))
       .distinct()
 
-  /** Re-expand representative-level pairs to member pairs.
-    *
-    * The expansion only does WORK proportional to duplication: every
-    * join side below is restricted to members of groups with mult ≥ 2
-    * (`dm`), so a pair of two singleton reps expands through two LEFT
-    * joins whose probe misses — NULLs coalesce back to the rep ids and
-    * the pair passes through untouched. On a low-duplication corpus the
-    * dup-member map is small (AQE broadcasts it) and the huge rep-pair
-    * stream never shuffles — the r9 tagged-mode run caught the earlier
-    * unconditional two-join form shuffling q37's 33M-pair stream twice
-    * for an IDENTITY expansion (×19 wall-time at 10× with zero
-    * duplicates). On a dup-heavy corpus the joins carry exactly the
-    * pairs that genuinely multiply. Within-group pairs come from a
-    * dup-member self-join restricted to groups satisfying
-    * `withinEligible` (they score `withinCols` — J = 1.0 / Hamming = 0
-    * — by construction). The quadratic-in-multiplicity pair volume that
-    * remains is the declared OUTPUT, not candidate-stage work. */
   /** Group size above which the within-group self-join is salted into
     * bucket-pair keys (see the MEGA-GROUP SALT comment below). At the
     * threshold the unsalted single key emits at most C(1024,2) ≈ 5·10⁵
@@ -240,6 +223,23 @@ object DedupOps {
       if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
+  /** Re-expand representative-level pairs to member pairs.
+    *
+    * The expansion only does WORK proportional to duplication: every
+    * join side below is restricted to members of groups with mult ≥ 2
+    * (`dm`), so a pair of two singleton reps expands through two LEFT
+    * joins whose probe misses — NULLs coalesce back to the rep ids and
+    * the pair passes through untouched. On a low-duplication corpus the
+    * dup-member map is small (AQE broadcasts it) and the huge rep-pair
+    * stream never shuffles — the r9 tagged-mode run caught the earlier
+    * unconditional two-join form shuffling q37's 33M-pair stream twice
+    * for an IDENTITY expansion (×19 wall-time at 10× with zero
+    * duplicates). On a dup-heavy corpus the joins carry exactly the
+    * pairs that genuinely multiply. Within-group pairs come from a
+    * dup-member self-join restricted to groups satisfying
+    * `withinEligible` (they score `withinCols` — J = 1.0 / Hamming = 0
+    * — by construction). The quadratic-in-multiplicity pair volume that
+    * remains is the declared OUTPUT, not candidate-stage work. */
   private[graft] def expandRepPairs(repPairs: DataFrame, c: Collapsed,
       withinCols: Seq[Column], withinEligible: Column,
       // threshold parameters exist for the straddle fuzz ONLY (a battery
@@ -1171,8 +1171,9 @@ object DedupOps {
 
   /** Near-dup clusters: components of the MinHash-LSH pair graph, cluster
     * id = smallest member. Only docs appearing in at least one pair are
-    * emitted (singletons are trivially their own cluster). */
-  /** Connected components over the q36 near-dup pair graph — but fed a
+    * emitted (singletons are trivially their own cluster).
+    *
+    * Connected components over the q36 near-dup pair graph — but fed a
     * CONNECTIVITY-EQUIVALENT edge set instead of the expanded member
     * pairs (r12): rep-level LSH pairs ∪ one member→rep STAR edge per
     * member of a within-eligible (≥ 3 tokens, mult ≥ 2) dup group.
@@ -1706,21 +1707,6 @@ object DedupOps {
        |JOIN eg e3 ON e1.doc_a = e3.doc_a AND e2.doc_b = e3.doc_b
        |GROUP BY 1""".stripMargin
 
-  /** Blocked sorted-neighborhood near-dup detection — the sort-based
-    * classic that complements the hash/LSH family: records are blocked,
-    * sorted within each block on a similarity-preserving key, and each
-    * record is compared only to its next `w = 2` neighbors in that order
-    * (a `lead` window, NOT a self-join). Candidate pairs with token-set
-    * Jaccard ≥ 0.5 are emitted. The acceptance test compares exact
-    * integers (`2·|∩| ≥ |∪|`), and the reported Jaccard is one double
-    * division — bit-identical cross-engine.
-    *
-    * Scale shape: the window partitions by the block key (a prefix of the
-    * normalized text), whose cardinality GROWS with the corpus — blocks
-    * stay small and parallel at 100 TB, unlike a low-cardinality window
-    * funnel. The standard SNM trade-off applies and is the contract:
-    * near-dups whose sort keys land in different blocks (or > w apart)
-    * are missed; the LSH operators (q35–q37) cover those. */
   /** Generic core over a `(doc_id, norm)` frame — `prefixLen` sizes the
     * blocks (longer prefix = more, smaller blocks), `w` is the neighbor
     * horizon. Pairs are unique by construction: each doc lives in exactly
@@ -1754,6 +1740,21 @@ object DedupOps {
         (col("inter").cast("double") / col("un")).as("jaccard"))
   }
 
+  /** Blocked sorted-neighborhood near-dup detection — the sort-based
+    * classic that complements the hash/LSH family: records are blocked,
+    * sorted within each block on a similarity-preserving key, and each
+    * record is compared only to its next `w = 2` neighbors in that order
+    * (a `lead` window, NOT a self-join). Candidate pairs with token-set
+    * Jaccard ≥ 0.5 are emitted. The acceptance test compares exact
+    * integers (`2·|∩| ≥ |∪|`), and the reported Jaccard is one double
+    * division — bit-identical cross-engine.
+    *
+    * Scale shape: the window partitions by the block key (a prefix of the
+    * normalized text), whose cardinality GROWS with the corpus — blocks
+    * stay small and parallel at 100 TB, unlike a low-cardinality window
+    * funnel. The standard SNM trade-off applies and is the contract:
+    * near-dups whose sort keys land in different blocks (or > w apart)
+    * are missed; the LSH operators (q35–q37) cover those. */
   def q100SortedNeighborhood(s: SparkSession, dir: String): DataFrame =
     sortedNeighborhoodPairs(docsNorm(s, dir), prefixLen = 3, w = 2)
 
@@ -1784,6 +1785,19 @@ object DedupOps {
       |SELECT doc_a, doc_b, CAST(inter AS DOUBLE) / un AS jaccard
       |FROM sc WHERE inter * 2 >= un""".stripMargin
 
+  /** Generic form: `fps` is (doc_id, fp, is_old). */
+  def ingestTriage(fps: DataFrame): DataFrame = {
+    val corpus = fps.filter(col("is_old")).select(col("fp")).distinct()
+    val feed = fps.filter(!col("is_old")).select(col("doc_id"), col("fp"))
+    val feedMin = feed.groupBy(col("fp")).agg(min(col("doc_id")).as("min_id"))
+    feed.join(feedMin, Seq("fp"))
+      .join(corpus.withColumn("in_corpus", lit(1)), Seq("fp"), "left")
+      .select(col("doc_id"), col("fp"),
+        when(col("in_corpus").isNotNull, lit("dup_of_corpus"))
+          .when(col("doc_id") =!= col("min_id"), lit("dup_in_feed"))
+          .otherwise(lit("admitted")).as("status"))
+  }
+
   /** Incremental-ingest triage — the PRODUCTION dedup shape: a new feed
     * arrives against an EXISTING corpus and every feed document gets a
     * disposition, not just membership in a survivors list: `admitted`
@@ -1801,19 +1815,6 @@ object DedupOps {
     * the corpus side is projected to (fp) before the join: at 100 TB
     * the probe reads a column-pruned fingerprint index, never corpus
     * text. No windows, no broadcast of either unbounded side. */
-  /** Generic form: `fps` is (doc_id, fp, is_old). */
-  def ingestTriage(fps: DataFrame): DataFrame = {
-    val corpus = fps.filter(col("is_old")).select(col("fp")).distinct()
-    val feed = fps.filter(!col("is_old")).select(col("doc_id"), col("fp"))
-    val feedMin = feed.groupBy(col("fp")).agg(min(col("doc_id")).as("min_id"))
-    feed.join(feedMin, Seq("fp"))
-      .join(corpus.withColumn("in_corpus", lit(1)), Seq("fp"), "left")
-      .select(col("doc_id"), col("fp"),
-        when(col("in_corpus").isNotNull, lit("dup_of_corpus"))
-          .when(col("doc_id") =!= col("min_id"), lit("dup_in_feed"))
-          .otherwise(lit("admitted")).as("status"))
-  }
-
   def q140IngestTriage(s: SparkSession, dir: String): DataFrame =
     ingestTriage(docsNorm(s, dir)
       .select(col("doc_id"), md5(col("norm")).as("fp"),

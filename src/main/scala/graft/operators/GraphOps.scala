@@ -70,18 +70,7 @@ object GraphOps {
     * Each iteration's plan chains off the previous one lazily; with a
     * small fixed iteration count no per-round checkpoint is needed. */
   def pageRankInt(edges: DataFrame, iters: Int, rankUnit: Long = 0L): DataFrame = {
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // PRE-PARTITIONED on the per-iteration join key (r12, guide §2.4):
-    // when `deg` broadcasts, the edge⋈degree output inherits the SCAN's
-    // layout — at bench scale one partition held ~all 220k edge rows,
-    // so every iteration's join+aggregate ran effectively single-task
-    // (StageProfile: 4.0 s max-task on an 8-task stage). One explicit
-    // hash(src) shuffle at checkpoint build gives every iteration a
-    // full-width, join-aligned edge frame; the rank side comes out of
-    // each groupBy already hashed on the same key, so iterations add
-    // only their own aggregate exchange.
-    val ed = Tables.spread(edges.join(deg, Seq("src")), col("src"))
-      .localCheckpoint(true)
+    val ed = rankEdges(edges)
     val nodes = ed.select(col("src").as("node")).distinct()
     // the node count is needed either way: to SIZE the unit (auto path)
     // or to VALIDATE a pinned one — a pin that passes the multiple-of-100
@@ -106,16 +95,35 @@ object GraphOps {
             "at this node count) — pass rankUnit = 0 to size it to the graph")
         rankUnit
       }
-    val baseMass = unit / 100L * 15L // exact: unit is a multiple of 100
     var ranks = nodes.withColumn("r", lit(unit))
-    for (_ <- 1 to iters) {
-      ranks = ed.join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(expr(s"${baseMass}L + (85 * sum(r div d)) div 100").as("r"))
-    }
+    for (_ <- 1 to iters) ranks = rankRound(ed, ranks, unit)
     val out = ranks.localCheckpoint(true)
     org.apache.spark.sql.GraftShims.unpersistCheckpoint(ed)
     out
+  }
+
+  /** [[pageRankInt]]'s edge frame: `(src, dst, d)` with `d` the source's
+    * out-degree, checkpointed. PRE-PARTITIONED on the per-iteration join
+    * key (r12, guide §2.4): when `deg` broadcasts, the edge⋈degree output
+    * inherits the SCAN's layout — at bench scale one partition held ~all
+    * 220k edge rows, so every iteration's join+aggregate ran effectively
+    * single-task (StageProfile: 4.0 s max-task on an 8-task stage). One
+    * explicit hash(src) shuffle at checkpoint build gives every iteration
+    * a full-width, join-aligned edge frame; the rank side comes out of
+    * each groupBy already hashed on the same key, so iterations add only
+    * their own aggregate exchange. */
+  private def rankEdges(edges: DataFrame): DataFrame = {
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    Tables.spread(edges.join(deg, Seq("src")), col("src")).localCheckpoint(true)
+  }
+
+  /** One [[pageRankInt]] round: each node's `(node, r)` mass split over
+    * its out-edges, damped, summed at the destinations. */
+  private def rankRound(ed: DataFrame, ranks: DataFrame, unit: Long): DataFrame = {
+    val baseMass = unit / 100L * 15L // exact: unit is a multiple of 100
+    ed.join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+      .groupBy(col("dst").as("node"))
+      .agg(expr(s"${baseMass}L + (85 * sum(r div d)) div 100").as("r"))
   }
 
   /** PageRank over the customer–supplier trade graph: an edge per distinct
@@ -165,19 +173,14 @@ object GraphOps {
     * plan PROBE [[graft.ScaleRegression]] uses to OBSERVE the
     * rank⋈edges join strategy at different scales (broadcast while the
     * rank frame fits under the threshold, sort-merge once it outgrows
-    * it — the self-correcting flip SCALING.md records). Identical
-    * shape to [[pageRankInt]]'s loop body; never declared as a query. */
+    * it — the self-correcting flip SCALING.md records). Built from
+    * [[pageRankInt]]'s own edge frame and round, with q101's pinned
+    * unit; never declared as a query. */
   private[graft] def q101RoundPlan(s: SparkSession, dir: String): DataFrame = {
-    val edges = tradeEdges(s, dir)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // checkpoint like the real loop: the probe must face the same
-    // exactly-known build-side size the declared query's planner sees
-    val ed = edges.join(deg, Seq("src")).localCheckpoint(true)
+    val ed = rankEdges(tradeEdges(s, dir))
     val ranks = ed.select(col("src").as("node")).distinct()
-      .withColumn("r", lit(1000000L))
-    ed.join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-      .groupBy(col("dst").as("node"))
-      .agg(expr("150000L + (85 * sum(r div d)) div 100").as("r"))
+      .withColumn("r", lit(RankUnit))
+    rankRound(ed, ranks, RankUnit)
   }
 
   val q101Sql: String = {
@@ -207,24 +210,6 @@ object GraphOps {
        |FROM r3""".stripMargin
   }
 
-  /** Fixed-round k-core peel (k = 3, 3 rounds) over the same
-    * customer–supplier trade graph as [[q101PageRank]] — the
-    * degeneracy-ordering primitive under community detection and
-    * influence pruning. Each round drops every node whose CURRENT degree
-    * is below k, then discards edges touching a dropped endpoint; after
-    * three rounds the surviving nodes are reported with their residual
-    * degree. Three synchronous rounds are deterministic by construction
-    * (the true k-core is the fixpoint; fixed rounds keep the oracle an
-    * unrolled CTE chain, the q101/q161 pattern — peeling is monotone, so
-    * every reported node is a superset member of the true 3-core and the
-    * round count is part of the declared contract).
-    *
-    * Scale shape: each round is one degree aggregate (map-side combine)
-    * plus two broadcast-or-shuffle semi-joins of the edge list against
-    * the kept-node set — never a window, never a collect. The edge list
-    * is derived once and localCheckpoint'ed so round n doesn't re-run
-    * the orders⋈lineitem derivation; released before return
-    * ([[graft.operators.DedupOps]] CC storage-lifecycle pattern). */
   /** The lazy (un-checkpointed) k-core plan plus the checkpointed edge
     * frame it hangs off — split out so [[q169KCore]] can release the edge
     * checkpoint after materializing, while PlanShapeSpec inspects the
@@ -291,6 +276,24 @@ object GraphOps {
     out
   }
 
+  /** Fixed-round k-core peel (k = 3, 3 rounds) over the same
+    * customer–supplier trade graph as [[q101PageRank]] — the
+    * degeneracy-ordering primitive under community detection and
+    * influence pruning. Each round drops every node whose CURRENT degree
+    * is below k, then discards edges touching a dropped endpoint; after
+    * three rounds the surviving nodes are reported with their residual
+    * degree. Three synchronous rounds are deterministic by construction
+    * (the true k-core is the fixpoint; fixed rounds keep the oracle an
+    * unrolled CTE chain, the q101/q161 pattern — peeling is monotone, so
+    * every reported node is a superset member of the true 3-core and the
+    * round count is part of the declared contract).
+    *
+    * Scale shape: each round is one degree aggregate (map-side combine)
+    * plus two broadcast-or-shuffle semi-joins of the edge list against
+    * the kept-node set — never a window, never a collect. The edge list
+    * is derived once and localCheckpoint'ed so round n doesn't re-run
+    * the orders⋈lineitem derivation; released before return
+    * ([[graft.operators.DedupOps]] CC storage-lifecycle pattern). */
   def q169KCore(s: SparkSession, dir: String): DataFrame = {
     val (e0, out) = kCoreLazy(s, dir, eager = true)
     org.apache.spark.sql.GraftShims.unpersistCheckpoint(e0)

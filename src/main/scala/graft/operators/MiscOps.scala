@@ -786,6 +786,23 @@ object MiscOps {
        |FROM t""".stripMargin
   }
 
+  /** CMS geometry shared by the batch query and the streaming tier. */
+  val CmsDepth = 4
+  val CmsWidth = 16L
+
+  /** The d per-row (hash-row, cell) coordinates of one term. */
+  def cmsCoords(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    array((0 until CmsDepth).map(j =>
+      struct(lit(j).as("j"), pmod(hash60Seeded(j, c), lit(CmsWidth)).as("idx"))): _*)
+
+  /** Sketch cells from a `term` stream/frame — works unchanged on a
+    * streaming frame ([[graft.streaming.StreamingOps.countMinStream]]):
+    * the cells ARE a bounded-key streaming aggregate. */
+  def cmsCells(terms: DataFrame): DataFrame =
+    terms.select(explode(cmsCoords(col("term"))).as("c"))
+      .groupBy(col("c.j").as("j"), col("c.idx").as("idx"))
+      .agg(count(lit(1)).as("c"))
+
   /** Count–Min sketch — the mergeable bounded-memory frequency sketch
     * completing the sketch family (q42 HLL distinct counts, q71 bloom
     * membership, q80 SpaceSaving top-k, q139 histogram quantiles): d=4
@@ -806,23 +823,6 @@ object MiscOps {
     * sketch property (cells ADD across partitions/feeds). The probe side
     * reuses the top-k cut (TakeOrderedAndProject) and joins the 64-cell
     * sketch as a broadcast. */
-  /** CMS geometry shared by the batch query and the streaming tier. */
-  val CmsDepth = 4
-  val CmsWidth = 16L
-
-  /** The d per-row (hash-row, cell) coordinates of one term. */
-  def cmsCoords(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    array((0 until CmsDepth).map(j =>
-      struct(lit(j).as("j"), pmod(hash60Seeded(j, c), lit(CmsWidth)).as("idx"))): _*)
-
-  /** Sketch cells from a `term` stream/frame — works unchanged on a
-    * streaming frame ([[graft.streaming.StreamingOps.countMinStream]]):
-    * the cells ARE a bounded-key streaming aggregate. */
-  def cmsCells(terms: DataFrame): DataFrame =
-    terms.select(explode(cmsCoords(col("term"))).as("c"))
-      .groupBy(col("c.j").as("j"), col("c.idx").as("idx"))
-      .agg(count(lit(1)).as("c"))
-
   def q210CountMin(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("term"))

@@ -523,27 +523,6 @@ object StatsOps {
       |  min(price_c) AS lo_cents, max(price_c) AS hi_cents
       |FROM r GROUP BY 1""".stripMargin
 
-  /** Mergeable histogram quantiles — the DISTRIBUTED-SKETCH member of
-    * the quantile family (q57 is the exact sort-based one, q135 the
-    * exact-rank equi-depth one): 1000 fixed-width bins over the
-    * cents-integer price domain, quantile estimates by linear
-    * interpolation inside the target bin. Because bin counts are
-    * associative INTEGERS, the sketch is deterministic under any
-    * partitioning / merge order — unlike t-digest or GK, whose state
-    * depends on arrival order — which is what makes it oracle-hashable
-    * AND what makes it safe as a streaming/incremental aggregate.
-    *
-    * Scale shape: two narrow partial-combining passes (min/max/count,
-    * then bin counts — per-task state ≤ 1000 longs), a cumulative sum
-    * over the ≤ 1000-row bin table (bounded, never corpus-sized — the
-    * q133-class "window over ≤ #bins rows" shape), and a 5×bins bounded
-    * join for the quantile lookup. No global sort anywhere; q57's exact
-    * percentile needs one. Estimate arithmetic: the bin lower edge is
-    * kept as an exact integer numerator (`vmin·1000 + bin·range`, ≤
-    * 2e10 — representable exactly in double at any corpus size since
-    * it depends on the DATA RANGE, not the row count), and the final
-    * double expression is written identically in the oracle, so IEEE
-    * determinism gives a bit-identical hash. */
   /** Generic form: `values` is any single-column frame of longs named
     * `v`; output is invariant to its partitioning (spec-asserted). */
   def histQuantile(values: DataFrame): DataFrame = {
@@ -573,6 +552,27 @@ object StatsOps {
           ./(lit(1000.0)).as("est"))
   }
 
+  /** Mergeable histogram quantiles — the DISTRIBUTED-SKETCH member of
+    * the quantile family (q57 is the exact sort-based one, q135 the
+    * exact-rank equi-depth one): 1000 fixed-width bins over the
+    * cents-integer price domain, quantile estimates by linear
+    * interpolation inside the target bin. Because bin counts are
+    * associative INTEGERS, the sketch is deterministic under any
+    * partitioning / merge order — unlike t-digest or GK, whose state
+    * depends on arrival order — which is what makes it oracle-hashable
+    * AND what makes it safe as a streaming/incremental aggregate.
+    *
+    * Scale shape: two narrow partial-combining passes (min/max/count,
+    * then bin counts — per-task state ≤ 1000 longs), a cumulative sum
+    * over the ≤ 1000-row bin table (bounded, never corpus-sized — the
+    * q133-class "window over ≤ #bins rows" shape), and a 5×bins bounded
+    * join for the quantile lookup. No global sort anywhere; q57's exact
+    * percentile needs one. Estimate arithmetic: the bin lower edge is
+    * kept as an exact integer numerator (`vmin·1000 + bin·range`, ≤
+    * 2e10 — representable exactly in double at any corpus size since
+    * it depends on the DATA RANGE, not the row count), and the final
+    * double expression is written identically in the oracle, so IEEE
+    * determinism gives a bit-identical hash. */
   def q139HistQuantile(s: SparkSession, dir: String): DataFrame =
     histQuantile(Tables.lineitem(s, dir)
       .filter(col("l_extendedprice").isNotNull)

@@ -867,6 +867,21 @@ object TextOps {
       |FROM bg JOIN cab c ON bg.w1 = c.w1 AND bg.w2 = c.w2
       |GROUP BY bg.doc_id""".stripMargin
 
+  /** Deduplicated (source, gram-hash) stream — shared by q123 (novelty)
+    * and q128 (overlap matrix). Grams travel as fused 64-bit hashes; the
+    * dedup is a partial-combining aggregate, never a posting list. */
+  def sourceGrams(s: SparkSession, dir: String): DataFrame =
+    // widened (r12): single CPU-dense tokenize+gram pass off the scan —
+    // measured ×0.76–0.79 on q123/q128 at bench scale, no-op on a wide
+    // cluster scan (Tables.widen is conditional)
+    Tables.widen(Tables.documents(s, dir), col("doc_id"))
+      .select(col("source"), tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 3)
+      .select(col("source"), explode(array_distinct(
+        graft.functions.HashExprs.gram3_hash64(col("toks")))).as("g"))
+      .groupBy(col("source"), col("g")).agg(count(lit(1)).as("_n"))
+      .select(col("source"), col("g"))
+
   /** Per-source content novelty: the fraction of each source's DISTINCT
     * word 3-grams that appear in NO other source — the source-value
     * signal behind "is this crawl slice adding anything the corpus
@@ -886,21 +901,6 @@ object TextOps {
     * gram stream; the only rows that re-shuffle are the df=1 winners.
     * Two passes over the deduped gram stream (totals, exclusives) —
     * each a narrow count shuffle, never the raw token stream. */
-  /** Deduplicated (source, gram-hash) stream — shared by q123 (novelty)
-    * and q128 (overlap matrix). Grams travel as fused 64-bit hashes; the
-    * dedup is a partial-combining aggregate, never a posting list. */
-  def sourceGrams(s: SparkSession, dir: String): DataFrame =
-    // widened (r12): single CPU-dense tokenize+gram pass off the scan —
-    // measured ×0.76–0.79 on q123/q128 at bench scale, no-op on a wide
-    // cluster scan (Tables.widen is conditional)
-    Tables.widen(Tables.documents(s, dir), col("doc_id"))
-      .select(col("source"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("source"), explode(array_distinct(
-        graft.functions.HashExprs.gram3_hash64(col("toks")))).as("g"))
-      .groupBy(col("source"), col("g")).agg(count(lit(1)).as("_n"))
-      .select(col("source"), col("g"))
-
   def q123SourceNovelty(s: SparkSession, dir: String): DataFrame = {
     val grams = sourceGrams(s, dir)
     val perGram = grams.groupBy(col("g"))

@@ -428,24 +428,6 @@ object StreamingOps {
         .parquet(srcDir))
   }
 
-  /** Streaming KS drift monitor — the ONLINE tier of batch q176: a live
-    * document feed's length distribution compared per trigger against a
-    * STATIC reference. Monitor state is a MERGEABLE per-length count
-    * histogram persisted in the lake (the q139 merge story): each
-    * micro-batch folds its own value counts into the state table
-    * (value-cardinality-bounded — lengths, not documents), recomputes
-    * the exact integer-cross-product D over state-vs-reference with the
-    * batch [[graft.operators.StatsOps.ksFromCounts]] plan, and appends
-    * one `(batch_id, n_ref, n_stream, ks_d)` row to the monitor log.
-    *
-    * Every stage is distributed and bounded: the raw feed is never
-    * funneled through a single task (the per-batch collapse is a hash
-    * aggregate), the state table is value-sized, and a restart re-reads
-    * the state table — replaying a batch converges to the same counts
-    * only if offsets are tracked, so production callers pass a streaming
-    * checkpoint via the returned frame's own query; here the contract is
-    * the drift VALUE, which the spec pins to the batch operator. Returns
-    * the number of non-empty batches committed. */
   /** Streaming Count–Min sketch over a live document feed — the q210
     * sketch maintained incrementally. This is the mergeable-sketch
     * property expressed as a streaming AGGREGATE: the state is exactly
@@ -466,6 +448,24 @@ object StreamingOps {
         .filter(col("term") =!= ""))
   }
 
+  /** Streaming KS drift monitor — the ONLINE tier of batch q176: a live
+    * document feed's length distribution compared per trigger against a
+    * STATIC reference. Monitor state is a MERGEABLE per-length count
+    * histogram persisted in the lake (the q139 merge story): each
+    * micro-batch folds its own value counts into the state table
+    * (value-cardinality-bounded — lengths, not documents), recomputes
+    * the exact integer-cross-product D over state-vs-reference with the
+    * batch [[graft.operators.StatsOps.ksFromCounts]] plan, and appends
+    * one `(batch_id, n_ref, n_stream, ks_d)` row to the monitor log.
+    *
+    * Every stage is distributed and bounded: the raw feed is never
+    * funneled through a single task (the per-batch collapse is a hash
+    * aggregate), the state table is value-sized, and a restart re-reads
+    * the state table — replaying a batch converges to the same counts
+    * only if offsets are tracked, so production callers pass a streaming
+    * checkpoint via the returned frame's own query; here the contract is
+    * the drift VALUE, which the spec pins to the batch operator. Returns
+    * the number of non-empty batches committed. */
   def ksMonitorStream(spark: SparkSession, srcDir: String,
       reference: DataFrame, stateDir: String, logDir: String,
       filesPerTrigger: Int = 2): Long = {
@@ -776,8 +776,6 @@ object StreamingOps {
     q.stop()
   }
 
-  /** Run a streaming frame to completion against the (static) parquet
-    * input via the in-memory sink; returns the materialized result. */
   /** Streaming per-user transition feed — the ONLINE tier of the batch
     * q127 Markov matrix: each user's state is the single latest event
     * `(ts_us, event_id, event_type)` (one record per live user, never a
@@ -847,6 +845,8 @@ object StreamingOps {
         sum(col("v").cast(DecimalType(38, 0))).as("sv"))
   }
 
+  /** Run a streaming frame to completion against the (static) parquet
+    * input via the in-memory sink; returns the materialized result. */
   def runToMemory(spark: SparkSession, frame: DataFrame, name: String,
       outputMode: String = "append"): DataFrame = {
     val q: StreamingQuery = frame.writeStream

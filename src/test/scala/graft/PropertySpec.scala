@@ -190,6 +190,120 @@ class PropertySpec extends SparkTestBase {
     assert(mism == 0L)
   }
 
+  test("every codegen'd custom expression gives the same result interpreted as generated and as its kernel") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.unsafe.types.UTF8String
+    import functions.{HashExprs, StringSimExprs, TextExprs, VectorExprs}
+    val r = new Random(7)
+    def maybe(p: Int)(v: => Any): Any = if (r.nextInt(p) == 0) null else v
+    def arr(el: => Any): Any = maybe(10)(new GenericArrayData(Array.fill(r.nextInt(7))(el)))
+    val edges = Seq(0.0005f, -0.0005f, 0.0015f, -0.0025f, 0f, -0f, 1e-31f)
+    def float: Any = maybe(8)(
+      if (r.nextBoolean()) edges(r.nextInt(edges.size)) else r.nextFloat() * 4 - 2)
+    def long: Any = maybe(8)((r.nextInt(255) - 127).toLong)
+    val words = Seq("a", "b", "ab", "", "é", "dup")
+    def word: UTF8String = UTF8String.fromString(words(r.nextInt(words.size)))
+    def tok: Any = maybe(8)(word)
+    // keys drawn with replacement from six words: duplicate keys are common
+    def map: Any = maybe(10) {
+      val n = r.nextInt(6)
+      new ArrayBasedMapData(new GenericArrayData(Array.fill[Any](n)(word)),
+        new GenericArrayData(Array.fill(n)(maybe(5)((r.nextInt(100) - 50).toLong))))
+    }
+    val names = Seq("martha", "marhta", "dixon", "dicksonx", "", "漢字é", "jellyfish")
+    def str: Any = maybe(10)(UTF8String.fromString(
+      if (r.nextBoolean()) names(r.nextInt(names.size))
+      else Seq.fill(r.nextInt(9))("abcé漢 ".charAt(r.nextInt(6))).mkString))
+    val rows: Seq[InternalRow] = (0 until 300).map(i => new GenericInternalRow(Array[Any](
+      i, arr(float), arr(float), arr(long), arr(long), arr(tok), arr(tok), map, str, str)))
+    val schema = StructType(Seq(StructField("id", IntegerType, nullable = false)) ++
+      Seq("fa", "fb").map(StructField(_, ArrayType(FloatType))) ++
+      Seq("la", "lb").map(StructField(_, ArrayType(LongType))) ++
+      Seq("ta", "tb").map(StructField(_, ArrayType(StringType))) ++
+      Seq(StructField("m", MapType(StringType, LongType)),
+        StructField("sa", StringType), StructField("sb", StringType)))
+    val attrs = schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    // through a shuffle, so the projection is planned over a real scan
+    // (a Project directly on a LocalRelation is folded by the optimizer)
+    val input = org.apache.spark.sql.GraftShims.ofRows(spark, LocalRelation(attrs, rows))
+      .repartition(3)
+    // (name, the input columns it reads, the expression, the direct kernel
+    // call on those inputs when none is NULL)
+    val cases: Seq[(String, Seq[Int], org.apache.spark.sql.Column, InternalRow => Any)] = Seq(
+      ("quantized_dot", Seq(1, 2), VectorExprs.quantized_dot(col("fa"), col("fb")),
+        x => VectorExprs.quantizedDot(x.getArray(1), x.getArray(2))),
+      ("quantized_norm2", Seq(1), VectorExprs.quantized_norm2(col("fa")),
+        x => VectorExprs.quantizedNorm2(x.getArray(1))),
+      ("long_dot", Seq(3, 4), VectorExprs.long_dot(col("la"), col("lb")),
+        x => VectorExprs.longDot(x.getArray(3), x.getArray(4))),
+      ("int8_codes", Seq(1), VectorExprs.int8_codes(col("fa")),
+        x => VectorExprs.int8Codes(x.getArray(1))),
+      ("count_in_array", Seq(5, 6), VectorExprs.count_in_array(col("ta"), col("tb")),
+        x => VectorExprs.countInArray(x.getArray(5), x.getArray(6))),
+      ("map_sum_lookup", Seq(5, 7), VectorExprs.map_sum_lookup(col("ta"), col("m")),
+        x => VectorExprs.mapSumLookup(x.getArray(5), x.getMap(7))),
+      ("cov_pair_products", Seq(1), VectorExprs.cov_pair_products(col("fa")),
+        x => VectorExprs.covPairProducts(x.getArray(1))),
+      ("md5long60", Seq(8), HashExprs.md5long60(col("sa")),
+        x => HashExprs.md5Long60(Array.emptyByteArray, x.getUTF8String(8))),
+      ("md5long60 prefixed", Seq(8), HashExprs.md5long60(col("sa"), "7:"),
+        x => HashExprs.md5Long60("7:".getBytes("UTF-8"), x.getUTF8String(8))),
+      ("md5_signmask16", Seq(8), HashExprs.md5_signmask16(col("sa")),
+        x => HashExprs.md5SignMask16(x.getUTF8String(8))),
+      ("char_stats", Seq(8), TextExprs.char_stats(col("sa")),
+        x => TextExprs.charStats(x.getUTF8String(8))),
+      ("jaro_winkler", Seq(8, 9), StringSimExprs.jaro_winkler(col("sa"), col("sb")),
+        x => StringSimExprs.jaroWinkler(x.getUTF8String(8), x.getUTF8String(9))))
+    def norm(v: Any): Any = v match {
+      case d: ArrayData => d.toLongArray().toList
+      case s: scala.collection.Seq[_] => s.toList
+      case o => o
+    }
+    val expected = rows.map(x => cases.map { case (_, ix, _, kernel) =>
+      if (ix.exists(x.isNullAt)) null else norm(kernel(x)) })
+    def evaluate(): (Seq[Seq[Any]], Seq[WholeStageCodegenExec]) = {
+      val out = input.select(col("id") +: cases.map(_._3): _*)
+      val got = out.collect().sortBy(_.getInt(0)).map(_.toSeq.tail.map(norm)).toSeq
+      // the helper's collect descends into AQE query stages
+      (got, new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec if w.child.isInstanceOf[ProjectExec] => w })
+    }
+    val (generated, stages) = evaluate()
+    assert(stages.size == 1)
+    // the generated source compiles: a failure would otherwise fall back
+    // to interpreted evaluation silently and this comparison would prove nothing
+    CodeGenerator.compile(stages.head.doCodeGen()._2)
+    val interpreted = try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      val (got, noStages) = evaluate()
+      assert(noStages.isEmpty)
+      got
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    for ((name, i) <- cases.map(_._1).zipWithIndex;
+         (mode, got) <- Seq("generated" -> generated, "interpreted" -> interpreted)) {
+      rows.indices.find(r => got(r)(i) != expected(r)(i)).foreach(r =>
+        fail(s"$name $mode vs kernel, row $r: ${got(r)(i)} != ${expected(r)(i)}"))
+    }
+    // the generators reach the edges they exist for
+    assert(expected.map(_(5)).count(v => v != null && v != 0L) > 20) // map lookups hit
+    assert(rows.count(x => !x.isNullAt(7) && {
+      val keys = x.getMap(7).keyArray()
+      keys.toSeq[UTF8String](StringType).distinct.size < keys.numElements()
+    }) > 20)
+    assert(rows.count(x => !x.isNullAt(1) && !x.isNullAt(2) &&
+      x.getArray(1).numElements() != x.getArray(2).numElements()) > 50)
+  }
+
   test("Tables.widen repartitions narrow inputs and passes wide ones through") {
     import spark.implicits._
     // local[4] => defaultParallelism 4: a 1-partition input must widen...

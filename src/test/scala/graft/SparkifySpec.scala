@@ -87,6 +87,24 @@ class SparkifySpec extends SparkTestBase {
       t0.getInt(4) == 11 && t0.getInt(5) == 2018 && t0.getInt(6) == 4)
   }
 
+  test("SQL-string builders equal the DSL forms on the fixture rows") {
+    // the fixture's max-ts tie, empty-string userId, shared song title and
+    // non-NextSong pages, plus a NULL-userId event that neither users
+    // form may join and NULL song/artist ids from unmatched titles
+    val withNullId = logs.union(spark.createDataFrame(
+      Seq(logRow(null, T0, "free", "NextSong", "SongA")).asJava, Schemas.logData))
+    def same(sql: org.apache.spark.sql.DataFrame, dsl: org.apache.spark.sql.DataFrame,
+        rows: Long): Unit = {
+      assert(sql.columns.toSeq == dsl.columns.toSeq && sql.schema == dsl.schema)
+      assert(sql.exceptAll(dsl).isEmpty && dsl.exceptAll(sql).isEmpty)
+      assert(dsl.count() == rows)
+    }
+    same(Pipelines.usersTableSql(spark, withNullId), Pipelines.usersTable(withNullId), 5L)
+    same(Pipelines.songplaysTableSql(spark, withNullId, songData),
+      Pipelines.songplaysTable(withNullId, songData), 8L)
+    same(Pipelines.timeTableSql(spark, withNullId), Pipelines.timeTable(withNullId), 2L)
+  }
+
   test("songs/artists dedup and keep reference column names") {
     val songs = Pipelines.songsTable(songData.union(songData))
     assert(songs.count() == 3)
