@@ -5,13 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** Shared text/hash column builders for the LLM-data-pipeline operators.
   *
-  * Everything here is a codegen'd Spark built-in composition (no UDFs) and
-  * has an exact DuckDB equivalent, so dedup/similarity results hash-match
-  * the oracle:
+  * Everything here is a codegen'd Spark built-in composition (no UDFs),
+  * and each primitive has its DuckDB twin beside it (`normSql`,
+  * `tokensSql`, `wordsSql`, `shinglesSql`, `hash60Sql`,
+  * `hash60SeededSql`). Every oracle string composes those twins, so the
+  * rule for how DuckDB mirrors the engine's tokenization, k-grams and
+  * hashes lives here and nowhere else:
   *   - md5 produces identical lowercase hex in both engines;
   *   - the 60-bit integer hash is `conv(substr(md5(x),1,15),16,10)` here and
   *     `CAST('0x' || substr(md5(x),1,15) AS BIGINT)` in DuckDB;
-  *   - normalization is the same trim/lower/collapse-whitespace on both.
+  *   - normalization is the same trim/lower/collapse-whitespace on both;
+  *   - k-grams are `list_zip` of k slices of one list, so DuckDB's cost
+  *     stays linear in document length. A lateral `FROM t, UNNEST(...)`
+  *     over a per-row list, or a lambda that captures one, copies the
+  *     whole list into every emitted element: quadratic in DuckDB 1.0.
   *
   * At 100 TB one would swap md5 for xxhash64 (cheaper, also built-in); md5
   * is kept because cross-engine reproducibility is part of the contract.
@@ -22,8 +29,20 @@ object TextFns {
   def normText(c: Column): Column =
     regexp_replace(trim(lower(c)), "\\s+", " ")
 
+  /** DuckDB twin of [[normText]] over the SQL expression `x`. */
+  def normSql(x: String): String =
+    s"regexp_replace(trim(lower($x)), '\\s+', ' ', 'g')"
+
   /** Whitespace tokens of the normalized text. */
   def tokens(c: Column): Column = split(normText(c), " ")
+
+  /** DuckDB twin of [[tokens]]. */
+  def tokensSql(x: String): String = s"string_split(${normSql(x)}, ' ')"
+
+  /** The non-empty tokens: DuckDB twin of `filter(tokens(c), _ =!= "")`
+    * (an empty or blank text has the one token `""`). */
+  def wordsSql(x: String): String =
+    s"list_filter(${tokensSql(x)}, x -> x <> '')"
 
   /** INGEST-CAP CONTRACT (r8). The per-document buffers inside the
     * dedup/scrub pipelines (q35's df-sorted shingle sets, q165's kept-
@@ -76,10 +95,17 @@ object TextFns {
     * `conv(substring(md5(c),1,15),16,10)`, spec-asserted; ~3× faster). */
   def hash60(c: Column): Column = HashExprs.md5long60(c)
 
+  /** DuckDB twin of [[hash60]]. */
+  def hash60Sql(x: String): String =
+    s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
+
   /** Seeded variant: independent-ish hash family for minhash permutations.
     * The seed is hashed as a digest prefix — no per-row string concat. */
   def hash60Seeded(seed: Int, c: Column): Column =
     HashExprs.md5long60(c, s"$seed:")
+
+  /** DuckDB twin of [[hash60Seeded]]. */
+  def hash60SeededSql(seed: Int, x: String): String = hash60Sql(s"'$seed:' || $x")
 
   /** Word n-gram shingles (array of strings); empty array when there are
     * fewer than n tokens. */
@@ -88,4 +114,22 @@ object TextFns {
       transform(sequence(lit(0), size(toks) - n), i =>
         concat_ws(" ", (0 until n).map(k => element_at(toks, i + k + 1)): _*)))
       .otherwise(array())
+
+  /** DuckDB twin of [[shingles]]: the k-grams of the list column `list`,
+    * each its elements joined by `sep`; `[]` below k elements. With
+    * `sep = ""` over `string_split(x, '')` these are x's character k-grams
+    * (`substr(x, i, k)` for every i). */
+  def shinglesSql(list: String, k: Int, sep: String = " "): String = {
+    val join = if (sep.isEmpty) " || " else s" || '$sep' || "
+    s"list_transform(${windowsSql(list, k)}, " +
+      s"g -> ${(1 to k).map(i => s"g[$i]").mkString(join)})"
+  }
+
+  /** The k-windows of the list column `list` as one list of k-field
+    * structs (`g[1]` … `g[k]`): a `list_zip` of k slices, truncated to the
+    * shortest, so `[]` below k elements and for a NULL list. A character
+    * window is the same over `string_split(x, '')`. `list` is spelled k
+    * times, so pass a column, not an expression to evaluate. */
+  def windowsSql(list: String, k: Int): String =
+    s"list_zip($list, ${(2 to k).map(i => s"$list[$i:], ").mkString}true)"
 }

@@ -47,8 +47,8 @@ object Multimodal {
     * boundary, so every downstream `mapPartitions` decode lambda can
     * assume non-null bytes (they take primitive `Array[Byte]` and would
     * NPE otherwise). Every qm oracle mirrors with
-    * `WHERE text IS NOT NULL` (for the generate_series-fabric ones the
-    * filter is already implicit — series over NULL length is empty). */
+    * `WHERE text IS NOT NULL` (or a `text <> ''` / `length(text)`
+    * filter, false on NULL). */
   def asMediaTable(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull).select(
       col("doc_id"),
@@ -126,9 +126,9 @@ object Multimodal {
 
   val qm1Sql: String =
     """WITH b AS (
-      |  SELECT doc_id, unicode(substr(text, i, 1)) // 32 AS bucket
-      |  FROM documents, UNNEST(generate_series(1, length(text))) AS g(i)
-      |  WHERE text IS NOT NULL),
+      |  SELECT doc_id, unicode(c) // 32 AS bucket
+      |  FROM (SELECT doc_id, UNNEST(string_split(text, '')) AS c
+      |        FROM documents WHERE text <> '')),
       |h AS (SELECT doc_id, bucket, count(*) AS cnt FROM b GROUP BY 1, 2),
       |grid AS (
       |  SELECT doc_id, length(text) AS n, g.pos
@@ -150,9 +150,9 @@ object Multimodal {
   val qm2Sql: String =
     """SELECT doc_id, CAST(f AS BIGINT) AS frame_no,
       |  md5(substr(text, CAST(f AS INT) * 32 + 1, 32)) AS frame_md5
-      |FROM documents,
-      |  UNNEST(generate_series(0, length(text) // 32 - 1, 4)) AS g(f)
-      |WHERE text IS NOT NULL""".stripMargin
+      |FROM (SELECT doc_id, text,
+      |        UNNEST(generate_series(0, length(text) // 32 - 1, 4)) AS f
+      |      FROM documents WHERE text IS NOT NULL)""".stripMargin
 
   /** Keyframe-hash near-dup detection over the media column — the video
     * dedup shape: two media items are near-dup candidates when ≥ 2 of
@@ -202,9 +202,9 @@ object Multimodal {
     """WITH fr AS (
       |  SELECT DISTINCT doc_id,
       |    md5(substr(text, CAST(f AS INT) * 32 + 1, 32)) AS fmd5
-      |  FROM documents,
-      |    UNNEST(generate_series(0, length(text) // 32 - 1, 4)) AS g(f)
-      |  WHERE text IS NOT NULL),
+      |  FROM (SELECT doc_id, text,
+      |          UNNEST(generate_series(0, length(text) // 32 - 1, 4)) AS f
+      |        FROM documents WHERE text IS NOT NULL)),
       |rare AS (
       |  SELECT fmd5 FROM fr GROUP BY fmd5
       |  HAVING count(*) BETWEEN 2 AND 20)
@@ -271,10 +271,12 @@ object Multimodal {
 
   val qm4Sql: String =
     """WITH ch AS (
-      |  SELECT doc_id, (i - 1) // 32 AS f, unicode(substr(text, i, 1)) AS v
-      |  FROM documents,
-      |    UNNEST(generate_series(1, (length(text) // 32) * 32)) AS g(i)
-      |  WHERE text IS NOT NULL),
+      |  SELECT doc_id, (i - 1) // 32 AS f, unicode(c) AS v
+      |  FROM (SELECT doc_id, len(cs) AS n, UNNEST(cs) AS c,
+      |          generate_subscripts(cs, 1) AS i
+      |        FROM (SELECT doc_id, string_split(text, '') AS cs
+      |              FROM documents WHERE text IS NOT NULL))
+      |  WHERE i <= (n // 32) * 32),
       |en AS (
       |  SELECT doc_id, f, CAST(sum(v) AS BIGINT) AS energy
       |  FROM ch GROUP BY 1, 2),
@@ -348,9 +350,9 @@ object Multimodal {
       |  SELECT source,
       |    md5(substring(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS h,
       |    least(64, length(text) - (i - 1) * 64) AS len
-      |  FROM documents,
-      |    UNNEST(generate_series(1, (length(text) - 1) // 64 + 1)) AS u(i)
-      |  WHERE length(text) > 0),
+      |  FROM (SELECT source, text,
+      |          UNNEST(generate_series(1, (length(text) - 1) // 64 + 1)) AS i
+      |        FROM documents WHERE length(text) > 0)),
       |g AS (
       |  SELECT source, h, count(*) AS c, max(len) AS len
       |  FROM ch GROUP BY 1, 2)
@@ -448,10 +450,12 @@ object Multimodal {
 
   val qm6Sql: String =
     """WITH ch AS (
-      |  SELECT doc_id, (i - 1) // 64 AS f, substring(text, CAST(i AS INT), 1) AS c
-      |  FROM documents,
-      |    UNNEST(generate_series(1, (length(text) // 64) * 64)) AS g(i)
-      |  WHERE length(text) >= 64),
+      |  SELECT doc_id, (i - 1) // 64 AS f, c
+      |  FROM (SELECT doc_id, len(cs) AS n, UNNEST(cs) AS c,
+      |          generate_subscripts(cs, 1) AS i
+      |        FROM (SELECT doc_id, string_split(text, '') AS cs
+      |              FROM documents WHERE length(text) >= 64))
+      |  WHERE i <= (n // 64) * 64),
       |d AS (
       |  SELECT doc_id, f, CAST(count(DISTINCT c) AS BIGINT) AS nd
       |  FROM ch GROUP BY 1, 2)

@@ -25,10 +25,6 @@ object CurationOps {
   def redact(c: Column): Column =
     regexp_replace(regexp_replace(c, emailRe, "<EMAIL>"), phoneRe, "<PHONE>")
 
-  /** DuckDB token-array snippet shared by the oracles below (identical
-    * normalization to [[graft.functions.TextFns.normText]]). */
-  private val toksSql =
-    "string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')"
 
   /** PII redaction: e-mail and phone patterns scrubbed with placeholder
     * tags, plus pre-redaction match counts (the audit signal a curation
@@ -83,12 +79,9 @@ object CurationOps {
           / size(col("g3"))).as("dup3_frac"))
 
   val q68Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
        |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
-       |g AS (SELECT doc_id, n, toks,
-       |  list_transform(range(1, n - 1),
-       |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS g3
-       |  FROM f)
+       |g AS (SELECT doc_id, n, toks, ${shinglesSql("toks", 3)} AS g3 FROM f)
        |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
        |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
        |  CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE) / len(g3) AS dup3_frac
@@ -181,30 +174,31 @@ object CurationOps {
     chunkDocs(Tables.documents(s, dir), maxTokens = 40)
 
   val q235Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       |n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM t),
-       |c AS (SELECT doc_id, toks, n, (n + 39) // 40 AS n_chunks,
-       |        CAST(u.i AS BIGINT) AS chunk
-       |      FROM n, UNNEST(range(0, (n + 39) // 40)) AS u(i))
-       |SELECT doc_id, chunk, CAST(n_chunks AS BIGINT) AS n_chunks,
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
+       |tp AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n,
+       |        UNNEST(toks) AS tok, generate_subscripts(toks, 1) AS p FROM t),
+       |c AS (SELECT doc_id, n, CAST((p - 1) // 40 AS BIGINT) AS chunk,
+       |        string_agg(tok, ' ' ORDER BY p) AS chunk_text
+       |      FROM tp GROUP BY doc_id, n, chunk)
+       |SELECT doc_id, chunk, CAST((n + 39) // 40 AS BIGINT) AS n_chunks,
        |  CAST(least(40, n - chunk * 40) AS BIGINT) AS n_chunk_tokens,
-       |  doc_id * 65536 + chunk AS chunk_key,
-       |  array_to_string(toks[chunk * 40 + 1 : least(chunk * 40 + 40, n)], ' ')
-       |    AS chunk_text
+       |  doc_id * 65536 + chunk AS chunk_key, chunk_text
        |FROM c""".stripMargin
 
   val q69Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents
        |  WHERE text IS NOT NULL),
-       |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-       |c AS (SELECT doc_id, toks, n, CAST(u.i AS BIGINT) AS chunk_id
-       |      FROM n, UNNEST(range(0,
-       |        1 + CAST(floor(greatest(n - 64 + 48 - 1, 0) / 48) AS BIGINT))) AS u(i))
-       |SELECT doc_id, chunk_id, CAST(n AS BIGINT) AS n_tokens,
-       |  CAST(least(64, n - chunk_id * 48) AS BIGINT) AS n_chunk_tokens,
-       |  array_to_string(toks[chunk_id * 48 + 1 : least(chunk_id * 48 + 64, n)], ' ')
-       |    AS chunk_text
-       |FROM c""".stripMargin
+       |tp AS (SELECT doc_id, len(toks) AS n,
+       |        UNNEST(toks) AS tok, generate_subscripts(toks, 1) AS p FROM t),
+       |c AS (SELECT doc_id, n, tok, p, CAST((p - 1) // 48 - d AS BIGINT) AS cid
+       |      FROM tp, UNNEST([0, 1]) AS u(d))
+       |SELECT doc_id, cid AS chunk_id, CAST(n AS BIGINT) AS n_tokens,
+       |  CAST(least(64, n - cid * 48) AS BIGINT) AS n_chunk_tokens,
+       |  string_agg(tok, ' ' ORDER BY p) AS chunk_text
+       |FROM c
+       |WHERE cid >= 0 AND p <= cid * 48 + 64
+       |  AND cid < 1 + CAST(floor(greatest(n - 64 + 48 - 1, 0) / 48) AS BIGINT)
+       |GROUP BY doc_id, n, cid""".stripMargin
 
   /** Benchmark-contamination detection: documents sharing ≥ 3 distinct
     * word 3-grams with any doc of a (deterministically chosen ~5%)
@@ -446,14 +440,11 @@ object CurationOps {
   }
 
   val q70Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
        |sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-       |  FROM f, UNNEST(range(1, n - 1)) AS u(i)),
+       |  SELECT DISTINCT doc_id, UNNEST(${shinglesSql("toks", 3)}) AS g FROM t),
        |b AS (SELECT doc_id AS bench_id, g FROM sh
-       |      WHERE CAST('0x' || substr(md5('bench:' || doc_id), 1, 15) AS BIGINT)
+       |      WHERE ${hash60Sql("'bench:' || doc_id")}
        |        % 100 < 5)
        |SELECT sh.doc_id, b.bench_id, CAST(count(*) AS BIGINT) AS n_shared
        |FROM sh JOIN b ON sh.g = b.g AND sh.doc_id <> b.bench_id
@@ -512,14 +503,14 @@ object CurationOps {
     * initializing (object-cycle NPE). */
   lazy val q229Sql: String =
     s"""WITH toks AS (
-       |  SELECT u.w FROM (SELECT $toksSql AS tk FROM documents) t,
-       |    UNNEST(tk) AS u(w) WHERE u.w <> ''),
+       |  SELECT w FROM (SELECT UNNEST(${tokensSql("text")}) AS w FROM documents)
+       |  WHERE w <> ''),
        |meta AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
        |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
        |    CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
        |    CAST(count(DISTINCT md5(
-       |      regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))) AS BIGINT)
+       |      ${normSql("text")})) AS BIGINT)
        |      AS n_fp
        |  FROM documents)
        |SELECT 'n_docs' AS metric, CAST(n_docs AS DOUBLE) AS value FROM meta
@@ -639,9 +630,10 @@ object CurationOps {
   }
 
   val q72Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       |terms AS (SELECT doc_id, u.term FROM t, UNNEST(toks) AS u(term)
-       |          WHERE u.term <> ''),
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
+       |terms AS (SELECT doc_id, term FROM (
+       |            SELECT doc_id, UNNEST(toks) AS term FROM t)
+       |          WHERE term <> ''),
        |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
        |dfreq AS (SELECT term, count(*) AS doc_freq FROM tf GROUP BY 1),
        |nd AS (SELECT count(*) AS n_docs FROM documents),
@@ -660,15 +652,12 @@ object CurationOps {
   /** Z-order (Morton) clustering key: 10+10-bit interleave of two key
     * dimensions — the multi-dimensional sort key a lake writer clusters
     * files by so min/max stats prune on EITHER dimension. Pure bitwise
-    * codegen arithmetic (20 shift-and-mask terms, no UDF, no shuffle);
+    * codegen arithmetic (the lake writer's [[graft.sources.Lake.morton]]
+    * magic-mask interleave, no UDF, no shuffle);
     * `zbucket` is the top 4 bits, i.e. the coarse file assignment. */
   def q73Zorder(s: SparkSession, dir: String): DataFrame = {
-    val x = pmod(col("o_custkey"), lit(1024L))
-    val y = pmod(col("o_orderkey"), lit(1024L))
-    val z: Column = (0 until 10).map { i =>
-      shiftleft(shiftright(x, i).bitwiseAND(lit(1L)), 2 * i) +
-        shiftleft(shiftright(y, i).bitwiseAND(lit(1L)), 2 * i + 1)
-    }.reduce(_ + _)
+    val z = graft.sources.Lake.morton(pmod(col("o_custkey"), lit(1024L)),
+      pmod(col("o_orderkey"), lit(1024L)))
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), z.as("zval"))
       .select(col("o_orderkey"), col("o_custkey"), col("zval"),
@@ -702,9 +691,9 @@ object CurationOps {
   }
 
   val q74Sql: String =
-    """SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
+    s"""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
       |FROM events
-      |WHERE CAST('0x' || substr(md5('strat:' || event_id), 1, 15) AS BIGINT) % 1000
+      |WHERE ${hash60Sql("'strat:' || event_id")} % 1000
       |  < CASE event_type WHEN 'view' THEN 50 WHEN 'purchase' THEN 400 ELSE 150 END""".stripMargin
 
   /** Exact-k per-stratum deterministic sample: the fixed-BUDGET
@@ -732,12 +721,12 @@ object CurationOps {
   }
 
   val q124Sql: String =
-    """SELECT doc_id, lang, smp_key FROM (
+    s"""SELECT doc_id, lang, smp_key FROM (
       |  SELECT doc_id, lang,
-      |    CAST('0x' || substr(md5('smp:' || doc_id), 1, 15) AS BIGINT)
+      |    ${hash60Sql("'smp:' || doc_id")}
       |      AS smp_key,
       |    row_number() OVER (PARTITION BY lang
-      |      ORDER BY CAST('0x' || substr(md5('smp:' || doc_id), 1, 15) AS BIGINT),
+      |      ORDER BY ${hash60Sql("'smp:' || doc_id")},
       |               doc_id) AS rn
       |  FROM documents)
       |WHERE rn <= 25""".stripMargin
@@ -768,12 +757,10 @@ object CurationOps {
       .select(col("doc_id"), col("n_tokens"), col("skey"))
 
   val q125Sql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id,
-      |    CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      x -> x <> '')) AS BIGINT) AS n_tokens,
-      |    CAST('0x' || substr(md5('sps:' || doc_id), 1, 15) AS BIGINT) AS h
+      |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tokens,
+      |    ${hash60Sql("'sps:' || doc_id")} AS h
       |  FROM documents)
       |SELECT doc_id, n_tokens, CAST(h AS DOUBLE) / n_tokens AS skey
       |FROM d WHERE n_tokens > 0
@@ -847,7 +834,7 @@ object CurationOps {
   val q87Sql: String =
     s"""WITH RECURSIVE toks AS (
        |  SELECT doc_id, doc_id % 4 AS shard,
-       |    least(CAST(len($toksSql) AS BIGINT), 512) AS n_tok
+       |    least(CAST(len(${tokensSql("text")}) AS BIGINT), 512) AS n_tok
        |  FROM documents),
        |ordered AS (
        |  SELECT doc_id, shard, n_tok,
@@ -896,7 +883,7 @@ object CurationOps {
   }
 
   val q88Sql: String =
-    """WITH bysrc AS (
+    s"""WITH bysrc AS (
       |  SELECT lang,
       |    CAST(floor(sqrt(CAST(count(*) AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS isq
       |  FROM documents GROUP BY lang),
@@ -907,7 +894,7 @@ object CurationOps {
       |  FROM bysrc)
       |SELECT d.doc_id, d.lang, r.rate_pm
       |FROM documents d JOIN rates r ON d.lang = r.lang
-      |WHERE CAST('0x' || substr(md5('mix:' || d.doc_id), 1, 15) AS BIGINT) % 1000
+      |WHERE ${hash60Sql("'mix:' || d.doc_id")} % 1000
       |  < r.rate_pm""".stripMargin
 
   /** Effective sample size of [[q88DomainMixture]]'s temperature
@@ -1008,10 +995,10 @@ object CurationOps {
     globalShuffleIndex(Tables.documents(s, dir).select(col("doc_id")), "shuf:")
 
   val q90Sql: String =
-    """SELECT doc_id,
-      |  CAST('0x' || substr(md5('shuf:' || doc_id), 1, 15) AS BIGINT) AS k,
+    s"""SELECT doc_id,
+      |  ${hash60Sql("'shuf:' || doc_id")} AS k,
       |  CAST(row_number() OVER (
-      |    ORDER BY CAST('0x' || substr(md5('shuf:' || doc_id), 1, 15) AS BIGINT),
+      |    ORDER BY ${hash60Sql("'shuf:' || doc_id")},
       |      doc_id) - 1 AS BIGINT) AS pos
       |FROM documents""".stripMargin
 
@@ -1035,11 +1022,11 @@ object CurationOps {
   }
 
   val q96Sql: String =
-    """SELECT doc_id, source, hk FROM (
+    s"""SELECT doc_id, source, hk FROM (
       |  SELECT doc_id, source, hk,
       |    row_number() OVER (PARTITION BY source ORDER BY hk, doc_id) AS rn
       |  FROM (SELECT doc_id, source,
-      |          CAST('0x' || substr(md5('cap:' || doc_id), 1, 15) AS BIGINT) AS hk
+      |          ${hash60Sql("'cap:' || doc_id")} AS hk
       |        FROM documents))
       |WHERE rn <= 64""".stripMargin
 
@@ -1108,11 +1095,9 @@ object CurationOps {
   }
 
   val q108Sql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    least(CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      t -> t <> '')) AS BIGINT) // 20, 9) AS bucket,
+      |    least(CAST(len(${wordsSql("text")}) AS BIGINT) // 20, 9) AS bucket,
       |    doc_id % 2 AS side
       |  FROM documents),
       |counts AS (
@@ -1201,13 +1186,11 @@ object CurationOps {
 
   val q130Sql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id,
-       |    CAST('0x' || substr(md5('bench:' || doc_id), 1, 15) AS BIGINT)
-       |      % 100 < 5 AS tgt,
-       |    u.term
-       |  FROM (SELECT doc_id, $toksSql AS tk FROM documents) t,
-       |    UNNEST(tk) AS u(term)
-       |  WHERE u.term <> ''),
+       |  SELECT doc_id, tgt, term FROM (
+       |    SELECT doc_id, ${hash60Sql("'bench:' || doc_id")} % 100 < 5 AS tgt,
+       |      UNNEST(${tokensSql("text")}) AS term
+       |    FROM documents)
+       |  WHERE term <> ''),
        |c AS (
        |  SELECT term,
        |    CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
@@ -1266,7 +1249,7 @@ object CurationOps {
 
   val q144Sql: String =
     s"""WITH t AS (
-       |  SELECT len(list_filter($toksSql, x -> x <> '')) AS n_tok
+       |  SELECT len(${wordsSql("text")}) AS n_tok
        |  FROM documents),
        |b AS (
        |  SELECT n_tok, CAST(budget AS BIGINT) AS budget
@@ -1324,7 +1307,7 @@ object CurationOps {
   val q153Sql: String =
     s"""WITH d AS (
        |  SELECT source, doc_id,
-       |    CAST(len(list_filter($toksSql, x -> x <> '')) AS BIGINT) AS n_tok
+       |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tok
        |  FROM documents),
        |c AS (
        |  SELECT source, doc_id, n_tok,
@@ -1382,7 +1365,7 @@ object CurationOps {
   val q157Sql: String =
     s"""WITH d AS (
        |  SELECT source,
-       |    CAST(len(list_filter($toksSql, x -> x <> '')) AS BIGINT) AS x
+       |    CAST(len(${wordsSql("text")}) AS BIGINT) AS x
        |  FROM documents),
        |m AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS n_h,
@@ -1564,9 +1547,9 @@ object CurationOps {
   }
 
   val q174Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT coalesce(CAST(len(regexp_extract_all(
-      |      regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
+      |      ${normSql("text")},
       |      '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT), 0) AS t
       |  FROM documents),
       |hist AS MATERIALIZED (
@@ -1744,11 +1727,9 @@ object CurationOps {
           .as("curriculum_pos"))
 
   val q115Sql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    least(CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      t -> t <> '')) AS BIGINT) // 20, 9) AS bucket
+      |    least(CAST(len(${wordsSql("text")}) AS BIGINT) // 20, 9) AS bucket
       |  FROM documents)
       |SELECT doc_id, bucket,
       |  CAST(row_number() OVER (PARTITION BY bucket ORDER BY doc_id) - 1
@@ -1793,12 +1774,10 @@ object CurationOps {
       .select(col("doc_id"), col("k"), col("n_tokens"), col("cum_tokens"))
 
   val q116Sql: String =
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT doc_id,
-      |    CAST('0x' || substr(md5('shuf:' || doc_id), 1, 15) AS BIGINT) AS k,
-      |    CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      t -> t <> '')) AS BIGINT) AS n_tokens
+      |    ${hash60Sql("'shuf:' || doc_id")} AS k,
+      |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tokens
       |  FROM documents),
       |c AS (
       |  SELECT doc_id, k, n_tokens,
@@ -1846,12 +1825,10 @@ object CurationOps {
         col("cum_tokens"))
 
   val q120Sql: String =
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT doc_id, lang,
-      |    CAST('0x' || substr(md5('mixshuf:' || doc_id), 1, 15) AS BIGINT) AS k,
-      |    CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      t -> t <> '')) AS BIGINT) AS n_tokens
+      |    ${hash60Sql("'mixshuf:' || doc_id")} AS k,
+      |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tokens
       |  FROM documents),
       |c AS (
       |  SELECT doc_id, lang, k, n_tokens,
@@ -1862,11 +1839,9 @@ object CurationOps {
       |FROM c WHERE cum_tokens - n_tokens < 2000""".stripMargin
 
   val q110Sql: String =
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT doc_id,
-      |    CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      t -> t <> '')) AS BIGINT) AS n_tokens
+      |    CAST(len(${wordsSql("text")}) AS BIGINT) AS n_tokens
       |  FROM documents),
       |c AS (
       |  SELECT doc_id, n_tokens,

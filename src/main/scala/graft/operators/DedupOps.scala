@@ -416,8 +416,8 @@ object DedupOps {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   val q34Sql: String =
-    """SELECT md5(norm) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
-      |FROM (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+    s"""SELECT md5(norm) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
+      |FROM (SELECT doc_id, ${normSql("text")} AS norm
       |      FROM documents)
       |GROUP BY md5(norm)""".stripMargin
 
@@ -620,13 +620,9 @@ object DedupOps {
   }
 
   val q35Sql: String =
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-      |  FROM (SELECT doc_id,
-      |          string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS w
-      |        FROM documents),
-      |       UNNEST(generate_series(1, len(w) - 2)) AS g(i)
-      |  WHERE len(w) >= 3),
+    s"""WITH sh AS (
+      |  SELECT DISTINCT doc_id, UNNEST(${shinglesSql("w", 3)}) AS sh
+      |  FROM (SELECT doc_id, ${tokensSql("text")} AS w FROM documents)),
       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
       |inter AS (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
@@ -684,21 +680,17 @@ object DedupOps {
   }
 
   val q36Sql: String =
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-      |  FROM (SELECT doc_id,
-      |          string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS w
-      |        FROM documents),
-      |       UNNEST(generate_series(1, len(w) - 2)) AS g(i)
-      |  WHERE len(w) >= 3),
+    s"""WITH sh AS (
+      |  SELECT DISTINCT doc_id, UNNEST(${shinglesSql("w", 3)}) AS sh
+      |  FROM (SELECT doc_id, ${tokensSql("text")} AS w FROM documents)),
       |sig AS (
       |  SELECT doc_id,
-      |    min(CAST('0x' || substr(md5('1:' || sh), 1, 15) AS BIGINT)) AS m1,
-      |    min(CAST('0x' || substr(md5('2:' || sh), 1, 15) AS BIGINT)) AS m2,
-      |    min(CAST('0x' || substr(md5('3:' || sh), 1, 15) AS BIGINT)) AS m3,
-      |    min(CAST('0x' || substr(md5('4:' || sh), 1, 15) AS BIGINT)) AS m4,
-      |    min(CAST('0x' || substr(md5('5:' || sh), 1, 15) AS BIGINT)) AS m5,
-      |    min(CAST('0x' || substr(md5('6:' || sh), 1, 15) AS BIGINT)) AS m6
+      |    min(${hash60SeededSql(1, "sh")}) AS m1,
+      |    min(${hash60SeededSql(2, "sh")}) AS m2,
+      |    min(${hash60SeededSql(3, "sh")}) AS m3,
+      |    min(${hash60SeededSql(4, "sh")}) AS m4,
+      |    min(${hash60SeededSql(5, "sh")}) AS m5,
+      |    min(${hash60SeededSql(6, "sh")}) AS m6
       |  FROM sh GROUP BY doc_id),
       |banded AS (
       |  SELECT doc_id, 1 AS band, md5(m1 || ',' || m2 || ',' || m3) AS key FROM sig
@@ -794,14 +786,14 @@ object DedupOps {
   }
 
   val q37Sql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')) AS tok
-      |  FROM documents),
+    s"""WITH toks AS (
+      |  SELECT doc_id, md5(tok) AS h
+      |  FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM documents)),
       |sim AS (
       |  SELECT doc_id,
       |""".stripMargin +
       (1 to 16).map { b =>
-        s"    sum(CASE WHEN CAST('0x' || substr(md5(tok), $b, 1) AS BIGINT) >= 8 THEN 1 ELSE -1 END)"
+        s"    sum(CASE WHEN substr(h, $b, 1) >= '8' THEN 1 ELSE -1 END)"
       }.zipWithIndex.map { case (v, i) =>
         s"(CASE WHEN $v > 0 THEN ${1L << i} ELSE 0 END)"
       }.mkString("", " +\n", s" AS simhash\n") +
@@ -911,10 +903,10 @@ object DedupOps {
       |    list_sum(list_transform(q, x -> x * x)) AS n2
       |  FROM q WHERE n2 > 0)
       |SELECT a.label AS label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-      |  CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * b.q[i])) AS DOUBLE)
+      |  CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS DOUBLE)
       |    / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos
       |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-      |WHERE CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * b.q[i])) AS DOUBLE)
+      |WHERE CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS DOUBLE)
       |    / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) >= 0.4""".stripMargin
 
   /** Label-free embedding near-dup: LSH hyperplane buckets (no cluster
@@ -1065,7 +1057,7 @@ object DedupOps {
     val planes = SimilarityOps.planes
     def keyExpr(bnd: Int, qcol: String) = (0 until 4).map { p =>
       val lits = planes(bnd * 4 + p).mkString("[", ", ", "]")
-      s"(CASE WHEN list_sum(list_transform(range(1, 65), i -> $qcol[i] * ($lits)[i])) > 0 THEN ${1L << p} ELSE 0 END)"
+      s"(CASE WHEN list_sum(list_transform(list_zip($qcol, $lits), p -> p[1] * p[2])) > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
     s"""WITH qv AS (
        |  SELECT vec_id,
@@ -1077,11 +1069,11 @@ object DedupOps {
        |  UNION ALL
        |  SELECT vec_id, q, n2, 1 AS band, ${keyExpr(1, "q")} AS key FROM n)
        |SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * b.q[i])) AS DOUBLE)
+       |  CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS DOUBLE)
        |    / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos
        |FROM banded a JOIN banded b
        |  ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id
-       |WHERE CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * b.q[i])) AS DOUBLE)
+       |WHERE CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS DOUBLE)
        |    / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) >= 0.4""".stripMargin
   }
 
@@ -1353,8 +1345,7 @@ object DedupOps {
        |)
        |SELECT d.doc_id,
        |  coalesce(c.cluster_id, d.doc_id) AS cluster_id,
-       |  CASE WHEN CAST('0x' || substr(md5('split:'
-       |      || coalesce(c.cluster_id, d.doc_id)), 1, 15) AS BIGINT) % 100 < 90
+       |  CASE WHEN ${hash60Sql("'split:' || coalesce(c.cluster_id, d.doc_id)")} % 100 < 90
        |    THEN 'train' ELSE 'eval' END AS split
        |FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id""".stripMargin
 
@@ -1759,11 +1750,11 @@ object DedupOps {
     sortedNeighborhoodPairs(docsNorm(s, dir), prefixLen = 3, w = 2)
 
   val q100Sql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT doc_id, norm, substr(norm, 1, 3) AS blk,
       |    list_distinct(string_split(norm, ' ')) AS tset
       |  FROM (SELECT doc_id,
-      |          regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+      |          ${normSql("text")} AS norm
       |        FROM documents)),
       |nb AS (
       |  SELECT doc_id, tset,
@@ -1823,10 +1814,10 @@ object DedupOps {
           lit(10L)) < 7L).as("is_old")))
 
   val q140Sql: String =
-    """WITH n AS (
+    s"""WITH n AS (
       |  SELECT doc_id,
-      |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
-      |    CAST('0x' || substr(md5('old:' || doc_id), 1, 15) AS BIGINT)
+      |    md5(${normSql("text")}) AS fp,
+      |    ${hash60Sql("'old:' || doc_id")}
       |      % 10 < 7 AS is_old
       |  FROM documents),
       |corpus AS (SELECT DISTINCT fp FROM n WHERE is_old),
@@ -1919,10 +1910,8 @@ object DedupOps {
     headTailPairs(Tables.documents(s, dir), 3)
 
   val q142Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '') AS toks
+    s"""WITH t AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS toks
       |  FROM documents),
       |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
       |h AS (SELECT doc_id, array_to_string(toks[1:3], ' ') AS head,
@@ -2005,13 +1994,14 @@ object DedupOps {
   }
 
   val q145Sql: String =
-    """WITH nd AS (
-      |  SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+    s"""WITH nd AS (
+      |  SELECT doc_id, ${normSql("text")} AS norm
       |  FROM documents),
       |grams AS (
-      |  SELECT doc_id, i,
-      |    CAST('0x' || substr(md5(substr(norm, i, 8)), 1, 15) AS BIGINT) AS h
-      |  FROM nd, UNNEST(generate_series(1, length(norm) - 7)) AS g(i)),
+      |  SELECT doc_id, generate_subscripts(gs, 1) AS i,
+      |    ${hash60Sql("UNNEST(gs)")} AS h
+      |  FROM (SELECT doc_id, ${shinglesSql("cs", 8, "")} AS gs
+      |        FROM (SELECT doc_id, string_split(norm, '') AS cs FROM nd))),
       |wins AS (
       |  SELECT doc_id,
       |    min(h) OVER (PARTITION BY doc_id ORDER BY i
@@ -2176,9 +2166,8 @@ object DedupOps {
   }
 
   val q203Sql: String =
-    """WITH toks AS (
-      |  SELECT unnest(string_split(
-      |      regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')) AS w
+    s"""WITH toks AS (
+      |  SELECT unnest(${tokensSql("text")}) AS w
       |  FROM documents
       |  UNION ALL
       |  SELECT unnest(string_split(lower(p_name), ' ')) FROM part),
@@ -2317,10 +2306,8 @@ object DedupOps {
   }
 
   val q191Sql: String =
-    """WITH fp AS (
-      |  SELECT CAST('0x' || substr(md5(
-      |      regexp_replace(trim(lower(text)), '\s+', ' ', 'g')), 1, 15)
-      |      AS BIGINT) AS f,
+    s"""WITH fp AS (
+      |  SELECT ${hash60Sql(normSql("text"))} AS f,
       |    max(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS a,
       |    max(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS b
       |  FROM documents WHERE source IN ('src0', 'src1') GROUP BY 1)

@@ -34,7 +34,7 @@ object MiscOps {
         forall(col("toks"), t => length(t) < 20).as("all_short"))
 
   val q60Sql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       |  len(toks) AS n_tokens,
       |  len(list_filter(toks, t -> length(t) > 4)) AS n_long_tokens,
       |  CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS total_chars,
@@ -42,7 +42,7 @@ object MiscOps {
       |  list_contains(toks, 'data') AS has_data,
       |  len(list_filter(toks, t -> length(t) >= 20)) = 0 AS all_short
       |FROM (SELECT doc_id,
-      |        string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS toks
+      |        ${tokensSql("text")} AS toks
       |      FROM documents WHERE text IS NOT NULL)""".stripMargin
 
   /** Conditional/selective aggregate battery: count_if, bool_and/bool_or,
@@ -95,9 +95,9 @@ object MiscOps {
   }
 
   val q84Sql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |    list_distinct(string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')) AS u,
+      |    list_distinct(${tokensSql("text")}) AS u,
       |    ['the', 'a', 'and', 'of', 'value', 'data'] AS stop
       |  FROM documents WHERE text IS NOT NULL)
       |SELECT doc_id,
@@ -840,14 +840,13 @@ object MiscOps {
   }
 
   val q210Sql: String =
-    """WITH tok AS (
-      |  SELECT w AS term FROM (SELECT unnest(string_split(
-      |    regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')) AS w
+    s"""WITH tok AS (
+      |  SELECT w AS term FROM (SELECT unnest(${tokensSql("text")}) AS w
       |    FROM documents)
       |  WHERE w <> ''),
       |cells AS (
       |  SELECT j,
-      |    CAST('0x' || substr(md5(j || ':' || term), 1, 15) AS BIGINT) % 16
+      |    ${hash60Sql("j || ':' || term")} % 16
       |      AS idx,
       |    CAST(count(*) AS BIGINT) AS c
       |  FROM tok, UNNEST([0, 1, 2, 3]) AS s(j)
@@ -858,7 +857,7 @@ object MiscOps {
       |SELECT e.term, e.tf, min(c.c) AS est, min(c.c) - e.tf AS overcount
       |FROM exact e JOIN cells c
       |  ON c.idx =
-      |    CAST('0x' || substr(md5(c.j || ':' || e.term), 1, 15) AS BIGINT) % 16
+      |    ${hash60Sql("c.j || ':' || e.term")} % 16
       |GROUP BY 1, 2""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(

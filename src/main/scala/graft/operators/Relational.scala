@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Exact._
+import graft.functions.TextFns.hash60Sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -563,7 +564,7 @@ object Relational {
   }
 
   val q226Sql: String =
-    """WITH bought AS (
+    s"""WITH bought AS (
       |  SELECT DISTINCT o_custkey AS custkey, l_partkey AS partkey
       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
       |pop AS (
@@ -573,8 +574,7 @@ object Relational {
       |  SELECT c_custkey AS custkey, partkey FROM customer CROSS JOIN pop),
       |neg AS (
       |  SELECT cand.custkey, cand.partkey,
-      |    CAST('0x' || substr(md5('neg:' || cand.custkey || ':' || cand.partkey),
-      |      1, 15) AS BIGINT) AS hk
+      |    ${hash60Sql("'neg:' || cand.custkey || ':' || cand.partkey")} AS hk
       |  FROM cand ANTI JOIN bought
       |    ON bought.custkey = cand.custkey AND bought.partkey = cand.partkey)
       |SELECT custkey, partkey, rk FROM (

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.TextFns.{hash60Sql, tokensSql, wordsSql}
 import graft.functions.VectorExprs.{quantized_dot, quantized_norm2}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -102,7 +103,7 @@ object SimilarityOps {
       |n AS (SELECT vec_id, q, list_sum(list_transform(q, x -> x * x)) AS n2 FROM q WHERE n2 > 0),
       |scored AS (
       |  SELECT qs.vec_id AS q_id, c.vec_id AS neighbor_id,
-      |    CAST(list_sum(list_transform(range(1, len(qs.q) + 1), i -> qs.q[i] * c.q[i])) AS DOUBLE)
+      |    CAST(list_sum(list_transform(list_zip(qs.q, c.q), p -> p[1] * p[2])) AS DOUBLE)
       |      / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
       |  FROM n qs JOIN n c ON qs.vec_id < 5 AND c.vec_id <> qs.vec_id)
       |SELECT q_id, neighbor_id, cos, rn FROM (
@@ -150,7 +151,7 @@ object SimilarityOps {
       planes(p).mkString("[", ", ", "]")
     }
     val bucketExpr = (0 until 8).map { p =>
-      s"(CASE WHEN list_sum(list_transform(range(1, 65), i -> q[i] * (${planeLits(p)})[i])) > 0 THEN ${1L << p} ELSE 0 END)"
+      s"(CASE WHEN list_sum(list_transform(list_zip(q, ${planeLits(p)}), p -> p[1] * p[2])) > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" +\n    ")
     s"""WITH qv AS (
        |  SELECT vec_id,
@@ -167,7 +168,7 @@ object SimilarityOps {
        |  WHERE vec_id < 5),
        |scored AS (
        |  SELECT qs.q_id, c.vec_id AS neighbor_id,
-       |    CAST(list_sum(list_transform(range(1, len(qs.qq) + 1), i -> qs.qq[i] * c.q[i])) AS DOUBLE)
+       |    CAST(list_sum(list_transform(list_zip(qs.qq, c.q), p -> p[1] * p[2])) AS DOUBLE)
        |      / sqrt(CAST(qs.qn2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
        |  FROM probes qs JOIN b c ON qs.bucket = c.bucket AND c.vec_id <> qs.q_id)
        |SELECT q_id, neighbor_id, cos, rn FROM (
@@ -190,11 +191,12 @@ object SimilarityOps {
 
   val q48Sql: String =
     """SELECT i - 1 AS pos,
-      |  CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_q,
-      |  min(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS min_q,
-      |  max(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS max_q,
+      |  CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_q,
+      |  min(CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS min_q,
+      |  max(CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS max_q,
       |  count(*) AS n
-      |FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
+      |FROM (SELECT UNNEST(embedding) AS x,
+      |        generate_subscripts(embedding, 1) AS i FROM embeddings)
       |GROUP BY pos""".stripMargin
 
   /** IVF-style ANN: a KMeans coarse quantizer (k=16, fixed seed) assigns
@@ -429,8 +431,8 @@ object SimilarityOps {
       |      FROM q WHERE n2 > 0),
       |scored AS (
       |  SELECT qs.vec_id AS q_id, c.vec_id AS neighbor_id,
-      |    CAST(list_sum(list_transform(range(1, len(qs.q8) + 1),
-      |      i -> qs.q8[i] * c.q8[i])) AS DOUBLE)
+      |    CAST(list_sum(list_transform(list_zip(qs.q8, c.q8),
+      |      p -> p[1] * p[2])) AS DOUBLE)
       |      / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos8
       |  FROM n qs JOIN n c ON qs.vec_id < 5 AND c.vec_id <> qs.vec_id)
       |SELECT q_id, neighbor_id, cos8, rn FROM (
@@ -474,7 +476,7 @@ object SimilarityOps {
       |        list_sum(list_transform(q, x -> x * x)) AS n2 FROM q WHERE n2 > 0),
       |scored AS (
       |  SELECT qs.vec_id AS q_id, c.vec_id AS neg_id, c.label AS neg_label,
-      |    CAST(list_sum(list_transform(range(1, len(qs.q) + 1), i -> qs.q[i] * c.q[i])) AS DOUBLE)
+      |    CAST(list_sum(list_transform(list_zip(qs.q, c.q), p -> p[1] * p[2])) AS DOUBLE)
       |      / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
       |  FROM n qs JOIN n c ON qs.vec_id < 5 AND c.label <> qs.label)
       |SELECT q_id, neg_id, neg_label, cos, rn FROM (
@@ -532,13 +534,11 @@ object SimilarityOps {
   }
 
   val q111Sql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl
       |  FROM (
       |    SELECT doc_id,
-      |      list_filter(
-      |        string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |        t -> t <> '') AS toks
+      |      ${wordsSql("text")} AS toks
       |    FROM documents)
       |  WHERE len(toks) > 0),
       |st AS (
@@ -577,7 +577,7 @@ object SimilarityOps {
       |  SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_sem
       |  FROM (
       |    SELECT c.vec_id AS doc_id,
-      |      CAST(list_sum(list_transform(range(1, len(qs.q) + 1), i -> qs.q[i] * c.q[i])) AS DOUBLE)
+      |      CAST(list_sum(list_transform(list_zip(qs.q, c.q), p -> p[1] * p[2])) AS DOUBLE)
       |        / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
       |    FROM n qs JOIN n c ON qs.vec_id = 0 AND c.vec_id <> 0)
       |  ORDER BY cos DESC, doc_id LIMIT 20),
@@ -709,7 +709,7 @@ object SimilarityOps {
     val pl = planesFor(8)
     def keyExpr(bnd: Int) = (0 until 2).map { p =>
       val lits = pl(bnd * 2 + p).mkString("[", ", ", "]")
-      s"(CASE WHEN list_sum(list_transform(range(1, 65), i -> q[i] * ($lits)[i])) > 0 THEN ${1L << p} ELSE 0 END)"
+      s"(CASE WHEN list_sum(list_transform(list_zip(q, $lits), p -> p[1] * p[2])) > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
     val bandRows = (0 until 4).map { bnd =>
       s"SELECT vec_id, q, n2, $bnd AS band, ${keyExpr(bnd)} AS key FROM n"
@@ -725,11 +725,11 @@ object SimilarityOps {
        |  SELECT DISTINCT c.vec_id, e.vec_id AS eval_id, c.q AS qc, e.q AS qe,
        |    c.n2 AS nc2, e.n2 AS ne2
        |  FROM banded c JOIN banded e ON c.band = e.band AND c.key = e.key
-       |  WHERE CAST('0x' || substr(md5('eval:' || e.vec_id), 1, 15) AS BIGINT) % 100 < 5
-       |    AND CAST('0x' || substr(md5('eval:' || c.vec_id), 1, 15) AS BIGINT) % 100 >= 5),
+       |  WHERE ${hash60Sql("'eval:' || e.vec_id")} % 100 < 5
+       |    AND ${hash60Sql("'eval:' || c.vec_id")} % 100 >= 5),
        |verified AS (
        |  SELECT vec_id, eval_id,
-       |    CAST(list_sum(list_transform(range(1, len(qc) + 1), i -> qc[i] * qe[i])) AS DOUBLE)
+       |    CAST(list_sum(list_transform(list_zip(qc, qe), p -> p[1] * p[2])) AS DOUBLE)
        |      / sqrt(CAST(nc2 AS DOUBLE) * CAST(ne2 AS DOUBLE)) AS cos
        |  FROM cand)
        |SELECT vec_id, CAST(count(*) AS BIGINT) AS n_eval_matches,
@@ -904,10 +904,9 @@ object SimilarityOps {
     }.mkString(", ")
     s"""WITH m(i, j, s) AS (VALUES $values),
        |e AS (
-       |  SELECT vec_id, i,
-       |    CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS q
-       |  FROM embeddings,
-       |    UNNEST(generate_series(1, len(embedding))) AS g(i))
+       |  SELECT vec_id, i, CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) AS q
+       |  FROM (SELECT vec_id, UNNEST(embedding) AS x,
+       |          generate_subscripts(embedding, 1) AS i FROM embeddings))
        |SELECT e.vec_id, CAST(m.j AS BIGINT) AS j,
        |  CAST(sum(e.q * m.s) AS BIGINT) AS proj
        |FROM e JOIN m USING (i)
@@ -972,10 +971,10 @@ object SimilarityOps {
   val q155Sql: String =
     """WITH e AS (
       |  SELECT d.source, i AS dim,
-      |    CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS v
-      |  FROM embeddings
-      |  JOIN documents d ON d.doc_id = embeddings.vec_id,
-      |    UNNEST(generate_series(1, len(embedding))) AS g(i)),
+      |    CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) AS v
+      |  FROM (SELECT vec_id, UNNEST(embedding) AS x,
+      |          generate_subscripts(embedding, 1) AS i FROM embeddings) e
+      |  JOIN documents d ON d.doc_id = e.vec_id),
       |s AS (
       |  SELECT source, dim, CAST(sum(v) AS BIGINT) AS sv
       |  FROM e GROUP BY 1, 2),
@@ -1166,16 +1165,16 @@ object SimilarityOps {
        |cands AS MATERIALIZED (
        |  SELECT q_id, vec_id, q, n2, cos_qd FROM (
        |    SELECT qs.vec_id AS q_id, c.vec_id, c.q, c.n2,
-       |      CAST(list_sum(list_transform(range(1, len(qs.q) + 1), i -> qs.q[i] * c.q[i])) AS DOUBLE)
+       |      CAST(list_sum(list_transform(list_zip(qs.q, c.q), p -> p[1] * p[2])) AS DOUBLE)
        |        / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos_qd,
        |      row_number() OVER (PARTITION BY qs.vec_id
-       |        ORDER BY CAST(list_sum(list_transform(range(1, len(qs.q) + 1), i -> qs.q[i] * c.q[i])) AS DOUBLE)
+       |        ORDER BY CAST(list_sum(list_transform(list_zip(qs.q, c.q), p -> p[1] * p[2])) AS DOUBLE)
        |          / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) DESC, c.vec_id) AS rn
        |    FROM n qs JOIN n c ON qs.vec_id < 5 AND c.vec_id <> qs.vec_id)
        |  WHERE rn <= 20),
        |pairs AS MATERIALIZED (
        |  SELECT a.q_id, a.vec_id AS a_id, b.vec_id AS b_id,
-       |    CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * b.q[i])) AS DOUBLE)
+       |    CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS DOUBLE)
        |      / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos_dd
        |  FROM cands a JOIN cands b ON a.q_id = b.q_id AND a.vec_id <> b.vec_id),
        |sel1 AS MATERIALIZED (
@@ -1247,7 +1246,7 @@ object SimilarityOps {
        |  SELECT q_id, ql, vec_id, label, rn FROM (
        |    SELECT qs.vec_id AS q_id, qs.label AS ql, c.vec_id, c.label,
        |      row_number() OVER (PARTITION BY qs.vec_id
-       |        ORDER BY CAST(list_sum(list_transform(range(1, len(qs.q) + 1), i -> qs.q[i] * c.q[i])) AS DOUBLE)
+       |        ORDER BY CAST(list_sum(list_transform(list_zip(qs.q, c.q), p -> p[1] * p[2])) AS DOUBLE)
        |          / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) DESC, c.vec_id) AS rn
        |    FROM n qs JOIN n c ON qs.vec_id < 5 AND c.vec_id <> qs.vec_id)
        |  WHERE rn <= 10)
@@ -1432,10 +1431,10 @@ object SimilarityOps {
       |  FROM sc),
       |e AS (
       |  SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n_dims,
-      |    CAST(list_sum(list_transform(range(1, len(embedding) + 1),
-      |      i -> CAST(floor(
-      |        (CAST(embedding[i] AS DOUBLE) - CAST(q8[i] AS DOUBLE) * scale / 127.0)
-      |        * (CAST(embedding[i] AS DOUBLE) - CAST(q8[i] AS DOUBLE) * scale / 127.0)
+      |    CAST(list_sum(list_transform(list_zip(embedding, q8),
+      |      p -> CAST(floor(
+      |        (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) * scale / 127.0)
+      |        * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) * scale / 127.0)
       |        * 1e15 + 0.5) AS BIGINT))) AS BIGINT) AS err_q
       |  FROM q)
       |SELECT vec_id, n_dims, err_q,
@@ -1484,7 +1483,7 @@ object SimilarityOps {
   val q222Sql: String = {
     val keyExpr = (0 until 8).map { p =>
       val lits = planes(p).mkString("[", ", ", "]")
-      s"(CASE WHEN list_sum(list_transform(range(1, 65), i -> q[i] * ($lits)[i])) > 0 THEN ${1L << p} ELSE 0 END)"
+      s"(CASE WHEN list_sum(list_transform(list_zip(q, $lits), p -> p[1] * p[2])) > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
     s"""WITH qv AS (
        |  SELECT vec_id, label,

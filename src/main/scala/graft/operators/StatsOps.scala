@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.Exact._
-import graft.functions.TextFns.tokens
+import graft.functions.TextFns.{hash60Sql, normSql, tokens, tokensSql, wordsSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -226,9 +226,9 @@ object StatsOps {
         length(col("text")).cast("long").as("n_chars"))
 
   val q58Sql: String =
-    """SELECT doc_id, lang, source, length(text) AS n_chars
+    s"""SELECT doc_id, lang, source, length(text) AS n_chars
       |FROM documents
-      |WHERE CAST('0x' || substr(md5('sample:' || doc_id), 1, 15) AS BIGINT) % 100 < 20""".stripMargin
+      |WHERE ${hash60Sql("'sample:' || doc_id")} % 100 < 20""".stripMargin
 
   /** Per-user daily gap-fill of event values: calendar days from each
     * user's first to last event (generate-series explode), left-joined to
@@ -456,11 +456,9 @@ object StatsOps {
   }
 
   val q126Sql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT lang,
-      |    CAST(len(list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      t -> t <> '')) AS BIGINT) AS x,
+      |    CAST(len(${wordsSql("text")}) AS BIGINT) AS x,
       |    n_chars AS y
       |  FROM documents),
       |m AS (
@@ -657,18 +655,15 @@ object StatsOps {
   }
 
   val q150Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, len(list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '')) AS n_tok
+    s"""WITH t AS (
+      |  SELECT doc_id, len(${wordsSql("text")}) AS n_tok
       |  FROM documents),
       |e AS (
       |  SELECT doc_id, n_tok, r
       |  FROM t, UNNEST(generate_series(1, 32)) AS g(r)),
       |u AS (
       |  SELECT r, n_tok,
-      |    CAST('0x' || substr(md5('boot' || CAST(r AS VARCHAR) || ':' ||
-      |      CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 AS u
+      |    ${hash60Sql("'boot' || CAST(r AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")} % 10000 AS u
       |  FROM e),
       |w AS (
       |  SELECT r, n_tok,
@@ -729,10 +724,8 @@ object StatsOps {
   }
 
   val q156Sql: String =
-    """WITH v AS (
-      |  SELECT CAST(len(list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '')) AS BIGINT) AS v
+    s"""WITH v AS (
+      |  SELECT CAST(len(${wordsSql("text")}) AS BIGINT) AS v
       |  FROM documents),
       |s AS (
       |  SELECT min(v) AS vmin, max(v) AS vmax,
@@ -856,10 +849,10 @@ object StatsOps {
   }
 
   val q175Sql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT n_chars >= 512 AS g1,
       |    len(regexp_extract_all(
-      |      regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
+      |      ${normSql("text")},
       |      '[a-z]+|[0-9]+|[^a-z0-9 ]')) >= 100 AS g2
       |  FROM documents),
       |m AS (

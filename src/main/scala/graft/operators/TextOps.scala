@@ -12,16 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** DuckDB snippet for the filtered token array — exactly
-    * `filter(tokens(text), _ =!= "")` on the Spark side. */
-  private val toksFilteredSql =
-    "list_filter(string_split(regexp_replace(trim(lower(text)), " +
-      "'\\s+', ' ', 'g'), ' '), x -> x <> '')"
 
-  /** DuckDB snippet for the raw (unfiltered) token array — exactly
-    * `tokens(text)` on the Spark side. */
-  private val toksSql =
-    "string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')"
 
   /** Token-count / length statistics per document. The average token
     * length is derived from exact integer counts (chars minus separators
@@ -38,14 +29,14 @@ object TextOps {
         (col("n_chars_norm") - (col("n_tokens") - 1)).cast("double") / col("n_tokens"))
 
   val q30Sql: String =
-    """SELECT doc_id, lang,
+    s"""SELECT doc_id, lang,
       |  length(norm) AS n_chars_norm,
       |  len(string_split(norm, ' ')) AS n_tokens,
       |  len(list_distinct(string_split(norm, ' '))) AS n_distinct,
       |  CAST(length(norm) - (len(string_split(norm, ' ')) - 1) AS DOUBLE)
       |    / len(string_split(norm, ' ')) AS avg_token_len
       |FROM (SELECT doc_id, lang,
-      |        regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+      |        ${normSql("text")} AS norm
       |      FROM documents)""".stripMargin
 
   /** Stopword-overlap language-ID heuristic: score each candidate language
@@ -69,7 +60,7 @@ object TextOps {
   }
 
   val q31Sql: String =
-    """SELECT doc_id, lang, s_en, s_es, s_fr,
+    s"""SELECT doc_id, lang, s_en, s_es, s_fr,
       |  CASE WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
       |       WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END AS pred
       |FROM (
@@ -78,7 +69,7 @@ object TextOps {
       |    len(list_intersect(toks, ['data','table','row','query','line'])) AS s_es,
       |    len(list_intersect(toks, ['join','merge','sort','hash','group'])) AS s_fr
       |  FROM (SELECT doc_id, lang,
-      |          list_distinct(string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')) AS toks
+      |          list_distinct(${tokensSql("text")}) AS toks
       |        FROM documents))""".stripMargin
 
   /** Quality score: type-token ratio blended with a length bucket — the
@@ -125,7 +116,7 @@ object TextOps {
 
   /** The q91 oracle's `scored` CTE, shared with q95's oracle. */
   val scoredSql: String =
-    """SELECT doc_id, lang, n_tokens,
+    s"""SELECT doc_id, lang, n_tokens,
       |    (CAST(n_distinct AS DOUBLE) / n_tokens) * 0.5 +
       |    (CASE WHEN n_tokens < 10 THEN 0.2 WHEN n_tokens < 50 THEN 1.0
       |          WHEN n_tokens < 200 THEN 0.8 ELSE 0.5 END) * 0.5 AS quality
@@ -134,7 +125,7 @@ object TextOps {
       |      len(string_split(norm, ' ')) AS n_tokens,
       |      len(list_distinct(string_split(norm, ' '))) AS n_distinct
       |    FROM (SELECT doc_id, lang,
-      |            regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+      |            ${normSql("text")} AS norm
       |          FROM documents WHERE text IS NOT NULL))""".stripMargin
 
   /** Per-domain quality gating: keep documents whose quality score (the
@@ -200,7 +191,7 @@ object TextOps {
   }
 
   val q91Sql: String =
-    """WITH scored AS (
+    s"""WITH scored AS (
       |  SELECT doc_id, lang,
       |    (CAST(n_distinct AS DOUBLE) / n_tokens) * 0.5 +
       |    (CASE WHEN n_tokens < 10 THEN 0.2 WHEN n_tokens < 50 THEN 1.0
@@ -210,7 +201,7 @@ object TextOps {
       |      len(string_split(norm, ' ')) AS n_tokens,
       |      len(list_distinct(string_split(norm, ' '))) AS n_distinct
       |    FROM (SELECT doc_id, lang,
-      |            regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+      |            ${normSql("text")} AS norm
       |          FROM documents WHERE text IS NOT NULL))),
       |ranked AS (
       |  SELECT doc_id, lang, quality,
@@ -261,13 +252,10 @@ object TextOps {
 
   val q92Sql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, u.term FROM (
-       |    SELECT doc_id,
-       |      string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')
-       |        AS toks
-       |    FROM documents) t,
-       |    UNNEST(toks) AS u(term)
-       |  WHERE u.term <> ''),
+       |  SELECT doc_id, term FROM (
+       |    SELECT doc_id, UNNEST(${tokensSql("text")}) AS term
+       |    FROM documents)
+       |  WHERE term <> ''),
        |vocab AS (
        |  SELECT term FROM (
        |    SELECT term, row_number() OVER (ORDER BY count(*) DESC, term) AS r
@@ -282,7 +270,7 @@ object TextOps {
        |GROUP BY doc_id""".stripMargin
 
   val q32Sql: String =
-    """SELECT doc_id, n_tokens, n_distinct,
+    s"""SELECT doc_id, n_tokens, n_distinct,
       |  CAST(n_distinct AS DOUBLE) / n_tokens AS ttr,
       |  CASE WHEN n_tokens < 10 THEN 0.2 WHEN n_tokens < 50 THEN 1.0
       |       WHEN n_tokens < 200 THEN 0.8 ELSE 0.5 END AS len_score,
@@ -293,7 +281,7 @@ object TextOps {
       |  SELECT doc_id,
       |    len(string_split(norm, ' ')) AS n_tokens,
       |    len(list_distinct(string_split(norm, ' '))) AS n_distinct
-      |  FROM (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+      |  FROM (SELECT doc_id, ${normSql("text")} AS norm
       |        FROM documents))""".stripMargin
 
   /** Unigram language-model familiarity scoring — the cheap LM-quality
@@ -344,14 +332,11 @@ object TextOps {
   }
 
   val q99Sql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, u.term FROM (
-      |    SELECT doc_id,
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')
-      |        AS toks
-      |    FROM documents) t,
-      |    UNNEST(toks) AS u(term)
-      |  WHERE u.term <> ''),
+    s"""WITH toks AS (
+      |  SELECT doc_id, term FROM (
+      |    SELECT doc_id, UNNEST(${tokensSql("text")}) AS term
+      |    FROM documents)
+      |  WHERE term <> ''),
       |tf AS (SELECT term, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY term),
       |total AS (SELECT CAST(sum(tf) AS BIGINT) AS n_corpus FROM tf),
       |vocab AS (
@@ -444,19 +429,16 @@ object TextOps {
     // collapse and string_split emits a phantom '' term — without the
     // filter those inflate the oracle's n_uni (and shift its bigram
     // positions) while Spark's pre-filtered toks exclude them.
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |    list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      x -> x <> '') AS toks
+      |    ${wordsSql("text")} AS toks
       |  FROM documents
-      |  WHERE regexp_replace(trim(lower(text)), '\s+', ' ', 'g') <> ''),
-      |tok AS (SELECT u.term FROM t, UNNEST(toks) AS u(term)),
+      |  WHERE ${normSql("text")} <> ''),
+      |tok AS (SELECT UNNEST(toks) AS term FROM t),
       |uni AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY term),
       |total AS (SELECT CAST(sum(c) AS BIGINT) AS n_uni FROM uni),
       |bg AS (
-      |  SELECT toks[i] || ' ' || toks[i + 1] AS bg
-      |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS g(i)),
+      |  SELECT UNNEST(${shinglesSql("toks", 2)}) AS bg FROM t),
       |cab AS (
       |  SELECT bg, CAST(count(*) AS BIGINT) AS c_ab
       |  FROM bg GROUP BY bg HAVING count(*) >= 5)
@@ -551,13 +533,11 @@ object TextOps {
   }
 
   val q104Sql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl
       |  FROM (
       |    SELECT doc_id,
-      |      list_filter(
-      |        string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |        t -> t <> '') AS toks
+      |      ${wordsSql("text")} AS toks
       |    FROM documents)
       |  WHERE len(toks) > 0),
       |st AS (
@@ -625,16 +605,12 @@ object TextOps {
   }
 
   val q114Sql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT lang,
-      |    list_filter(
-      |      string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |      x -> x <> '') AS toks
+      |    ${wordsSql("text")} AS toks
       |  FROM documents),
-      |f AS (SELECT lang, toks FROM t WHERE len(toks) >= 2),
       |bg AS (
-      |  SELECT lang, toks[i] || ' ' || toks[i + 1] AS bg
-      |  FROM f, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)),
+      |  SELECT lang, UNNEST(${shinglesSql("toks", 2)}) AS bg FROM t),
       |c AS (SELECT lang, bg, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY 1, 2)
       |SELECT lang, bg, c FROM (
       |  SELECT lang, bg, c,
@@ -680,14 +656,10 @@ object TextOps {
   }
 
   val q119Sql: String =
-    s"""WITH t AS (SELECT doc_id,
-       |  string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')
-       |    AS toks FROM documents),
-       |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
+    s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks
+       |  FROM documents),
        |sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-       |  FROM f, UNNEST(range(1, n - 1)) AS u(i)),
+       |  SELECT DISTINCT doc_id, UNNEST(${shinglesSql("toks", 3)}) AS g FROM t),
        |shared AS (SELECT g FROM sh GROUP BY g HAVING count(*) >= 2),
        |num AS (
        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
@@ -765,15 +737,12 @@ object TextOps {
   }
 
   val q122Sql: String =
-    """WITH t AS (
-      |  SELECT list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '') AS toks
+    s"""WITH t AS (
+      |  SELECT ${wordsSql("text")} AS toks
       |  FROM documents),
-      |f AS (SELECT toks FROM t WHERE len(toks) >= 2),
       |bg AS (
-      |  SELECT toks[i] AS w1, toks[i + 1] AS w2
-      |  FROM f, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)),
+      |  SELECT g[1] AS w1, g[2] AS w2
+      |  FROM (SELECT UNNEST(${windowsSql("toks", 2)}) AS g FROM t)),
       |cab AS (
       |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_ab
       |  FROM bg GROUP BY 1, 2),
@@ -844,15 +813,12 @@ object TextOps {
   }
 
   val q129Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '') AS toks
+    s"""WITH t AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS toks
       |  FROM documents),
-      |f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 2),
       |bg AS (
-      |  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-      |  FROM f, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)),
+      |  SELECT doc_id, g[1] AS w1, g[2] AS w2
+      |  FROM (SELECT doc_id, UNNEST(${windowsSql("toks", 2)}) AS g FROM t)),
       |cab AS (
       |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_ab
       |  FROM bg GROUP BY 1, 2)
@@ -917,14 +883,10 @@ object TextOps {
   }
 
   val q123Sql: String =
-    s"""WITH t AS (SELECT source,
-       |  string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')
-       |    AS toks FROM documents),
-       |f AS (SELECT source, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
+    s"""WITH t AS (SELECT source, ${tokensSql("text")} AS toks
+       |  FROM documents),
        |sg AS (
-       |  SELECT DISTINCT source,
-       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-       |  FROM f, UNNEST(range(1, n - 1)) AS u(i)),
+       |  SELECT DISTINCT source, UNNEST(${shinglesSql("toks", 3)}) AS g FROM t),
        |pg AS (
        |  SELECT g, CAST(count(*) AS BIGINT) AS n_src, min(source) AS only_src
        |  FROM sg GROUP BY g),
@@ -988,14 +950,10 @@ object TextOps {
   }
 
   val q133Sql: String =
-    s"""WITH t AS (SELECT doc_id % 10 AS shard,
-       |  string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')
-       |    AS toks FROM documents),
-       |f AS (SELECT shard, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
+    s"""WITH t AS (SELECT doc_id % 10 AS shard, ${tokensSql("text")} AS toks
+       |  FROM documents),
        |sg AS (
-       |  SELECT DISTINCT shard,
-       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-       |  FROM f, UNNEST(range(1, n - 1)) AS u(i)),
+       |  SELECT DISTINCT shard, UNNEST(${shinglesSql("toks", 3)}) AS g FROM t),
        |nv AS (
        |  SELECT shard, CAST(count(*) AS BIGINT) AS n_novel FROM (
        |    SELECT g, min(shard) AS shard FROM sg GROUP BY g)
@@ -1052,15 +1010,11 @@ object TextOps {
   }
 
   val q137Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '') AS toks
+    s"""WITH t AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS toks
       |  FROM documents),
-      |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 10),
       |w AS (
-      |  SELECT doc_id, array_to_string(toks[i:i+9], ' ') AS g
-      |  FROM f, UNNEST(range(1, n - 8)) AS u(i)),
+      |  SELECT doc_id, UNNEST(${shinglesSql("toks", 10)}) AS g FROM t),
       |c AS (SELECT g, CAST(count(*) AS BIGINT) AS c FROM w GROUP BY g)
       |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_windows,
       |  CAST(sum(CASE WHEN c.c >= 2 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1155,16 +1109,13 @@ object TextOps {
   }
 
   val q234Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '') AS toks
+    s"""WITH t AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS toks
       |  FROM documents),
-      |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 10),
       |w AS (
-      |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-      |    array_to_string(toks[i:i+9], ' ') AS g
-      |  FROM f, UNNEST(range(1, n - 8)) AS u(i)),
+      |  SELECT doc_id, UNNEST(gs) AS g,
+      |    CAST(generate_subscripts(gs, 1) - 1 AS BIGINT) AS pos
+      |  FROM (SELECT doc_id, ${shinglesSql("toks", 10)} AS gs FROM t)),
       |c AS (SELECT g FROM (SELECT g, count(*) AS c FROM w GROUP BY g)
       |      WHERE c >= 2),
       |h AS (SELECT doc_id, pos FROM w JOIN c USING (g)),
@@ -1245,15 +1196,11 @@ object TextOps {
       "sort merge join", "hash join order"))
 
   val q138Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' '),
-      |    x -> x <> '') AS toks
+    s"""WITH t AS (
+      |  SELECT doc_id, ${wordsSql("text")} AS toks
       |  FROM documents),
-      |f AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
       |w AS (
-      |  SELECT doc_id, array_to_string(toks[i:i+2], ' ') AS g
-      |  FROM f, UNNEST(range(1, n - 1)) AS u(i)),
+      |  SELECT doc_id, UNNEST(${shinglesSql("toks", 3)}) AS g FROM t),
       |p(phrase) AS (VALUES ('table scan merge'), ('big order scan'),
       |  ('stream spark window'), ('sort merge join'), ('hash join order'))
       |SELECT p.phrase, w.doc_id, CAST(count(*) AS BIGINT) AS n_hits
@@ -1299,14 +1246,10 @@ object TextOps {
   }
 
   val q128Sql: String =
-    s"""WITH t AS (SELECT source,
-       |  string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')
-       |    AS toks FROM documents),
-       |f AS (SELECT source, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
+    s"""WITH t AS (SELECT source, ${tokensSql("text")} AS toks
+       |  FROM documents),
        |sg AS (
-       |  SELECT DISTINCT source,
-       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-       |  FROM f, UNNEST(range(1, n - 1)) AS u(i)),
+       |  SELECT DISTINCT source, UNNEST(${shinglesSql("toks", 3)}) AS g FROM t),
        |tot AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM sg GROUP BY 1)
        |SELECT a.source AS source_a, b.source AS source_b,
@@ -1328,9 +1271,9 @@ object TextOps {
         hash60(normText(col("text"))).as("fp60"))
 
   val q33Sql: String =
-    """SELECT doc_id, md5(norm) AS fp,
-      |  CAST('0x' || substr(md5(norm), 1, 15) AS BIGINT) AS fp60
-      |FROM (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+    s"""SELECT doc_id, md5(norm) AS fp,
+      |  ${hash60Sql("norm")} AS fp60
+      |FROM (SELECT doc_id, ${normSql("text")} AS norm
       |      FROM documents)""".stripMargin
 
   /** BPE-ish regex token counting: word / number / punctuation pieces via
@@ -1346,10 +1289,10 @@ object TextOps {
         size(array_distinct(col("toks"))).cast("long").as("n_distinct_bpe"))
 
   val q50Sql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       |  len(regexp_extract_all(norm, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_bpe_tokens,
       |  len(list_distinct(regexp_extract_all(norm, '[a-z]+|[0-9]+|[^a-z0-9 ]'))) AS n_distinct_bpe
-      |FROM (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+      |FROM (SELECT doc_id, ${normSql("text")} AS norm
       |      FROM documents)""".stripMargin
 
   /** Winnowing-style rolling-hash fingerprints: char 8-gram hashes, min
@@ -1394,13 +1337,14 @@ object TextOps {
   }
 
   val q51Sql: String =
-    """WITH nd AS (
-      |  SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+    s"""WITH nd AS (
+      |  SELECT doc_id, ${normSql("text")} AS norm
       |  FROM documents),
       |grams AS (
-      |  SELECT doc_id, i,
-      |    CAST('0x' || substr(md5(substr(norm, i, 8)), 1, 15) AS BIGINT) AS h
-      |  FROM nd, UNNEST(generate_series(1, length(norm) - 7)) AS g(i)),
+      |  SELECT doc_id, generate_subscripts(gs, 1) AS i,
+      |    ${hash60Sql("UNNEST(gs)")} AS h
+      |  FROM (SELECT doc_id, ${shinglesSql("cs", 8, "")} AS gs
+      |        FROM (SELECT doc_id, string_split(norm, '') AS cs FROM nd))),
       |wins AS (
       |  SELECT doc_id,
       |    min(h) OVER (PARTITION BY doc_id ORDER BY i
@@ -1450,9 +1394,8 @@ object TextOps {
 
   val q143Sql: String =
     """WITH ch AS (
-      |  SELECT doc_id, substring(text, CAST(i AS INT), 1) AS ch
-      |  FROM documents, UNNEST(generate_series(1, length(text))) AS u(i)
-      |  WHERE length(text) > 0),
+      |  SELECT doc_id, UNNEST(string_split(text, '')) AS ch
+      |  FROM documents WHERE length(text) > 0),
       |c AS (SELECT doc_id, ch, count(*) AS c FROM ch GROUP BY 1, 2)
       |SELECT doc_id,
       |  CAST(sum(c) AS BIGINT) AS n_chars,
@@ -1503,15 +1446,14 @@ object TextOps {
 
   val q147Sql: String =
     s"""WITH w AS (
-       |  SELECT u.w AS w, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT $toksFilteredSql AS toks FROM documents) t,
-       |    UNNEST(toks) AS u(w)
+       |  SELECT w, CAST(count(*) AS BIGINT) AS freq
+       |  FROM (SELECT UNNEST(${wordsSql("text")}) AS w FROM documents)
        |  GROUP BY 1),
        |p AS (
-       |  SELECT freq, substring(w, CAST(i AS INT), 1) AS a,
-       |    CASE WHEN i = length(w) THEN '</w>'
-       |         ELSE substring(w, CAST(i + 1 AS INT), 1) END AS b
-       |  FROM w, UNNEST(generate_series(1, length(w))) AS g(i))
+       |  SELECT freq, g[1] AS a, g[2] AS b FROM (
+       |    SELECT freq, UNNEST(${windowsSql("cs", 2)}) AS g
+       |    FROM (SELECT freq, list_append(string_split(w, ''), '</w>') AS cs
+       |          FROM w)))
        |SELECT a AS left_sym, b AS right_sym,
        |  CAST(sum(freq) AS BIGINT) AS pair_count,
        |  CAST(count(*) AS BIGINT) AS n_occurrences
@@ -1576,13 +1518,14 @@ object TextOps {
 
   val q148Sql: String =
     s"""WITH t AS (
-       |  SELECT $toksFilteredSql AS toks FROM documents),
+       |  SELECT ${wordsSql("text")} AS toks FROM documents),
        |f AS (SELECT toks FROM t WHERE len(toks) >= 2),
        |p AS (
-       |  SELECT toks[i] AS w, toks[j] AS ctx
-       |  FROM f,
-       |    UNNEST(generate_series(1, len(toks) - 1)) AS g(i),
-       |    UNNEST(generate_series(i + 1, least(i + 2, len(toks)))) AS h(j)),
+       |  SELECT g[1] AS w, g[2] AS ctx
+       |  FROM (SELECT UNNEST(${windowsSql("toks", 2)}) AS g FROM f)
+       |  UNION ALL
+       |  SELECT g[1], g[3]
+       |  FROM (SELECT UNNEST(${windowsSql("toks", 3)}) AS g FROM f)),
        |n AS (SELECT CAST(sum(2 * len(toks) - 3) AS BIGINT) AS n_pairs FROM f),
        |cooc AS (
        |  SELECT w, ctx, CAST(count(*) AS BIGINT) AS c_wc FROM p GROUP BY 1, 2),
@@ -1628,7 +1571,7 @@ object TextOps {
   }
 
   val q149Sql: String =
-    s"""WITH t AS (SELECT doc_id, $toksFilteredSql AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${wordsSql("text")} AS toks FROM documents),
        |h AS (
        |  SELECT doc_id,
        |    CAST(len(list_filter(toks, x -> list_contains(
@@ -1698,14 +1641,15 @@ object TextOps {
   }
 
   val q165Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')
-      |      AS toks
+    s"""WITH t AS (
+      |  SELECT doc_id, ${tokensSql("text")} AS toks
       |  FROM documents),
       |b AS (
-      |  SELECT doc_id, i, array_to_string(toks[(i*8+1):((i+1)*8)], ' ') AS blk
-      |  FROM t, UNNEST(range(0, CAST(ceil(len(toks) / 8.0) AS BIGINT))) u(i)),
+      |  SELECT doc_id, (pos - 1) // 8 AS i,
+      |    string_agg(tok, ' ' ORDER BY pos) AS blk
+      |  FROM (SELECT doc_id, UNNEST(toks) AS tok,
+      |          generate_subscripts(toks, 1) AS pos FROM t)
+      |  GROUP BY doc_id, i),
       |c AS (SELECT blk, min(doc_id) AS canon FROM b GROUP BY blk)
       |SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_blk,
       |  CAST(sum(CASE WHEN b.doc_id = c.canon THEN 1 ELSE 0 END) AS BIGINT)
@@ -1769,10 +1713,9 @@ object TextOps {
 
   val q168Sql: String =
     s"""WITH freq AS MATERIALIZED (
-       |  SELECT u.term, CAST(count(*) AS BIGINT) AS c
-       |  FROM (SELECT $toksFilteredSql AS toks FROM documents) t,
-       |    UNNEST(toks) AS u(term)
-       |  GROUP BY u.term ORDER BY c DESC, u.term LIMIT 1000),
+       |  SELECT term, CAST(count(*) AS BIGINT) AS c
+       |  FROM (SELECT UNNEST(${wordsSql("text")}) AS term FROM documents)
+       |  GROUP BY term ORDER BY c DESC, term LIMIT 1000),
        |pts AS (
        |  SELECT CAST(floor(ln(CAST(row_number()
        |      OVER (ORDER BY c DESC, term) AS DOUBLE)) * 1e6 + 0.5) AS BIGINT) AS x,
@@ -1836,9 +1779,9 @@ object TextOps {
     s"""WITH b AS (
        |  SELECT lang,
        |    CAST(len(regexp_extract_all(
-       |      regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'),
+       |      ${normSql("text")},
        |      '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS pieces,
-       |    CAST(len($toksFilteredSql) AS BIGINT) AS words,
+       |    CAST(len(${wordsSql("text")}) AS BIGINT) AS words,
        |    n_chars AS chars
        |  FROM documents)
        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1925,15 +1868,11 @@ object TextOps {
          |    row_number() OVER (ORDER BY c DESC, source) AS rn FROM gain$t)
          |  WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH t AS (SELECT source,
-       |  string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')
-       |    AS toks FROM documents),
-       |f AS (SELECT source, toks, len(toks) AS n FROM t WHERE len(toks) >= 3),
+    s"""WITH t AS (SELECT source, ${tokensSql("text")} AS toks
+       |  FROM documents),
        |sg AS MATERIALIZED (
-       |  SELECT DISTINCT source,
-       |    toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-       |  FROM f, UNNEST(range(1, n - 1)) AS u(i)
-       |  WHERE source IS NOT NULL),
+       |  SELECT DISTINCT source, UNNEST(${shinglesSql("toks", 3)}) AS g
+       |  FROM t WHERE source IS NOT NULL),
        |gain1 AS (SELECT source, CAST(count(*) AS BIGINT) AS c
        |  FROM sg GROUP BY 1),
        |s1 AS MATERIALIZED (
@@ -1997,9 +1936,9 @@ object TextOps {
        |  SELECT source, CAST(count(*) AS BIGINT) AS v,
        |    CAST(sum(c) AS BIGINT) AS ntok
        |  FROM (
-       |    SELECT source, u.term AS term, CAST(count(*) AS BIGINT) AS c
-       |    FROM (SELECT source, $toksFilteredSql AS toks FROM documents) t,
-       |      UNNEST(toks) AS u(term)
+       |    SELECT source, term, CAST(count(*) AS BIGINT) AS c
+       |    FROM (SELECT source, UNNEST(${wordsSql("text")}) AS term
+       |          FROM documents)
        |    GROUP BY 1, 2)
        |  GROUP BY source),
        |pts AS (
@@ -2072,9 +2011,9 @@ object TextOps {
 
   val q182Sql: String =
     s"""WITH st AS MATERIALIZED (
-       |  SELECT source, u.term AS term, CAST(count(*) AS BIGINT) AS o
-       |  FROM (SELECT source, $toksFilteredSql AS toks FROM documents) t,
-       |    UNNEST(toks) AS u(term)
+       |  SELECT source, term, CAST(count(*) AS BIGINT) AS o
+       |  FROM (SELECT source, UNNEST(${wordsSql("text")}) AS term
+       |        FROM documents)
        |  GROUP BY 1, 2),
        |top AS MATERIALIZED (
        |  SELECT term, CAST(sum(o) AS BIGINT) AS r FROM st GROUP BY 1
@@ -2112,7 +2051,7 @@ object TextOps {
   }
 
   val q193Sql: String =
-    """WITH p AS (
+    s"""WITH p AS (
       |  SELECT lang,
       |    CASE WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
       |         WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END AS pred
@@ -2122,7 +2061,7 @@ object TextOps {
       |      len(list_intersect(toks, ['data','table','row','query','line'])) AS s_es,
       |      len(list_intersect(toks, ['join','merge','sort','hash','group'])) AS s_fr
       |    FROM (SELECT lang,
-      |            list_distinct(string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')) AS toks
+      |            list_distinct(${tokensSql("text")}) AS toks
       |          FROM documents))),
       |cells AS (
       |  SELECT lang, pred, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1, 2)
@@ -2165,7 +2104,7 @@ object TextOps {
   val q194Sql: String =
     s"""WITH p AS (
        |  SELECT doc_id, source, array_to_string(toks[1:2], ' ') AS prefix
-       |  FROM (SELECT doc_id, source, $toksFilteredSql AS toks
+       |  FROM (SELECT doc_id, source, ${wordsSql("text")} AS toks
        |        FROM documents)
        |  WHERE len(toks) >= 2)
        |SELECT prefix, CAST(count(*) AS BIGINT) AS n_docs,
@@ -2231,7 +2170,7 @@ object TextOps {
   val q206Sql: String =
     s"""WITH tf AS (
        |  SELECT source, w AS term, CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT source, unnest($toksSql) AS w FROM documents)
+       |  FROM (SELECT source, unnest(${tokensSql("text")}) AS w FROM documents)
        |  WHERE w <> '' GROUP BY 1, 2),
        |tot AS (SELECT source, CAST(sum(tf) AS BIGINT) AS t FROM tf GROUP BY 1),
        |shared AS (
@@ -2316,13 +2255,12 @@ object TextOps {
 
   val q216Sql: String =
     s"""WITH tf AS (
-       |  SELECT u.w AS term,
+       |  SELECT w AS term,
        |    CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS a,
        |    CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS b
-       |  FROM (SELECT source, $toksSql AS tk FROM documents
-       |        WHERE source IN ('src0', 'src1')) t,
-       |    UNNEST(tk) AS u(w)
-       |  WHERE u.w <> '' GROUP BY 1),
+       |  FROM (SELECT source, UNNEST(${tokensSql("text")}) AS w FROM documents
+       |        WHERE source IN ('src0', 'src1'))
+       |  WHERE w <> '' GROUP BY 1),
        |tot AS (
        |  SELECT CAST(sum(a) AS BIGINT) AS ta, CAST(sum(b) AS BIGINT) AS tb,
        |    CAST(count(*) AS BIGINT) AS n_terms FROM tf),
@@ -2384,7 +2322,7 @@ object TextOps {
   val q219Sql: String =
     s"""WITH m AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(count_if(len(list_filter($toksSql, x -> x <> '')) >= 48)
+       |    CAST(count_if(len(${wordsSql("text")}) >= 48)
        |      AS BIGINT) AS passes
        |  FROM documents GROUP BY 1)
        |SELECT source, n, passes,
@@ -2438,11 +2376,10 @@ object TextOps {
 
   val q207Sql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, $toksSql AS toks FROM documents),
-       |f AS (SELECT toks, len(toks) AS n FROM t WHERE len(toks) >= 2),
+       |  SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
        |bg AS (
-       |  SELECT toks[i] || ' ' || toks[i+1] AS g, CAST(count(*) AS BIGINT) AS tf
-       |  FROM f, UNNEST(range(1, n)) AS u(i)
+       |  SELECT g, CAST(count(*) AS BIGINT) AS tf
+       |  FROM (SELECT UNNEST(${shinglesSql("toks", 2)}) AS g FROM t)
        |  GROUP BY 1)
        |SELECT CAST(sum(tf) AS BIGINT) AS n_bigrams,
        |  CAST(count(*) AS BIGINT) AS vocab,

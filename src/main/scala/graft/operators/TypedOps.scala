@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.functions.TextFns.tokensSql
 
 /** Typed `Dataset[T]` surface: case-class rows, compile-time-checked
   * transformations, and a custom typed [[Aggregator]] — the API tier for
@@ -202,11 +203,9 @@ object TypedOps {
   }
 
   val q80Sql: String =
-    """SELECT term, CAST(count(*) AS BIGINT) AS n
-      |FROM (SELECT u.term FROM (
-      |        SELECT string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS toks
-      |        FROM documents) t, UNNEST(toks) AS u(term)
-      |      WHERE u.term <> '')
+    s"""SELECT term, CAST(count(*) AS BIGINT) AS n
+      |FROM (SELECT UNNEST(${tokensSql("text")}) AS term FROM documents)
+      |WHERE term <> ''
       |GROUP BY term ORDER BY n DESC, term LIMIT 10""".stripMargin
 
   def defs: Seq[graft.QueryDef] = Seq(

@@ -336,6 +336,12 @@ object Lake {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode("overwrite").option("compression", "snappy").parquet(path)
 
+  /** Morton (z-order) key of two non-negative 16-bit values: the bits of
+    * `a` at the even positions, those of `b` at the odd ones. */
+  private[graft] def morton(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    spread16(a).bitwiseOR(org.apache.spark.sql.functions.shiftleft(spread16(b), 1))
+
   /** 16-bit Morton spread — interleave a zero between each bit of a
     * 16-bit value, as pure Column arithmetic (4 shift/mask steps, all
     * codegen'd builtins; the classic magic-mask form, e.g. "Bit
@@ -377,7 +383,7 @@ object Lake {
         greatest(col("bmax") - col("bmin"), lit(1L)).as("brng"))
     val qa = expr(s"((cast($colA as bigint) - amin) * 65535) div arng")
     val qb = expr(s"((cast($colB as bigint) - bmin) * 65535) div brng")
-    val z = spread16(qa).bitwiseOR(shiftleft(spread16(qb), 1)).as("_z")
+    val z = morton(qa, qb).as("_z")
     df.crossJoin(broadcast(stats))
       .withColumn("_z", z)
       .drop("amin", "bmin", "arng", "brng")

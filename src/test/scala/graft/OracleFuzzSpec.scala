@@ -546,8 +546,9 @@ class OracleFuzzSpec extends SparkTestBase {
       // an oracle that dies (OOM kill, traceback) prints no FAIL line:
       // its exit code and stderr tail are the only record of the cause
       val errTail = scala.collection.mutable.Queue[String]()
+      // the build's working directory: this checkout's check.py
       val code = Process(Seq("python3", "tools/check.py", dir, outDir),
-        new java.io.File("/root/repo"))
+        new java.io.File(sys.props("user.dir")))
         .!(ProcessLogger(l => out.append(l).append('\n'),
           l => errTail.synchronized {
             errTail.enqueue(l)

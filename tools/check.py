@@ -9,6 +9,7 @@ from <outDir>/oracle_sql.json in DuckDB over the same source tables,
 normalizes both (columns sorted by name, rows sorted), and diffs.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -25,8 +26,19 @@ def normalize(con, rel_sql, label):
     return df.dtypes.to_dict(), rows
 
 
+def machine_config():
+    """DuckDB limits worked out from the machine: a quarter of MemTotal
+    (the JVM heaps take half, see build.sbt) and every core this process
+    may run on. An oracle that outgrows the limit then fails with DuckDB's
+    named out-of-memory error instead of being killed by the kernel."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return {"memory_limit": f"{max(kb // 4096, 256)}MB",
+            "threads": len(os.sched_getaffinity(0))}
+
+
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = duckdb.connect(config=machine_config())
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
