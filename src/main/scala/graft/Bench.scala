@@ -57,7 +57,7 @@ object Bench {
     // drifts independently on this box (driver-thread co-tenancy): the
     // r11 final-window "unattributed movers" (q52/q83/q86/q192/q202/
     // q222) were precisely the HIGH-JOB-COUNT queries (45/32/13/…
-    // driver-side jobs from KMeans iterations, CC rounds, probe
+    // driver-side jobs from fixed-round fits, CC rounds, probe
     // aggregates, multi-scan unions), in a window where an isolated
     // 41-trivial-job probe measured ~67 ms/job vs the ~10 ms the r10
     // totals imply — their ratios tracked the LATENCY thermometer, not

@@ -25,8 +25,7 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toLong)
       // AQE's coalesce floor stays at Spark's 1 MB default: a 64 kB
-      // floor moved q52's KMeans fit below its recall bound and slowed
-      // the iterative graph queries (r12, SCALING.md)
+      // floor slowed the iterative graph queries (r12, SCALING.md)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

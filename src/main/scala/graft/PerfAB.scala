@@ -104,7 +104,7 @@ object PerfAB {
     }),
     // JOB-LATENCY canary (r12): 20 eager one-aggregate jobs of 32 tiny
     // tasks run at CONSTRUCTION time — times 20 driver/scheduler job
-    // round-trips with negligible compute, the component a KMeans-style
+    // round-trips with negligible compute, the component a fixed-round
     // iterative query (q52: ~dozens of tiny jobs) or a many-stage small
     // union (q86) is exposed to and a one-fat-stage query is not. The
     // compute canary (canary_range_sum) and this pair decompose a

@@ -80,10 +80,9 @@ object Tables {
   // members below: the parallelism TARGET, the NARROW test and the
   // explicit-count SPREAD. `spark.graft.widen.target` therefore moves
   // every width arm at once (the bench-width and cluster-width plans of
-  // the same query differ only through these calls). Two fixed counts
-  // are not width decisions and stay literal: `SimilarityOps.q52`'s
-  // `repartition(8, …)` of the KMeans fit input (its recall bound is a
-  // function of that layout) and `Lake.compact`'s file-count target.
+  // the same query differ only through these calls). One fixed count
+  // is not a width decision and stays literal: `Lake.compact`'s
+  // file-count target.
 
   /** The parallelism target: `spark.graft.widen.target`, else the
     * driver-time `defaultParallelism`. Pin it for dynamic-allocation

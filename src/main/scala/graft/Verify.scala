@@ -30,17 +30,17 @@ object Verify {
         .filter { case (k, _) => only.forall(_.contains(k)) }))
     // r8: export the MEASURED self-certified bounds of the sketch
     // queries alongside the dump — the measured VALUE (worst HLL error
-    // %, certified mean recall@10) goes to bounds.json. Since r10 the
-    // DECLARED q42/q52 outputs carry only deterministic columns (they
-    // are oracle-checked like every other query), so the values are
-    // re-derived here from the INTERNAL full frames (q42Full /
-    // q52KnnIvfFull) — the same plans whose in-query raise_error the
-    // declared queries aggregate, so a dumped declared row and a bound
-    // entry certify the same assertion. An empty/NULL aggregate is
-    // exactly the case where the per-row raise never evaluated, so it
-    // must surface as a FAILING entry (ok:false, value:null), never as
-    // silence; a non-finite aggregate would render invalid JSON and
-    // disable every bound downstream, so it fails the same way.
+    // %, certified mean recall@10) goes to bounds.json. The declared
+    // q42 output carries only deterministic columns, so its value is
+    // re-derived here from the internal full frame (q42Full); q52's
+    // declared rows carry the certified mean themselves. Either way the
+    // bound entry reads the plan whose in-query raise_error the dumped
+    // rows passed, so both certify the same assertion. An empty/NULL
+    // aggregate is exactly the case where the per-row raise never
+    // evaluated, so it must surface as a FAILING entry (ok:false,
+    // value:null), never as silence; a non-finite aggregate would render
+    // invalid JSON and disable every bound downstream, so it fails the
+    // same way.
     val boundLines = selfCertifiedBounds.flatMap {
       case (name, (desc, frame, limit, op)) =>
         if (!only.forall(_.contains(name))) None
@@ -94,7 +94,7 @@ object Verify {
   }
 
   /** The sketch queries' self-certification, as (description, a
-    * 1-row/1-column double frame over the internal full pipeline, spec
+    * 1-row/1-column double frame over the certifying pipeline, spec
     * limit, direction). The aggregate re-derives the same number the
     * in-query assertion checked: q42's worst per-row sketch error,
     * q52's certified full-probe-set mean recall (constant on every row
@@ -112,7 +112,7 @@ object Verify {
       "q52_knn_ivf" ->
         ("mean recall_at_10 over the probe set",
           (s: SparkSession, d: String) => operators.SimilarityOps
-            .q52KnnIvfFull(s, d)
+            .q52KnnIvf(s, d)
             .agg(min(col("mean_recall_at_10")).cast("double")),
           0.3, ">="))
   }

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.TextFns.{hash60Sql, tokensSql, wordsSql}
-import graft.functions.VectorExprs.{quantized_dot, quantized_norm2}
+import graft.functions.TextFns.{hash60, hash60Sql, tokensSql, wordsSql}
+import graft.functions.VectorExprs.{long_dot, quantized_dot, quantized_norm2}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -67,8 +67,7 @@ object SimilarityOps {
     * (norms, a few 64-dim dots against ≤ 5 broadcast queries) never
     * repays the exchange — removing it measured ×0.34–0.82 across
     * q39/q40/q48/q93/q112/q132/q222 (SCALING.md "retired A/B
-    * variants"). q52's KMeans fit keeps its own `repartition(8, vec_id)`
-    * determinism pin downstream. */
+    * variants"). */
   private[graft] def quantized(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("q"))
@@ -199,179 +198,193 @@ object SimilarityOps {
       |        generate_subscripts(embedding, 1) AS i FROM embeddings)
       |GROUP BY pos""".stripMargin
 
-  /** IVF-style ANN: a KMeans coarse quantizer (k=16, fixed seed) assigns
-    * every vector to a cell; each query probes its 2 nearest cells and
-    * scores exact quantized cosine inside them. Rows-only (training is
-    * not SQL-expressible) — but since r7 each row carries its own
-    * `recall_at_10` vs the exact brute-force ranking and a `recall_ok`
-    * in-query assertion (raise_error below mean 0.3), so the dumped
-    * artifact witnesses a machine-checked bound, not just `rows > 0`;
-    * the ScalaTest recall spec remains as the cross-check.
-    * At 100 TB: centroids are tiny and broadcast; the corpus is
-    * partitioned by cell id, so a probe touches nprobe/k of the data.
+  /** IVF-style ANN whose coarse quantizer is trained by the engine
+    * itself: Lloyd's algorithm on the quantized int64 codes. Every step
+    * is exact integer arithmetic, so the cells and the rows do not
+    * depend on partition layout, and [[q52Sql]] replays the same rounds
+    * in DuckDB.
     *
-    * Since r10 the DECLARED output is the DETERMINISTIC side: the
-    * exact top-10 ranking ([[q39KnnBrute]]'s rows — what the IVF index
-    * approximates) plus the certified `recall_ok` boolean, so a DuckDB
-    * oracle exists (q39's SQL + `TRUE`) and the driver hash-checks the
-    * row set. No certification strength is lost: the full IVF pipeline
-    * still runs INSIDE this plan — `recall_ok` is aggregated across
-    * every IVF row, each of which evaluates the raise_error guard, so
-    * a sub-bound mean recall still fails the query loudly instead of
-    * dumping. The approximate rows + measured mean stay on
-    * [[q52KnnIvfFull]], which Verify exports to bounds.json and the
-    * sketch battery re-checks under hostile corpora. */
+    *  - Seeding: the k = min(16, #distinct code vectors) initial
+    *    centroids are the distinct code vectors with the smallest
+    *    `hash60` of their comma-joined codes, ties to the smallest
+    *    vec_id; the probe ids play no part.
+    *  - Rounds: [[IvfRounds]] fixed rounds. Each point joins the cell at
+    *    the least squared distance `n2 − 2·dot + |c|²`, ties to the lower
+    *    cell ([[slotKeys]]); a cell's new centroid is its per-dimension
+    *    mean rounded half up ([[halfUpMean]]); an empty cell keeps its
+    *    centroid.
+    *  - Probing: each query (vec_id < 5) scores the points of its 2
+    *    nearest cells by the same distance, top-10 by exact cosine.
+    *
+    * The seeds and each round's per-cell sums (at most 16 rows) are
+    * collected, and the centroids enter the next round as literals:
+    * chaining the rounds lazily under `broadcast` builds a plan that
+    * holds every earlier round, and it ran ×9 slower (SCALING.md "One
+    * exact IVF plan"). k < 16 and an empty corpus need no branch: an
+    * unused slot's key is NULL and drops out of `least`.
+    *
+    * Every row carries its query's recall@10 against the exact ranking
+    * ([[q39KnnBrute]]) and the certified mean over the probe set, total
+    * hits / (10 × probe ids), so a probe with no hits counts as 0; the
+    * in-query `recall_ok` raises below 0.3. Hits count distinct
+    * (q_id, neighbor_id) pairs, so a re-ingested duplicate vec_id cannot
+    * push a recall above 1. At scale the centroids stay a few kB of
+    * literals and the corpus is partitioned by cell, so a probe reads
+    * 2/k of it. */
   def q52KnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val full = q52KnnIvfFull(s, dir)
-    // one row, true-or-raise; min() forces recall_ok on every IVF row.
-    // An empty IVF side (nothing retrievable / single-vector corpus) is
-    // vacuously certified — in exactly those corpora the exact side
-    // below is empty too, so the declared result is empty either way.
-    val cert = full.agg(
-      coalesce(min(col("recall_ok")), lit(true)).as("recall_ok"))
-    q39KnnBrute(s, dir).crossJoin(broadcast(cert))
-  }
-
-  val q52Sql: String =
-    s"""SELECT q_id, neighbor_id, cos, rn, TRUE AS recall_ok
-       |FROM ($q39Sql)""".stripMargin
-
-  /** The full IVF frame behind [[q52KnnIvf]]: the approximate rows,
-    * each with its recall@10, the certified mean over the full probe
-    * set, and the in-query `recall_ok` assertion. */
-  private[graft] def q52KnnIvfFull(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val e = quantized(s, dir)
-      .withColumn("features", array_to_vector(col("q")))
-    // r9 (sketch fuzz): a corpus whose every vector is zero-norm leaves
-    // NOTHING to index — KMeans.fit would die with an opaque MLlib
-    // internal error at plan-build time. No retrievable vectors means no
-    // probes and no neighbors: the declared result is EMPTY, exactly
-    // what the retrieval semantics return one row above this degenerate
-    // boundary (1 probe, 0 candidates). The fit is already an eager
-    // driver-side action here, so the emptiness probe adds no new
-    // laziness violation.
-    // k is capped at the DISTINCT vector count (r9, sketch fuzz — both
-    // arms caught live on the battery's first runs): with fewer distinct
-    // points than centroids, k-means|| init returns fewer centers than k
-    // and MLlib's KMeansAggregator dies with an
-    // ArrayIndexOutOfBoundsException; and k = 1 fails KMeans's own param
-    // validation (k > 1), so an all-identical corpus bypasses clustering
-    // outright — one cell, the single distinct vector as its centroid
-    // (it has norm > 0 by the zero-norm filter, so the probe cosine is
-    // well-defined). The distinct count is one map-side-combinable
-    // aggregate over 64-bit vector hashes (a collision only lowers k by
-    // one — harmless); its cost is a single narrow pass next to the
-    // O(corpus × iters) fit itself. ONE job serves both the emptiness
-    // probe and the k cap (r13, latency class): count(*) == 0 is
-    // exactly the old isEmpty, read from the same aggregate row.
-    val probeRow = e.agg(count(lit(1)), countDistinct(xxhash64(col("q")))).head
-    if (probeRow.getLong(0) == 0L) {
-      import org.apache.spark.sql.types._
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("q_id", LongType), StructField("neighbor_id", LongType),
-          StructField("cos", DoubleType), StructField("rn", LongType),
-          StructField("recall_at_10", DoubleType),
-          StructField("mean_recall_at_10", DoubleType),
-          StructField("recall_ok", BooleanType))))
+    val pts = quantized(s, dir).withColumn("code",
+      transform(col("q"), x => floor(x.cast("double") * 1000 + 0.5)))
+    val seeds = pts.groupBy(col("code")).agg(min(col("vec_id")).as("vid"))
+      .withColumn("h", hash60(concat_ws(",", col("code").cast("array<string>"))))
+      .orderBy(col("h"), col("vid")).limit(IvfCells)
+      .select(col("code")).collect().map(_.getSeq[Long](0).toArray)
+    val dim = seeds.headOption.fold(0)(_.length)
+    val centroids = (1 to IvfRounds).foldLeft(seeds) { (prev, _) =>
+      val next = prev.clone()
+      pts.groupBy((least(slotKeys(prev): _*) % IvfCells).as("cell"))
+        .agg(count(lit(1)), (0 until dim).map(d => sum(col("code")(d))): _*)
+        .collect()
+        .foreach { r =>
+          next(r.getLong(0).toInt) =
+            Array.tabulate(dim)(d => halfUpMean(r.getLong(d + 2), r.getLong(1)))
+        }
+      next
     }
-    val nDistinct = probeRow.getLong(1)
-    val (assigned, centroids) =
-      if (nDistinct == 1L) {
-        val c0 = e.select(col("q")).head.getSeq[Float](0).toArray
-        (e.select(col("vec_id"), col("q"), col("n2"), lit(0).as("cell")),
-          Seq((0, c0)))
-      } else {
-        // FIT-INPUT LAYOUT PIN (r12): k-means|| initialization samples
-        // per partition, so the fitted centroids — and with them the
-        // certified recall bound — move whenever the input's partition
-        // layout moves (measured: an AQE-coalesce-floor change alone
-        // dropped the certified mean 0.4 → 0.28, below the 0.3 raise
-        // bound). Everything else in this file is exact integer/decimal
-        // arithmetic and layout-independent; the fit is the one
-        // exception, so IT gets the determinism pin: a fixed-count
-        // hash repartition, invariant across core counts, widen
-        // behavior, and AQE settings. The pin is on the FIT input
-        // only — transform/retrieval stay on the wide frame (per-row
-        // deterministic). Fixed 8 is an oracle-determinism contract of
-        // the declared query (the q101 rankUnit pattern); an at-scale
-        // IVF build would shard the fit input to the cluster instead.
-        val model = new KMeans().setK(math.min(16L, nDistinct).toInt)
-          .setSeed(42).setMaxIter(10)
-          .setFeaturesCol("features")
-          .fit(e.repartition(8, col("vec_id")))
-        (model.transform(e)
-          .select(col("vec_id"), col("q"), col("n2"), col("prediction").as("cell")),
-          model.clusterCenters.zipWithIndex.map { case (c, i) =>
-            (i, c.toArray.map(_.toFloat))
-          }.toSeq)
-      }
-    val cdf = s.createDataFrame(centroids).toDF("cell", "centroid")
-    // nearest 2 cells per query by exact quantized cosine to the centroid
-    val wc = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cell").asc)
-    val probes = assigned.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-      .crossJoin(broadcast(cdf))
-      .withColumn("ccos", quantized_dot(col("qq"), col("centroid")).cast("double")
-        / sqrt(col("qn2").cast("double")
-          * quantized_norm2(col("centroid")).cast("double")))
-      .withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= 2)
-      .select(col("q_id"), col("qq"), col("qn2"), col("cell"))
+    val keyed = pts.select(col("vec_id"), col("q"), col("n2"),
+      array_sort(array(slotKeys(centroids): _*)).as("keys"))
+    val corpus = keyed.withColumn("cell", element_at(col("keys"), 1) % IvfCells)
+    val probes = keyed.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"),
+        explode(slice(col("keys"), 1, 2)).as("key"))
+      .filter(col("key").isNotNull)
+      .withColumn("cell", col("key") % IvfCells)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
-    val ivf = assigned.join(broadcast(probes), Seq("cell"))
+    val ivf = corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", cosine(col("qq"), col("q"), col("qn2"), col("n2")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 10)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cos"), col("rn"))
-    // SELF-CERTIFICATION (r7): per-query recall@10 against the exact
-    // brute-force ranking (q39's pipeline), carried on every row, with a
-    // hard in-query assertion on the aggregate — the driver's rows-only
-    // CORRECTNESS row then witnesses a machine-checked bound instead of
-    // `rows > 0`. The exact side is one more broadcast-queries corpus
-    // scan; the recall frame is ≤ #queries rows and broadcasts.
-    // DISTINCT pairs on both sides (r9, sketch fuzz): a re-ingested
-    // duplicate vec_id puts the same (q_id, neighbor_id) in both lists
-    // twice, and the raw join would count it 2x2 = 4 times — a certified
-    // "recall" above 1.0, a silently-garbage bound row. Distinct makes
-    // recall = |exact top-10 ids retrieved| / 10 under any input; on
-    // unique-id corpora both distincts are no-ops (rows already unique,
-    // <= 55 rows either side — declared hash unchanged).
     val exact = q39KnnBrute(s, dir).select(col("q_id"), col("neighbor_id"))
       .distinct()
-    val recall = ivf.select(col("q_id"), col("neighbor_id")).distinct()
+    val hits = ivf.select(col("q_id"), col("neighbor_id")).distinct()
       .join(exact, Seq("q_id", "neighbor_id"))
-      .groupBy(col("q_id"))
-      .agg((count(lit(1)).cast("double") / 10.0).as("recall_at_10"))
-    // lazy aggregate bound: a broadcast 1-row join (BNLJ, not a
-    // cartesian), so nothing executes at plan-build time. The mean is
-    // taken over the FULL probe set (left join from the query ids,
-    // zeros coalesced in), not over the recall frame — a query with
-    // zero overlap, or with no IVF candidates at all, has no row in
-    // `recall` and must still drag the certified mean down (r8 fix:
-    // 4 queries at 0.35 + 1 at 0.0 is mean 0.28, a FAIL, not 0.35).
-    // distinct: a duplicated probe id must weigh once in the certified
-    // mean (r9 sketch fuzz; no-op on unique-id corpora)
-    val probeIds = assigned.filter(col("vec_id") < 5)
+      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
+    val probeIds = pts.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id")).distinct()
-    val overall = probeIds.join(recall, Seq("q_id"), "left")
-      .agg(avg(coalesce(col("recall_at_10"), lit(0.0))).as("_overall"))
-    ivf.join(broadcast(recall), Seq("q_id"), "left")
-      .crossJoin(broadcast(overall))
-      .withColumn("recall_at_10", coalesce(col("recall_at_10"), lit(0.0)))
-      .withColumn("recall_ok",
-        when(col("_overall") >= 0.3, lit(true))
+    val cert = probeIds.join(hits, Seq("q_id"), "left")
+      .agg((sum(coalesce(col("hits"), lit(0L))).cast("double") / (count(lit(1)) * 10))
+        .as("mean_recall_at_10"))
+    ivf.join(broadcast(hits), Seq("q_id"), "left")
+      .crossJoin(broadcast(cert))
+      .select(col("q_id"), col("neighbor_id"), col("cos"), col("rn"),
+        (coalesce(col("hits"), lit(0L)).cast("double") / 10).as("recall_at_10"),
+        col("mean_recall_at_10"),
+        when(col("mean_recall_at_10") >= 0.3, lit(true))
           .otherwise(raise_error(concat(
-            lit("q52: IVF mean recall@10 "), col("_overall").cast("string"),
-            lit(" below the 0.3 spec bound")))))
-      // r8: keep the certified aggregate ON the rows (not dropped) so
-      // the dumped artifact carries the measured value, not just the
-      // boolean that it passed — Verify exports it as the query's bound.
-      .withColumnRenamed("_overall", "mean_recall_at_10")
+            lit("q52: IVF mean recall@10 "), col("mean_recall_at_10").cast("string"),
+            lit(" below the 0.3 spec bound")))).as("recall_ok"))
+  }
+
+  private val IvfCells = 16
+  private val IvfRounds = 10
+
+  /** For a point (`code`, `n2`): per centroid slot i, `dist · 16 + i`
+    * with dist = |p − c_i|², NULL for a slot ≥ k. The least key is the
+    * nearest cell, ties to the lower cell. */
+  private def slotKeys(cents: Array[Array[Long]]): Seq[Column] =
+    (0 until IvfCells).map { i =>
+      cents.lift(i).fold(lit(null).cast("long")) { c =>
+        (col("n2") - long_dot(col("code"), typedLit(c)) * 2 + c.map(x => x * x).sum) *
+          IvfCells + i
+      }
+    }
+
+  /** s / n rounded half up, for n > 0: ⌊(2s + n) / 2n⌋. */
+  private def halfUpMean(s: Long, n: Long): Long = Math.floorDiv(2 * s + n, 2 * n)
+
+  /** DuckDB twin of [[halfUpMean]]: DuckDB's `//` truncates, so the
+    * floor division is spelled `(x − ((x % y) + y) % y) // y`. */
+  private def halfUpMeanSql(s: String, n: String): String = {
+    val (x, y) = (s"(2 * $s + $n)", s"(2 * $n)")
+    s"($x - ($x % $y + $y) % $y) // $y"
+  }
+
+  /** The same rounds in DuckDB, unrolled as CTEs: each centroid
+    * generation `c<r>` is a materialized k-row relation, and a point's
+    * cell is its least `dist · 16 + cell` over a join with it. */
+  val q52Sql: String = {
+    def dot(a: String, b: String) =
+      s"list_sum(list_transform(list_zip($a, $b), x -> x[1] * x[2]))"
+    def key(p: String, c: String) =
+      s"($p.n2 - 2 * ${dot(s"$p.q", s"$c.c")} + $c.cn2) * $IvfCells + $c.cell"
+    def centroids(name: String, src: String) =
+      s"""$name AS MATERIALIZED (
+         |  SELECT cell, c, list_sum(list_transform(c, x -> x * x)) AS cn2
+         |  FROM ($src))""".stripMargin
+    def assign(cents: String) =
+      s"""SELECT p.rid, p.vec_id, p.q, p.n2, min(${key("p", "c")}) % $IvfCells AS cell
+         |  FROM pts p, $cents c GROUP BY p.rid, p.vec_id, p.q, p.n2""".stripMargin
+    val seeds = centroids("c0",
+      s"""SELECT row_number() OVER (ORDER BY h, vid) - 1 AS cell, q AS c
+         |  FROM (SELECT q, min(vec_id) AS vid, ${hash60Sql("array_to_string(q, ',')")} AS h
+         |    FROM pts GROUP BY q)
+         |  QUALIFY cell < $IvfCells""".stripMargin)
+    val rounds = (1 to IvfRounds).flatMap { r =>
+      Seq(
+        s"""m$r AS (
+           |  SELECT cell, list(${halfUpMeanSql("s", "n")} ORDER BY i) AS c FROM (
+           |    SELECT cell, i, CAST(sum(x) AS BIGINT) AS s, count(*) AS n
+           |    FROM (SELECT cell, UNNEST(q) AS x, generate_subscripts(q, 1) AS i
+           |      FROM (${assign(s"c${r - 1}")}))
+           |    GROUP BY cell, i)
+           |  GROUP BY cell)""".stripMargin,
+        centroids(s"c$r",
+          s"""SELECT o.cell, coalesce(m.c, o.c) AS c
+             |  FROM c${r - 1} o LEFT JOIN m$r m ON o.cell = m.cell""".stripMargin))
+    }
+    val ctes = Seq(
+      s"""pts AS MATERIALIZED (
+         |  SELECT row_number() OVER () AS rid, vec_id, q,
+         |    list_sum(list_transform(q, x -> x * x)) AS n2
+         |  FROM (SELECT vec_id,
+         |      list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS q
+         |    FROM embeddings)
+         |  WHERE n2 > 0)""".stripMargin,
+      seeds) ++ rounds ++ Seq(
+      s"fin AS (${assign(s"c$IvfRounds")})",
+      s"""probes AS (
+         |  SELECT q_id, qq, qn2, cell FROM (
+         |    SELECT p.vec_id AS q_id, p.q AS qq, p.n2 AS qn2, c.cell,
+         |      row_number() OVER (PARTITION BY p.rid ORDER BY ${key("p", "c")}) AS r
+         |    FROM pts p, c$IvfRounds c WHERE p.vec_id < 5)
+         |  WHERE r <= 2)""".stripMargin,
+      s"""ivf AS (
+         |  SELECT q_id, neighbor_id, cos, rn FROM (
+         |    SELECT q_id, neighbor_id, cos,
+         |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rn
+         |    FROM (SELECT pr.q_id, f.vec_id AS neighbor_id,
+         |        CAST(${dot("pr.qq", "f.q")} AS DOUBLE)
+         |          / sqrt(CAST(pr.qn2 AS DOUBLE) * CAST(f.n2 AS DOUBLE)) AS cos
+         |      FROM probes pr JOIN fin f ON f.cell = pr.cell AND f.vec_id <> pr.q_id))
+         |  WHERE rn <= 10)""".stripMargin,
+      s"""hits AS (
+         |  SELECT q_id, count(*) AS hits
+         |  FROM (SELECT DISTINCT q_id, neighbor_id FROM ivf)
+         |  JOIN (SELECT DISTINCT q_id, neighbor_id FROM ($q39Sql)) USING (q_id, neighbor_id)
+         |  GROUP BY q_id)""".stripMargin,
+      """cert AS (
+        |  SELECT CAST(sum(coalesce(h.hits, 0)) AS DOUBLE) / (10 * count(*)) AS mean_recall_at_10
+        |  FROM (SELECT DISTINCT vec_id AS q_id FROM pts WHERE vec_id < 5) p
+        |  LEFT JOIN hits h USING (q_id))""".stripMargin)
+    s"""WITH ${ctes.mkString(",\n")}
+       |SELECT i.q_id, i.neighbor_id, i.cos, i.rn,
+       |  CAST(coalesce(h.hits, 0) AS DOUBLE) / 10 AS recall_at_10, c.mean_recall_at_10,
+       |  CASE WHEN c.mean_recall_at_10 >= 0.3 THEN TRUE
+       |    ELSE error('q52: IVF mean recall@10 ' || c.mean_recall_at_10 || ' below the 0.3 spec bound')
+       |  END AS recall_ok
+       |FROM ivf i LEFT JOIN hits h USING (q_id) CROSS JOIN cert c""".stripMargin
   }
 
   /** int8 scalar-quantized kNN — the 4×-memory-compression retrieval

@@ -309,28 +309,46 @@ class OperatorSpec extends SparkTestBase {
   test("IVF ANN with 2-of-16 probes recalls most brute-force neighbors") {
     val truth = SimilarityOps.q39KnnBrute(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the IVF pipeline itself (internal since r10 — the declared q52
-    // dumps the exact side + the certified boolean)
-    val rows = SimilarityOps.q52KnnIvfFull(spark, sfDir)
-      .collect()
+    val rows = SimilarityOps.q52KnnIvf(spark, sfDir).collect()
     val ivf = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truth.count(ivf).toDouble / truth.size
     assert(recall >= 0.3, s"ivf recall@10 = $recall")
     assert(ivf.forall { case (q, _) => q < 5 })
-    // the self-certification columns (r7) must agree with the
-    // independently recomputed per-query recall
+    // the self-certification columns must agree with the independently
+    // recomputed per-query recall and the mean over the probe set
     rows.groupBy(_.getLong(0)).foreach { case (q, rs) =>
       val mine = rs.map(_.getLong(1)).count(n => truth((q, n))) / 10.0
       rs.foreach { r =>
         assert(r.getAs[Double]("recall_at_10") == mine, s"q$q")
         assert(r.getAs[Boolean]("recall_ok"))
+        assert(r.getAs[Double]("mean_recall_at_10") ==
+          truth.count(ivf).toDouble / (10 * truth.map(_._1).size))
       }
     }
-    // declared surface: exactly the brute-force rows + recall_ok = true
-    // (populated at all ⟹ the in-plan raise over the IVF mean held)
-    val declared = SimilarityOps.q52KnnIvf(spark, sfDir).collect()
-    assert(declared.map(r => (r.getLong(0), r.getLong(1))).toSet == truth)
-    assert(declared.forall(_.getAs[Boolean]("recall_ok")))
+    // populated at all ⟹ the in-plan raise over the IVF mean held
+    assert(rows.nonEmpty)
+  }
+
+  test("IVF rows do not depend on partition layout or the width target") {
+    // every step of the Lloyd's fit is exact integer arithmetic,
+    // so neither the shuffle width nor the widen target may move a row
+    def run(): Seq[String] =
+      SimilarityOps.q52KnnIvf(spark, sfDir).collect().map(_.toString).sorted.toSeq
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val runs = try {
+      Seq("4", "32").map { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n)
+        run()
+      } :+ {
+        spark.conf.set("spark.graft.widen.target", "32")
+        run()
+      }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", before)
+      spark.conf.unset("spark.graft.widen.target")
+    }
+    assert(runs.head.nonEmpty)
+    assert(runs.forall(_ == runs.head))
   }
 
   test("knn LSH results are a subset of correct cosine ordering in-bucket") {

@@ -54,13 +54,8 @@ class ScaleLintSpec extends SparkTestBase {
 
   /** Queries allowed an interpreted ScalaUDF — each entry names why the
     * UDF is outside the hot path. The repo's own code defines ZERO UDFs
-    * (custom Expressions instead); what lands here is third-party
-    * library internals. */
-  private val boundedUdf: Map[String, String] = Map(
-    "q52_knn_ivf" -> ("spark.ml's array_to_vector (a ScalaUDF inside " +
-      "MLlib) feeding KMeans.fit — train-time featurization of the " +
-      "sampled input, not the pair-scoring hot path (scoring rides the " +
-      "codegen quantized_dot)"))
+    * (custom Expressions instead), and no query plans one. */
+  private val boundedUdf: Map[String, String] = Map.empty
 
   /** Queries allowed to FORCE-broadcast a frame that still contains an
     * unreduced scan of an SF-scaling base table — each entry names why
@@ -101,7 +96,7 @@ class ScaleLintSpec extends SparkTestBase {
       "q161_power_iteration" -> "fixed power-iteration rounds over the collected 64x64 covariance (2^12 entries, dimension-bounded)",
       "q166_mmr_rerank" -> "greedy MMR selection over a collected probe-bounded candidate set (<= probes x 20 rows)",
       "q177_greedy_cover" -> "greedy set cover: k rounds, each collecting only the 1-row argmax, over a checkpointed source-gram frame",
-      "q52_knn_ivf" -> "KMeans fit (inherently eager) + ONE count/countDistinct probe (emptiness guard and k cap folded into a single bounded aggregate, r13)",
+      "q52_knn_ivf" -> "fixed-round integer Lloyd's fit: one collect of the <= 16 seed vectors + one collect per round (10) of the <= 16 per-cell sum rows; the centroids enter the next round as literals",
       "q71_bloom_join" -> "bloom build side: one count + one bloom-aggregate head (the driver holds the filter bytes by design)",
       "q91_quality_gate" -> "GlobalRank two-pass: per-partition histogram collect (#partitions rows)",
       "q135_global_ntile" -> "GlobalRank two-pass + one column-pruned scalar count for the bucket width",
@@ -205,9 +200,10 @@ class ScaleLintSpec extends SparkTestBase {
       "q136_ann_recall" -> ("recall harness compares LSH retrieval against " +
         "exact brute force over the same pruned embedding scan by " +
         "declaration — the duplicate is the harness's two arms"),
-      "q52_knn_ivf" -> ("declared = IVF retrieval + exact-recall " +
-        "certificate: the exact arm re-reads the pruned embedding scan " +
-        "by design (a certificate must not share the approximate path)"),
+      "q52_knn_ivf" -> ("the corpus cells and the probe cells read the " +
+        "same pruned embedding scan against the literal centroids, and " +
+        "the exact-recall certificate re-reads it once more by design " +
+        "(a certificate must not share the approximate path)"),
       "q163_exact_median" -> ("exact median: a count pass then a " +
         "positional-select pass over the same 1-column pruned lineitem " +
         "read — intrinsic two-pass selection, pushed down on both"))
@@ -281,9 +277,9 @@ class ScaleLintSpec extends SparkTestBase {
       "q40_knn_lsh" -> ("probe side is the tiny multi-probe query set " +
         "(≤ 5 × probe keys); per-bucket fan = probes × bucket density, " +
         "top-k cut downstream"),
-      "q52_knn_ivf" -> (probeKnn + "; IVF side probes 2 of k cells per " +
-        "query; exact side is the same 5-probe cross (declared recall " +
-        "certificate)"),
+      "q52_knn_ivf" -> (probeKnn + "; the IVF side joins the corpus to " +
+        "≤ 2 probe cells per query, and the exact side is the same " +
+        "5-probe cross (recall certificate)"),
       "q111_rrf_hybrid" -> ("both retrieval branches are bounded top-k " +
         "BEFORE the fuse: the full-outer join merges two ≤k-row lists " +
         "per probe; O(k) fusion"),
