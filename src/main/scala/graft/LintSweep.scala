@@ -11,10 +11,15 @@ package graft
   * hash of the initial physical plan with expression ids, plan ids,
   * object hashes, lambda names, RDD ids and temp paths normalized,
   * followed by two widths the plan text does not print: each
-  * checkpointed leaf's (`RDDScanExec`) partition count, and the task
-  * counts of the stages the query ran while it was built (its eager
+  * checkpointed leaf's (`RDDScanExec`) partition count, and the distinct
+  * task counts of the stages the query ran while it was built (its eager
   * checkpoints and probes, including checkpoints it released before
-  * returning, such as q101's and q169's edge frames). Two builds whose
+  * returning, such as q101's and q169's edge frames). Distinct, not
+  * every stage: how many query-stage jobs AQE runs inside one eager
+  * action depends on which of its concurrent stages finishes first (a
+  * PageRank round re-plans a join to a broadcast in some runs and not
+  * in others, one more 1-task stage), and the first read of a table in
+  * a JVM runs a schema job; neither is the query's plan. Two builds whose
   * lines match plan every query the same way, checkpoint widths
   * included — the plan-identity check for a change that claims no plan
   * effect. q42,
@@ -67,8 +72,8 @@ object LintSweep {
   /** 16 hex digits of the SHA-256 of the normalized initial physical plan
     * followed by its widths: the partition count of every `RDDScanExec`
     * leaf, which the RDD already knows (no job runs, as in
-    * `Tables.plannedWidth`), and the task counts of the stages its build
-    * ran, sorted (concurrent stages complete in any order). */
+    * `Tables.plannedWidth`), and the distinct task counts of the stages
+    * its build ran, sorted. */
   private def fingerprint(df: org.apache.spark.sql.DataFrame, buildTasks: Seq[Int]): String = {
     val plan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -80,7 +85,7 @@ object LintSweep {
     }
     val text = volatile.foldLeft(plan.toString) { case (t, (re, to)) =>
       t.replaceAll(re, to) } + widths.mkString("\nRDDScanExec partitions: ", ",", "") +
-      buildTasks.sorted.mkString("\nbuild stage tasks: ", ",", "")
+      buildTasks.distinct.sorted.mkString("\nbuild stage widths: ", ",", "")
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(text.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
   }

@@ -3,9 +3,10 @@ package graft
 /** Process-wide accumulator for the wall cost of adaptive-dispatch
   * PROBES — the eager one-row aggregates each skew dispatcher runs at
   * plan-build time (dup-mass HLL, wedge/pair products, boundary fan,
-  * expansion group probes). Every probe site wraps its action in
-  * [[timed]], so the "insurance premium" the adaptive family charges a
-  * run is a MEASURED per-round artifact field (`probe_cost_est` in
+  * expansion group probes). The probes live in `operators.Skew` (plus
+  * q83's blow-up mass) and wrap their action in [[timed]], so the
+  * "insurance premium" the adaptive family charges a run is a
+  * MEASURED per-round artifact field (`probe_cost_est` in
   * bench_full_r*.json) instead of a number re-derived from isolated
   * PerfAB rows whenever a new dispatcher lands (r11 priced five probes
   * at ~1.1% of the suite by hand; this automates that audit).

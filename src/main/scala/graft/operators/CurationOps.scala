@@ -263,77 +263,41 @@ object CurationOps {
   }
 
   /** Adaptive dispatch between the raw gram join and
-    * [[contaminationCollapsed]] — the q37-pin/q83-orientation idiom:
-    * the collapse prices two corpus checkpoints plus expansion probes
-    * onto every call (measured ×2.4 at sf0.1 on the near-dup-only
-    * bench corpus, PerfAB q70 pair), which is pure cost unless real
-    * exact duplication exists for it to neutralize. One HLL pass
-    * compares the content-fingerprint cardinality to the row count;
-    * below [[DedupOps.FanoutPinThreshold]] dup members (the expansion
-    * pin's own "real duplication" bar) the raw join runs — its hot-gram
-    * exposure is then bounded by content diversity, not copy count —
-    * and above it the collapsed form runs (measured ×2.8 at zipf 3·10⁴
-    * and growing quadratically for raw vs linearly for collapsed,
-    * SCALING.md r10). Probe error analysis — the HLL's ±rsd error is
-    * TWO-SIDED, so the dupMass estimate errs both ways by ~5% of
-    * distinct contents: phantom mass on a dup-free corpus can only
-    * pick the collapsed plan (correct, mildly slower — it was built
-    * for exactly the corpus size where 5% of distinct crosses 10⁴),
-    * while an overestimated distinct count UNDERSTATES dupMass and can
-    * keep a corpus just above the bar on the raw plan. That second
-    * direction is perf-exposure, not a cliff: the margin is bounded by
-    * 0.05·distinct, and the raw plan's pain is quadratic in COPY count
-    * per content, which near the 10⁴-member bar is ~10⁸ gram-pair rows
-    * spread over the gram keys — measured indistinguishable from the
-    * collapsed plan until well past the bar (SCALING.md r10 zipf
-    * table; the empirical pain onset is ~10⁸ rows on ONE key). Both
-    * paths emit identical rows (spec parity on all expansion branches;
-    * raw is the oracle-gated form, so parity transitively
-    * oracle-checks the collapsed one).
-    *
-    * Metric note (r11): this outer probe measures dupMass =
-    * rows − distinct (dup members MINUS ONE per dup group), while the
-    * inner expansion pin compares sum(mult) over mult≥2 groups (all
-    * dup members) to the same constant. dupMass is a LOWER BOUND on
-    * dup members — it undercounts by one per group, at most half
-    * (mult=2 groups) — so near the bar the outer probe can stay raw
-    * where the inner metric would pin. Same safe-direction analysis as
-    * the HLL error above: a ≤2× metric gap against a threshold with
-    * ~10⁴× empirical headroom. Kept deliberately: rows − distinct
-    * falls out of the ONE aggregate already paid for, where sum(mult)
-    * would price a second groupBy pass onto every dup-light corpus.
-    *
-    * Probe precision: rsd 0.05, NOT tighter — HLL register count
-    * drives the per-row update cost, measured 0.30 s vs 1.08 s at
-    * rsd 0.01 for the same one-pass scan at sf0.1. */
+    * [[contaminationCollapsed]]: the collapse prices two corpus
+    * checkpoints plus expansion probes onto every call (measured ×2.4 at
+    * sf0.1 on the near-dup-only bench corpus, PerfAB q70 pair), which is
+    * pure cost unless real exact duplication exists for it to
+    * neutralize. [[Skew.dupMass]] of the content fingerprint decides: at
+    * or below [[Skew.FanoutPinThreshold]] the raw join runs — its
+    * hot-gram exposure is then bounded by content diversity, not copy
+    * count — and above it the collapsed form runs (measured ×2.8 at zipf
+    * 3·10⁴ and growing quadratically for raw vs linearly for collapsed,
+    * SCALING.md "q70 contamination"). The probe's error analysis is at
+    * [[Skew.dupMass]]. Both paths emit identical rows (spec parity on
+    * all expansion branches; raw is the oracle-gated form, so parity
+    * transitively oracle-checks the collapsed one). `pinThreshold` is
+    * the straddle specs' reference arm; declared callers take the
+    * default. */
   private[graft] def contaminationAuto(normed: DataFrame,
       isBench: Column, minShared: Long = 3L,
-      // parameterized for the straddle fuzz only (see
-      // DedupOps.expandRepPairs); declared callers take the default
-      pinThreshold: Long = DedupOps.FanoutPinThreshold): DataFrame = {
-    val r = graft.ProbeCost.timed("contamination_dup_mass") {
-      normed.filter(col("norm").isNotNull)
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(xxhash64(col("norm")), 0.05).as("d")).head()
-    }
-    val dupMass = r.getLong(0) - r.getLong(1)
-    if (dupMass <= pinThreshold)
+      pinThreshold: Long = Skew.FanoutPinThreshold): DataFrame =
+    if (Skew.dupMass("contamination_dup_mass",
+        normed.filter(col("norm").isNotNull), xxhash64(col("norm"))) <= pinThreshold)
       // normText is idempotent, so the raw tokenizer re-normalizing
       // `norm` reproduces the exact gram stream of the original text
       contaminationPairs(normed.withColumnRenamed("norm", "text"),
         normed.withColumnRenamed("norm", "text").filter(isBench), minShared)
     else contaminationCollapsed(normed, isBench, minShared)
-  }
 
   /** [[contaminationPairs]] over an exact-dup-collapsed corpus — the
-    * declared q70 since r10 and the at-scale consumer pattern (the
+    * declared q70 and the at-scale consumer pattern (the
     * q35/q36/q37 idiom applied to decontamination): a boilerplate page
     * duplicated 10⁵ times tokenizes ONCE, its grams enter the join once
     * per distinct content instead of once per copy, and the copy×copy
     * pair volume moves from the gram join (where a hot gram's pairs are
     * generated by whichever single task owns the gram key — AQE's skew
-    * split sizes by INPUT bytes and never fires on KBs of edge input,
-    * the SCALING.md r10 blindness) into role-aware expansion joins that
+    * split sizes by INPUT bytes and never fires on KBs of edge input)
+    * into role-aware expansion joins that
     * bucket mega-groups B ways. Output is IDENTICAL to the raw form:
     * n_shared is a pure function of the two CONTENTS, so every member
     * pair scores its representatives' count, and within-group pairs
@@ -354,8 +318,8 @@ object CurationOps {
     // expression (tokens → cappedToks guard → fused 64-bit 3-gram
     // hashes), so counts are hash-identical. Both q70 branches enforce
     // the ingest cap at their tokenize boundary: this one here, the raw
-    // dispatch branch inside contaminationPairs itself (r11 — before
-    // that an oversize doc failed loudly only on dup-heavy corpora).
+    // dispatch branch inside contaminationPairs itself, so an oversize
+    // doc fails loudly on either branch.
     def repSh(reps: DataFrame, as: String) = reps
       .select(col("doc_id"),
         graft.functions.TextFns.cappedToks(split(col("norm"), " ")).as("toks"))
@@ -396,32 +360,16 @@ object CurationOps {
         col("n_shared"))
     val toExpand0 = flagged.filter(col("fa").isNotNull || col("fb").isNotNull)
       .select(col("rep_a"), col("rep_b"), col("n_shared"))
-    // fan-out parallelism pin + mega-group salt: the expandRepPairs
-    // probes, off the already-materialized groups frame
-    val (dupMembers, maxMult) = DedupOps.expansionProbe(c)
-    val toExpand =
-      if (dupMembers > DedupOps.FanoutPinThreshold)
-        Tables.spread(toExpand0, col("rep_a"))
-      else toExpand0
-    val anyBig = maxMult > DedupOps.WithinSaltThreshold
-    val bigIds = c.groups
-      .filter(col("mult") > DedupOps.WithinSaltThreshold)
-      .select(col("rep_id"))
-    val B = Skew.adaptiveBuckets(maxMult.toDouble * maxMult.toDouble)
-    // inner-join `stream` to a total member roster on `key`, emitting
-    // the member as `out`; mega groups take the hot-key salt (rosters
-    // here are total, so no left-coalesce fallback is needed)
-    def fan(stream: DataFrame, key: String, members: DataFrame,
-        out: String): DataFrame = {
-      val m = members.select(col("rep_id").as(key), col("doc_id").as(out))
-      if (!anyBig) stream.join(m, Seq(key))
-      else Skew.hotKeyJoin(stream, m, xxhash64(col(out)), Seq(key),
-        bigIds.select(col("rep_id").as(key)), B, "inner")
-    }
+    // fan-out parallelism pin + mega-group salt, as in expandRepPairs.
+    // The member rosters here are total, so the joins are inner (no
+    // left-coalesce fallback).
+    val plan = Skew.expansionPlan(c.groups)
+    val toExpand = plan.pinned(toExpand0, "rep_a")
     val members = c.map.select(col("rep_id"), col("doc_id"))
     val benchMembers = benchM.withColumnRenamed("bench_id", "doc_id")
-    val expanded = fan(fan(toExpand, "rep_a", members, "doc_id"),
-        "rep_b", benchMembers, "bench_id")
+    val expanded = plan.join(
+        plan.join(toExpand, members, "rep_a", "doc_id", "inner"),
+        benchMembers, "rep_b", "bench_id", "inner")
       .select(col("doc_id"), col("bench_id"), col("n_shared"))
     // ----- within-group pairs: identical contents share every gram, so
     // n_shared = the group's distinct-gram count, eligible at ≥ minShared;
@@ -432,8 +380,8 @@ object CurationOps {
           Seq("doc_id"), "left_semi"), "rep_id")
       .groupBy(col("rep_id")).agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val within = fan(members.join(ngDup, Seq("rep_id")),
-        "rep_id", benchMembers, "bench_id")
+    val within = plan.join(members.join(ngDup, Seq("rep_id")),
+        benchMembers, "rep_id", "bench_id", "inner")
       .filter(col("doc_id") =!= col("bench_id"))
       .select(col("doc_id"), col("bench_id"), col("n_shared"))
     direct.unionByName(expanded).unionByName(within)
@@ -542,16 +490,25 @@ object CurationOps {
     *
     * The build is SIZE-GATED (like Spark's own
     * `runtime.bloomFilter.creationSideThreshold`): above
-    * `spark.graft.bloom.maxItems` build keys the bloom step is skipped
-    * and the plain join runs unchanged. At the default 3% fpp a filter
-    * costs ~7.3 bits/key, so the 4M-key default caps the collected
-    * literal at ~3.6 MB; an ungated 1e9-key build side would collect a
+    * [[BloomMaxItems]] build keys the bloom step is skipped and the
+    * plain join runs unchanged. At the default 3% fpp a filter costs
+    * ~7.3 bits/key, so the 4M-key gate caps the collected literal at
+    * ~3.6 MB; an ungated 1e9-key build side would collect a
     * ~1 GB filter into the driver AND ship it inside every task binary
     * — the exact failure mode the gate exists to prevent. The fallback
     * is also the right plan: once the build side stops being small
     * relative to the probe side's key space, the filter's selectivity
     * (and hence its shuffle savings) vanishes. */
-  def q71BloomJoin(s: SparkSession, dir: String): DataFrame = {
+  def q71BloomJoin(s: SparkSession, dir: String): DataFrame =
+    q71BloomJoin(s, dir, BloomMaxItems)
+
+  /** Build-key count above which [[q71BloomJoin]] skips the bloom step. */
+  private[graft] val BloomMaxItems = 4000000L
+
+  /** [[q71BloomJoin]] with the size gate injectable (the plan-shape
+    * spec's oversized-build arm). */
+  private[graft] def q71BloomJoin(s: SparkSession, dir: String,
+      maxItems: Long): DataFrame = {
     import org.apache.spark.sql.GraftShims
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -562,8 +519,6 @@ object CurationOps {
     // small side) instead of the 1M-item default — the serialized filter
     // rides inside the probe literal in every task, and a default-sized
     // one is ~1 MB vs a few KB here; fpp stays the conf default (3%)
-    val maxItems =
-      s.conf.getOption("spark.graft.bloom.maxItems").map(_.toLong).getOrElse(4000000L)
     val buildCount = o.count()
     val fact = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))

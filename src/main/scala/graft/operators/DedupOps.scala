@@ -158,71 +158,6 @@ object DedupOps {
       .select(col("doc_id"), explode(shingles(col("toks"), 3)).as("sh"))
       .distinct()
 
-  /** Group size above which the within-group self-join is salted into
-    * bucket-pair keys (see the MEGA-GROUP SALT comment below). At the
-    * threshold the unsalted single key emits at most C(1024,2) ≈ 5·10⁵
-    * pairs — comfortably one task; above it the quadratic needs
-    * spreading.
-    *
-    * SCALE PORTABILITY (r11, the contract all four skew constants in
-    * this file share): the constant bounds SINGLE-TASK OUTPUT ROWS —
-    * C(T,2) ≈ 5·10⁵ pairs is ~30 ms of one core generating narrow rows
-    * (the measured ~1.6·10⁷ rows/core-second of this family's pair
-    * shapes, SCALING.md r10) — and one task runs on ONE core no matter
-    * whether the cluster has 32 or 32,000 of them. A 1000-executor job
-    * keeps exactly this constant: the quantity it caps is
-    * width-independent, unlike anything denominated in cluster
-    * fractions. It would need re-deriving only if per-core row
-    * throughput moved by orders of magnitude; the crossover is FLAT —
-    * the zipf straddle runs (factor 512 vs 2048, SCALING.md r11) show
-    * either branch within noise of the other near the bar, so the
-    * constant's placement is uncritical within ~4×. */
-  private[graft] val WithinSaltThreshold = 1024L
-
-  /** Dup-member count above which the corpus-dense (hasMults) pair
-    * stream gets its expansion-join parallelism pinned. The pin is one
-    * full shuffle of the pair stream, so it must only fire when the
-    * expansion will actually multiply rows: ≥10k docs sitting in
-    * exact-dup groups means real duplication (the shared-vocab regime
-    * measured 50k members → ×100 fan-out), while a near-dup-only corpus
-    * (16 members at sf0.1) keeps the shuffle-free plan. NOTE the
-    * coalesced-width blindness exists in BOTH join regimes: when the
-    * member map broadcasts, the BHJ fans out map-side over the
-    * UPSTREAM's AQE-coalesced partitions — the pin fixes the width
-    * regardless of strategy.
-    *
-    * SCALE PORTABILITY (r11): this is the one constant in the family
-    * that is a DUPLICATION DETECTOR rather than a single-task output
-    * bound — so its argument has two halves, both width-independent.
-    * (1) The FIX side scales with the cluster by construction: the pin
-    * is a `Tables.spread` to the width target, never to a constant. (2) The
-    * TRIGGER side compares a corpus property (dup members) whose two
-    * error regimes cost width-independent amounts: firing with nothing
-    * to spread prices one pair-stream shuffle — a bounded FRACTION of a
-    * plan that already shuffles that stream (measured +80% worst-case
-    * at 1×, the reason the pin is conditional at all); NOT firing just
-    * below the bar leaves per-key fan-out ≤ [[WithinSaltThreshold]]
-    * (the expansion side-joins bucket bigger groups regardless of the
-    * pin) on AQE-input-split tasks — single-task seconds again, not
-    * cluster fractions. The crossover is flat: zipf straddle runs at
-    * 5·10³ vs 2·10⁴ members (SCALING.md r11) measure both branches
-    * within noise of each other near the bar. */
-  private[graft] val FanoutPinThreshold = 10000L
-
-  /** The member-expansion dispatch probes, shared by [[expandRepPairs]]
-    * and `CurationOps.contaminationCollapsed`: ONE aggregate over the
-    * already-materialized groups frame returns (dup members = Σ mult
-    * over groups with mult ≥ 2, the fan-out pin's trigger; max(mult),
-    * the mega-group salt's trigger and its bucket-count input). */
-  private[graft] def expansionProbe(c: Collapsed): (Long, Long) = {
-    val r = graft.ProbeCost.timed("expansion_probe") {
-      c.groups.agg(sum(when(col("mult") >= 2L, col("mult"))),
-        max(col("mult"))).head()
-    }
-    (if (r.isNullAt(0)) 0L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
   /** Re-expand representative-level pairs to member pairs.
     *
     * The expansion only does WORK proportional to duplication: every
@@ -231,26 +166,23 @@ object DedupOps {
     * joins whose probe misses — NULLs coalesce back to the rep ids and
     * the pair passes through untouched. On a low-duplication corpus the
     * dup-member map is small (AQE broadcasts it) and the huge rep-pair
-    * stream never shuffles — the r9 tagged-mode run caught the earlier
-    * unconditional two-join form shuffling q37's 33M-pair stream twice
-    * for an IDENTITY expansion (×19 wall-time at 10× with zero
-    * duplicates). On a dup-heavy corpus the joins carry exactly the
-    * pairs that genuinely multiply. Within-group pairs come from a
-    * dup-member self-join restricted to groups satisfying
+    * stream never shuffles (an unconditional two-join form shuffled
+    * q37's 33M-pair stream twice for an IDENTITY expansion, ×19 wall at
+    * 10× with zero duplicates). On a dup-heavy corpus the joins carry
+    * exactly the pairs that genuinely multiply. Within-group pairs come
+    * from a dup-member self-join restricted to groups satisfying
     * `withinEligible` (they score `withinCols` — J = 1.0 / Hamming = 0
     * — by construction). The quadratic-in-multiplicity pair volume that
-    * remains is the declared OUTPUT, not candidate-stage work. */
+    * remains is the declared OUTPUT, not candidate-stage work.
+    *
+    * The bar parameters exist for the straddle specs, which swing each
+    * around a fixed corpus's probed value; `forceBuckets` pins the salt
+    * count to prove the within-group self-join's parity across B.
+    * Production callers take the defaults ([[Skew.expansionPlan]]). */
   private[graft] def expandRepPairs(repPairs: DataFrame, c: Collapsed,
       withinCols: Seq[Column], withinEligible: Column,
-      // threshold parameters exist for the straddle fuzz ONLY (a battery
-      // swings each one around a fixed corpus's probed value and asserts
-      // hash-identical output + the intended branch); every production
-      // caller takes the defaults. forceBuckets = 0 derives B from the
-      // probed max group size (Skew.adaptiveBuckets); the fuzz pins it
-      // to prove the within-group self-join's parity across bucket
-      // counts.
-      saltThreshold: Long = WithinSaltThreshold,
-      pinThreshold: Long = FanoutPinThreshold,
+      saltThreshold: Long = Skew.WithinSaltThreshold,
+      pinThreshold: Long = Skew.FanoutPinThreshold,
       forceBuckets: Long = 0L): DataFrame = {
     val mults = Set("mult_a", "mult_b")
     val hasMults = mults.subsetOf(repPairs.columns.toSet)
@@ -264,11 +196,9 @@ object DedupOps {
     // off MAP-SIDE as a filter and is emitted verbatim — on a
     // low-duplication corpus the expansion then shuffles (almost)
     // nothing, instead of shuffling the whole pair stream against a
-    // near-empty build side (the r9 tagged-mode catch: two SMJs of a
-    // 33M-pair stream probing an EMPTY dup map). Pipelines without mult
-    // columns (q35/q36 — small verified/banded pair sets) take the join
-    // path for every pair; their streams are near-dup-sized, not
-    // corpus-dense.
+    // near-empty build side. Pipelines without mult columns (q35/q36 —
+    // small verified/banded pair sets) take the join path for every
+    // pair; their streams are near-dup-sized, not corpus-dense.
     val (direct, toJoin0): (Option[DataFrame], DataFrame) =
       if (hasMults)
         (Some(repPairs.filter(col("mult_a") === 1L && col("mult_b") === 1L)
@@ -276,50 +206,20 @@ object DedupOps {
           repPairs.filter(col("mult_a") > 1L || col("mult_b") > 1L)
             .select((Seq("doc_a", "doc_b") ++ extras).map(col): _*))
       else (None, repPairs)
-    // FAN-OUT PARALLELISM PIN (r10): AQE sizes shuffle partitions by
-    // INPUT bytes, but each expansion row emits mult_a·mult_b outputs —
-    // at shared-vocab 10× the 33M-pair stream fit TWO advisory-sized
-    // partitions while generating the full 335M-row output (measured:
-    // the whole expansion ran in 2 tasks on 32 cores, max-task ≈ wall;
-    // q37 shared-vocab ×14–16 wall in r8–r9 was mostly THIS, not
-    // intrinsic output volume — ×2.2 with the pin). `Tables.spread` on
-    // the first join's key fixes the width and the SMJ reuses its
-    // partitioning, so output generation spreads across the cluster.
-    // Conditioned on a dup-member-count probe of the materialized
-    // groups frame: on a corpus with no real exact duplication the
-    // expansion multiplies nothing, and the pin's forced shuffle of the
-    // pair stream is pure cost (measured q37 +80% at 1× on the
-    // near-dup-only bench corpus, 16 dup members) — see
-    // [[FanoutPinThreshold]].
-    val (dupMembers, maxMult) = expansionProbe(c)
-    val toJoin = if (hasMults && dupMembers > pinThreshold)
-      Tables.spread(toJoin0, col("doc_a"))
-    else toJoin0
-    // ADAPTIVE SALT BRANCH (r10): on a normal corpus no group exceeds
-    // the salt threshold and the plan below is EXACTLY the unsalted r9
-    // shape — planning the salted form unconditionally cost +8–49%
-    // across the expansion-consuming dedup family at 1× (six dead joins
-    // against empty broadcasts, re-planned in every CC round;
-    // bench_full_r10 first run). The probed max(mult) also sizes the
-    // salt (r12, Skew.adaptiveBuckets; B = 64 for every corpus at or
-    // below the 32× bar, so the r11 plan is unchanged there).
-    val anyBig = maxMult > saltThreshold
-    val bigIds = c.groups.filter(col("mult") > saltThreshold)
-      .select(col("rep_id"))
-    val B = if (forceBuckets > 0) forceBuckets
-      else Skew.adaptiveBuckets(maxMult.toDouble * maxMult.toDouble)
-    // One expansion join per pair side. LEFT + coalesce on the normal
-    // path: a pair whose side is a singleton misses the dup-member map
-    // and falls back to its own rep id. A side in a MEGA group (r10)
-    // would replicate every member under ONE join key (#pairs(rep) ×
-    // mult rows in one task — measured 134 s at zipf 3·10⁴, q37); such
-    // groups take the hot-key salt on (rep, member bucket) instead.
-    def expandSide(stream: DataFrame, rep: String, out: String): DataFrame = {
-      val members = dm.select(col("rep_id").as(rep), col("doc_id").as(out))
-      if (!anyBig) stream.join(members, Seq(rep), "left")
-      else Skew.hotKeyJoin(stream, members, xxhash64(col(out)), Seq(rep),
-        bigIds.select(col("rep_id").as(rep)), B, "left")
-    }
+    // The fan-out pin and the mega-group salt, from one probe of the
+    // materialized groups frame. The pin applies to corpus-dense streams
+    // only: on the others the expansion multiplies nothing it could
+    // spread. On a corpus with no group past the within bar the joins
+    // below are the plain single-key plan: planning the salted form
+    // unconditionally cost +8–49% across the expansion consumers.
+    val plan = Skew.expansionPlan(c.groups, pinThreshold, saltThreshold,
+      forceBuckets)
+    val toJoin = if (hasMults) plan.pinned(toJoin0, "doc_a") else toJoin0
+    // One expansion join per pair side. LEFT + coalesce: a pair whose
+    // side is a singleton misses the dup-member map and falls back to
+    // its own rep id.
+    def expandSide(stream: DataFrame, rep: String, out: String): DataFrame =
+      plan.join(stream, dm, rep, out, "left")
     val cross = expandSide(expandSide(
         toJoin.withColumnRenamed("doc_a", "rep_a")
           .withColumnRenamed("doc_b", "rep_b"),
@@ -332,74 +232,59 @@ object DedupOps {
           coalesce(col("xb"), col("rep_b"))).as("doc_b")) ++ extras.map(col): _*)
     val em = dm.join(c.groups.filter(withinEligible).select(col("rep_id")),
       Seq("rep_id"), "left_semi")
-    // MEGA-GROUP SALT (r10): a group of 10⁵ exact copies (boilerplate
-    // pages — real crawls have them) emits C(m,2) ≈ 5·10⁹ within pairs
-    // under ONE rep_id join key, and AQE's skew split never fires — the
-    // join's INPUT partition is tiny (m rows of two longs, far below the
-    // 256 MB threshold); the quadratic lives in the OUTPUT, which AQE
-    // can't see (measured: zipf mode at 10⁴ copies runs the whole
-    // expansion in one 2.5–4 s task while 15 cores idle, SCALING.md
-    // r10). Groups above the threshold take a bucket-pair self-join:
-    // members hash into B buckets, the left side explodes to every
-    // target bucket ≥ its own, and the join keys on (rep_id, bucket) —
-    // B keys per mega group, the largest carrying 2/(B+1) of the pairs.
-    // Each unordered pair {a,b} is emitted EXACTLY once: for bkt_a <
-    // bkt_b only a's explode reaches b's bucket; within a bucket the
-    // doc_id order keeps one side (the disjunction below). Groups at or
-    // below the threshold — every group in a non-pathological corpus —
-    // keep the old single-key plan (chosen at build time by the anyBig
-    // probe above).
-    val within = if (!anyBig)
-      em.as("x").join(em.as("y"),
+    // MEGA-GROUP SALT: a group of 10⁵ exact copies (boilerplate pages —
+    // real crawls have them) emits C(m,2) ≈ 5·10⁹ within pairs under ONE
+    // rep_id join key, and AQE's skew split never fires — the join's
+    // INPUT partition is tiny (m rows of two longs); the quadratic lives
+    // in the OUTPUT (zipf mode at 10⁴ copies ran the whole expansion in
+    // one 2.5–4 s task while 15 cores idled). Groups past the within bar
+    // take a bucket-pair self-join: members hash into B buckets, the
+    // left side explodes to every target bucket ≥ its own, and the join
+    // keys on (rep_id, bucket) — B keys per mega group, the largest
+    // carrying 2/(B+1) of the pairs. Each unordered pair {a,b} is
+    // emitted EXACTLY once: for bkt_a < bkt_b only a's explode reaches
+    // b's bucket; within a bucket the doc_id order keeps one side (the
+    // disjunction below).
+    def withinPairs(m: DataFrame): DataFrame =
+      m.as("x").join(m.as("y"),
           col("x.rep_id") === col("y.rep_id")
             && col("x.doc_id") < col("y.doc_id"))
         .select(Seq(col("x.doc_id").as("doc_a"),
           col("y.doc_id").as("doc_b")) ++ withinCols: _*)
-    else {
-      val emSmall = em.join(bigIds, Seq("rep_id"), "left_anti")
-      val emBig = em.join(bigIds, Seq("rep_id"), "left_semi")
-      val withinSmall = emSmall.as("x").join(emSmall.as("y"),
-          col("x.rep_id") === col("y.rep_id")
-            && col("x.doc_id") < col("y.doc_id"))
-        .select(Seq(col("x.doc_id").as("doc_a"),
-          col("y.doc_id").as("doc_b")) ++ withinCols: _*)
-      val embk = emBig.withColumn("bkt",
-        pmod(xxhash64(col("doc_id")), lit(B)))
-      // spread the member slice to FULL WIDTH before the ×(B−bkt)
-      // explode (r12): the slice arrives on the collapse map's
-      // partitioning — ONE partition when the mega fp's member join
-      // ran on a single key — and the explode's row multiplication
-      // plus its shuffle WRITE run map-side on that layout. Measured
-      // at zipf 10⁵: 8.2 s on one core (105k recsIn → 3·10⁷ exploded
-      // rows from one task) while the pair join itself was already
-      // spread. A round-robin shuffle of the NARROW pre-explode rows is
-      // three orders of magnitude cheaper than the single-core
-      // multiplication it unblocks.
-      val exploded = Tables.spread(embk)
-        .withColumn("tb", explode(sequence(col("bkt"), lit(B - 1))))
-      // same AQE output-blindness as the cross fan-out: the exploded
-      // member stream is tiny in bytes but each (rep, bucket) key
-      // emits ~C(m,2)·2(j+1)/(B(B+1)) pairs — pin the join's
-      // parallelism so the mega group's output streams at full width
-      val withinBig = Tables.spread(exploded, col("rep_id"), col("tb"))
-        // shuffle_hash on the bucketed side: see Skew.hotKeyJoin — a
-        // broadcast here would void the pin, a sort-merge join would
-        // row-copy the M:N inner loop
-        .as("x").join(embk.hint("shuffle_hash").as("y"),
-          col("x.rep_id") === col("y.rep_id")
-            && col("x.tb") === col("y.bkt")
-            && (col("x.bkt") < col("y.bkt")
-              || col("x.doc_id") < col("y.doc_id")))
-        .select(Seq(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-          ++ withinCols: _*)
-      withinSmall.union(withinBig)
+    val within = plan.big match {
+      case None => withinPairs(em)
+      case Some(bigIds) =>
+        val B = plan.buckets
+        val embk = em.join(bigIds, Seq("rep_id"), "left_semi")
+          .withColumn("bkt", pmod(xxhash64(col("doc_id")), lit(B)))
+        // spread the member slice to FULL WIDTH before the ×(B−bkt)
+        // explode: the slice arrives on the collapse map's partitioning —
+        // ONE partition when the mega fp's member join ran on a single
+        // key — and the explode's row multiplication plus its shuffle
+        // WRITE would run map-side on that layout (8.2 s on one core at
+        // zipf 10⁵). A round-robin shuffle of the NARROW pre-explode rows
+        // is three orders of magnitude cheaper.
+        val exploded = Tables.spread(embk)
+          .withColumn("tb", explode(sequence(col("bkt"), lit(B - 1))))
+        // the exploded member stream is tiny in bytes but each
+        // (rep, bucket) key emits ~C(m,2)·2(j+1)/(B(B+1)) pairs — pin
+        // the join's parallelism so the output streams at full width;
+        // shuffle_hash on the bucketed side, as in Skew.hotKeyJoin
+        val withinBig = Tables.spread(exploded, col("rep_id"), col("tb"))
+          .as("x").join(embk.hint("shuffle_hash").as("y"),
+            col("x.rep_id") === col("y.rep_id")
+              && col("x.tb") === col("y.bkt")
+              && (col("x.bkt") < col("y.bkt")
+                || col("x.doc_id") < col("y.doc_id")))
+          .select(Seq(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
+            greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
+            ++ withinCols: _*)
+        withinPairs(em.join(bigIds, Seq("rep_id"), "left_anti"))
+          .union(withinBig)
     }
-    // name-checked union (r10, ADVICE): the branches used to union
-    // POSITIONALLY, so a caller passing withinCols in a different order
-    // than the pipeline's extras would silently mislabel columns.
-    // unionByName would still accept a type-compatible permutation, so
-    // the order itself is asserted first.
+    // name-checked union: unionByName would still accept a
+    // type-compatible permutation of withinCols, so the order itself is
+    // asserted first.
     require(within.columns.sameElements(cross.columns),
       s"expandRepPairs: withinCols name [${within.columns.drop(2).mkString(", ")}] " +
         s"but the pair stream carries extras [${extras.mkString(", ")}] — " +
@@ -838,8 +723,9 @@ object DedupOps {
       .select("label", "vec_a", "vec_b", "cos")
   }
 
-  /** Adaptive q38 (r11): below [[FanoutPinThreshold]] dup vectors the
-    * raw within-label join runs; above it, pairs form on (label, q)
+  /** Adaptive q38: at or below [[Skew.FanoutPinThreshold]] dup vectors
+    * ([[Skew.dupMass]] of the (label, q) fingerprint) the raw
+    * within-label join runs; above it, pairs form on (label, q)
     * collapsed representatives and expand to members — a duplicated
     * vector's copies otherwise enumerate C(m,2) pairs inside one label
     * block (zipf 3000 copies measured ×14.8, 94% single-task). The
@@ -848,18 +734,18 @@ object DedupOps {
     * the raw branch's own FP sequence (see [[withinCos]]). Output
     * identical, straddle-spec'd. */
   private[graft] def q38Auto(e: DataFrame,
-      pinThreshold: Long = FanoutPinThreshold): DataFrame = {
+      pinThreshold: Long = Skew.FanoutPinThreshold): DataFrame = {
     // NULL-label rows can never pair in the raw form (the equi-join
     // drops them: null ≠ null) — but a collapsed null-label GROUP
     // would emit its within pairs, a silent null-semantics parity
     // break. Excluded before the collapse; straddle-fuzz seeds a
-    // null-label dup group to keep it that way. The dispatch PROBE
-    // runs on the same filtered frame (r12, ADVICE): a corpus whose
-    // duplication sits in null-label rows has nothing the collapse
-    // can merge, so counting those rows toward dup mass would buy the
-    // collapse checkpoints for zero benefit.
+    // null-label dup group to keep it that way. The probe runs on the
+    // same filtered frame: duplication in null-label rows gives the
+    // collapse nothing to merge, so it must not buy the collapse
+    // checkpoints.
     val nn = e.filter(col("label").isNotNull)
-    if (vectorDupMass(nn, Seq("label")) <= pinThreshold) q38Core(e)
+    if (Skew.dupMass("vector_dup_mass", nn, xxhash64(col("label"), col("q")))
+        <= pinThreshold) q38Core(e)
     else {
       val c = collapseVectors(nn, Seq("label"), Seq("label", "n2"))
       val repPairs = q38Core(c.reps)
@@ -1013,34 +899,17 @@ object DedupOps {
       groups = groups.select(col("rep_id"), col("mult")))
   }
 
-  /** Duplicate-mass probe over a vector fingerprint — the q70 dispatch
-    * applied to embeddings: one rsd-0.05 HLL pass decides whether the
-    * banded/blocked pair joins run on the raw frame (dup-light: the
-    * collapse checkpoints are pure cost) or on exact-dup-collapsed
-    * representatives with member expansion (dup-heavy: a duplicated
-    * vector's copies otherwise enumerate C(m,2) pairs under one bucket
-    * key). Two-sided HLL error, same analysis as
-    * [[graft.operators.CurationOps.contaminationAuto]]. */
-  private[graft] def vectorDupMass(e: DataFrame, keyCols: Seq[String]): Long = {
-    val fpCols = keyCols.map(col) :+ col("q")
-    val r = graft.ProbeCost.timed("vector_dup_mass") {
-      e.agg(count(lit(1)).as("n"),
-        approx_count_distinct(xxhash64(fpCols: _*), 0.05).as("d")).head()
-    }
-    r.getLong(0) - r.getLong(1)
-  }
-
-  /** Adaptive q49: raw banded join below [[FanoutPinThreshold]] dup
-    * vectors, collapse + expansion above. Identical output: identical
-    * vectors share every band key, so within-group pairs are emitted
-    * with the raw join's own cosine FP sequence reconstructed from the
-    * group n2 ([[withinCos]] — exact at any norm, where the r11
-    * `lit(1.0)` was exact only below n2² < 2⁵³); cross pairs score
-    * their representatives' vectors, which equal every member's.
+  /** Adaptive q49: raw banded join at or below
+    * [[Skew.FanoutPinThreshold]] dup vectors ([[Skew.dupMass]] of the q
+    * fingerprint), collapse + expansion above. Identical output:
+    * identical vectors share every band key, so within-group pairs are
+    * emitted with the raw join's own cosine FP sequence reconstructed
+    * from the group n2 ([[withinCos]], exact at any norm); cross pairs
+    * score their representatives' vectors, which equal every member's.
     * Parity + branch witness straddle-spec'd (DispatchStraddleSpec). */
   private[graft] def embeddingLshAuto(e: DataFrame,
-      pinThreshold: Long = FanoutPinThreshold): DataFrame =
-    if (vectorDupMass(e, Seq.empty) <= pinThreshold)
+      pinThreshold: Long = Skew.FanoutPinThreshold): DataFrame =
+    if (Skew.dupMass("vector_dup_mass", e, xxhash64(col("q"))) <= pinThreshold)
       embeddingLshPairs(e, bandsN = 2, bitsPerBand = 4, minCos = 0.4)
     else {
       val c = collapseVectors(e, Seq.empty, Seq("n2"))
@@ -1397,8 +1266,7 @@ object DedupOps {
 
   /** Rooted triangle counts `(doc_id, n_triangles)` with the orientation
     * bar injectable: `Long.MaxValue` forces the id-ordered arm (the
-    * r1–r10 unconditional form, the PerfAB baseline), `1` the
-    * degree-ordered arm. */
+    * PerfAB baseline), `1` the degree-ordered arm. */
   private[graft] def trianglesAdaptive(edges: DataFrame,
       threshold: Long): DataFrame =
     enumerateTriangles(edges, threshold, "wedge_product")(
@@ -1409,7 +1277,7 @@ object DedupOps {
   /** The one triangle enumeration behind [[trianglesAdaptive]] and
     * [[triangleTriples]]. Checkpoints the canonical edge list, probes the
     * id-ordered plan's worst single-key wedge output max_b in(b)·out(b)
-    * (under the ProbeCost name `probe`), and hands the closed wedges of
+    * ([[Skew.maxFan]] as `probe`), and hands the closed wedges of
     * the chosen orientation to that arm's consumer: `idArm` sees
     * id-ordered triples `(a < b < c)`, `degArm` sees degree-ordered
     * wedges `(u, x, y)` (u the lowest-(degree, id) corner). Returns the
@@ -1421,15 +1289,12 @@ object DedupOps {
       degArm: DataFrame => DataFrame): DataFrame = {
     val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
     // the id-ordered wedge stage joins in-edges (doc_b = b) to
-    // out-edges (doc_a = b). Two node-count-sized aggregates over the
-    // checkpointed edges; double math so a pathological hub can't wrap
-    // the comparison negative.
-    val mw = graft.ProbeCost.timed(probe) {
+    // out-edges (doc_a = b): two node-count-sized aggregates over the
+    // checkpointed edges
+    val maxWedge = Skew.maxFan(probe,
       e.groupBy(col("doc_b").as("v")).agg(count(lit(1)).as("i"))
-        .join(e.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("o")), Seq("v"))
-        .agg(max(col("i").cast("double") * col("o")).as("mw")).head()
-    }
-    val maxWedge = if (mw.isNullAt(0)) 0.0 else mw.getDouble(0)
+        .join(e.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("o")), Seq("v")),
+      "i", "o")
     val out =
       if (maxWedge <= threshold.toDouble) {
         val e1 = e.select(col("doc_a").as("a"), col("doc_b").as("b"))
@@ -1844,26 +1709,20 @@ object DedupOps {
     * and last k-token windows, each hashed directly via GramKHash64 on a
     * k-token slice — no window stream, no explode), then ONE self-join
     * keyed on the 64-bit hash, over a CHECKPOINTED 3-long-per-doc
-    * boundary index (one tokenize pass instead of the r1–r10 two).
+    * boundary index (one tokenize pass).
     *
-    * Skew note (r11 — found by the FanoutAudit class-#9 sweep, which
-    * flagged this join as M:N on the boundary hash): a VIRAL boundary
-    * (boilerplate opening/closing shared by m docs, or m exact copies
-    * of a short doc whose head window equals its tail window) emits
-    * m_tail(h)·m_head(h) pairs under ONE join key from KBs of input —
-    * the r1–r10 scaladoc claimed "AQE-splittable join skew", the exact
-    * wrong-claim pattern of the q37/q83/q70 class: AQE's skew split
-    * keys off INPUT partition bytes and never fires here. The fix is
-    * the standing adaptive idiom: one probe aggregate over the
-    * already-checkpointed index computes the worst single-key pair
-    * output max_h m_tail(h)·m_head(h); at or below
-    * [[Skew.SingleTaskRows]] the plain join runs (identical to r10's
-    * shape, minus the double tokenize), above it the HOT KEYS ONLY take
-    * [[Skew.hotKeyJoin]]'s bucket salt (tails bucketed by doc, heads
-    * replicated to every bucket); cold keys keep the plain join.
-    * Parity + branch-witness spec'd across the threshold
-    * (GraphTextSpec); measured on zipf head==tail copies in SCALING.md
-    * r11. */
+    * Skew: a VIRAL boundary (boilerplate opening/closing shared by m
+    * docs, or m exact copies of a short doc whose head window equals
+    * its tail window) emits m_tail(h)·m_head(h) pairs under ONE join
+    * key from KBs of input, and AQE's skew split keys off INPUT
+    * partition bytes, so it never fires here. The join therefore runs
+    * through [[Skew.fanJoin]] on the index's per-hash tail/head counts:
+    * at or below [[Skew.SingleTaskRows]] the plain join runs, above it
+    * the HOT KEYS ONLY take the bucket salt (tails bucketed by doc,
+    * heads replicated to every bucket); cold keys keep the plain join.
+    * Parity + branch-witness spec'd across the bar (GraphTextSpec);
+    * measured on zipf head==tail copies in SCALING.md ("The fixes, one
+    * idiom, four shapes"). */
   def headTailPairs(docs: DataFrame, k: Int,
       fanThreshold: Long = Skew.SingleTaskRows): DataFrame = {
     import graft.functions.HashExprs.gramk_hash64
@@ -1876,33 +1735,13 @@ object DedupOps {
       .localCheckpoint(true)
     val tails = base.select(col("doc_id").as("doc_a"), col("tail_h").as("h"))
     val heads = base.select(col("doc_id").as("doc_b"), col("head_h").as("h"))
-    // worst single-key pair output under the plain join; double math so
-    // a pathological boundary can't wrap the comparison negative
     val keyCounts = base.groupBy(col("tail_h").as("h"))
       .agg(count(lit(1)).as("mt"))
       .join(base.groupBy(col("head_h").as("h"))
         .agg(count(lit(1)).as("mh")), Seq("h"))
-    val mw = graft.ProbeCost.timed("boundary_fan") {
-      keyCounts
-        .agg(max(col("mt").cast("double") * col("mh")).as("mw")).head()
-    }
-    val maxFan = if (mw.isNullAt(0)) 0.0 else mw.getDouble(0)
-    val pairs =
-      if (maxFan <= fanThreshold.toDouble)
-        tails.join(heads, Seq("h"))
-      else {
-        // materialized once: the hot-key roster feeds FOUR anti/semi
-        // broadcasts, and a lazy `hot` re-runs the keyCounts
-        // aggregation inside every broadcast build (measured: the
-        // re-aggregations, not the salted join itself, were most of the
-        // salted plan's overhead — stage decomposition, r11)
-        val hot = keyCounts
-          .filter(col("mt").cast("double") * col("mh") > fanThreshold.toDouble)
-          .select(col("h")).localCheckpoint(true)
-        Skew.hotKeyJoin(heads, tails, xxhash64(col("doc_a")), Seq("h"), hot,
-          Skew.adaptiveBuckets(maxFan), "inner")
-      }
-    pairs.filter(col("doc_a") =!= col("doc_b"))
+    Skew.fanJoin(tails, heads, xxhash64(col("doc_a")), Seq("h"), keyCounts,
+        "mt", "mh", "boundary_fan", fanThreshold)
+      .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
   }
 

@@ -579,46 +579,22 @@ object EventOps {
     * on the JOIN condition so the pair stream never widens; then a
     * #channels-bounded aggregate and a 1-row broadcast for the share.
     *
-    * Skew note (r11 — the class-#9 sweep flagged this join M:N on
-    * user_id, and the bot-user zipf fixture CONFIRMED it: 2·10⁴ events
-    * on one user ran the f²/8 ≈ 5·10⁷-pair window join essentially in
-    * a single task, max-task 2.68 s of a 2.98 s wall, quadratic from
-    * there — a 2·10⁵-event bot would single-task for minutes. The
-    * r1–r10 scaladoc claimed "a bot user is join skew, AQE-splittable"
-    * — the class's standing wrong claim: the pair volume is join
-    * OUTPUT, invisible to AQE's input-byte skew split). Fix is the
-    * standing adaptive idiom: one single-pass probe aggregate computes
-    * max_u |P_u|·|T_u|; at or below [[WindowFanThreshold]] the
-    * r10-shaped plain join runs, above it HOT USERS ONLY take
-    * [[Skew.hotKeyJoin]]'s bucket salt (purchases bucketed, touches
-    * replicated to every bucket); cold users keep the plain join. The
-    * per-channel aggregate consumes the identical pair multiset — parity + branch witnesses spec'd across the
-    * threshold (DispatchStraddleSpec); measured post-fix in the
-    * standing zipf-events row (SCALING.md r11). */
+    * Skew: a bot user is join-OUTPUT skew, invisible to AQE's
+    * input-byte skew split — 2·10⁴ events on one user ran the
+    * f²/8 ≈ 5·10⁷-pair window join in a single task (max-task 2.68 s of
+    * a 2.98 s wall), quadratic from there. The join therefore runs
+    * through [[Skew.fanJoin]]: one single-pass aggregate of per-user
+    * purchase/touch counts is probed for max_u |P_u|·|T_u|; at or below
+    * [[Skew.WindowFanThreshold]] the plain join runs, above it HOT USERS
+    * ONLY take the bucket salt (purchases bucketed, touches replicated
+    * to every bucket); cold users keep the plain join. The per-channel
+    * aggregate consumes the identical pair multiset — parity + branch
+    * witnesses spec'd across the bar (DispatchStraddleSpec). */
   def q152DecayAttribution(s: SparkSession, dir: String): DataFrame =
-    decayAttribution(Tables.events(s, dir), WindowFanThreshold)
+    decayAttribution(Tables.events(s, dir), Skew.WindowFanThreshold)
 
-  /** Worst single-user pair ENUMERATION (|P_u|·|T_u| candidates, before
-    * the window filter) q152's plain SMJ may run in one task before hot
-    * users take the bucket salt — [[Skew.SingleTaskRows]]'s unit, but
-    * a per-operator value: q152's salted branch additionally
-    * prices TWO stream checkpoints (the narrow purchase/touch
-    * projections, materialized so the hot split doesn't re-scan the
-    * event table four times), so its measured crossover sits at
-    * ~2–4·10⁸ on the sf0.1 stream (PerfAB `q152_auto` — a row since
-    * retired, re-runnable from commit dfb188e, see SCALING.md "Retired
-    * A/B variants" — vs `q152_plain_forced` on the 4·10⁴-bot fixture,
-    * post the r11 duplicate-subtree fix: 7.8 vs 6.8 s at 4·10⁸ = 1.5×
-    * this bar —
-    * flat, the crossover contract; the plain form's single task is
-    * ~5 s there and grows quadratically while the salted max-task
-    * stays bucket-bounded). 2²⁸ ≈ 2.7·10⁸. NOTE the bot fixture
-    * fat-tasked (max-task ≈ wall) with a BROADCASTABLE purchase side —
-    * the clustered-stream evidence behind keying the dispatch on the
-    * output bound alone (see [[Skew.SingleTaskRows]]' calibration
-    * record). */
-  private[graft] val WindowFanThreshold: Long = 1L << 28
-
+  /** [[q152DecayAttribution]] over `ev` with the window-fan bar
+    * injectable (the straddle specs' reference arm). */
   private[graft] def decayAttribution(ev: DataFrame,
       fanThreshold: Long): DataFrame = {
     val d38 = "decimal(38,0)"
@@ -628,59 +604,31 @@ object EventOps {
       .filter(col("event_type").isin("click", "view", "signup"))
       .select(col("user_id"), unix_micros(col("ts")).as("t_us"),
         col("event_type").as("channel"))
-    // single-pass probe: per-user purchase/touch counts in ONE
-    // map-side-combined aggregate over the filtered stream (NULL-id
-    // rows can't pair — the join key drops them on both plans)
+    // per-user purchase/touch counts in ONE map-side-combined aggregate
+    // over the filtered stream (NULL-id rows can't pair — the join key
+    // drops them on both plans)
     val pt = ev.filter(col("user_id").isNotNull && col("event_type")
         .isin("purchase", "click", "view", "signup"))
       .groupBy(col("user_id"))
       .agg(
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"),
         sum(when(col("event_type") =!= "purchase", 1L).otherwise(0L)).as("nt"))
-    val mw = graft.ProbeCost.timed("decay_pair_product") {
-      pt.agg(max(col("np").cast("double") * col("nt")).as("mw")).head()
-    }
-    val maxFan = if (mw.isNullAt(0)) 0.0 else mw.getDouble(0)
-    val windowCond = col("t_us") < col("p_us") &&
-      col("p_us") - col("t_us") < lit(86400000000L)
-    val paired =
-      if (maxFan <= fanThreshold.toDouble)
-        purchases.join(touches, Seq("user_id")).filter(windowCond)
-      else {
-        // salted branch materializes its three shared frames ONCE: the
-        // lazy forms would re-scan the event table inside every
-        // anti/semi consumer (4 extra corpus scans) and rebuild the
-        // per-user aggregate inside every hot broadcast — measured as
-        // most of the salted plan's cost, not the join itself (the q142
-        // StageProfile decomposition, r11). P/T are narrow projections
-        // (user_id + µs + channel), spill-capable like the collapse
-        // products; `hot` is the tiny above-bar roster, derived from
-        // the checkpoints so it costs no further event scan.
-        val p = purchases.localCheckpoint(true)
-        val t = touches.localCheckpoint(true)
-        val hot = p.groupBy(col("user_id")).agg(count(lit(1)).as("np"))
-          .join(t.groupBy(col("user_id")).agg(count(lit(1)).as("nt")),
-            Seq("user_id"))
-          .filter(col("np").cast("double") * col("nt") > fanThreshold.toDouble)
-          .select(col("user_id")).localCheckpoint(true)
-        // per (user, bucket) output is np·nt/B, so the derived B bounds
-        // it for any bot size
-        Skew.hotKeyJoin(t, p, xxhash64(col("user_id"), col("p_us")),
-          Seq("user_id"), hot, Skew.adaptiveBuckets(maxFan), "inner")
-          .filter(windowCond)
-      }
+    val paired = Skew.fanJoin(purchases, touches,
+        xxhash64(col("user_id"), col("p_us")), Seq("user_id"), pt, "np", "nt",
+        "decay_pair_product", fanThreshold)
+      .filter(col("t_us") < col("p_us") &&
+        col("p_us") - col("t_us") < lit(86400000000L))
     val weighted = paired.withColumn("w",
       lit(24L) - expr("(p_us - t_us) div 3600000000"))
     val perChannel = weighted.groupBy(col("channel"))
       .agg(count(lit(1)).as("n_touches"),
         sum(col("w").cast(d38)).cast("long").as("w_mass"))
     // share denominator via a GLOBAL window over the ≤#channels frame
-    // (bounded: 3 touch types) — the r1–r10 crossJoin(broadcast(total))
-    // form planned the ENTIRE pair pipeline twice, once under
-    // perChannel and once under the scalar total (Spark shares no
-    // common subtrees across a DataFrame reuse); on the r11 bot
-    // fixture the duplicate subtree was most of the wall (StageProfile stage
-    // decomposition: two concurrent 8-second copies of the same join)
+    // (bounded: 3 touch types): a crossJoin(broadcast(total)) form plans
+    // the ENTIRE pair pipeline twice, once under perChannel and once
+    // under the scalar total (Spark shares no common subtrees across a
+    // DataFrame reuse) — on the bot fixture two concurrent 8-second
+    // copies of the same join
     val wAll = org.apache.spark.sql.expressions.Window
       .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
     perChannel

@@ -631,7 +631,7 @@ object SimilarityOps {
     * measured ×19.2 wall at 3000 copies, 99% single-task, peak task
     * memory ×5.2 (the distinct() buffers the copy×copy candidates).
     * The declared form therefore dispatches on a dup-mass probe: above
-    * [[graft.operators.DedupOps.FanoutPinThreshold]] dup vectors, the
+    * [[graft.operators.Skew.FanoutPinThreshold]] dup vectors, the
     * WEIGHTED role-aware form runs — candidates form between distinct
     * CONTENTS (collapsed reps, corpus-role × eval-role), each matched
     * content contributes its eval-member COUNT (never expands eval
@@ -689,8 +689,8 @@ object SimilarityOps {
     * cos = 1.0 exactly (each corpus copy × each eval copy), which the
     * rep-level self-pair reproduces. */
   private[graft] def q112Auto(e: DataFrame, isEval: Column,
-      pinThreshold: Long = DedupOps.FanoutPinThreshold): DataFrame =
-    if (DedupOps.vectorDupMass(e, Seq.empty) <= pinThreshold)
+      pinThreshold: Long = Skew.FanoutPinThreshold): DataFrame =
+    if (Skew.dupMass("vector_dup_mass", e, xxhash64(col("q"))) <= pinThreshold)
       evalBandPairs(e.filter(!isEval), e.filter(isEval))
         .groupBy(col("vec_id"))
         .agg(count(lit(1)).as("n_eval_matches"), max(col("cos")).as("max_cos"))

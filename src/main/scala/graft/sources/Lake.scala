@@ -4,7 +4,7 @@ import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.util.{Failure, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
@@ -249,34 +249,57 @@ object Lake {
     df.repartitionByRange(numFiles, col(statsCol))
       .sortWithinPartitions(statsCol)
       .write.mode("overwrite").option("compression", "snappy").parquet(path)
-    df.sparkSession.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(statsCol)).cast("long").as("lo"),
-        max(col(statsCol)).cast("long").as("hi"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_skipstats")
+    writeFileRanges(df.sparkSession, path, "_skipstats",
+      Seq("" -> col(statsCol).cast("long")))
   }
 
   /** (files whose [lo, hi] intersects [lo, hi], total data files). */
   def skippingFiles(spark: SparkSession, path: String,
-      lo: Long, hi: Long): (Seq[String], Int) = {
-    val st = spark.read.parquet(s"$path/_skipstats")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    (st.filter { case (_, flo, fhi) => fhi >= lo && flo <= hi }
-      .map(_._1).toSeq, st.length)
-  }
+      lo: Long, hi: Long): (Seq[String], Int) =
+    intersectingFiles(spark, path, "_skipstats", Seq((lo, hi)))
 
   /** Range read through the skip manifest: only intersecting files are
     * ever scheduled; the residual filter restores exactness. */
   def readSkipping(spark: SparkSession, path: String, statsCol: String,
-      lo: Long, hi: Long): DataFrame = {
+      lo: Long, hi: Long): DataFrame =
+    readFiles(spark, path, skippingFiles(spark, path, lo, hi)._1,
+      org.apache.spark.sql.functions.col(statsCol).between(lo, hi))
+
+  /** The per-file range manifest behind both skipping layouts: one row
+    * per data file of `path` — its name, then the min and max of each
+    * long-valued column in `ranges` (named `<prefix>lo`, `<prefix>hi`) —
+    * from ONE `input_file_name()` aggregate over the written files,
+    * coalesced into one manifest file at `path/manifest`. */
+  private def writeFileRanges(spark: SparkSession, path: String,
+      manifest: String, ranges: Seq[(String, Column)]): Unit = {
     import org.apache.spark.sql.functions._
-    val (files, _) = skippingFiles(spark, path, lo, hi)
+    val bounds = ranges.flatMap { case (p, c) =>
+      Seq(min(c).as(s"${p}lo"), max(c).as(s"${p}hi")) }
+    spark.read.parquet(path)
+      .groupBy(input_file_name().as("file"))
+      .agg(bounds.head, bounds.tail: _*)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/$manifest")
+  }
+
+  /** (files whose ranges all intersect `box` — one (lo, hi) per manifest
+    * column pair, in order — total data files). */
+  private def intersectingFiles(spark: SparkSession, path: String,
+      manifest: String, box: Seq[(Long, Long)]): (Seq[String], Int) = {
+    val st = spark.read.parquet(s"$path/$manifest").collect()
+    (st.filter(r => box.zipWithIndex.forall { case ((lo, hi), i) =>
+      r.getLong(2 * i + 2) >= lo && r.getLong(2 * i + 1) <= hi
+    }).map(_.getString(0)).toSeq, st.length)
+  }
+
+  /** `files` of the table at `path` with the exact `residual` predicate
+    * re-applied (the manifest prunes conservatively); an empty frame of
+    * the table's schema when no file survives. */
+  private def readFiles(spark: SparkSession, path: String,
+      files: Seq[String], residual: Column): DataFrame =
     if (files.isEmpty)
       spark.read.parquet(path).filter(org.apache.spark.sql.functions.lit(false))
-    else spark.read.parquet(files: _*)
-      .filter(col(statsCol).between(lo, hi))
-  }
+    else spark.read.parquet(files: _*).filter(residual)
 
   /** MERGE-ON-READ deletes (deletion vectors) — the other half of the
     * lakehouse mutation story next to [[writeVersion]]'s copy-on-write
@@ -391,37 +414,23 @@ object Lake {
       .sortWithinPartitions("_z")
       .drop("_z")
       .write.mode("overwrite").option("compression", "snappy").parquet(path)
-    df.sparkSession.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(a).as("alo"), max(a).as("ahi"),
-        min(b).as("blo"), max(b).as("bhi"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_skipstats2")
+    writeFileRanges(df.sparkSession, path, "_skipstats2", Seq("a" -> a, "b" -> b))
   }
 
   /** (files whose (a, b) box intersects the probe box, total files).
     * Pass Long.MinValue/MaxValue bounds to leave a side unconstrained. */
   def boxSkippingFiles(spark: SparkSession, path: String,
-      aLo: Long, aHi: Long, bLo: Long, bHi: Long): (Seq[String], Int) = {
-    val st = spark.read.parquet(s"$path/_skipstats2")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-    (st.filter { case (_, alo, ahi, blo, bhi) =>
-      ahi >= aLo && alo <= aHi && bhi >= bLo && blo <= bHi
-    }.map(_._1).toSeq, st.length)
-  }
+      aLo: Long, aHi: Long, bLo: Long, bHi: Long): (Seq[String], Int) =
+    intersectingFiles(spark, path, "_skipstats2", Seq((aLo, aHi), (bLo, bHi)))
 
   /** Box read through the z-order manifest: only intersecting files are
     * scheduled; the residual filter restores exactness. */
   def readBoxSkipping(spark: SparkSession, path: String,
       colA: String, colB: String,
       aLo: Long, aHi: Long, bLo: Long, bHi: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (files, _) = boxSkippingFiles(spark, path, aLo, aHi, bLo, bHi)
-    if (files.isEmpty)
-      spark.read.parquet(path).filter(lit(false))
-    else spark.read.parquet(files: _*)
-      .filter(col(colA).cast("long").between(aLo, aHi) &&
+    import org.apache.spark.sql.functions.col
+    readFiles(spark, path, boxSkippingFiles(spark, path, aLo, aHi, bLo, bHi)._1,
+      col(colA).cast("long").between(aLo, aHi) &&
         col(colB).cast("long").between(bLo, bHi))
   }
 }

@@ -73,7 +73,7 @@ class CurationSpec extends SparkTestBase {
 
   test("q70 collapsed: a mega-group takes the bucketed (salted) expansion and stays exact") {
     import spark.implicits._
-    val m = (operators.DedupOps.WithinSaltThreshold + 40).toInt
+    val m = (operators.Skew.WithinSaltThreshold + 40).toInt
     // one mega content (every 5th id is bench) + one singleton sharing
     // 3 grams with it, bench by id
     val mega = spark.range(0, m).select(col("id").as("doc_id"),
@@ -119,7 +119,7 @@ class CurationSpec extends SparkTestBase {
       (3L, "alpha beta gamma zeta")).toDF("doc_id", "norm")
     assert(!hasCheckpoint(CurationOps.contaminationAuto(small, isBench)),
       "2 dup members must dispatch the raw join")
-    val mass = operators.DedupOps.FanoutPinThreshold + 60
+    val mass = operators.Skew.FanoutPinThreshold + 60
     val big = spark.range(0, mass).select(col("id").as("doc_id"),
       lit("alpha beta gamma delta").as("norm"))
     assert(hasCheckpoint(CurationOps.contaminationAuto(big, isBench)),

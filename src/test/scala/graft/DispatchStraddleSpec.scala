@@ -246,7 +246,7 @@ class DispatchStraddleSpec extends SparkTestBase {
     for (seed <- seeds) {
       val m = 8 + new scala.util.Random(seed + 500).nextInt(24)
       val e = vecCorpus(seed + 500, m).select("vec_id", "q", "n2")
-      val dupMass = DedupOps.vectorDupMass(e, Seq.empty)
+      val dupMass = operators.Skew.dupMass("vector_dup_mass", e, xxhash64(col("q")))
       def run(thr: Long) = DedupOps.embeddingLshAuto(e, pinThreshold = thr)
       val collapsed = run(dupMass - 1)
       val raw = run(dupMass)
@@ -268,8 +268,8 @@ class DispatchStraddleSpec extends SparkTestBase {
       // must not count toward the metric); the straddle must swing
       // around the same quantity or the ±1 bracketing is off by the
       // seeded null-dup group's mass
-      val dupMass = DedupOps.vectorDupMass(
-        e.filter(col("label").isNotNull), Seq("label"))
+      val dupMass = operators.Skew.dupMass("vector_dup_mass",
+        e.filter(col("label").isNotNull), xxhash64(col("label"), col("q")))
       def run(thr: Long) = DedupOps.q38Auto(e, pinThreshold = thr)
       val collapsed = run(dupMass - 1)
       val raw = run(dupMass)
@@ -288,7 +288,7 @@ class DispatchStraddleSpec extends SparkTestBase {
       // per-COPY membership: the dup content's copies land on BOTH
       // sides, exercising the rep-level self-pair (cos = 1.0) path
       val isEval = pmod(col("vec_id"), lit(3)) === 0L
-      val dupMass = DedupOps.vectorDupMass(e, Seq.empty)
+      val dupMass = operators.Skew.dupMass("vector_dup_mass", e, xxhash64(col("q")))
       def run(thr: Long) =
         operators.SimilarityOps.q112Auto(e, isEval, pinThreshold = thr)
       val weighted = run(dupMass - 1)

@@ -137,7 +137,7 @@ class OperatorSpec extends SparkTestBase {
     // rides the unsalted path
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val m = (operators.DedupOps.WithinSaltThreshold + 76).toInt
+    val m = (operators.Skew.WithinSaltThreshold + 76).toInt
     val mega = spark.range(0, m).select(col("id").as("doc_id"),
       lit("alpha beta gamma delta").as("norm"))
     val small = Seq(

@@ -250,15 +250,12 @@ class PlanShapeSpec extends SparkTestBase {
   test("q71: oversized build side skips the bloom probe and keeps the plain join") {
     // gate at 1 item — the build side (hundreds of orders) exceeds it, so
     // no filter is collected and no might_contain appears anywhere
-    spark.conf.set("spark.graft.bloom.maxItems", "1")
-    try {
-      val df = operators.CurationOps.q71BloomJoin(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("might_contain"), plan)
-      assert(plan.contains("Join"), plan)
-      // and the fallback is still the correct (plain-join) result
-      assert(df.count() > 0)
-    } finally spark.conf.unset("spark.graft.bloom.maxItems")
+    val df = operators.CurationOps.q71BloomJoin(spark, sfDir, maxItems = 1L)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("might_contain"), plan)
+    assert(plan.contains("Join"), plan)
+    // and the fallback is still the correct (plain-join) result
+    assert(df.count() > 0)
   }
 
   test("round-4 queries keep their scale-critical plan shapes") {

@@ -490,6 +490,36 @@ class PropertySpec extends SparkTestBase {
           r.optNumPartitions.contains(spark.sparkContext.defaultParallelism)
       case _ => false
     }, "no (key, bucket) width pin")
+    // fanJoin over random skewed key distributions (key i drawn with
+    // weight 2^-i, NULL keys on both sides), bars one below, at and one
+    // above the probed max fan: the plain join's multiset every time,
+    // and the salted arm — its hot roster is a checkpoint, the only
+    // LogicalRDD leaf these local frames can plan — iff maxFan > bar
+    def hasRoster(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    val rnd = new scala.util.Random(15)
+    def key(nKeys: Int): Option[Long] =
+      if (rnd.nextInt(10) == 0) None
+      else Some((0 until nKeys).find(_ => rnd.nextBoolean()).getOrElse(nKeys).toLong)
+    for (trial <- 0 until 6) {
+      val nKeys = 1 + rnd.nextInt(5)
+      val b = (0 until 5 + rnd.nextInt(40)).map(i => (key(nKeys), i.toLong))
+        .toDF("k", "bv")
+      val r = (0 until 5 + rnd.nextInt(40)).map(i => (key(nKeys), s"r$i"))
+        .toDF("k", "rv")
+      val counts = b.groupBy("k").agg(count(lit(1)).as("nb"))
+        .join(r.groupBy("k").agg(count(lit(1)).as("nr")), Seq("k"))
+      val maxFan = operators.Skew.maxFan("fan_join_spec", counts, "nb", "nr").toLong
+      for (bar <- Seq(maxFan - 1, maxFan, maxFan + 1)) {
+        val got = operators.Skew.fanJoin(b, r, xxhash64(col("bv")), Seq("k"),
+          counts, "nb", "nr", "fan_join_spec", bar)
+        assert(rows(got) == rows(b.join(r, Seq("k"))),
+          s"trial $trial, max fan $maxFan, bar $bar")
+        assert(hasRoster(got) == maxFan > bar,
+          s"trial $trial, max fan $maxFan, bar $bar: wrong arm")
+      }
+    }
   }
 
   test("stateful streaming running counts end at the batch totals") {

@@ -214,8 +214,8 @@ class ScaleLintSpec extends SparkTestBase {
       "5-probe broadcast set (fixed multiplier), k-cut downstream"
     val collapsedDedup = "adaptive skew dispatch (r10): candidate joins " +
       "run on exact-dup-COLLAPSED reps (copies can't pile a bucket); " +
-      "member expansion bucket-salts groups > WithinSaltThreshold and " +
-      "pins width above FanoutPinThreshold dup members — zipf 3e4 = " +
+      "member expansion bucket-salts groups > Skew.WithinSaltThreshold and " +
+      "pins width above Skew.FanoutPinThreshold dup members — zipf 3e4 = " +
       "4.5e8 pairs, max-task 18.7 s ≪ wall (SCALING.md r10)"
     val repCcAttach = "the r12 star-attach join is members (N per " +
       "rep_id) ⋈ repLabels — connected components emits EXACTLY ONE " +
@@ -241,7 +241,7 @@ class ScaleLintSpec extends SparkTestBase {
         "a LogicalRDD leaf (FanoutAudit's documented checkpoint-leaf " +
         "conservatism); fan-out per bigram key is exactly 1"),
       "q70_contamination" -> ("adaptive HLL dup-mass dispatch: the raw " +
-        "gram join plans only below FanoutPinThreshold dup members " +
+        "gram join plans only below Skew.FanoutPinThreshold dup members " +
         "(hot-gram fan then bounded by content diversity); above it the " +
         "collapsed role-aware expansion runs (salted + pinned, r10)"),
       "q142_head_tail_overlap" -> ("adaptive boundary-hash salt (r11, " +
@@ -305,7 +305,7 @@ class ScaleLintSpec extends SparkTestBase {
         "found by this sweep + the bot-user zipf fixture: 2e4 bot " +
         "events ran 5e7 window pairs in one task): a single-pass probe " +
         "of max_u |P_u|x|T_u| dispatches plain vs hot-user bucket salt " +
-        "above WindowFanThreshold — parity + witness spec'd, measured " +
+        "above Skew.WindowFanThreshold — parity + witness spec'd, measured " +
         "in SCALING.md r11"),
       "q160_fuzzy_linkage" -> ("dictionary-blocked linkage: pairs form " +
         "on the distinct-NAME dictionary (vocab-bounded), never " +
@@ -661,8 +661,8 @@ class ScaleLintSpec extends SparkTestBase {
   }
 
   test("skew-threshold constants hold their documented single-task-output bounds") {
-    import operators.DedupOps._
-    import operators.Skew.{SingleTaskRows, SaltBuckets, adaptiveBuckets}
+    import operators.Skew.{SingleTaskRows, SaltBuckets, WindowFanThreshold,
+      WithinSaltThreshold, adaptiveBuckets}
     // the portability contract (r11): every constant that gates an
     // adaptive skew dispatch is denominated in SINGLE-TASK OUTPUT ROWS
     // (width-independent — one task is one core at any cluster size),
@@ -684,10 +684,10 @@ class ScaleLintSpec extends SparkTestBase {
     // (SingleTaskRows' calibration record)
     assert(SingleTaskRows <= 2 * coreRowsPerSec,
       "SingleTaskRows exceeds ~2 core-seconds of single-key output")
-    // q152's bar is per-operator: its salted branch prices two stream
-    // checkpoints, so the measured crossover sits ~16x higher
-    assert(operators.EventOps.WindowFanThreshold >= SingleTaskRows &&
-      operators.EventOps.WindowFanThreshold <= (1L << 30),
+    // q152's bar is per-operator: its window join's measured crossover
+    // sits ~16x higher
+    assert(WindowFanThreshold >= SingleTaskRows &&
+      WindowFanThreshold <= (1L << 30),
       "WindowFanThreshold outside its measured crossover band")
     // post-salt, the largest of the B buckets of a group carries
     // ~2/(B+1) of its C(M,2) pairs: a 32x-bar group (32k copies, the
