@@ -1,34 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every declared query against
   * `SPARK_GRAFT_SF_DIR`, prints one JSON line
   * `{"metric":"total","value":sec,"unit":"sec","queries":{...},"sf":...}`.
   *
-  * Measurement notes:
-  *  - a warm-up pass (session + codegen + parquet reader init) runs before
-  *    any timing so the first query doesn't absorb JVM start-up;
-  *  - each query is forced with a `noop` datasource write — unlike
-  *    `count()`, this evaluates every projected column (count() lets
-  *    Catalyst prune the projection entirely);
-  *  - THREE timed passes run, INTERLEAVED (pass 1 of all queries in name
-  *    order, then pass 2, then pass 3), and each query reports its
-  *    per-pass MEDIAN. This box has co-tenants: rounds 2 and 3 each
-  *    produced a phantom "regression cluster" of consecutive queries
-  *    (r2 q59–q64, r3 q24–q31) that was nothing but a noisy ~10 s window
-  *    landing on whichever queries ran inside it. A noise burst is local
-  *    in TIME; interleaving makes each query's three samples land in
-  *    three widely separated windows, so a burst can corrupt at most one
-  *    of three samples — which the median discards. `queries_min` is also
-  *    emitted (per-query best-of-3) as the low-noise floor.
+  * Measurement: [[QueryTrace.interleaved]] with THREE passes — one
+  * untimed warm pass, then pass 1 of all queries in name order, then
+  * pass 2, then pass 3, each query forced by a `noop` write. Each query
+  * reports its per-pass MEDIAN (`queries`), best-of-3 (`queries_min`,
+  * the low-noise floor) and median job count (`queries_jobs`). This box
+  * has co-tenants: rounds 2 and 3 each produced a phantom "regression
+  * cluster" of consecutive queries (r2 q59–q64, r3 q24–q31) that was
+  * nothing but a noisy ~10 s window landing on whichever queries ran
+  * inside it; interleaving lets a burst corrupt at most one of three
+  * samples, which the median discards.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = 3
     val spark = GraftSession()
-    import QueryTrace.{force, median}
 
     // Local-iteration filter (comma-separated names, Verify's contract);
     // the driver never sets it, so driver benches always cover the suite.
@@ -36,7 +29,7 @@ object Bench {
     val declared = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
-    // POSITION CANARY (r9): a constant fixed-plan probe interleaved every
+    // POSITION CANARY (r9): PerfAB's `canary_range_sum` interleaved every
     // 25 suite positions. Suite context (GC pressure, codegen-cache state
     // accumulated from the queries before it) adds a reproducible
     // position-dependent overhead — q111 measured ~1.7 s suite-position
@@ -46,34 +39,20 @@ object Bench {
     // >20% mover on an untouched sub-second query is adjudicated against
     // the curve first. TRIAGE RULE: isolate before bisecting — any
     // remaining suspect goes through graft.PerfAB, never suite-to-suite
-    // diffs. The canary itself is SF-independent (a range sum) and is
-    // excluded from `value` and `queries`.
-    val canaryFn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      (s, _) => s.range(0, 4000000L, 1, 8)
-        .agg(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("id") % 7).as("s"))
-    // JOB-LATENCY CANARY (r12): the compute canary measures CORE speed
-    // (one fat job) and is BLIND to per-job round-trip latency, which
-    // drifts independently on this box (driver-thread co-tenancy): the
-    // r11 final-window "unattributed movers" (q52/q83/q86/q192/q202/
-    // q222) were precisely the HIGH-JOB-COUNT queries (45/32/13/…
-    // driver-side jobs from fixed-round fits, CC rounds, probe
-    // aggregates, multi-scan unions), in a window where an isolated
-    // 41-trivial-job probe measured ~67 ms/job vs the ~10 ms the r10
-    // totals imply — their ratios tracked the LATENCY thermometer, not
-    // the compute one (PerfAB job_latency_x20 decomposition, SCALING.md
-    // r12). Five eager 32-tiny-task aggregates at construction time
-    // ≈ 10 job round-trips with negligible compute.
-    val jobCanaryFn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      (s, _) => {
-        import org.apache.spark.sql.functions._
-        (1 to 5).foreach { _ =>
-          s.range(0, 32L, 1, 32).agg(count(lit(1))).head()
-        }
-        s.range(0, 1L).toDF()
-      }
+    // diffs. The canary is SF-independent and is excluded from `value`
+    // and `queries`.
+    // JOB-LATENCY CANARY (r12): PerfAB's `job_latency_x5`, beside each
+    // compute canary. The compute canary measures CORE speed (one fat
+    // job) and is BLIND to per-job round-trip latency, which drifts
+    // independently on this box (driver-thread co-tenancy): the r11
+    // final-window "unattributed movers" (q52/q83/q86/q192/q202/q222)
+    // were precisely the HIGH-JOB-COUNT queries, and their ratios
+    // tracked the LATENCY thermometer, not the compute one (SCALING.md
+    // r12).
+    val canaryFn = PerfAB.variants("canary_range_sum")
+    val jobCanaryFn = PerfAB.variants("job_latency_x5")
     val canaryEvery = 25
-    val ordered: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+    val ordered: Seq[(String, (SparkSession, String) => DataFrame)] =
       declared.zipWithIndex.flatMap { case (q, i) =>
         if (i % canaryEvery == 0)
           Seq(f"_canary_$i%03d" -> canaryFn,
@@ -82,63 +61,32 @@ object Bench {
       } ++ Seq(f"_canary_${declared.size}%03d" -> canaryFn,
         f"_jobcanary_${declared.size}%03d" -> jobCanaryFn)
 
-    // untimed warm pass: JIT/codegen/file-index costs land here, so the
-    // timed passes below measure steady-state throughput (the regime a
-    // long-running cluster job actually operates in)
-    ordered.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-    }
-    // PROBE-COST BUDGET (r12): the adaptive dispatchers each pay an
-    // eager plan-time probe (ProbeCost-instrumented at every site);
-    // reset after the warm pass so `probe_cost_est` below is the
-    // premium the TIMED passes actually paid, reported per pass.
-    ProbeCost.reset()
-
-    // a failed query records null, never its time-to-failure — a broken
-    // query must not masquerade as a fast one. Timing includes DataFrame
-    // CONSTRUCTION: eager iterative operators (connected components) do
-    // their work before any action.
-    // per-query Spark-job counts (r12): captured on pass 1 only — job
-    // counts are code-determined and pass-stable; the count marks which
-    // queries sit in the LATENCY class (many driver round-trips) vs the
-    // compute class, the split the two canaries adjudicate between
-    val queryJobs = scala.collection.mutable.Map.empty[String, Int]
-    val samples: Seq[Seq[(String, Option[Double])]] =
-      (1 to passes).map { pass =>
-        ordered.map { case (name, fn) =>
-          val elapsed =
-            try {
-              val w = QueryTrace.during(spark)(force(fn(spark, sfDir)))
-              if (pass == 1) queryJobs(name) = w.jobs
-              Some(w.sec)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              None
-            }
-          name -> elapsed
-        }
-      }
-    // a query is failed if ANY pass failed (flaky ≠ healthy)
-    val allResults: Seq[(String, Option[Double], Option[Double])] =
-      ordered.map { case (name, _) =>
-        val runs = samples.map(_.find(_._1 == name).get._2)
-        if (runs.exists(_.isEmpty)) (name, None, None)
-        else (name, Some(median(runs.flatten)), Some(runs.flatten.min))
-      }
+    // PROBE-COST BUDGET (r12): the loop resets ProbeCost after its warm
+    // pass, so `probe_cost_est` below is the premium the TIMED passes
+    // paid for the adaptive dispatchers' eager plan-time probes.
+    // A failed query records null, never its time-to-failure.
+    val allResults: Seq[(String, Option[QueryTrace.Summary])] =
+      QueryTrace.interleaved(spark,
+        ordered.map { case (name, fn) => name -> (() => fn(spark, sfDir)) }, passes)
+        .map { case (name, runs) => name -> QueryTrace.summary(runs) }
     val (jobCanaries, nonJob) =
       allResults.partition(_._1.startsWith("_jobcanary_"))
     val (canaries, results) = nonJob.partition(_._1.startsWith("_canary_"))
-    def jsonMap(rs: Seq[(String, Option[Double], Option[Double])])(
-        f: ((String, Option[Double], Option[Double])) => Option[Double]) =
-      rs.map(r => "\"" + r._1 + "\":" + f(r).fold("null")(_.toString))
+    type Row = (String, Option[QueryTrace.Summary])
+    def jsonMap(rs: Seq[Row])(f: QueryTrace.Summary => Double) =
+      rs.map(r => "\"" + r._1 + "\":" + r._2.map(f).fold("null")(_.toString))
         .mkString("{", ",", "}")
-    val qs = jsonMap(results)(_._2)
-    val qsMin = jsonMap(results)(_._3)
-    val canary = jsonMap(canaries)(_._2)
-    val jobCanary = jsonMap(jobCanaries)(_._2)
-    val total = results.flatMap(_._2).sum
-    val failed = results.collect { case (k, None, _) => "\"" + k + "\"" }
+    val qs = jsonMap(results)(_.medianSec)
+    val qsMin = jsonMap(results)(_.minSec)
+    val canary = jsonMap(canaries)(_.medianSec)
+    val jobCanary = jsonMap(jobCanaries)(_.medianSec)
+    val total = results.flatMap(_._2).map(_.medianSec).sum
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    def meanOf(rs: Seq[Row]): Option[Double] = {
+      val cs = rs.flatMap(_._2).map(_.medianSec)
+      if (cs.isEmpty) None else Some(cs.sum / cs.size)
+    }
     // MOVER AUTO-ADJUDICATION (r10): diff this run's medians against the
     // last committed round's bench_full_r<N>.json and write per-mover
     // verdicts INTO the artifact, so round-over-round movers are
@@ -172,17 +120,13 @@ object Bench {
         // WHOLE SUITE moving — machine-adjudicated as drift instead of
         // flooding needs-perfab (r11's run had 50 such entries, all
         // clustered at the ×1.43 canary ratio)
-        def meanOf(rs: Seq[(String, Option[Double], Option[Double])]): Double = {
-          val cs = rs.flatMap(_._2)
-          if (cs.isEmpty) 0.0 else cs.sum / cs.size
-        }
         def prevMean(field: String): Double = Option(root.get(field)).map { c =>
           val it = c.elements()
           var s = 0.0; var n = 0
           while (it.hasNext) { val v = it.next(); if (v.isNumber) { s += v.asDouble; n += 1 } }
           if (n == 0) 0.0 else s / n
         }.getOrElse(0.0)
-        val curCanary = meanOf(canaries)
+        val curCanary = meanOf(canaries).getOrElse(0.0)
         val prevCanary = prevMean("canary")
         val canaryRatio =
           if (curCanary > 0 && prevCanary > 0) curCanary / prevCanary else 1.0
@@ -190,13 +134,13 @@ object Bench {
         // Falls back to the compute ratio while the previous artifact
         // predates the job canary (first r12 run) — the blend tier then
         // degenerates to the r11 single-canary rule.
-        val curJobCanary = meanOf(jobCanaries)
+        val curJobCanary = meanOf(jobCanaries).getOrElse(0.0)
         val prevJobCanary = prevMean("job_canary")
         val jobCanaryRatio =
           if (curJobCanary > 0 && prevJobCanary > 0) curJobCanary / prevJobCanary
           else canaryRatio
-        val entries = results.flatMap { case (name, med, _) =>
-          med.flatMap { c =>
+        val entries = results.flatMap { case (name, row) =>
+          row.map(_.medianSec).flatMap { c =>
             Option(prev.get(name)).filter(_.isNumber).map(_.asDouble)
               .collect {
                 case pv if pv > 0 && (c / pv > 1.2 || c / pv < 1.0 / 1.2) =>
@@ -229,8 +173,11 @@ object Bench {
     val probeBreakdown = probeSnap.toSeq.sortBy(_._1).map { case (k, (n, s)) =>
       f""""$k":{"n_per_pass":${n.toDouble / passes}%.1f,"sec_per_pass":${s / passes}%.4f}"""
     }.mkString("{", ",", "}")
+    // median over the timed passes: AQE runs a timing-dependent number
+    // of query-stage jobs inside eager actions, so one pass's count is
+    // not the query's (-1 marks a failed query)
     val queriesJobs = results.map(r =>
-        "\"" + r._1 + "\":" + queryJobs.getOrElse(r._1, -1))
+        "\"" + r._1 + "\":" + r._2.fold(-1L)(s => math.round(s.jobs)))
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"canary":$canary,"job_canary":$jobCanary,"queries_jobs":$queriesJobs,"passes":$passes,"failed":$failed,$movers,"probe_cost_est":${f"$probeCostEst%.4f"},"probe_cost":$probeBreakdown,"sf":"$sfDir"}"""
     println(line)
@@ -242,10 +189,7 @@ object Bench {
     // mean (the cross-run comparability key — box speed drifts ×1.5
     // between boots, BASELINE.md), and a pointer to the full on-disk
     // artifact. Per-query medians live in the artifact, not here.
-    def meanStr(rs: Seq[(String, Option[Double], Option[Double])]): String = {
-      val cs = rs.flatMap(_._2)
-      if (cs.isEmpty) "null" else f"${cs.sum / cs.size}%.4f"
-    }
+    def meanStr(rs: Seq[Row]): String = meanOf(rs).fold("null")(m => f"$m%.4f")
     val canaryMean = meanStr(canaries)
     val jobCanaryMean = meanStr(jobCanaries)
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed,"canary_mean":$canaryMean,"job_canary_mean":$jobCanaryMean,"probe_cost_est":${f"$probeCostEst%.4f"},"passes":$passes,"sf":"$sfDir","full_artifact":"$outPath"}""")

@@ -18,21 +18,11 @@ object Evidence {
     * corpora hash-checked against DuckDB per seed). */
   val fuzzBatteries: Int = 12
 
-  /** Distinct corpus families those batteries draw from. */
-  val fuzzFamilies: Int = 11
-
-  /** Seeds each battery has been validated green at (the r8 lesson:
-    * 3-seed green is NOT done — deep seeds carry different random draws
-    * that hit quantization/rounding boundaries). */
-  val fuzzSeedsValidated: Int = 10
-
   /** Queries measured 1× vs N× by the ScaleRegression harness. */
   def scaleChainSize: Int = ScaleRegression.chain.size
 
   /** JSON fragment for Verify's summary.json. */
   def json: String =
     s""""lint_classes": $lintClasses, "fuzz_batteries": $fuzzBatteries,""" +
-      s""" "fuzz_families": $fuzzFamilies,""" +
-      s""" "fuzz_seeds_validated": $fuzzSeedsValidated,""" +
       s""" "scale_chain": $scaleChainSize"""
 }

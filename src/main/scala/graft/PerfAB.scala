@@ -6,15 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tool: a query's SUITE-position time carries ~1.7 s of GC/codegen
   * context (SCALING.md r8), so a bench-to-bench mover must be
   * adjudicated by an ISOLATED interleaved A/B of the two variants, not
-  * by bisecting suite runs. Runs each registered variant once to warm
-  * (codegen/JIT), then `passes` interleaved measured passes, and prints
-  * median + min per variant (min ≈ the noise floor on a co-tenant box),
-  * then the last pass's jobs, longest task, peak task memory, spill and
-  * stage/task table: each stage's wall, task count and longest task,
-  * and the top tasks with the records they read. The table is what
-  * separates a genuine single fat task (the skew the adaptive
-  * dispatches exist for) from a uniformly busy stage, and shows plan
-  * pathologies a wall time hides (r11 fan-out forensics, SCALING.md).
+  * by bisecting suite runs. Runs the names through
+  * [[QueryTrace.interleaved]] (one warm pass, then `passes` interleaved
+  * passes) and prints per name the median and min seconds (min ≈ the
+  * noise floor on a co-tenant box), the median jobs and longest task,
+  * the max peak task memory and spill, then the last pass's stage/task
+  * table: each stage's wall, task count and longest task, and the top
+  * tasks with the records they read. The table is what separates a
+  * genuine single fat task (the skew the adaptive dispatches exist for)
+  * from a uniformly busy stage, and shows plan pathologies a wall time
+  * hides (r11 fan-out forensics, SCALING.md). A name that fails in any
+  * pass prints how many passes it failed; the others still run.
   *
   * Usage: runMain graft.PerfAB [sfDir] [passes] [nameCsv]
   * (defaults /root/testdata/sf0.1, 5, all registered variants).
@@ -23,10 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object PerfAB {
 
   /** Variant registry: only rows that time production code a declared
-    * query does not already reach by name — the two window canaries and
-    * the adaptive dispatchers forced to either arm on synthetic
-    * fixtures. Settled A/B pairs are retired once their verdict is in
-    * (SCALING.md "retired A/B variants"). */
+    * query does not already reach by name — the two window canaries,
+    * q101's at-scale forms and the adaptive dispatchers forced to either
+    * arm on synthetic fixtures. Settled A/B pairs are retired once their
+    * verdict is in (SCALING.md "retired A/B variants"). */
   val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
     // triangle orientation on the q36 graph: the degree branch forced,
     // and the id branch forced (the unconditional r1–r10 form the
@@ -102,21 +104,30 @@ object PerfAB {
       import org.apache.spark.sql.functions._
       s.range(0, 4000000L, 1, 8).agg(sum(col("id") % 7).as("s"))
     }),
-    // JOB-LATENCY canary (r12): 20 eager one-aggregate jobs of 32 tiny
-    // tasks run at CONSTRUCTION time — times 20 driver/scheduler job
+    // JOB-LATENCY canary (r12): 5 eager one-aggregate jobs of 32 tiny
+    // tasks run at CONSTRUCTION time — times ~10 driver/scheduler job
     // round-trips with negligible compute, the component a fixed-round
     // iterative query (q52: ~dozens of tiny jobs) or a many-stage small
     // union (q86) is exposed to and a one-fat-stage query is not. The
     // compute canary (canary_range_sum) and this pair decompose a
     // window's slowness into "cores are slow" vs "job round-trips are
     // slow" — the r11 final-window movers were all in the second class.
-    "job_latency_x20" -> ((s, _) => {
+    // Bench interleaves both; the r12–r13 `job_latency_x20` readings
+    // (20 jobs) are about ×4 this row's.
+    "job_latency_x5" -> ((s, _) => {
       import org.apache.spark.sql.functions._
-      (1 to 20).foreach { _ =>
+      (1 to 5).foreach { _ =>
         s.range(0, 32L, 1, 32).agg(count(lit(1))).head()
       }
       s.range(0, 1L).select(col("id"))
-    }))
+    }),
+    // q101 as an at-scale caller runs it: the graph-sized rank unit (the
+    // declared q101's pinned 10¹² refuses past ~5·10⁴ nodes, e.g. at
+    // ScaleRegression's 10×), and one un-checkpointed round of it — the
+    // plan that shows the rank⋈edges join strategy at a given scale
+    "q101_pagerank_sized" -> ((s, d) =>
+      operators.GraphOps.q101PageRankWithUnit(s, d, 0L)),
+    "q101_round" -> ((s, d) => operators.GraphOps.q101RoundPlan(s, d)))
 
   /** 5000 copies of one 3-token doc (head window == tail window, ONE
     * boundary hash carrying 2.5·10⁷ pair outputs, 1.5× the 2²⁴ bar)
@@ -168,34 +179,29 @@ object PerfAB {
     // a variant's wall divides into compute and #jobs × round-trip
     // latency (r12); its last pass also keeps the stage/task table that
     // tells one fat task (skew) from a uniformly busy stage
-    val last = scala.collection.mutable.Map.empty[String, QueryTrace.Window[Unit]]
-    def run(name: String): Double = {
-      val w = QueryTrace.during(spark)(
-        QueryTrace.force(QueryTrace.lookup(name)(spark, sfDir)))
-      last(name) = w
-      w.sec
-    }
-    names.foreach(run) // warm: codegen, file index, checkpoint builds
-    val samples: Map[String, Seq[Double]] = (1 to passes)
-      .flatMap(_ => names.map(n => n -> run(n)))
-      .groupMap(_._1)(_._2)
+    val runs = QueryTrace.interleaved(spark,
+      names.map(n => n -> (() => QueryTrace.lookup(n)(spark, sfDir))), passes)
     println(f"\n[perfab] $passes%d interleaved passes at $sfDir%s")
-    names.foreach { n =>
-      val xs = samples(n)
-      val w = last(n)
-      println(f"[perfab] $n%-24s median ${QueryTrace.median(xs)}%6.3fs  min ${xs.min}%6.3fs  " +
-        f"jobs ${w.jobs}%3d  max-task ${w.maxTaskMs}%6d ms  " +
-        f"peak ${w.peakBytes / 1048576.0}%7.1f MB  spill ${w.spillBytes / 1048576.0}%7.1f MB  " +
-        xs.map(x => f"$x%.3f").mkString("[", ", ", "]"))
-      val byStage = w.tasks.groupBy(_.stage)
-      w.stages.sortBy(-_.wallMs).take(8).foreach { st =>
-        val top = byStage.getOrElse(st.id, Seq.empty).maxByOption(_.ms)
-          .fold("")(t => f"  top idx=${t.index}%d recsIn=${t.recordsIn}%d")
-        println(f"[perfab]   stage ${st.id}%5d wall ${st.wallMs}%7d ms  tasks ${st.tasks}%4d  " +
-          f"max-task ${st.maxTaskMs}%7d ms$top")
-      }
-      w.tasks.sortBy(-_.ms).take(6).foreach { t =>
-        println(f"[perfab]   task stage=${t.stage}%d idx=${t.index}%d  ${t.ms}%7d ms  recsIn=${t.recordsIn}%d")
+    runs.foreach { case (n, ws) =>
+      QueryTrace.summary(ws) match {
+        case None =>
+          println(f"[perfab] $n%-24s failed in ${ws.count(_.isEmpty)}%d of $passes%d passes")
+        case Some(m) =>
+          println(f"[perfab] $n%-24s median ${m.medianSec}%6.3fs  min ${m.minSec}%6.3fs  " +
+            f"jobs ${m.jobs}%5.1f  max-task ${m.maxTaskMs}%6.0f ms  " +
+            f"peak ${m.peakBytes / 1048576.0}%7.1f MB  spill ${m.spillBytes / 1048576.0}%7.1f MB  " +
+            m.secs.map(x => f"$x%.3f").mkString("[", ", ", "]"))
+          val w = ws.last.get
+          val byStage = w.tasks.groupBy(_.stage)
+          w.stages.sortBy(-_.wallMs).take(8).foreach { st =>
+            val top = byStage.getOrElse(st.id, Seq.empty).maxByOption(_.ms)
+              .fold("")(t => f"  top idx=${t.index}%d recsIn=${t.recordsIn}%d")
+            println(f"[perfab]   stage ${st.id}%5d wall ${st.wallMs}%7d ms  tasks ${st.tasks}%4d  " +
+              f"max-task ${st.maxTaskMs}%7d ms$top")
+          }
+          w.tasks.sortBy(-_.ms).take(6).foreach { t =>
+            println(f"[perfab]   task stage=${t.stage}%d idx=${t.index}%d  ${t.ms}%7d ms  recsIn=${t.recordsIn}%d")
+          }
       }
     }
     spark.stop()

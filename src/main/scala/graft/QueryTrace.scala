@@ -9,8 +9,8 @@ import org.apache.spark.sql.GraftShims.drainListenerBus
 
 /** The measurement core the tool mains (Bench, PerfAB, PlanAudit,
   * LintSweep, ScaleRegression) and the job-counting specs share: one
-  * listener installed for one window, the name lookup, the forcing
-  * write and the median. */
+  * listener installed for one window, the one timing loop and its
+  * summary, the name lookup, the forcing write and the median. */
 object QueryTrace {
 
   /** A completed stage: submission-to-completion wall, task count and
@@ -77,6 +77,55 @@ object QueryTrace {
         ts, peak.get(), spill.get())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The one timing loop. An untimed warm pass forces every build once
+    * (JIT, codegen, file index and checkpoint costs land there; its
+    * failures are ignored), then [[ProbeCost]] is reset and `passes`
+    * interleaved passes force each build in order through [[during]]:
+    * a noise burst is local in time, so interleaving spreads a build's
+    * samples over separate windows and a median discards the one a
+    * burst hits. Timing includes construction (eager iterative
+    * operators work while the frame is built). A build that throws
+    * records `None` for that pass, never its time-to-failure, and the
+    * others keep running. Returns each label with its per-pass windows,
+    * in build order. */
+  def interleaved(spark: SparkSession, builds: Seq[(String, () => DataFrame)],
+      passes: Int): Seq[(String, Seq[Option[Window[Unit]]])] = {
+    builds.foreach { case (_, build) =>
+      try force(build()) catch { case _: Throwable => () }
+    }
+    ProbeCost.reset()
+    val runs = (1 to passes).map { _ =>
+      builds.map { case (label, build) =>
+        try Some(during(spark)(force(build())))
+        catch { case e: Throwable =>
+          System.err.println(s"[trace] $label FAILED: ${e.getMessage}")
+          None
+        }
+      }
+    }
+    builds.map(_._1).zip(runs.transpose)
+  }
+
+  /** A build's passes in one row: median and min seconds, the max of
+    * peak task memory and of spill (the OOM-relevant bounds), and the
+    * medians of the longest task and of the job count. Both vary by
+    * pass: a co-tenant freeze inflates one pass's longest task, and AQE
+    * runs a timing-dependent number of query-stage jobs inside eager
+    * actions; a real fat task repeats and survives the median. `None`
+    * when any pass failed (flaky is not healthy). */
+  final case class Summary(medianSec: Double, minSec: Double, peakBytes: Long,
+      spillBytes: Long, maxTaskMs: Double, jobs: Double, secs: Seq[Double])
+
+  def summary(runs: Seq[Option[Window[Unit]]]): Option[Summary] =
+    if (runs.isEmpty || runs.exists(_.isEmpty)) None
+    else {
+      val ws = runs.flatten
+      val secs = ws.map(_.sec)
+      Some(Summary(median(secs), secs.min, ws.map(_.peakBytes).max,
+        ws.map(_.spillBytes).max, median(ws.map(_.maxTaskMs.toDouble)),
+        median(ws.map(_.jobs.toDouble)), secs))
+    }
 
   /** A declared query by name, else a PerfAB variant. PropertySpec keeps
     * the two name sets disjoint, so the order cannot change a result. */

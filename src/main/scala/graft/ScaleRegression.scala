@@ -3,66 +3,48 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale-regression harness: materializes a `factor`× copy of
-  * the sf0.1 fixtures and runs the heavy dedup/graph/text chain at 1×
-  * and at `factor`×, recording wall-time, peak single-task execution
-  * memory, and total spill per query. This is the measurement behind
-  * the SCALING.md claim that the r6 self-join pair stage is task-memory
-  * bounded: the plan-shape argument says peak task memory should stay
-  * ~FLAT as the corpus grows (state is O(1) per join key, volume is
-  * join output), and wall-time should grow ~linearly. Run it; don't
-  * argue it.
+/** Scale-regression harness: [[generate]] writes a `factor`× copy of
+  * the base fixtures, then the selected queries run at 1× and at
+  * `factor`× through [[QueryTrace.interleaved]] (one warm pass, three
+  * passes interleaved by query and scale). It prints one markdown row
+  * per query: median seconds, max peak task memory and spill, the
+  * median longest task (the skew witness: a query whose wall ≈ its
+  * longest task is single-task-bound), and the time and peak ratios.
+  * SCALING.md keeps the readings and their history.
   *
-  * Two scaling modes (r8 — the r7 run had only the first):
-  *
-  *  - `tagged` (default): `factor` key-shifted, TOKEN-TAGGED replicas.
-  *    Each replica's tokens get a distinct `r<k>_` prefix, so replicas
-  *    share NO shingles/signatures with each other — the scaled corpus
-  *    behaves as `factor` independent copies (outputs exactly
-  *    `factor`×, dup structure preserved per replica, no cross-replica
-  *    pair blow-up). CAVEAT this mode carries: the tag inflates the
-  *    DISTINCT-TOKEN vocabulary `factor`× (a real corpus grows ~log),
-  *    so per-distinct-token costs (q37's signature stage, q72's vocab
-  *    aggregate) read WORSE than reality.
-  *  - `shared-vocab`: ids shift, text is UNTOUCHED — the vocabulary
-  *    stays exactly the base vocabulary (the faithful-vocab mode the
-  *    r7 caveat asked for). The flip side is the workload semantics:
-  *    every document now has `factor−1` exact cross-replica copies, so
-  *    dup clusters grow `factor`× and pair outputs ~`factor`²× within
-  *    each base cluster — a heavy-duplication corpus, measured as
-  *    such. Both modes are honest; they bracket reality from opposite
-  *    sides (vocabulary too big vs duplication too heavy).
-  *  - `zipf` (r10): the MEGA-GROUP regime the two uniform modes never
-  *    reach — the base corpus plus `factor` exact copies of ONE
-  *    document (ids 10⁹+k, text untouched), i.e. one fingerprint group
-  *    of multiplicity `factor`+1 while everything else stays
-  *    singleton-ish. Real crawls have these (boilerplate pages, empty
-  *    templates). This is the skew probe for the within-group
-  *    expansion: C(m,2) pairs hang off ONE rep_id join key, and the
-  *    per-task max-time column shows whether that output is
-  *    distributed or single-task. `factor` here is the COPY COUNT
-  *    (run 10⁴+), and only `documents` is scaled.
-  *
-  * Ids shift by `k·10¹⁰` (far below the 2⁴⁶ chunk-key domain);
-  * documents/orders/lineitem/embeddings are scaled per the selected
-  * chain's needs. Id-shifting orders+lineitem keeps the q101 trade
-  * graph `factor` disjoint copies; id-shifting embeddings keeps vector
-  * content identical (duplicate vectors — ANN over a dup-heavy corpus).
+  * What each mode writes to `<workDir>/x<factor>-<mode>` (only the
+  * tables the selection reads are scaled; the others link to the base):
+  *  - `tagged` (default): `factor` replicas, ids shifted by k·10¹⁰ and
+  *    each replica's tokens prefixed `r<k>_`, so replicas share no
+  *    shingles and outputs grow exactly `factor`×. The distinct-token
+  *    vocabulary grows `factor`× too, so per-distinct-token costs (q37's
+  *    signatures, q72's vocabulary) read worse than a real corpus.
+  *    Events replicate with user ids shifted (disjoint users).
+  *  - `shared-vocab`: the same replicas with text untouched. The
+  *    vocabulary stays the base's, but every document gains `factor−1`
+  *    exact copies: dup clusters grow `factor`× and pairs ~`factor`²×.
+  *    Events replicate on the same users (`factor`× activity).
+  *  - `zipf`: the base plus `factor` exact copies of ONE document and of
+  *    ONE embedding vector (ids 10⁹+k, one group of multiplicity
+  *    `factor`+1), and `factor` events of one bot user over one day.
+  *    Only documents, embeddings and events are scaled; `factor` is the
+  *    copy count (run 10⁴+).
+  * Outside zipf, orders/lineitem (and customer) replicate id-shifted, so
+  * the q101 trade graph is `factor` disjoint copies, and embeddings
+  * replicate with identical vectors.
   *
   * Usage:
   *   runMain graft.ScaleRegression [baseDir] [factor] [workDir] [mode] [chainCsv]
   * (defaults /root/testdata/sf0.1, 10, /tmp/graft_scale, tagged, the
-  * full chain). Prints a markdown table; paste into SCALING.md. When
-  * the chain includes q101, the rank⋈edges JOIN-STRATEGY probe prints
-  * the round-plan join operators at both scales — the broadcast→SMJ
-  * flip observation (run factor 30+ to see it cross).
+  * full chain; zipf defaults to [[zipfChain]]). A name is anything
+  * [[QueryTrace.lookup]] resolves.
   */
 object ScaleRegression {
 
   val chain: Seq[String] = Seq(
     "q35_ngram_jaccard", "q36_minhash_lsh", "q37_simhash",
     "q64_dedup_clusters", "q83_triangles", "q89_leakfree_split",
-    "q101_pagerank", "q118_cluster_canonical", "q146_cluster_sizes",
+    "q101_pagerank_sized", "q118_cluster_canonical", "q146_cluster_sizes",
     "q214_lsh_eval",
     // r8: the text/similarity heavies — plan-shape-only until now
     "q51_winnow_fingerprint", "q70_contamination", "q72_tfidf",
@@ -86,8 +68,8 @@ object ScaleRegression {
     "q214_lsh_eval", "q51_winnow_fingerprint", "q70_contamination",
     "q72_tfidf", "q111_rrf_hybrid", "q145_containment",
     "q142_head_tail_overlap")
-  private val graphQueries = Set("q101_pagerank", "q221_part_affinity",
-    "q226_negative_samples")
+  private val graphQueries = Set("q101_pagerank", "q101_pagerank_sized",
+    "q101_round", "q221_part_affinity", "q226_negative_samples")
   private val embQueries = Set("q52_knn_ivf", "q111_rrf_hybrid",
     "q38_embedding_neardup", "q49_embedding_lsh_dedup",
     "q112_semantic_decontam")
@@ -281,94 +263,26 @@ object ScaleRegression {
     println(s"[scale] generating ${factor}x $mode fixtures at $scaledDir ...")
     generate(spark, baseDir, factor, scaledDir, mode, selected)
 
-    case class M(sec: Double, peakMb: Double, spillMb: Double,
-      maxTaskSec: Double)
-    // q101 as an at-scale caller would run it: auto-sized rank unit.
-    // (The DECLARED q101 pins 10^12 for oracle-lattice stability, and at
-    // 10x — 159,990 graph nodes — the r7 pinned-unit guard correctly
-    // REFUSES that pin: first scale run of this harness proved the guard
-    // fires outside the pin's 54,255-node domain.)
-    def fn(name: String): (SparkSession, String) => DataFrame =
-      if (name == "q101_pagerank")
-        (s, d) => operators.GraphOps.q101PageRankWithUnit(s, d, 0L)
-      else QueryTrace.lookup(name)
-    // longest single task — the skew witness: a query whose wall time ≈
-    // its max task time is single-task-bound no matter how many cores
-    // sit idle (the zipf mega-group probe reads this column)
-    def run(name: String, dir: String): M = {
-      val w = QueryTrace.during(spark)(QueryTrace.force(fn(name)(spark, dir)))
-      M(w.sec, w.peakBytes / 1048576.0, w.spillBytes / 1048576.0,
-        w.maxTaskMs / 1e3)
+    val builds = selected.flatMap { n =>
+      val fn = QueryTrace.lookup(n)
+      Seq(s"$n@1x" -> (() => fn(spark, baseDir)),
+        s"$n@${factor}x" -> (() => fn(spark, scaledDir)))
     }
-
-    // warm pass at 1x (codegen/JIT), then THREE measured passes of each
-    // (query, scale), interleaved, reporting per-cell medians — the
-    // Bench r6 lesson: this box has co-tenants, and a single sample can
-    // land inside a noise burst (first run of this harness showed q36
-    // "faster" at 10x than 1x — pure burst). Peak memory reports the
-    // MAX across passes (the OOM-relevant bound, and stable anyway).
-    selected.foreach(n => run(n, baseDir))
-    val passes = 3
-    val samples: Seq[Map[(String, String), M]] = (1 to passes).map { _ =>
-      selected.flatMap { n =>
-        Seq((n, "base") -> run(n, baseDir), (n, "scaled") -> run(n, scaledDir))
-      }.toMap
-    }
-    import QueryTrace.median
-    def agg(n: String, which: String): M = {
-      val ms = samples.map(_((n, which)))
-      // max-task reports the MEDIAN across passes of each pass's longest
-      // task (r11): the old max-over-passes conflated co-tenant freezes
-      // with skew — one frozen window printed "max-task 82 s" on an
-      // 8.8 s-wall query, an impossible reading that cost triage time.
-      // A real fat task repeats every pass and survives the median;
-      // a one-pass freeze does not. Peak memory/spill keep max (the
-      // OOM-relevant bound, and noise-stable anyway).
-      M(median(ms.map(_.sec)), ms.map(_.peakMb).max, ms.map(_.spillMb).max,
-        median(ms.map(_.maxTaskSec)))
-    }
-    val rows = selected.map { n =>
-      val base = agg(n, "base")
-      val scaled = agg(n, "scaled")
-      println(f"[scale] $n%-24s 1x ${base.sec}%7.2fs peak ${base.peakMb}%7.1fMB " +
-        f"spill ${base.spillMb}%8.1fMB | ${factor}x ${scaled.sec}%8.2fs " +
-        f"peak ${scaled.peakMb}%7.1fMB spill ${scaled.spillMb}%8.1fMB " +
-        f"maxtask ${scaled.maxTaskSec}%7.2fs " +
-        f"| time x${scaled.sec / base.sec}%5.1f peak x${
-          scaled.peakMb / math.max(base.peakMb, 0.1)}%5.2f")
-      (n, base, scaled)
-    }
+    val rows = QueryTrace.interleaved(spark, builds, 3)
+      .map { case (label, runs) => label -> QueryTrace.summary(runs) }.toMap
     println(s"\n[scale] mode=$mode factor=$factor")
     println(s"\n| query | 1x sec | 1x peak-task MB | ${factor}x sec | ${factor}x peak-task MB | ${factor}x spill MB | ${factor}x max-task sec | time ratio | peak ratio |")
     println("|---|---|---|---|---|---|---|---|---|")
-    rows.foreach { case (n, b, s) =>
-      println(f"| $n | ${b.sec}%.2f | ${b.peakMb}%.0f | ${s.sec}%.2f | " +
-        f"${s.peakMb}%.0f | ${s.spillMb}%.0f | ${s.maxTaskSec}%.2f | " +
-        f"${s.sec / b.sec}%.1f | " +
-        f"${s.peakMb / math.max(b.peakMb, 0.1)}%.2f |")
-    }
-
-    // rank⋈edges JOIN-STRATEGY probe: one un-checkpointed PageRank
-    // round, forced through noop so AQE commits to a FINAL plan, then
-    // the join operators it actually ran — the broadcast→SMJ flip
-    // observation (SCALING.md's "self-corrects, no hint prevents it").
-    if (selected.contains("q101_pagerank")) {
-      def joinOps(dir: String): String = {
-        val df = operators.GraphOps.q101RoundPlan(spark, dir)
-        // execute through THIS QueryExecution (a write would plan a new
-        // one) so the AQE plan below is the final, post-reopt one
-        df.queryExecution.toRdd.count()
-        val plan = df.queryExecution.executedPlan.toString
-        // keep only the FINAL adaptive plan (toString appends the
-        // "== Initial Plan ==" section) and only the rank⋈edges join —
-        // the src-keyed one whose strategy the flip claim is about
-        plan.split("== Initial Plan ==")(0).linesIterator
-          .filter(_.contains("Join [src"))
-          .map(_.trim.replaceAll("#\\d+L?", "").take(60))
-          .mkString("; ")
+    def mb(bytes: Long): Double = bytes / 1048576.0
+    selected.foreach { n =>
+      (rows(s"$n@1x"), rows(s"$n@${factor}x")) match {
+        case (Some(b), Some(s)) =>
+          println(f"| $n | ${b.medianSec}%.2f | ${mb(b.peakBytes)}%.0f | ${s.medianSec}%.2f | " +
+            f"${mb(s.peakBytes)}%.0f | ${mb(s.spillBytes)}%.0f | ${s.maxTaskMs / 1e3}%.2f | " +
+            f"${s.medianSec / b.medianSec}%.1f | " +
+            f"${mb(s.peakBytes) / math.max(mb(b.peakBytes), 0.1)}%.2f |")
+        case _ => println(s"| $n | failed | | | | | | | |")
       }
-      println(s"\n[scale] q101 round-plan joins at 1x:       ${joinOps(baseDir)}")
-      println(s"[scale] q101 round-plan joins at ${factor}x: ${joinOps(scaledDir)}")
     }
     spark.stop()
   }

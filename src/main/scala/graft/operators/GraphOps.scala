@@ -156,9 +156,10 @@ object GraphOps {
 
   /** The declared q101 pins 10¹² so the oracle lattice is independent of
     * graph size (valid to ~5×10⁴ nodes — the r7 guard enforces it); an
-    * at-scale caller passes `rankUnit = 0` for the graph-sized unit
-    * (ScaleRegression runs that form at 10× data, where the pin
-    * correctly refuses). */
+    * at-scale caller passes `rankUnit = 0` for the graph-sized unit.
+    * PerfAB's `q101_pagerank_sized` row is that form, which
+    * ScaleRegression's chain times at 10× data, where the pin correctly
+    * refuses. */
   private[graft] def q101PageRankWithUnit(s: SparkSession, dir: String,
       rankUnit: Long): DataFrame = {
     val edges = tradeEdges(s, dir)
@@ -170,12 +171,13 @@ object GraphOps {
   }
 
   /** ONE un-checkpointed PageRank round over the trade graph — the lazy
-    * plan PROBE [[graft.ScaleRegression]] uses to OBSERVE the
-    * rank⋈edges join strategy at different scales (broadcast while the
-    * rank frame fits under the threshold, sort-merge once it outgrows
-    * it — the self-correcting flip SCALING.md records). Built from
-    * [[pageRankInt]]'s own edge frame and round, with q101's pinned
-    * unit; never declared as a query. */
+    * plan that shows the rank⋈edges join strategy at a given scale
+    * (broadcast while the rank frame fits under the threshold,
+    * sort-merge once it outgrows it — the self-correcting flip
+    * SCALING.md records). Built from [[pageRankInt]]'s own edge frame
+    * and round, with q101's pinned unit; never declared as a query.
+    * PerfAB's `q101_round` row, so PlanAudit prints its plan and PerfAB
+    * times it by that name at any fixture dir. */
   private[graft] def q101RoundPlan(s: SparkSession, dir: String): DataFrame = {
     val ed = rankEdges(tradeEdges(s, dir))
     val ranks = ed.select(col("src").as("node")).distinct()

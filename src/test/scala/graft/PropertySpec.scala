@@ -542,6 +542,24 @@ class PropertySpec extends SparkTestBase {
     val w = QueryTrace.during(spark)(QueryTrace.force(spark.range(0, 1000, 1, k).toDF()))
     assert(w.jobs == 1 && w.tasks.size == k && w.stages.map(_.tasks).sum == k)
     assert(w.peakBytes >= 0 && w.spillBytes >= 0)
+    // the one timing loop: a warm call per build, then the passes
+    // interleaved in build order; a throwing build records None per
+    // pass while the others keep running
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    def build(label: String, fails: Boolean): () => org.apache.spark.sql.DataFrame = () => {
+      calls += label
+      if (fails) sys.error(s"$label throws")
+      spark.range(0, 10).toDF()
+    }
+    val runs = QueryTrace.interleaved(spark,
+      Seq("a" -> build("a", false), "b" -> build("b", true), "c" -> build("c", false)), 2)
+    assert(calls.toSeq == Seq("a", "b", "c", "a", "b", "c", "a", "b", "c"))
+    assert(runs.map(_._1) == Seq("a", "b", "c"))
+    val byLabel = runs.toMap
+    assert(byLabel("b") == Seq(None, None))
+    assert(Seq("a", "c").forall(l => byLabel(l).size == 2 && byLabel(l).forall(_.exists(_.jobs == 1))))
+    assert(QueryTrace.summary(byLabel("b")).isEmpty)
+    assert(QueryTrace.summary(byLabel("a")).exists(m => m.jobs == 1.0 && m.secs.size == 2))
     val names = PerfAB.variants.keys ++ ScaleRegression.chain ++ ScaleRegression.zipfChain
     val unresolved = names.filter(nm => scala.util.Try(QueryTrace.lookup(nm)).isFailure)
     assert(unresolved.isEmpty, s"unresolved tool names: $unresolved")
